@@ -1,17 +1,20 @@
-"""Arrow fast paths for the tokenize-heavy text kernels.
+"""Arrow batch kernels for the tokenize-heavy text operators.
 
-The Catalyst forms of the postings / hashed-gram builders
-(``text.doc_term_postings``, ``pipeline.logreg_hashed_features``) are
-chains of higher-order array functions (array_sort, transform, filter,
-aggregate) — HOFs never enter whole-stage codegen, so every row pays an
-interpreted walk per expression (measured: ~4.6 s postings / ~6.7 s
-featurize at sf0.1 for work a native batch kernel does in <0.5 s).
-These ``mapInArrow`` kernels follow guide §4.2: Spark keeps
-distribution and I/O, each task hand-processes whole Arrow batches.
+The postings / shingle / hashed-gram builders
+(``text.doc_term_postings``, ``text.shingle_frame``,
+``pipeline.logreg_hashed_features``) run these ``mapInArrow`` kernels
+and nothing else. Their Catalyst forms were chains of higher-order
+array functions (array_sort, transform, filter, aggregate) — HOFs never
+enter whole-stage codegen, so every row paid an interpreted walk per
+expression (measured: ~4.6 s postings / ~6.7 s featurize at sf0.1 for
+work a native batch kernel does in <0.5 s). The kernels follow guide
+§4.2: Spark keeps distribution and I/O, each task hand-processes whole
+Arrow batches. The Catalyst forms now live only in
+``tests/test_arrow_text_parity.py``, as the equality reference.
 
-PARITY CONTRACT (the reason these are safe to swap in): output rows are
-BIT-IDENTICAL to the Catalyst forms — integer counts and bucket ids
-only, no floats. The token semantics are pinned to the JVM's:
+PARITY CONTRACT: output rows are BIT-IDENTICAL to the Catalyst forms —
+integer counts and bucket ids only, no floats. The token semantics are
+pinned to the JVM's:
 
 - split on Java ``\\s+`` = ``[ \\t\\n\\x0B\\f\\r]+`` EXACTLY (Python's
   ``\\s`` is Unicode-wide and WRONG here: NBSP/U+2028 must NOT split);
@@ -23,28 +26,26 @@ only, no floats. The token semantics are pinned to the JVM's:
   (İ→i, measured divergence);
 - the gram hash replicates ``text.int_base_hash`` digit-for-digit:
   ``int(md5(utf8)[:15 hex], 16) % 2**31``;
-- null/empty/whitespace-only documents produce NO rows, matching the
-  Catalyst explode of an empty runs array (pinned by the parity
-  tests' adversarial corpus).
+- null/empty/whitespace-only documents produce NO postings rows,
+  matching the Catalyst explode of an empty runs array (pinned by the
+  parity tests' adversarial corpus).
+
+Ids are carried, never converted: each kernel gathers the input id
+column with ``take``, so the output id keeps the input's Arrow (and
+Spark) type — bigint, int, string or anything else Arrow can gather.
 
 Every closure pickles BY VALUE (stdlib + pyarrow only — no
 ``cmsspark_spark`` references), so executors never need the package
-importable. The Catalyst twins remain in place as the oracle-reference
-fallback, selected per call (``impl="sql"``) or process-wide
-(``CMSSPARK_TEXT_IMPL=sql``).
+importable.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
-def text_impl_default() -> str:
-    """Process-wide kernel choice: ``arrow`` (default) or ``sql``
-    (the Catalyst oracle-twin fallback)."""
-    return os.environ.get("CMSSPARK_TEXT_IMPL", "arrow")
+def _id_type(df: DataFrame, id_col: str) -> str:
+    return df.schema[id_col].dataType.simpleString()
 
 
 def doc_term_postings_arrow(
@@ -54,12 +55,10 @@ def doc_term_postings_arrow(
     cols: tuple[str, str, str, str] = ("_doc", "_t", "_dl", "_tf"),
 ) -> DataFrame:
     """(doc, term, doc_len, term_frequency) postings via one
-    ``mapInArrow`` kernel — the Arrow twin of
-    ``text.doc_term_postings`` (row-local, zero shuffle, counts
-    bit-identical). Each input row is one document, so per-batch
-    counting is complete — no cross-batch merge needed."""
+    ``mapInArrow`` kernel (row-local, zero shuffle). Each input row is
+    one document, so per-batch counting is complete — no cross-batch
+    merge needed."""
     d, t, dl, tf = cols
-    id_type = df.schema[id_col].dataType.simpleString()
 
     def _kernel(batches):
         import re
@@ -67,50 +66,37 @@ def doc_term_postings_arrow(
         import pyarrow as pa
 
         split = re.compile("[ \t\n\x0b\f\r]+")
-        out_schema = pa.schema(
-            [
-                pa.field(d, pa.int64()),
-                pa.field(t, pa.string()),
-                pa.field(dl, pa.int32()),
-                pa.field(tf, pa.int64()),
-            ]
-        )
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            flat_doc: list = []
-            flat_tok: list = []
-            flat_dl: list = []
-            for i, tx in zip(ids, texts):
+            ids = batch.column(0)
+            rows: list = []
+            toks_flat: list = []
+            dls: list = []
+            for r, tx in enumerate(batch.column(1).to_pylist()):
                 if tx is None:
                     continue
                 toks = [w for w in split.split(tx.lower()) if w]
                 n = len(toks)
-                if n == 0:
-                    continue
-                flat_doc.extend([i] * n)
-                flat_dl.extend([n] * n)
-                flat_tok.extend(toks)
-            if not flat_doc:
-                yield pa.RecordBatch.from_pydict(
-                    {f.name: [] for f in out_schema}, schema=out_schema
-                )
-                continue
-            ft = pa.table(
+                rows.extend([r] * n)
+                dls.extend([n] * n)
+                toks_flat.extend(toks)
+            flat = pa.table(
                 {
-                    d: pa.array(flat_doc, pa.int64()),
-                    t: pa.array(flat_tok, pa.string()),
-                    dl: pa.array(flat_dl, pa.int32()),
+                    d: ids.take(pa.array(rows, pa.int64())),
+                    t: pa.array(toks_flat, pa.string()),
+                    dl: pa.array(dls, pa.int32()),
                 }
             )
-            counted = ft.group_by([d, t, dl]).aggregate([([], "count_all")])
-            counted = counted.rename_columns([d, t, dl, tf]).cast(out_schema)
-            for ob in counted.to_batches():
-                yield ob
+            counted = (
+                flat.group_by([d, t, dl])
+                .aggregate([([], "count_all")])
+                .select([d, t, dl, "count_all"])
+                .rename_columns([d, t, dl, tf])
+            )
+            yield from counted.to_batches()
 
     return df.select(id_col, text_col).mapInArrow(
         _kernel,
-        f"{d} {id_type}, {t} string, {dl} int, {tf} long",
+        f"{d} {_id_type(df, id_col)}, {t} string, {dl} int, {tf} long",
     )
 
 
@@ -122,9 +108,7 @@ def distinct_shingles_arrow(
     cols: tuple[str, str] = ("_id", "_arr"),
 ) -> DataFrame:
     """(id, per-doc-distinct word n-gram array) via one ``mapInArrow``
-    kernel — the Arrow twin of
-    ``df.select(id, text.shingles(text_col, n))`` (row-local, values
-    bit-identical, first-occurrence order preserved like
+    kernel (row-local, first-occurrence order preserved like
     ``array_distinct``). The frame every MinHash/Jaccard/containment/
     decontamination consumer starts from.
 
@@ -141,17 +125,9 @@ def distinct_shingles_arrow(
         import pyarrow as pa
 
         split = re.compile("[ \t\n\x0b\f\r]+")
-        out_schema = pa.schema(
-            [
-                pa.field(x, pa.int64()),
-                pa.field(y, pa.list_(pa.string())),
-            ]
-        )
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
             arrs: list = []
-            for tx in texts:
+            for tx in batch.column(1).to_pylist():
                 toks = (
                     [w for w in split.split(tx.lower()) if w]
                     if tx is not None
@@ -165,12 +141,13 @@ def distinct_shingles_arrow(
                         " ".join(toks[j : j + n]) for j in range(k - n + 1)
                     ]
                 arrs.append(list(dict.fromkeys(grams)))
-            yield pa.RecordBatch.from_pydict(
-                {x: ids, y: arrs}, schema=out_schema
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(arrs, pa.list_(pa.string()))],
+                names=[x, y],
             )
 
     return df.select(id_col, text_col).mapInArrow(
-        _kernel, f"{x} bigint, {y} array<string>"
+        _kernel, f"{x} {_id_type(df, id_col)}, {y} array<string>"
     )
 
 
@@ -182,9 +159,8 @@ def hashed_gram_counts_arrow(
     n_buckets: int,
 ) -> DataFrame:
     """Per-(doc, bucket) hashed unigram+bigram counts with the label
-    carried on every row — the Arrow twin of the featurize stage of
-    ``pipeline.logreg_hashed_features`` (output ``(_id, _b, _y, _c)``,
-    rows bit-identical).
+    carried on every row — the featurize stage of
+    ``pipeline.logreg_hashed_features`` (output ``(_id, _b, _y, _c)``).
 
     Gram construction replicates ``text.raw_ngrams`` degenerate rules:
     a k-token document yields k unigrams and max(k−1, 1) bigrams; a
@@ -203,28 +179,16 @@ def hashed_gram_counts_arrow(
         import pyarrow as pa
 
         split = re.compile("[ \t\n\x0b\f\r]+")
-        out_schema = pa.schema(
-            [
-                pa.field("_id", pa.int64()),
-                pa.field("_b", pa.int64()),
-                pa.field("_y", pa.float64()),
-                pa.field("_c", pa.int64()),
-            ]
-        )
 
         def bucket(g: str) -> int:
             h = md5(g.encode("utf-8")).hexdigest()[:15]
             return (int(h, 16) % 2147483648) % nb
 
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            ys = batch.column(1).to_pylist()
-            texts = batch.column(2).to_pylist()
-            o_id: list = []
+            rows: list = []
             o_b: list = []
-            o_y: list = []
             o_c: list = []
-            for i, y, tx in zip(ids, ys, texts):
+            for r, tx in enumerate(batch.column(2).to_pylist()):
                 toks = (
                     [w for w in split.split(tx.lower()) if w]
                     if tx is not None
@@ -240,16 +204,21 @@ def hashed_gram_counts_arrow(
                         f"{toks[j]} {toks[j + 1]}" for j in range(k - 1)
                     ]
                 counts = Counter(bucket(g) for g in grams)
-                o_id.extend([i] * len(counts))
-                o_y.extend([y] * len(counts))
-                for b, c in counts.items():
-                    o_b.append(b)
-                    o_c.append(c)
-            yield pa.RecordBatch.from_pydict(
-                {"_id": o_id, "_b": o_b, "_y": o_y, "_c": o_c},
-                schema=out_schema,
+                rows.extend([r] * len(counts))
+                o_b.extend(counts.keys())
+                o_c.extend(counts.values())
+            take = pa.array(rows, pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(take),
+                    pa.array(o_b, pa.int64()),
+                    batch.column(1).take(take),
+                    pa.array(o_c, pa.int64()),
+                ],
+                names=["_id", "_b", "_y", "_c"],
             )
 
-    return df.select(
-        id_col, y_col, text_col
-    ).mapInArrow(_kernel, "_id long, _b long, _y double, _c long")
+    return df.select(id_col, y_col, text_col).mapInArrow(
+        _kernel,
+        f"_id {_id_type(df, id_col)}, _b long, _y double, _c long",
+    )

@@ -61,55 +61,26 @@ def doc_term_postings(
     id_col: str,
     text_col: str,
     cols: tuple[str, str, str, str] = ("_doc", "_t", "_dl", "_tf"),
-    impl: str | None = None,
 ):
     """(doc, term, doc_len, term_frequency) postings — computed
-    ROW-LOCALLY (sort the token array, run-length encode it, explode
-    the runs) instead of the explode-then-``groupBy(doc, term)``
-    shape, which shuffles every token occurrence across the cluster
-    just to count duplicates that all live in the same row. At corpus
-    scale that token-level Exchange is the dominant byte-mover of any
-    postings build; here it disappears outright (guide §2.4).
+    ROW-LOCALLY (tokenize and count each document inside one
+    ``mapInArrow`` batch kernel) instead of the explode-then-
+    ``groupBy(doc, term)`` shape, which shuffles every token occurrence
+    across the cluster just to count duplicates that all live in the
+    same row. At corpus scale that token-level Exchange is the dominant
+    byte-mover of any postings build; here it disappears outright
+    (guide §2.4).
 
-    ``impl`` picks the per-row kernel (default: the ``arrow`` fast
-    path, or ``$CMSSPARK_TEXT_IMPL``): the ``sql`` form's sort+RLE
-    array chain is interpreted HOFs (never codegen — measured ~4.6 s
-    of the sf0.1 postings build), the ``arrow`` form is one
-    ``mapInArrow`` batch kernel with BIT-IDENTICAL counts (token/hash
-    parity pinned by tests/test_arrow_text_parity.py; guide §4.2).
-    Non-integral id columns fall back to ``sql``. Counts are exactly
-    the grouped form's either way (equality property-tested); the
-    output is simply not hash-partitioned by (doc, term) — every
+    The kernel is ``arrow_text.doc_term_postings_arrow``; its Catalyst
+    twin (sort the token array, run-length encode it, explode the runs)
+    lives only in tests/test_arrow_text_parity.py, which pins the two
+    bit-identical for every id type. The doc id keeps the input's type.
+    The output is not hash-partitioned by (doc, term) — every
     downstream consumer aggregates by term or by (query, doc) and
     shuffles to its own key anyway."""
-    from cmsspark_spark.functions.arrow_text import (
-        doc_term_postings_arrow,
-        text_impl_default,
-    )
+    from cmsspark_spark.functions.arrow_text import doc_term_postings_arrow
 
-    if (impl or text_impl_default()) == "arrow" and df.schema[
-        id_col
-    ].dataType.simpleString() == "bigint":
-        return doc_term_postings_arrow(df, id_col, text_col, cols)
-    d, t, dl, tf = cols
-    return (
-        df.select(
-            F.col(id_col).alias(d),
-            F.array_sort(tokens(text_col)).alias("_st"),
-        )
-        .withColumn("_starts", F.expr(_RUN_STARTS))
-        .select(
-            d,
-            F.size("_st").alias(dl),
-            F.explode(F.expr(_RUN_COUNTS)).alias("_p"),
-        )
-        .select(
-            d,
-            F.col("_p._t").alias(t),
-            F.col(dl),
-            F.col("_p._tf").cast("long").alias(tf),
-        )
-    )
+    return doc_term_postings_arrow(df, id_col, text_col, cols)
 
 
 def stopword_ratio(text: Column | str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
@@ -242,32 +213,19 @@ def shingle_frame(
     text_col: str,
     n: int = 3,
     cols: tuple[str, str] = ("_id", "_arr"),
-    impl: str | None = None,
 ):
     """(id, distinct-shingle array) frame — the starting point of every
     MinHash/Jaccard/containment/decontamination consumer.
 
-    ``impl`` picks the kernel (default ``arrow``, or
-    ``$CMSSPARK_TEXT_IMPL``): the Catalyst ``shingles()`` chain is
+    The kernel is ``arrow_text.distinct_shingles_arrow``, one
+    ``mapInArrow`` batch kernel; the Catalyst ``shingles()`` chain is
     interpreted HOFs (measured ~3.1 s of a 9.4 s components query at
     local[8], plus the big expression tree every consumer's optimizer
-    pass re-walks), the ``arrow`` form is one ``mapInArrow`` batch
-    kernel with BIT-IDENTICAL arrays (token/gram parity pinned by
-    tests/test_arrow_text_parity.py; guide §4.2). Non-bigint ids fall
-    back to ``sql``."""
-    from cmsspark_spark.functions.arrow_text import (
-        distinct_shingles_arrow,
-        text_impl_default,
-    )
+    pass re-walks) and now serves only as the equality reference in
+    tests/test_arrow_text_parity.py. The id keeps the input's type."""
+    from cmsspark_spark.functions.arrow_text import distinct_shingles_arrow
 
-    x, y = cols
-    if (impl or text_impl_default()) == "arrow" and df.schema[
-        id_col
-    ].dataType.simpleString() == "bigint":
-        return distinct_shingles_arrow(df, id_col, text_col, n, cols)
-    return df.select(
-        F.col(id_col).alias(x), shingles(text_col, n).alias(y)
-    )
+    return distinct_shingles_arrow(df, id_col, text_col, n, cols)
 
 
 def shingles(text: Column | str, n: int = 3) -> Column:

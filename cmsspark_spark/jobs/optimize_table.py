@@ -88,8 +88,10 @@ def run(
     # concurrent work starts (ADVICE r13): with the before-stats scan
     # overlapping the rewrite, an in-place overwrite would delete
     # source files mid-read and surface as confusing executor task
-    # failures instead of a clean error
-    if os.path.normpath(dest) == os.path.normpath(table):
+    # failures instead of a clean error. realpath (absolute, symlinks
+    # resolved), so a relative or symlinked dest naming the table's
+    # directory is caught too
+    if os.path.realpath(dest) == os.path.realpath(table):
         raise ValueError(
             f"dest must differ from table (got {table!r}): the rewrite "
             "never runs in place"

@@ -33,6 +33,7 @@ import random
 
 from cmsspark_spark.functions.text import int_base_hash, shingles, tokens
 from cmsspark_spark.operators.memo import SessionMemo as _SessionMemo
+from cmsspark_spark.operators.memo import composite_key, pin_frame
 
 #: Modulus for permutation-based MinHash (2^31 - 1, prime). Products
 #: a*base stay < 2^62 so the arithmetic never overflows signed 64-bit —
@@ -135,17 +136,14 @@ def minhash_signatures_wide(
     re-paying tokenize→shingle→minhash. Callers' own ``persist`` of the
     returned frame stays harmless.
     """
-    key = _MINHASH_MEMO.key_for(df, id_col, text_col, n, num_hashes)
-    if key is None:
-        return _minhash_signatures_wide_run(
+    return _MINHASH_MEMO.get_or(
+        df.sparkSession,
+        _MINHASH_MEMO.key_for(df, id_col, text_col, n, num_hashes),
+        lambda: _minhash_signatures_wide_run(
             df, id_col, text_col, n, num_hashes
-        )
-    per = _MINHASH_MEMO.per_session(df.sparkSession)
-    if key not in per:
-        per[key] = _minhash_signatures_wide_run(
-            df, id_col, text_col, n, num_hashes
-        ).localCheckpoint(eager=True)
-    return per[key]
+        ),
+        pin=True,
+    )
 
 
 def _minhash_signatures_wide_run(
@@ -162,9 +160,9 @@ def _minhash_signatures_wide_run(
     # Two-step select ON PURPOSE: naming _bases keeps the (large)
     # hash expression tree single-instance; CollapseProject will not
     # inline a non-cheap expression referenced num_hashes times. The
-    # shingle arrays come from the Arrow kernel (r14, guide §4.2 — the
-    # Catalyst twin stays behind impl="sql"); only the md5 base hash
-    # stays Catalyst, on the already-distinct grams.
+    # shingle arrays come from the Arrow kernel (r14, guide §4.2 — its
+    # Catalyst twin lives only in the parity tests); only the md5 base
+    # hash stays Catalyst, on the already-distinct grams.
     based = shingle_frame(df, id_col, text_col, n, ("_id", "_sh")).select(
         "_id",
         F.transform(F.col("_sh"), int_base_hash).alias("_bases"),
@@ -412,29 +410,28 @@ def jaccard_pairs(
         return _jaccard_pairs_run(
             df, id_col, text_col, n, threshold, None, cache
         )
-    k_df = _SHINGLE_MEMO.key_for(df, id_col, text_col, n)
-    k_cand = _SHINGLE_MEMO.key_for(candidates)
-    if k_df is None or k_cand is None:
+    key = composite_key(
+        _SHINGLE_MEMO.key_for(df, id_col, text_col, n),
+        _SHINGLE_MEMO.key_for(candidates),
+    )
+    if key is None:
         return _jaccard_pairs_run(
             df, id_col, text_col, n, threshold, candidates, cache
         )
-    per = _SHINGLE_MEMO.per_session(df.sparkSession)
-    key = (k_df, k_cand)
-    if key not in per:
+
+    def build() -> DataFrame:
         from pyspark import StorageLevel
 
         cand = candidates.select("id_a", "id_b").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        from cmsspark_spark.operators.memo import pin_frame
-
-        per[key] = pin_frame(
-            _shingle_rows(
-                _candidate_members(df, id_col, cand), id_col, text_col, n
-            )
+        return _shingle_rows(
+            _candidate_members(df, id_col, cand), id_col, text_col, n
         )
+
+    shingled = _SHINGLE_MEMO.get_or(df.sparkSession, key, build, pin=True)
     return _pairs_from_shingles(
-        per[key], candidates.select("id_a", "id_b"), threshold
+        shingled, candidates.select("id_a", "id_b"), threshold
     )
 
 
@@ -685,15 +682,12 @@ def simhash(
     session-memoized (``_SIMHASH_MEMO``) so the fingerprint query and
     every pair rung share ONE vote pipeline run.
     """
-    key = _SIMHASH_MEMO.key_for(df, "plain", id_col, text_col, bits)
-    if key is None:
-        return _simhash_run(df, id_col, text_col, bits)
-    per = _SIMHASH_MEMO.per_session(df.sparkSession)
-    if key not in per:
-        from cmsspark_spark.operators.memo import pin_frame
-
-        per[key] = pin_frame(_simhash_run(df, id_col, text_col, bits))
-    return per[key]
+    return _SIMHASH_MEMO.get_or(
+        df.sparkSession,
+        _SIMHASH_MEMO.key_for(df, "plain", id_col, text_col, bits),
+        lambda: _simhash_run(df, id_col, text_col, bits),
+        pin=True,
+    )
 
 
 def _simhash_run(
@@ -756,17 +750,12 @@ def simhash_weighted(
     Session-memoized like :func:`simhash` — the weighted fingerprint
     query and the weighted pair rung share one run.
     """
-    key = _SIMHASH_MEMO.key_for(df, "weighted", id_col, text_col, bits)
-    if key is None:
-        return _simhash_weighted_run(df, id_col, text_col, bits)
-    per = _SIMHASH_MEMO.per_session(df.sparkSession)
-    if key not in per:
-        from cmsspark_spark.operators.memo import pin_frame
-
-        per[key] = pin_frame(
-            _simhash_weighted_run(df, id_col, text_col, bits)
-        )
-    return per[key]
+    return _SIMHASH_MEMO.get_or(
+        df.sparkSession,
+        _SIMHASH_MEMO.key_for(df, "weighted", id_col, text_col, bits),
+        lambda: _simhash_weighted_run(df, id_col, text_col, bits),
+        pin=True,
+    )
 
 
 def _simhash_weighted_run(
@@ -927,8 +916,8 @@ def simhash_near_pairs(
 #: byte-identical LSH→Jaccard pair plan — without sharing, each pays
 #: the full LSH + verify + propagation cost (~50 s of redundant work
 #: at sf0.1; 7 full runs where 1 suffices at 100 TB). The memoized
-#: value is the final labels frame, already materialized by the
-#: loop's own localCheckpoint, so a hit replays a tiny ids-only RDD —
+#: value is the final labels frame, already pinned by the loop's
+#: own pin_frame checkpoint, so a hit replays a tiny ids-only RDD —
 #: clearCache() between queries does not touch it and its footprint
 #: is O(nodes-with-a-near-dup), not corpus-sized. Fresh-data keys per
 #: operators/memo.py (plan hash + leaf-file fingerprint), so an
@@ -956,19 +945,21 @@ def connected_components(
     min-aggregate), rounds = O(component diameter) — near-dup clusters
     are shallow (stars/cliques around a template), so 3-5 rounds in
     practice. Lineage is truncated every round with an eager
-    ``localCheckpoint`` (on a cluster: ``checkpoint`` to HDFS), the
+    ``pin_frame`` checkpoint (reliable on request, for clusters), the
     standard Spark idiom for iterative graph algorithms; the
     convergence probe is a 1-row aggregate, not a collect of the data.
 
     The result is memoized per session on a fresh-data key
     (``_CC_MEMO``): every consumer of the same pair plan over the same
-    underlying files shares one propagation run.
+    underlying files shares one propagation run. The stored frame is
+    already pinned by the loop's last round, so the memo does not pin
+    it again.
 
     Returns (node, component) for every node appearing in ``pairs``.
     """
     return _CC_MEMO.get_or(
-        pairs,
-        (left, right, max_iters),
+        pairs.sparkSession,
+        _CC_MEMO.key_for(pairs, left, right, max_iters),
         lambda: _connected_components_run(pairs, left, right, max_iters),
     )
 
@@ -980,16 +971,14 @@ def _connected_components_run(
     # Materialize the pair list ONCE before mirroring it: the union's
     # two branches would otherwise each re-execute the full upstream
     # plan (e.g. LSH + Jaccard verification), and every propagation
-    # round would re-execute it again. localCheckpoint (not persist)
-    # so the upstream runs through normal adaptive execution; on a
-    # cluster use checkpoint() for executor-loss resilience.
-    pairs = pairs.select(
-        F.col(left).alias("src"), F.col(right).alias("dst")
-    ).localCheckpoint(eager=True)
-    edges = (
-        pairs.union(pairs.select(F.col("dst"), F.col("src")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # round would re-execute it again. A checkpoint (not persist) so
+    # the upstream runs through normal adaptive execution; pin_frame
+    # makes it reliable on request (executor-loss resilience).
+    pairs = pin_frame(
+        pairs.select(F.col(left).alias("src"), F.col(right).alias("dst"))
+    )
+    edges = pin_frame(
+        pairs.union(pairs.select(F.col("dst"), F.col("src"))).distinct()
     )
     # no edges → no nodes: skip the propagation round entirely (an
     # ingest increment with no near-dup pairs otherwise pays a full
@@ -1007,7 +996,7 @@ def _connected_components_run(
         # heavy job per round (the eager checkpoint), and the
         # convergence probe is then a cheap scan of the materialized
         # result — not a second execution of the join.
-        labels = (
+        labels = pin_frame(
             labels.join(nbr, on="src", how="left")
             .select(
                 "src",
@@ -1020,7 +1009,6 @@ def _connected_components_run(
                 ).cast("int").alias("_chg"),
             )
             .withColumnRenamed("new_component", "component")
-            .localCheckpoint(eager=True)
         )
         changed = labels.agg(F.sum("_chg").alias("c")).collect()[0]["c"]
         if not changed:

@@ -32,6 +32,21 @@ they contribute nothing to the fingerprint. Any OTHER leaf kind
 returns None and the caller runs UNMEMOIZED, trading speed for
 guaranteed freshness.
 
+Every memo site goes through ONE miss path,
+:meth:`SessionMemo.get_or` ``(spark, key, build, pin=False)``:
+
+- ``key is None`` (unsafe key): ``build()`` runs unmemoized;
+- hit: the stored value, no build, no lock;
+- miss: take the per-(session, key) lock, check again, build, and
+  store — through :func:`pin_frame` first when ``pin=True``. So
+  concurrent consumers of one key (the ANN ladder's thread-pool arms,
+  rung twins) share ONE build.
+
+A site keeping several values per input (k-means frame + centroids,
+logreg features + weights, BM25 postings + stats) stores each under a
+tagged :func:`composite_key`; a key over several inputs (Jaccard's
+corpus and candidates) is one too, ``None`` if any part is.
+
 Eviction: memos are weak-keyed per session (dead sessions collect);
 ``invalidate_session_memos`` clears every registered memo explicitly
 — the hook for any path that knows the underlying files changed
@@ -198,23 +213,17 @@ class SessionMemo:
             return None
         return (phash, str(df.schema), fp) + params
 
-    def per_session(self, spark) -> dict:
+    def _session_store(self, spark) -> dict:
         """The session's entry store (a bounded LRU — see module
-        docstring) — for callers that memoize several dependent
-        artifacts under related keys (k-means keeps both the
-        quantized frame and the centroids)."""
+        docstring)."""
         store = self._store.get(spark)
         if store is None:
             store = _LruDict()
             self._store[spark] = store
         return store
 
-    def lock_for(self, spark, key) -> "threading.Lock":
-        """Per-(session, key) build lock: concurrent consumers of the
-        same (plan, params) — e.g. the ANN ladder's thread-pool arms —
-        serialize on the MISS path so exactly one of them builds and
-        the rest share the entry (the module's train-once contract;
-        ADVICE r13). Hits never touch the lock."""
+    def _lock_for(self, spark, key) -> "threading.Lock":
+        """Per-(session, key) build lock for the miss path."""
         with self._meta_lock:
             locks = self._lock_store.get(spark)
             if locks is None:
@@ -227,22 +236,32 @@ class SessionMemo:
             return lk
 
     def get_or(
-        self, df: DataFrame, params: tuple, builder: Callable[[], Any]
+        self,
+        spark,
+        key: tuple | None,
+        build: Callable[[], Any],
+        pin: bool = False,
     ) -> Any:
-        """Memoized ``builder()`` — a hit skips it entirely; an unsafe
-        key runs it unmemoized. Concurrent misses on the same key
-        share ONE build (per-key lock — see :meth:`lock_for`)."""
-        key = self.key_for(df, *params)
+        """The memo's only miss path (see module docstring): ``None``
+        key → ``build()`` unmemoized; hit → stored value; miss → under
+        the per-key lock, check again, build once, ``pin_frame`` the
+        frame if ``pin``, store."""
         if key is None:
-            return builder()
-        spark = df.sparkSession
-        per = self.per_session(spark)
-        if key in per:
-            return per[key]
-        with self.lock_for(spark, key):
-            if key not in per:
-                per[key] = builder()
-        return per[key]
+            return build()
+        store = self._session_store(spark)
+        try:
+            return store[key]
+        except KeyError:
+            pass
+        with self._lock_for(spark, key):
+            try:
+                return store[key]
+            except KeyError:
+                value = build()
+                if pin:
+                    value = pin_frame(value)
+                store[key] = value
+                return value
 
     def invalidate(self, spark=None) -> None:
         """Drop one session's entries (or all sessions')."""
@@ -251,14 +270,14 @@ class SessionMemo:
         else:
             self._store.pop(spark, None)
 
-    # bench_scale's reset loop calls .clear() on whatever memo objects
-    # the operator modules expose — keep that spelling working.
-    def clear(self) -> None:
-        self.invalidate()
 
-    def pop(self, spark, default=None):
-        """WeakKeyDictionary-compatible eviction of one session."""
-        return self._store.pop(spark, default)
+def composite_key(*parts: Any) -> tuple | None:
+    """Memo key over several parts (a tag plus a ``key_for`` key, or
+    the keys of several input frames) — ``None`` when any part is, so
+    the composite is memoized only if every input is safe to key."""
+    if any(p is None for p in parts):
+        return None
+    return parts
 
 
 def invalidate_session_memos(spark=None) -> None:

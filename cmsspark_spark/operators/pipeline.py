@@ -33,6 +33,7 @@ from cmsspark_spark.functions.text import (
     tokens,
 )
 from cmsspark_spark.operators.memo import SessionMemo as _SessionMemo
+from cmsspark_spark.operators.memo import composite_key, pin_frame
 
 
 def _spread_small_scan(df: DataFrame) -> DataFrame:
@@ -74,11 +75,14 @@ def ngram_overlap(
     """
     from cmsspark_spark.functions.text import shingle_frame
 
-    # distinct n-gram arrays come from the Arrow kernel (r14, §4.2 —
-    # Catalyst twin behind impl="sql"); the explode/join shape is
-    # unchanged
+    # distinct n-gram arrays come from the Arrow kernel (r14, §4.2);
+    # the benchmark side needs only its distinct grams, so it carries
+    # a constant id and needs no id column of its own
     bench_grams = (
-        shingle_frame(benchmark, id_col, bench_text_col, n, ("_bid", "_arr"))
+        shingle_frame(
+            benchmark.select(F.lit(0).alias("_bid"), bench_text_col),
+            "_bid", bench_text_col, n, ("_bid", "_arr"),
+        )
         .select(F.explode("_arr").alias("_gram"))
         .distinct()
         .withColumn("_hit", F.lit(1))
@@ -260,11 +264,11 @@ def bm25_more_like_this(
 #: rung starts from: six registry rungs (exact, champion, max-score,
 #: block-max, RM3, hard negatives) tokenize the SAME corpus — without
 #: sharing, each pays the full sort+RLE postings pass plus the two
-#: scalar driver jobs. The memoized postings frame is eagerly
-#: localCheckpointed ((doc, term, dl, tf) ids-and-tokens rows, no raw
-#: text), so clearCache() between queries does not drop it; fresh-data
-#: keys per operators/memo.py, unsafe keys fall back to the per-rung
-#: persist.
+#: scalar driver jobs. The memoized postings frame is pinned
+#: (pin_frame: (doc, term, dl, tf) ids-and-tokens rows, no raw text),
+#: so clearCache() between queries does not drop it; the postings and
+#: the scalars sit under their own tagged keys; fresh-data keys per
+#: operators/memo.py, unsafe keys fall back to the per-rung persist.
 _POSTINGS_MEMO = _SessionMemo("bm25_postings")
 
 
@@ -272,37 +276,39 @@ def _postings_stats(
     docs: DataFrame, id_col: str, text_col: str
 ) -> tuple[DataFrame, int, int]:
     """(postings, sum_dl, n_docs) for the corpus — built once per
-    session per (plan, files) and shared by every BM25 rung."""
+    session per (plan, files) and shared by every BM25 rung: the
+    pinned postings frame and the two scalars under their own keys."""
+    spark = docs.sparkSession
+    key = _POSTINGS_MEMO.key_for(docs, id_col, text_col)
+    post = _POSTINGS_MEMO.get_or(
+        spark,
+        composite_key("post", key),
+        lambda: doc_term_postings(
+            _spread_small_scan(docs.select(id_col, text_col)),
+            id_col, text_col,
+        ),
+        pin=True,
+    )
+    if key is None:
+        # unmemoized and unpinned: persist, so the stats actions and
+        # every later consumer share one tokenize pass
+        from pyspark import StorageLevel
 
-    def build(materialize):
-        post = materialize(
-            doc_term_postings(
-                _spread_small_scan(docs.select(id_col, text_col)),
-                id_col, text_col,
-            )
-        )
-        # this action materializes the postings; every later consumer
-        # (df table, candidate join) replays the materialized frame,
-        # so the tokenize+explode pass runs exactly once
+        post = post.persist(StorageLevel.MEMORY_AND_DISK)
+
+    def stats() -> tuple[int, int]:
         sum_dl = (
             post.groupBy("_doc")
             .agg(F.first("_dl").alias("_dl"))
             .select(F.sum("_dl"))
             .first()[0]
         ) or 0
-        return post, sum_dl, docs.count()
+        return sum_dl, docs.count()
 
-    key = _POSTINGS_MEMO.key_for(docs, "postings", id_col, text_col)
-    if key is None:
-        from pyspark import StorageLevel
-
-        return build(lambda f: f.persist(StorageLevel.MEMORY_AND_DISK))
-    per = _POSTINGS_MEMO.per_session(docs.sparkSession)
-    if key not in per:
-        from cmsspark_spark.operators.memo import pin_frame
-
-        per[key] = build(pin_frame)
-    return per[key]
+    sum_dl, n_docs = _POSTINGS_MEMO.get_or(
+        spark, composite_key("stats", key), stats
+    )
+    return post, sum_dl, n_docs
 
 
 def _bm25_exact_build(
@@ -806,15 +812,15 @@ def _bm25_prune_state(
     # downstream output of every pruned rung — without a checkpoint
     # each action re-runs the champion windows and the seed-scoring
     # join from scratch (measured: ~2s per re-derivation at sf0.1,
-    # paid 3-4× per rung build). Lazy localCheckpoints materialize
-    # each chain once and replay ids-only frames after.
+    # paid 3-4× per rung build). Lazy checkpoints (pin_frame)
+    # materialize each chain once and replay ids-only frames after.
     seed_raw = (
         qterms.join(champ, "_t")
         .filter(F.col("_doc") != F.col("_qid"))
         .select("_qid", "_doc")
         .distinct()
     )
-    seed = seed_raw.localCheckpoint(eager=False)
+    seed = pin_frame(seed_raw, eager=False)
     s_micro = F.floor(
         F.col("_score") * F.lit(1000000.0) + F.lit(0.5)
     ).cast("long")
@@ -827,7 +833,7 @@ def _bm25_prune_state(
         .withColumn("_rk", F.row_number().over(w_seed))
         .filter(F.col("_rk") == int(k))
         .select("_qid", F.col("_smicro").alias("_theta"))
-        .localCheckpoint(eager=False)
+        .transform(lambda f: pin_frame(f, eager=False))
     )
     # ascending-ub running sum per query: the weakest-terms prefix
     # that cannot jointly reach θ is non-essential. A query with
@@ -844,7 +850,7 @@ def _bm25_prune_state(
             "_essential",
             F.col("_theta").isNull() | (F.col("_cum") >= F.col("_theta")),
         )
-        .localCheckpoint(eager=False)
+        .transform(lambda f: pin_frame(f, eager=False))
     )
     return {
         "post": post,
@@ -907,25 +913,15 @@ def _bm25_prune_state_shared(
     (ranked + report twins — four registry queries with identical
     bound params) share ONE seeds/θ/bounds build per session; each
     consumer recomputes its own candidates + ranking from it."""
-    args = (
-        docs, id_col, text_col, query_max_id, k, c,
+    params = (
+        id_col, text_col, query_max_id, k, c,
         k1, b, k1_plus_1, one_minus_b, broadcast_candidates,
     )
-    key = _PRUNE_STATE_MEMO.key_for(
-        docs, "prune_state", id_col, text_col, query_max_id, k, c,
-        k1, b, k1_plus_1, one_minus_b, broadcast_candidates,
+    return _PRUNE_STATE_MEMO.get_or(
+        docs.sparkSession,
+        _PRUNE_STATE_MEMO.key_for(docs, *params),
+        lambda: _bm25_prune_state(docs, *params),
     )
-    if key is None:
-        return _bm25_prune_state(*args)
-    spark = docs.sparkSession
-    per = _PRUNE_STATE_MEMO.per_session(spark)
-    if key not in per:
-        # per-key build lock (ADVICE r13): concurrent rung consumers
-        # that both miss share ONE bounds build
-        with _PRUNE_STATE_MEMO.lock_for(spark, key):
-            if key not in per:
-                per[key] = _bm25_prune_state(*args)
-    return per[key]
 
 
 def bm25_maxscore_parts(
@@ -1658,7 +1654,6 @@ def logreg_hashed_features(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 256,
-    impl: str | None = None,
 ) -> DataFrame:
     """Per-(doc, bucket) hashed unigram+bigram count features for the
     trained quality classifier, with the binary label CARRIED ON EVERY
@@ -1671,61 +1666,24 @@ def logreg_hashed_features(
     feature×residual join key on ``_id``, the co-partitioning is
     reused — no corpus-grain exchange after the one repartition.
 
-    ``impl`` picks the featurize kernel (default ``arrow``, or
-    ``$CMSSPARK_TEXT_IMPL``): the ``sql`` form's gram/hash/RLE chain
-    is interpreted HOFs (~6.7 s of the sf0.1 cold fit), the ``arrow``
-    form is one ``mapInArrow`` batch kernel with BIT-IDENTICAL
-    (_id, _b, _y, _c) rows (tokenize/md5 parity pinned by
-    tests/test_arrow_text_parity.py; guide §4.2). Non-bigint ids fall
-    back to ``sql``."""
+    The per-(doc, bucket) counts come from one ``mapInArrow`` batch
+    kernel (``arrow_text.hashed_gram_counts_arrow``, row-local, so the
+    one repartition below is the frame's ONLY shuffle); its Catalyst
+    twin — a gram/hash/RLE chain of interpreted HOFs, ~6.7 s of the
+    sf0.1 cold fit — lives only in tests/test_arrow_text_parity.py as
+    the equality reference. ``_id`` keeps the id column's type."""
     from pyspark import StorageLevel
 
-    from cmsspark_spark.functions.arrow_text import (
-        hashed_gram_counts_arrow,
-        text_impl_default,
-    )
-    from cmsspark_spark.functions.text import (
-        _RUN_COUNTS,
-        _RUN_STARTS,
-        int_base_hash,
-    )
+    from cmsspark_spark.functions.arrow_text import hashed_gram_counts_arrow
 
-    if (impl or text_impl_default()) == "arrow" and df.schema[
-        id_col
-    ].dataType.simpleString() == "bigint":
-        counts = hashed_gram_counts_arrow(
-            df.select(
-                F.col(id_col).alias("_id"),
-                label_flag.cast("double").alias("_y"),
-                F.col(text_col).alias("_text"),
-            ),
-            "_id", "_y", "_text", n_buckets,
-        )
-    else:
-        toks = tokens(text_col)
-        grams = F.concat(raw_ngrams(toks, 1), raw_ngrams(toks, 2))
-        # per-(doc, bucket) counts ROW-LOCALLY (sort the bucket ids,
-        # RLE the runs — the doc_term_postings kernel on ints):
-        # identical counts to the explode+groupBy(_id,_b) form with
-        # zero gram-grain exchange, so the one repartition below is
-        # the frame's ONLY shuffle (guide §2.4)
-        counts = (
-            df.select(
-                F.col(id_col).alias("_id"),
-                label_flag.cast("double").alias("_y"),
-                F.array_sort(
-                    F.transform(grams, lambda g: int_base_hash(g) % n_buckets)
-                ).alias("_st"),
-            )
-            .withColumn("_starts", F.expr(_RUN_STARTS))
-            .select("_id", "_y", F.explode(F.expr(_RUN_COUNTS)).alias("_p"))
-            .select(
-                "_id",
-                F.col("_p._t").cast("long").alias("_b"),
-                "_y",
-                F.col("_p._tf").cast("long").alias("_c"),
-            )
-        )
+    counts = hashed_gram_counts_arrow(
+        df.select(
+            F.col(id_col).alias("_id"),
+            label_flag.cast("double").alias("_y"),
+            F.col(text_col).alias("_text"),
+        ),
+        "_id", "_y", "_text", n_buckets,
+    )
     intercept = df.select(
         F.col(id_col).alias("_id"),
         F.lit(n_buckets).alias("_b"),
@@ -1849,23 +1807,23 @@ def logreg_hashed_shared(
         label_flag.cast("double").alias("_y"),
         F.col(text_col),
     )
+    spark = df.sparkSession
     key = _LOGREG_MEMO.key_for(probe, n_buckets, iters, lr)
-    if key is None:
-        feat = logreg_hashed_features(
+    # stored as its builder persists it (the _id-partitioned cache
+    # every GD iteration re-reads), so not pinned
+    feat = _LOGREG_MEMO.get_or(
+        spark,
+        composite_key("feat", key),
+        lambda: logreg_hashed_features(
             df, label_flag, text_col, id_col, n_buckets
-        )
-        return feat, logreg_hashed_train(feat, n_buckets, iters, lr)
-    per = _LOGREG_MEMO.per_session(df.sparkSession)
-    fkey = ("feat",) + key
-    if fkey not in per:
-        per[fkey] = logreg_hashed_features(
-            df, label_flag, text_col, id_col, n_buckets
-        )
-    feat = per[fkey]
-    tkey = ("w",) + key
-    if tkey not in per:
-        per[tkey] = logreg_hashed_train(feat, n_buckets, iters, lr)
-    return feat, per[tkey]
+        ),
+    )
+    weights = _LOGREG_MEMO.get_or(
+        spark,
+        composite_key("w", key),
+        lambda: logreg_hashed_train(feat, n_buckets, iters, lr),
+    )
+    return feat, weights
 
 
 def logreg_hashed_score(feat: DataFrame, weights: list) -> DataFrame:
@@ -2062,8 +2020,8 @@ def bpe_merges_shared(
     of the memo key, so char- and byte-level consumers each share
     their own training run."""
     return _BPE_MEMO.get_or(
-        df,
-        (text_col, k, min_freq, alphabet),
+        df.sparkSession,
+        _BPE_MEMO.key_for(df, text_col, k, min_freq, alphabet),
         lambda: train_bpe_merges(
             df, text_col, k=k, min_freq=min_freq, alphabet=alphabet
         ),

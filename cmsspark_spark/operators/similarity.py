@@ -37,8 +37,8 @@ _LIT_CACHE: dict = {}
 
 
 def _np_digest(*arrays) -> str:
-    """Content digest of constant numpy arrays (rung identity in
-    logs/labels)."""
+    """Content digest of constant numpy arrays (the constants' part of
+    a corpus-index memo key)."""
     import hashlib
 
     h = hashlib.sha1()
@@ -50,18 +50,6 @@ def _np_digest(*arrays) -> str:
     return h.hexdigest()
 
 
-def _ann_topk_shared(
-    tag: str, corpus: DataFrame, queries: DataFrame, params: tuple, builder
-) -> DataFrame:
-    """Build a rung's ranked output. Deliberately NOT memoized: a
-    rung's top-k is a final query result, and replaying it from a
-    session cache would make any repeat timing measure a dict hit
-    instead of the computation — every serve recomputes from the
-    inputs. (Shared *state* — trained centroids, postings — lives in
-    its own train-once memos; outputs do not.)"""
-    return builder()
-
-
 def _corpus_index_shared(
     corpus: DataFrame, params: tuple, builder
 ) -> DataFrame:
@@ -70,34 +58,23 @@ def _corpus_index_shared(
     same grain as the BM25 postings memo (r14, VERDICT item 4): the
     ladder's arms and a rung's repeat serves re-quantize/re-bucket the
     SAME corpus with the SAME constants, so the frame is built once
-    per (plan, files, params) per session, eagerly localCheckpointed
-    (also truncating the codebook/centroid literal lineage that every
-    eager consumer otherwise re-analyzes), and every serve RECOMPUTES
-    its candidate generation + ranking from it — outputs are never
-    memoized (see ``_ann_topk_shared``). Concurrent arms share one
-    build via the per-key lock. Unsafe keys (non-file sources) build
-    unmemoized, exactly as before."""
-    key = _CORPUS_INDEX_MEMO.key_for(corpus, *params)
-    if key is None:
-        return builder()
-    spark = corpus.sparkSession
-    per = _CORPUS_INDEX_MEMO.per_session(spark)
-    if key in per:
-        return per[key]
-    with _CORPUS_INDEX_MEMO.lock_for(spark, key):
-        if key not in per:
-            from pyspark import StorageLevel
+    per (plan, files, params) per session, and every serve RECOMPUTES
+    its candidate generation + ranking from it — a rung's top-k output
+    is never memoized. Concurrent arms share one build via the per-key
+    lock. Unsafe keys (non-file sources) build unmemoized.
 
-            # LAZY persist, not an eager checkpoint: an eager
-            # materialization job per shared frame adds jobs to the
-            # ladder's concurrent fan-out for no measured gain
-            # (5-cold-entry min per variant: eager 4.71 s, lazy
-            # 5.22 s, unshared 5.06 s — within host noise). The lazy
-            # persist shares blocks from first use with no extra job;
-            # cross-entry block survival is a non-goal since the
-            # memo-cold bench invalidates between entries.
-            per[key] = builder().persist(StorageLevel.MEMORY_AND_DISK)
-    return per[key]
+    The frame is pinned LAZILY (``pin_frame(eager=False)``): it
+    materializes with its first serve, so the ladder's concurrent
+    fan-out pays no extra job per arm (an eager pin measured
+    ``ann_ladder_recall_report`` at 7.5/8.1 s against 6.3/6.8 s for
+    the lazy persist it replaced; sf0.1, local[4], best of 2), and the
+    lineage is still cut — consumers never re-analyze the
+    codebook/centroid literals."""
+    return _CORPUS_INDEX_MEMO.get_or(
+        corpus.sparkSession,
+        _CORPUS_INDEX_MEMO.key_for(corpus, *params),
+        lambda: pin_frame(builder(), eager=False),
+    )
 
 
 def _jarr_lit(vals, jtype: str) -> "F.Column":
@@ -210,19 +187,13 @@ def brute_force_topk(
     result fully deterministic.
     Returns (query_id, vec_id, cosine, rank).
     """
-
-    def _build() -> DataFrame:
-        q = queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
-        )
-        cand = corpus.crossJoin(F.broadcast(q)).filter(
-            F.col(id_col) != F.col(query_id_col)
-        )
-        return _rescore_topk(cand, k, id_col, vec_col, query_id_col)
-
-    return _ann_topk_shared(
-        "brute", corpus, queries, (k, id_col, vec_col, query_id_col), _build
+    q = queries.select(
+        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
     )
+    cand = corpus.crossJoin(F.broadcast(q)).filter(
+        F.col(id_col) != F.col(query_id_col)
+    )
+    return _rescore_topk(cand, k, id_col, vec_col, query_id_col)
 
 
 def cosine_near_pairs(
@@ -423,41 +394,32 @@ def ivf_topk(
     membership is a join key. Recall grows with nprobe (nprobe =
     n_centroids ⇒ exact).
     """
-
-    def _build() -> DataFrame:
-        # the corpus-side inverted-list assignment is shared index
-        # STATE (the in-memory form of write_ivf_index's layout): one
-        # build per (corpus, centroids, impl) per session (r14)
-        c_assign = _corpus_index_shared(
-            corpus,
-            ("ivf_assign", id_col, vec_col, impl, _np_digest(centroids)),
-            lambda: corpus.select(
-                F.col(id_col),
-                F.col(vec_col),
-                # corpus side: nprobe=1 — each vector lives in ONE list
-                _probe_lists(vec_col, centroids, 1, impl)
-                .getItem(0)
-                .alias("_centroid"),
-            ),
-        )
-        q_assign = queries.select(
-            F.col(id_col).alias(query_id_col),
-            F.col(vec_col).alias("_qvec"),
-            F.explode(_probe_lists(vec_col, centroids, nprobe, impl)).alias("_centroid"),
-        )
-        cand = (
-            c_assign.join(F.broadcast(q_assign), on="_centroid")
-            .filter(F.col(id_col) != F.col(query_id_col))
-            .dropDuplicates([query_id_col, id_col])
-        )
-        return _rescore_topk(cand, k, id_col, vec_col, query_id_col)
-
-    return _ann_topk_shared(
-        "ivf", corpus, queries,
-        (k, nprobe, id_col, vec_col, query_id_col, impl,
-         _np_digest(centroids)),
-        _build,
+    # the corpus-side inverted-list assignment is shared index
+    # STATE (the in-memory form of write_ivf_index's layout): one
+    # build per (corpus, centroids, impl) per session (r14)
+    c_assign = _corpus_index_shared(
+        corpus,
+        ("ivf_assign", id_col, vec_col, impl, _np_digest(centroids)),
+        lambda: corpus.select(
+            F.col(id_col),
+            F.col(vec_col),
+            # corpus side: nprobe=1 — each vector lives in ONE list
+            _probe_lists(vec_col, centroids, 1, impl)
+            .getItem(0)
+            .alias("_centroid"),
+        ),
     )
+    q_assign = queries.select(
+        F.col(id_col).alias(query_id_col),
+        F.col(vec_col).alias("_qvec"),
+        F.explode(_probe_lists(vec_col, centroids, nprobe, impl)).alias("_centroid"),
+    )
+    cand = (
+        c_assign.join(F.broadcast(q_assign), on="_centroid")
+        .filter(F.col(id_col) != F.col(query_id_col))
+        .dropDuplicates([query_id_col, id_col])
+    )
+    return _rescore_topk(cand, k, id_col, vec_col, query_id_col)
 
 
 def write_ivf_index(
@@ -584,7 +546,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Approximate cosine top-k via sign-LSH bucketing + exact re-score.
 
@@ -592,51 +553,42 @@ def lsh_topk(
     of ``tables`` independent hash tables; only candidates get the exact
     cosine. Recall grows with ``tables`` and shrinks with ``num_planes``.
     Returns (query_id, vec_id, cosine, rank) like ``brute_force_topk``.
-    ``impl``: see ``cosine_near_pairs_lsh``.
+    Buckets come from the vectorized ``arrow`` hasher (see
+    ``cosine_near_pairs_lsh``).
     """
+    rng = np.random.default_rng(seed)
+    all_planes = [
+        rng.standard_normal((num_planes, dim)) for _ in range(tables)
+    ]
 
-    def _build() -> DataFrame:
-        rng = np.random.default_rng(seed)
-        all_planes = [
-            rng.standard_normal((num_planes, dim)) for _ in range(tables)
-        ]
-
-        def bucketize(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
-            # ONE scan: every table's bucket in one array column (one UDF
-            # call or one expression tree), exploded narrowly — no
-            # union-of-branches re-reading the source.
-            return df.select(
-                F.col(id_col).alias(out_id),
-                F.col(vec_col).alias(out_vec),
-                F.posexplode(_all_buckets(vec_col, all_planes, impl)).alias(
-                    "_table", "_bucket"
-                ),
-            )
-
-        # the corpus-side hash tables are shared index STATE: one
-        # bucketize per (corpus, planes, impl) per session (r14)
-        corpus_all = _corpus_index_shared(
-            corpus,
-            ("lsh_buckets", id_col, vec_col, dim, num_planes, tables,
-             seed, impl),
-            lambda: bucketize(corpus, id_col, vec_col),
+    def bucketize(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
+        # ONE scan: every table's bucket in one array column (one UDF
+        # call or one expression tree), exploded narrowly — no
+        # union-of-branches re-reading the source.
+        return df.select(
+            F.col(id_col).alias(out_id),
+            F.col(vec_col).alias(out_vec),
+            F.posexplode(_all_buckets(vec_col, all_planes, "arrow")).alias(
+                "_table", "_bucket"
+            ),
         )
-        query_all = bucketize(queries, query_id_col, "_qvec")
 
-        cand = (
-            corpus_all.join(F.broadcast(query_all), on=["_table", "_bucket"])
-            .filter(F.col(id_col) != F.col(query_id_col))
-            .select(query_id_col, id_col, vec_col, "_qvec")
-            .dropDuplicates([query_id_col, id_col])
-        )
-        return _rescore_topk(cand, k, id_col, vec_col, query_id_col)
-
-    return _ann_topk_shared(
-        "lsh", corpus, queries,
-        (dim, k, num_planes, tables, seed, id_col, vec_col, query_id_col,
-         impl),
-        _build,
+    # the corpus-side hash tables are shared index STATE: one
+    # bucketize per (corpus, planes) per session (r14)
+    corpus_all = _corpus_index_shared(
+        corpus,
+        ("lsh_buckets", id_col, vec_col, dim, num_planes, tables, seed),
+        lambda: bucketize(corpus, id_col, vec_col),
     )
+    query_all = bucketize(queries, query_id_col, "_qvec")
+
+    cand = (
+        corpus_all.join(F.broadcast(query_all), on=["_table", "_bucket"])
+        .filter(F.col(id_col) != F.col(query_id_col))
+        .select(query_id_col, id_col, vec_col, "_qvec")
+        .dropDuplicates([query_id_col, id_col])
+    )
+    return _rescore_topk(cand, k, id_col, vec_col, query_id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -772,11 +724,7 @@ def pq_adc_topk(
     cross-engine deterministic. ``adc_score`` is the (constant-shifted)
     negated half-distance: rank by it DESC ≡ L2 ADC distance ASC.
     Plan contracts assert on ``_pq_adc_build``."""
-    return _ann_topk_shared(
-        "pq_adc", corpus, queries,
-        (k, id_col, vec_col, _np_digest(codebook)),
-        lambda: _pq_adc_build(corpus, queries, codebook, k, id_col, vec_col),
-    )
+    return _pq_adc_build(corpus, queries, codebook, k, id_col, vec_col)
 
 
 def _pq_adc_build(
@@ -987,12 +935,8 @@ def ivfpq_static_topk(
     ranking key folds in the same left-associative order as the DuckDB
     twin, so the static-seed form is hash-exact cross-engine. Ranking
     maximizes ``Σⱼ s_j(code_j) − ½‖q−c‖²`` ≡ L2 ADC distance ASC."""
-    return _ann_topk_shared(
-        "ivfpq", corpus, queries,
-        (k, nprobe, id_col, vec_col, _np_digest(centroids, codebook)),
-        lambda: _ivfpq_static_build(
-            corpus, queries, centroids, codebook, k, nprobe, id_col, vec_col
-        ),
+    return _ivfpq_static_build(
+        corpus, queries, centroids, codebook, k, nprobe, id_col, vec_col
     )
 
 
@@ -1250,6 +1194,7 @@ def _kmeans_quantized_frame(
 #: persist is also deduped here (one cache per corpus, not one per
 #: consumer — the cache-accumulation fix from the r7 advice).
 from cmsspark_spark.operators.memo import SessionMemo as _SessionMemo
+from cmsspark_spark.operators.memo import composite_key, pin_frame
 
 _KMEANS_MEMO = _SessionMemo("kmeans")
 
@@ -1267,28 +1212,21 @@ def _kmeans_shared(
     seed scan and every iteration action. Falls back to untracked
     training if the plan has no safe memo key (no semanticHash, or a
     non-fingerprintable source)."""
-    base_key = _KMEANS_MEMO.key_for(corpus, id_col, vec_col, scale)
-    if base_key is None:
-        q = _kmeans_quantized_frame(corpus, id_col, vec_col, scale)
-        return q, _kmeans_train(q, k, iters)
     spark = corpus.sparkSession
-    per_sess = _KMEANS_MEMO.per_session(spark)
-    fkey = ("frame",) + base_key
-    if fkey not in per_sess:
-        # per-key build lock (ADVICE r13): concurrent ladder arms that
-        # both miss share ONE quantize/train instead of building twice
-        with _KMEANS_MEMO.lock_for(spark, fkey):
-            if fkey not in per_sess:
-                per_sess[fkey] = _kmeans_quantized_frame(
-                    corpus, id_col, vec_col, scale
-                )
-    q = per_sess[fkey]
-    tkey = ("cents",) + base_key + (k, iters)
-    if tkey not in per_sess:
-        with _KMEANS_MEMO.lock_for(spark, tkey):
-            if tkey not in per_sess:
-                per_sess[tkey] = _kmeans_train(q, k, iters)
-    return q, per_sess[tkey]
+    base_key = _KMEANS_MEMO.key_for(corpus, id_col, vec_col, scale)
+    # the quantized frame is stored as its builder persists it: the
+    # final assignment is a narrow map over that cache
+    q = _KMEANS_MEMO.get_or(
+        spark,
+        composite_key("frame", base_key),
+        lambda: _kmeans_quantized_frame(corpus, id_col, vec_col, scale),
+    )
+    cents = _KMEANS_MEMO.get_or(
+        spark,
+        composite_key("cents", base_key, k, iters),
+        lambda: _kmeans_train(q, k, iters),
+    )
+    return q, cents
 
 
 def _kmeans_train(q: DataFrame, k: int, iters: int) -> list:

@@ -30,6 +30,7 @@ from cmsspark_spark.operators import joins as J
 from cmsspark_spark.operators import multimodal as M
 from cmsspark_spark.operators import similarity as S
 from cmsspark_spark.operators import sketches as K
+from cmsspark_spark.operators.memo import SessionMemo
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
@@ -12274,27 +12275,20 @@ def bm25_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: kept alive for the session so every registry entry re-SERVES from
 #: the shared on-disk index, cleaned at interpreter exit.
 _INDEX_SCRATCH_DIRS: list[str] = []
-_INDEX_DIR_MEMO = None
+_INDEX_DIR_MEMO = SessionMemo("bm25_index_dirs")
 
 
-def _bm25_index_dir(d: DataFrame, tag: str, build) -> str | None:
+def _bm25_index_dir(d: DataFrame, tag: str, build) -> str:
     """Memoized scratch-index PATH for corpus ``d`` — on-disk INDEX
     STATE, the train-once/serve-many contract. The r12-era pattern
     memoized the eagerly-checkpointed SERVE OUTPUTS and deleted the
     index — result caching by the r13 policy line (VERDICT r13
     item 1), retired: now only the index build is shared and each
-    query recomputes its serve. Returns None when the corpus is not
-    fingerprintable (caller builds + serves + cleans transiently)."""
-    global _INDEX_DIR_MEMO
-    from cmsspark_spark.operators.memo import SessionMemo
+    query recomputes its serve. A corpus that is not fingerprintable
+    gets a fresh, unmemoized scratch index per call; every scratch
+    dir is removed at interpreter exit."""
 
-    if _INDEX_DIR_MEMO is None:
-        _INDEX_DIR_MEMO = SessionMemo("bm25_index_dirs")
-    key = _INDEX_DIR_MEMO.key_for(d, tag)
-    if key is None:
-        return None
-    per = _INDEX_DIR_MEMO.per_session(d.sparkSession)
-    if key not in per:
+    def make() -> str:
         import atexit
         import shutil
         import tempfile
@@ -12310,8 +12304,11 @@ def _bm25_index_dir(d: DataFrame, tag: str, build) -> str | None:
         _INDEX_SCRATCH_DIRS.append(tmp)
         idx = f"{tmp}/idx"
         build(idx)
-        per[key] = idx
-    return per[key]
+        return idx
+
+    return _INDEX_DIR_MEMO.get_or(
+        d.sparkSession, _INDEX_DIR_MEMO.key_for(d, tag), make
+    )
 
 
 def _bm25_index_shared(d: DataFrame) -> tuple:
@@ -12319,9 +12316,6 @@ def _bm25_index_shared(d: DataFrame) -> tuple:
     appends (base corpus, then increment) and serve all three modes.
     The index PATH is memoized per session (_bm25_index_dir — on-disk
     index state); the serves recompute per call."""
-    import shutil
-    import tempfile
-
     from cmsspark_spark.operators import retrieval as R
 
     spark = d.sparkSession
@@ -12337,18 +12331,7 @@ def _bm25_index_shared(d: DataFrame) -> tuple:
             R.bm25_index_serve(spark, idx, mode="blockmax"),
         )
 
-    idx = _bm25_index_dir(d, "index_incr", _append)
-    if idx is not None:
-        return _serves(idx)
-    # un-fingerprintable corpus: transient build, serves checkpointed
-    # eagerly BEFORE the scratch dir drops (the plans read its parquet)
-    tmp = tempfile.mkdtemp(prefix="bm25_index_")
-    _append(f"{tmp}/idx")
-    out = tuple(
-        f.localCheckpoint(eager=True) for f in _serves(f"{tmp}/idx")
-    )
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _serves(_bm25_index_dir(d, "index_incr", _append))
 
 
 @query(
@@ -12496,9 +12479,6 @@ def bm25_index_tombstone_serve(
     hash-exact against the exact oracle computed over only the LIVE
     documents. This is what lets the snapshot-consume path handle
     overwrites/rollbacks (allow_removals=True) without un-indexing."""
-    import shutil
-    import tempfile
-
     from cmsspark_spark.operators import retrieval as R
 
     d = _t(spark, sf_dir, "documents")
@@ -12510,15 +12490,7 @@ def bm25_index_tombstone_serve(
         )
 
     idx = _bm25_index_dir(d, "index_tomb", _append)
-    if idx is not None:
-        return R.bm25_index_serve(spark, idx, mode="blockmax")
-    tmp = tempfile.mkdtemp(prefix="bm25_tomb_")
-    _append(f"{tmp}/idx")
-    out = R.bm25_index_serve(
-        spark, f"{tmp}/idx", mode="blockmax"
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return R.bm25_index_serve(spark, idx, mode="blockmax")
 
 
 @query(
@@ -14404,9 +14376,6 @@ def _bm25_boolean_shared(d: DataFrame) -> tuple:
     boolean/phrase/pruning-report trio off it. The index PATH is
     memoized per session (_bm25_index_dir — on-disk index state); the
     three registry entries each recompute their serve per call."""
-    import shutil
-    import tempfile
-
     from cmsspark_spark.operators import retrieval as R
 
     spark = d.sparkSession
@@ -14428,16 +14397,7 @@ def _bm25_boolean_shared(d: DataFrame) -> tuple:
             R.bm25_boolean_prune_report(spark, idx, _BOOL_QUERIES),
         )
 
-    idx = _bm25_index_dir(d, "index_bool", _append)
-    if idx is not None:
-        return _serves(idx)
-    tmp = tempfile.mkdtemp(prefix="bm25_bool_")
-    _append(f"{tmp}/idx")
-    out = tuple(
-        f.localCheckpoint(eager=True) for f in _serves(f"{tmp}/idx")
-    )
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _serves(_bm25_index_dir(d, "index_bool", _append))
 
 
 @query(
@@ -14798,9 +14758,6 @@ def bm25_boolean_not_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms' df (their postings semi-joined to the AND survivors),
     never corpus-sized. Hash-exact against DuckDB's NOT EXISTS
     formulation."""
-    import shutil
-    import tempfile
-
     from cmsspark_spark.operators import retrieval as R
 
     d = _t(spark, sf_dir, "documents")
@@ -14813,11 +14770,4 @@ def bm25_boolean_not_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, idx, _BOOLNOT_QUERIES, exclude=_BOOLNOT_EXCLUDE
         )
 
-    idx = _bm25_index_dir(d, "index_boolnot", _append)
-    if idx is not None:
-        return _serve(idx)
-    tmp = tempfile.mkdtemp(prefix="bm25_not_")
-    _append(f"{tmp}/idx")
-    out = _serve(f"{tmp}/idx").localCheckpoint(eager=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _serve(_bm25_index_dir(d, "index_boolnot", _append))

@@ -1,12 +1,15 @@
 """Parity gate for the Arrow text kernels (round 14, VERDICT item 3).
 
-The ``mapInArrow`` fast paths in ``functions/arrow_text.py`` replace
-interpreted Catalyst HOF chains in two oracle-checked paths (the
-postings build behind every BM25 query, the featurize stage behind the
-logreg quality family). They are only admissible because their output
-is BIT-IDENTICAL to the Catalyst forms — these tests pin that contract
-on an adversarial corpus (unicode case-mapping cliffs, exotic
-whitespace, null/empty/degenerate docs) plus the real test corpus.
+The ``mapInArrow`` kernels in ``functions/arrow_text.py`` are the only
+implementation of three oracle-checked paths (the postings build behind
+every BM25 query, the shingle frame behind every MinHash/Jaccard
+consumer, the featurize stage behind the logreg quality family). They
+replaced interpreted Catalyst HOF chains and are only admissible
+because their output is BIT-IDENTICAL to those forms — which live on
+below as the reference. These tests pin that contract for bigint, int
+and string ids on an adversarial corpus (unicode case-mapping cliffs,
+exotic whitespace, null/empty/degenerate docs) plus the real test
+corpus.
 """
 
 from __future__ import annotations
@@ -14,7 +17,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from cmsspark_spark.functions.text import doc_term_postings, tokens
+from cmsspark_spark.functions.text import (
+    _RUN_COUNTS,
+    _RUN_STARTS,
+    doc_term_postings,
+    int_base_hash,
+    raw_ngrams,
+    shingle_frame,
+    shingles,
+    tokens,
+)
 from cmsspark_spark.operators.pipeline import logreg_hashed_features
 
 from tests.conftest import SF_SMOKE
@@ -86,8 +98,6 @@ def test_kernel_bucket_hash_matches_int_base_hash(spark, adversarial_df):
     digit-for-digit on every adversarial token and gram."""
     from hashlib import md5
 
-    from cmsspark_spark.functions.text import int_base_hash
-
     toks = adversarial_df.select(
         F.explode(tokens("text")).alias("g")
     ).union(
@@ -104,93 +114,128 @@ def test_kernel_bucket_hash_matches_int_base_hash(spark, adversarial_df):
         assert py == r["h"], r["g"]
 
 
-@pytest.mark.parametrize("source", ["adversarial", "corpus"])
-def test_doc_term_postings_arrow_matches_sql(
-    spark, adversarial_df, corpus_df, source
-):
+# --- Catalyst references -------------------------------------------------
+# The pure-Catalyst forms the kernels replaced, kept here as the equality
+# oracle (the production path runs only the Arrow kernels).
+
+
+def _postings_sql(df, id_col, text_col, cols=("_doc", "_t", "_dl", "_tf")):
+    """Sort the token array, run-length encode it, explode the runs."""
+    d, t, dl, tf = cols
+    return (
+        df.select(
+            F.col(id_col).alias(d),
+            F.array_sort(tokens(text_col)).alias("_st"),
+        )
+        .withColumn("_starts", F.expr(_RUN_STARTS))
+        .select(
+            d,
+            F.size("_st").alias(dl),
+            F.explode(F.expr(_RUN_COUNTS)).alias("_p"),
+        )
+        .select(
+            d,
+            F.col("_p._t").alias(t),
+            F.col(dl),
+            F.col("_p._tf").cast("long").alias(tf),
+        )
+    )
+
+
+def _shingle_frame_sql(df, id_col, text_col, n, cols=("_id", "_arr")):
+    x, y = cols
+    return df.select(F.col(id_col).alias(x), shingles(text_col, n).alias(y))
+
+
+def _logreg_features_sql(df, label_flag, text_col, id_col, n_buckets):
+    """Hashed unigram+bigram bucket counts by sort+RLE, plus the
+    intercept bucket — logreg_hashed_features before the repartition."""
+    toks = tokens(text_col)
+    grams = F.concat(raw_ngrams(toks, 1), raw_ngrams(toks, 2))
+    counts = (
+        df.select(
+            F.col(id_col).alias("_id"),
+            label_flag.cast("double").alias("_y"),
+            F.array_sort(
+                F.transform(grams, lambda g: int_base_hash(g) % n_buckets)
+            ).alias("_st"),
+        )
+        .withColumn("_starts", F.expr(_RUN_STARTS))
+        .select("_id", "_y", F.explode(F.expr(_RUN_COUNTS)).alias("_p"))
+        .select(
+            "_id",
+            F.col("_p._t").cast("long").alias("_b"),
+            "_y",
+            F.col("_p._tf").cast("long").alias("_c"),
+        )
+    )
+    intercept = df.select(
+        F.col(id_col).alias("_id"),
+        F.lit(n_buckets).alias("_b"),
+        label_flag.cast("double").alias("_y"),
+        F.lit(1).cast("long").alias("_c"),
+    )
+    return counts.unionByName(intercept)
+
+
+#: (source, id type) cases: the kernels carry the id column's type
+#: through. bigint — what both sources carry — keeps the bare source
+#: id; the other id types run on the adversarial corpus only.
+CASES = [
+    pytest.param("adversarial", "bigint", id="adversarial"),
+    pytest.param("adversarial", "int", id="adversarial-int"),
+    pytest.param("adversarial", "string", id="adversarial-string"),
+    pytest.param("corpus", "bigint", id="corpus"),
+]
+
+
+@pytest.fixture
+def source_df(adversarial_df, corpus_df, source, id_type):
     df = adversarial_df if source == "adversarial" else corpus_df
-    sql = doc_term_postings(df, "doc_id", "text", impl="sql")
-    arrow = doc_term_postings(df, "doc_id", "text", impl="arrow")
-    # the fast path actually engaged (and the fallback actually not)
-    assert "MapInArrow" in arrow._jdf.queryExecution().toString()
-    assert "MapInArrow" not in sql._jdf.queryExecution().toString()
-    assert [
-        (f.name, f.dataType.simpleString()) for f in arrow.schema.fields
-    ] == [(f.name, f.dataType.simpleString()) for f in sql.schema.fields]
+    return df.select(
+        F.col("doc_id").cast(id_type).alias("doc_id"), "text"
+    )
+
+
+def _schema(df):
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
+@pytest.mark.parametrize("source,id_type", CASES)
+def test_doc_term_postings_arrow_matches_sql(spark, source_df, id_type):
+    arrow = doc_term_postings(source_df, "doc_id", "text")
+    sql = _postings_sql(source_df, "doc_id", "text")
+    assert _schema(arrow) == _schema(sql)
+    assert arrow.schema["_doc"].dataType.simpleString() == id_type
     assert _rows(arrow) == _rows(sql)
 
 
-def test_doc_term_postings_non_bigint_id_falls_back(spark, adversarial_df):
-    """A non-bigint id column must route to the Catalyst twin (the
-    Arrow kernel's output schema is pinned to int64 ids)."""
-    df = adversarial_df.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    out = doc_term_postings(df, "doc_id", "text")
-    assert "MapInArrow" not in out._jdf.queryExecution().toString()
-    assert out.schema["_doc"].dataType.simpleString() == "string"
-    assert _rows(out) == _rows(doc_term_postings(df, "doc_id", "text", impl="sql"))
-
-
-@pytest.mark.parametrize("source", ["adversarial", "corpus"])
-def test_logreg_features_arrow_matches_sql(
-    spark, adversarial_df, corpus_df, source
-):
-    df = adversarial_df if source == "adversarial" else corpus_df
+@pytest.mark.parametrize("source,id_type", CASES)
+def test_logreg_features_arrow_matches_sql(spark, source_df, id_type):
     label = (F.coalesce(F.length("text"), F.lit(0)) % 2 == 0).cast("int")
-    sql = logreg_hashed_features(
-        df, label, text_col="text", id_col="doc_id", impl="sql"
-    )
     arrow = logreg_hashed_features(
-        df, label, text_col="text", id_col="doc_id", impl="arrow"
+        source_df, label, text_col="text", id_col="doc_id"
     )
+    sql = _logreg_features_sql(source_df, label, "text", "doc_id", 256)
     try:
-        assert "MapInArrow" in arrow._jdf.queryExecution().toString()
-        assert [
-            (f.name, f.dataType.simpleString()) for f in arrow.schema.fields
-        ] == [(f.name, f.dataType.simpleString()) for f in sql.schema.fields]
+        assert _schema(arrow) == _schema(sql)
+        assert arrow.schema["_id"].dataType.simpleString() == id_type
         assert _rows(arrow) == _rows(sql)
     finally:
-        sql.unpersist()
         arrow.unpersist()
 
 
-def test_env_override_forces_sql(spark, adversarial_df, monkeypatch):
-    monkeypatch.setenv("CMSSPARK_TEXT_IMPL", "sql")
-    out = doc_term_postings(adversarial_df, "doc_id", "text")
-    assert "MapInArrow" not in out._jdf.queryExecution().toString()
-
-
 @pytest.mark.parametrize("n", [2, 3, 5])
-@pytest.mark.parametrize("source", ["adversarial", "corpus"])
-def test_shingle_frame_arrow_matches_sql(
-    spark, adversarial_df, corpus_df, source, n
-):
+@pytest.mark.parametrize("source,id_type", CASES)
+def test_shingle_frame_arrow_matches_sql(spark, source_df, id_type, n):
     """distinct_shingles_arrow == select(id, shingles(text, n))
     value-for-value INCLUDING array element order (array_distinct's
     first-occurrence order) and the degenerate short-doc / empty-doc
     collapse rules."""
-    from cmsspark_spark.functions.text import shingle_frame
-
-    df = adversarial_df if source == "adversarial" else corpus_df
-    sql = shingle_frame(df, "doc_id", "text", n, impl="sql")
-    arrow = shingle_frame(df, "doc_id", "text", n, impl="arrow")
-    assert "MapInArrow" in arrow._jdf.queryExecution().toString()
-    assert "MapInArrow" not in sql._jdf.queryExecution().toString()
-    assert [
-        (f.name, f.dataType.simpleString()) for f in arrow.schema.fields
-    ] == [(f.name, f.dataType.simpleString()) for f in sql.schema.fields]
+    arrow = shingle_frame(source_df, "doc_id", "text", n)
+    sql = _shingle_frame_sql(source_df, "doc_id", "text", n)
+    assert _schema(arrow) == _schema(sql)
+    assert arrow.schema["_id"].dataType.simpleString() == id_type
     got = {r["_id"]: r["_arr"] for r in arrow.collect()}
     exp = {r["_id"]: r["_arr"] for r in sql.collect()}
     assert got == exp
-
-
-def test_shingle_frame_non_bigint_falls_back(spark, adversarial_df):
-    from cmsspark_spark.functions.text import shingle_frame
-
-    df = adversarial_df.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    out = shingle_frame(df, "doc_id", "text", 3)
-    assert "MapInArrow" not in out._jdf.queryExecution().toString()
-    assert out.schema["_id"].dataType.simpleString() == "string"

@@ -10,11 +10,17 @@ at the SAME path retrains/re-propagates (invalidation).
 
 from __future__ import annotations
 
+import os
+
+import pyspark.sql.functions as F
 import pytest
 
 import cmsspark_spark.operators.dedup as D
+import cmsspark_spark.operators.pipeline as PL
 import cmsspark_spark.operators.similarity as S
+import cmsspark_spark.queries as Q
 from cmsspark_spark.operators.memo import (
+    _REGISTRY,
     SessionMemo,
     invalidate_session_memos,
     plan_data_fingerprint,
@@ -124,9 +130,9 @@ def test_invalidate_session_memos_clears_everything(spark, tmp_path):
     pairs = spark.read.parquet(p)
     out1 = D.connected_components(pairs)
     key = D._CC_MEMO.key_for(pairs, "id_a", "id_b", 25)
-    assert key is not None and key in D._CC_MEMO.per_session(spark)
+    assert key is not None and key in D._CC_MEMO._store[spark]
     invalidate_session_memos(spark)
-    assert key not in D._CC_MEMO.per_session(spark)
+    assert key not in D._CC_MEMO._store.get(spark, {})
     # and the recomputed answer is unchanged
     assert _labels(D.connected_components(pairs)) == _labels(out1)
 
@@ -190,10 +196,6 @@ def test_logreg_memo_shares_fit_and_keys_on_label(spark, tmp_path, monkeypatch):
     sweep trio shares one featurize+fit; a DIFFERENT label expression
     over the same corpus is a different key (the probe plan hashes the
     label Column), and changed files retrain."""
-    import pyspark.sql.functions as F
-
-    import cmsspark_spark.operators.pipeline as PL
-
     monkeypatch.setattr(PL, "_LOGREG_MEMO", SessionMemo("logreg-test"))
     calls = {"n": 0}
     real = PL.logreg_hashed_train
@@ -245,45 +247,158 @@ def test_session_memo_store_is_bounded_lru():
 
     memo = SessionMemo("lru-test")
     sess = FakeSession()
-    store = memo.per_session(sess)
-    assert isinstance(store, _LruDict)
-    assert memo.per_session(sess) is store  # stable per session
-
     for i in range(MEMO_MAX_ENTRIES):
-        store[("k", i)] = i
-    _ = store[("k", 0)]  # refresh entry 0's recency
-    store[("k", MEMO_MAX_ENTRIES)] = MEMO_MAX_ENTRIES  # overflow by one
+        assert memo.get_or(sess, ("k", i), lambda i=i: i) == i
+    store = memo._store[sess]
+    assert isinstance(store, _LruDict)
+    assert memo.get_or(sess, ("k", 0), lambda: "rebuilt") == 0  # hit
+    memo.get_or(sess, ("k", MEMO_MAX_ENTRIES), lambda: 0)  # overflow by one
     assert len(store) == MEMO_MAX_ENTRIES
     assert ("k", 0) in store          # recently read → retained
     assert ("k", 1) not in store      # the actual LRU → evicted
     assert ("k", MEMO_MAX_ENTRIES) in store
 
 
-def test_get_or_concurrent_misses_share_one_build(spark, tmp_path):
-    """r14 (ADVICE r13): two threads missing the same key serialize on
-    a per-key lock and share ONE build — the train-once contract holds
-    under the concurrent fan-outs (ladder arms, rung twins)."""
+#: One concurrency case per memo declared in cmsspark_spark: the memo
+#: site's build functions (module attribute names, each counted) and a
+#: call through the site on the tiny memo_inputs. Builders a site takes
+#: as an argument are wrapped with ``counted`` by the call itself.
+MEMO_CASES = {
+    "minhash_sigs": (
+        [(D, "_minhash_signatures_wide_run")],
+        lambda i, counted: D.minhash_signatures_wide(i.docs, "doc_id", "text"),
+    ),
+    "jaccard_shingles": (
+        [(D, "_shingle_rows")],
+        lambda i, counted: D.jaccard_pairs(
+            i.docs, "doc_id", "text", candidates=i.pairs
+        ),
+    ),
+    "simhash": (
+        [(D, "_simhash_run")],
+        lambda i, counted: D.simhash(i.docs, "doc_id", "text"),
+    ),
+    "components": (
+        [(D, "_connected_components_run")],
+        lambda i, counted: D.connected_components(i.pairs),
+    ),
+    "bm25_postings": (
+        [(PL, "doc_term_postings")],
+        lambda i, counted: PL._postings_stats(i.docs, "doc_id", "text"),
+    ),
+    "bm25_prune_state": (
+        [(PL, "_bm25_prune_state")],
+        lambda i, counted: PL._bm25_prune_state_shared(
+            i.docs, "doc_id", "text", 2, 3, 2, 1.2, 0.75, 2.2, 0.25, True
+        ),
+    ),
+    "logreg": (
+        [(PL, "logreg_hashed_features"), (PL, "logreg_hashed_train")],
+        lambda i, counted: PL.logreg_hashed_shared(
+            i.docs, F.col("doc_id") % 2 == 0, n_buckets=16, iters=1
+        ),
+    ),
+    "bpe": (
+        [(PL, "train_bpe_merges")],
+        lambda i, counted: PL.bpe_merges_shared(i.docs, "text", k=2),
+    ),
+    "kmeans": (
+        [(S, "_kmeans_quantized_frame"), (S, "_kmeans_train")],
+        lambda i, counted: S.kmeans_centroids(i.emb, k=2, iters=1),
+    ),
+    "ann_corpus_index": (
+        [],
+        lambda i, counted: S._corpus_index_shared(
+            i.emb, ("probe",), counted(lambda: i.emb.select("vec_id"), "index")
+        ),
+    ),
+    "bm25_index_dirs": (
+        [],
+        lambda i, counted: Q._bm25_index_dir(
+            i.docs, "probe", counted(os.makedirs, "index")
+        ),
+    ),
+}
+
+
+def _declared_memos() -> dict:
+    """Every SessionMemo a cmsspark_spark module declares, by name."""
+    import importlib
+    import pkgutil
+
+    import cmsspark_spark
+
+    found = {}
+    for info in pkgutil.walk_packages(
+        cmsspark_spark.__path__, "cmsspark_spark."
+    ):
+        for v in vars(importlib.import_module(info.name)).values():
+            if isinstance(v, SessionMemo):
+                found[v.name] = v
+    return found
+
+
+def test_every_declared_memo_has_a_concurrency_case():
+    declared = _declared_memos()
+    assert all(m in _REGISTRY for m in declared.values())
+    assert set(declared) == set(MEMO_CASES)
+
+
+@pytest.fixture(scope="module")
+def memo_inputs(spark, tmp_path_factory):
+    """Tiny file-backed inputs, so every memo site has a safe key."""
+    from types import SimpleNamespace
+
+    base = tmp_path_factory.mktemp("memo_inputs")
+    text = " ".join(f"tok{i}" for i in range(12))
+    frames = {
+        "docs": spark.createDataFrame(
+            [(1, text), (2, text + " extra"), (3, "other words here")],
+            "doc_id long, text string",
+        ),
+        "pairs": spark.createDataFrame([(1, 2)], "id_a long, id_b long"),
+        "emb": spark.createDataFrame(
+            [(i, [float(i), float(i % 3)]) for i in range(6)],
+            "vec_id long, embedding array<double>",
+        ),
+    }
+    for name, df in frames.items():
+        df.write.parquet(str(base / name))
+    return SimpleNamespace(
+        **{n: spark.read.parquet(str(base / n)) for n in frames}
+    )
+
+
+@pytest.mark.parametrize("name", sorted(MEMO_CASES))
+def test_get_or_concurrent_misses_share_one_build(
+    spark, memo_inputs, monkeypatch, name
+):
+    """Four threads missing the same key at one memo site serialize on
+    the per-key lock and share ONE build of every value the site
+    keeps — the train-once contract under concurrent fan-outs (ladder
+    arms, rung twins)."""
     import time
+    from collections import Counter
     from concurrent.futures import ThreadPoolExecutor
 
-    memo = SessionMemo("lock-test")
-    p = str(tmp_path / "d")
-    spark.createDataFrame([(1,)], "x long").write.parquet(p)
-    df = spark.read.parquet(p)
-    calls = {"n": 0}
+    patches, call = MEMO_CASES[name]
+    calls: Counter = Counter()
 
-    def builder():
-        calls["n"] += 1
-        time.sleep(0.3)  # widen the race window
-        return object()
+    def counted(fn, label):
+        def build(*a, **k):
+            calls[label] += 1
+            time.sleep(0.3)  # widen the race window
+            return fn(*a, **k)
 
+        return build
+
+    for mod, attr in patches:
+        monkeypatch.setattr(mod, attr, counted(getattr(mod, attr), attr))
+    _declared_memos()[name].invalidate(spark)
     with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = [
-            pool.submit(memo.get_or, df, ("k",), builder) for _ in range(4)
-        ]
-        results = [f.result() for f in futures]
-    assert calls["n"] == 1
-    assert all(r is results[0] for r in results)
+        for f in [pool.submit(call, memo_inputs, counted) for _ in range(4)]:
+            f.result(timeout=300)
+    assert calls and set(calls.values()) == {1}, calls
 
 
 def test_ann_corpus_index_shares_state_not_outputs(

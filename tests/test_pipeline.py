@@ -120,6 +120,23 @@ def test_ngram_overlap_planted_contamination(spark):
     assert out[2]["n_hit"] == 0 and out[2]["hit_ratio"] == 0.0
 
 
+def test_ngram_overlap_benchmark_needs_no_id_column(spark):
+    """The benchmark side only contributes its distinct grams, so a
+    text-only eval set works and scores like one with ids."""
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps high"), (2, "unrelated words")],
+        ["doc_id", "text"],
+    )
+    with_id = spark.createDataFrame([(100, text)], ["doc_id", "text"])
+    text_only = spark.createDataFrame([(text,)], ["text"])
+    got = sorted(tuple(r) for r in PL.ngram_overlap(docs, text_only).collect())
+    assert got == sorted(
+        tuple(r) for r in PL.ngram_overlap(docs, with_id).collect()
+    )
+    assert [r[2] for r in got] == [3, 0]  # n_hit per doc
+
+
 def test_stratified_sample_exact_k_and_stable(spark, docs):
     k = 3
     s1 = {

@@ -758,6 +758,25 @@ def test_optimize_table_job_end_to_end(spark, tmp_path):
     assert os.path.exists(f"{out2}/manifest_before.csv")
 
 
+def test_optimize_table_refuses_in_place(tmp_path, monkeypatch):
+    """The never-in-place guard fires before any Spark work for every
+    spelling of the table's own directory: the same path, a trailing
+    slash, a relative path from the table's parent, and a symlink."""
+    import os
+
+    import pytest
+
+    from cmsspark_spark.jobs import optimize_table
+
+    table = tmp_path / "tbl"
+    table.mkdir()
+    os.symlink(table, tmp_path / "alias")
+    monkeypatch.chdir(tmp_path)
+    for dest in (str(table), f"{table}/", "tbl", str(tmp_path / "alias")):
+        with pytest.raises(ValueError, match="never runs in place"):
+            optimize_table.run(None, str(table), "out", "a", "b", dest=dest)
+
+
 def test_split_assign_increment_inherits_cluster_split(spark, tmp_path):
     """r9: the ingest-gate treatment for cluster-consistent splits —
     an appended near-dup inherits its cluster's split via the MinHash
