@@ -137,8 +137,8 @@ def run(
     # output alongside a missing curated parquet partition, so
     # downstream consumers must key on job success, not on any sink's
     # presence. Every future is drained and EVERY failure is surfaced
-    # (not just the first): a second sink's failure is chained as
-    # context instead of being silently swallowed.
+    # (not just the first): the first failure is the cause, and every
+    # later one is named in the message with its repr.
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = {
             name: pool.submit(fn)
@@ -153,10 +153,10 @@ def run(
         ]
     if errors:
         names = ", ".join(name for name, _ in errors)
-        exc = RuntimeError(f"rucio summary sink(s) failed: {names}")
-        for _, e in errors[1:]:
-            exc.add_note(f"also failed: {e!r}")
-        raise exc from errors[0][1]
+        also = "".join(f"; also failed: {n}: {e!r}" for n, e in errors[1:])
+        raise RuntimeError(
+            f"rucio summary sink(s) failed: {names}{also}"
+        ) from errors[0][1]
     # K6: OpenSearch bulk push (driver-side batched like the
     # reference's send loop; the transport is injected).
     if osearch_sink is not None:

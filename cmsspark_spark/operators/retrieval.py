@@ -46,10 +46,11 @@ vocabulary-sized pass, never from postings).
 
 Scale: an append tokenizes only the increment (one (doc, term)
 shuffle over increment rows); serve reads postings with the doc/term
-predicates pushed to parquet; candidate generation and scoring reuse
-the exact plan shapes of the in-session rungs (query terms, df table
-and candidate ids broadcast; text never shuffles — text is never even
-stored in the index).
+predicates pushed to parquet; scoring, θ, the essential split, block
+survival and rank run through the kernel the in-session rungs use
+(operators/bm25.py: query terms, df table and candidate ids
+broadcast; text never shuffles — text is never even stored in the
+index).
 
 DURABILITY (VERDICT r11 item 2): every append is ONE ATOMIC COMMIT —
 all tables staged under ``_staging/<uuid>/`` and published by a single
@@ -73,6 +74,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from cmsspark_spark.functions.text import tokens
+from cmsspark_spark.operators import bm25
+from cmsspark_spark.operators.memo import pin_frame
 
 
 def _state_table_exists(spark: SparkSession, path: str) -> bool:
@@ -264,11 +267,6 @@ def _finalize_commit(
         f"index?); last error: {last_err}"
     )
 
-#: Shared scoring constants of the BM25 family (pipeline.py) — the
-#: additive constants enter as single literals for float parity with
-#: the rungs and their oracles.
-K1, B, K1_PLUS_1, ONE_MINUS_B = 1.2, 0.75, 2.2, 0.25
-
 #: Doc-id block width for the maintained block-max bounds
 #: (``blockstats/``). Pinned per index in ``_index_meta.json`` at
 #: first append and verified on every later append/serve — mixing
@@ -290,6 +288,41 @@ def _inc_postings(
     return doc_term_postings(
         increment, id_col, text_col, cols=("doc", "t", "dl", "tf")
     )
+
+
+def _champion_cut(rows: DataFrame, champions: int) -> DataFrame:
+    """Per-term top-``champions`` rows by (tf desc, doc asc)."""
+    w = Window.partitionBy("t").orderBy(F.col("tf").desc(), F.col("doc"))
+    return (
+        rows.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= int(champions))
+        .drop("_rk")
+    )
+
+
+def _stat_partials(post: DataFrame, champions: int) -> dict:
+    """The monoid partials of a postings frame, by table name: per-term
+    and per-(term, block) (count, max_tf, min_dl), and the per-term
+    top-``champions`` cut by (tf desc, doc asc) — an avgdl-free
+    comparator, so the cut of a union equals the cut of the parts'
+    cuts. Appends write them for the increment, compaction for the
+    live corpus."""
+    def bounds(*keys):
+        return post.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("df_delta"),
+            F.max("tf").alias("max_tf"),
+            F.min("dl").alias("min_dl"),
+        )
+
+    return {
+        "termstats": bounds("t"),
+        "blockstats": bounds(
+            "t", bm25.block_id(BLOCK_SIZE).alias("blk")
+        ),
+        "champions": _champion_cut(post, champions).select(
+            "t", "doc", "tf", "dl"
+        ),
+    }
 
 
 def append_bm25_index(
@@ -377,36 +410,12 @@ def append_bm25_index(
         StorageLevel.MEMORY_AND_DISK
     )
     post.write.parquet(f"{stage}/postings")
-    (
-        post.groupBy("t")
-        .agg(
-            F.count(F.lit(1)).alias("df_delta"),
-            F.max("tf").alias("max_tf"),
-            F.min("dl").alias("min_dl"),
-        )
-        .write.parquet(f"{stage}/termstats")
-    )
-    # block-grain bound partials: the same (count, max_tf, min_dl)
+    # block-grain bound partials are the same (count, max_tf, min_dl)
     # monoid one level down — only blocks the increment touches get
     # new rows, and the serve-time merge per (t, blk) equals a
     # full-corpus block cut
-    (
-        post.withColumn("blk", F.expr(f"doc div {BLOCK_SIZE}"))
-        .groupBy("t", "blk")
-        .agg(
-            F.count(F.lit(1)).alias("df_delta"),
-            F.max("tf").alias("max_tf"),
-            F.min("dl").alias("min_dl"),
-        )
-        .write.parquet(f"{stage}/blockstats")
-    )
-    w = Window.partitionBy("t").orderBy(F.col("tf").desc(), F.col("doc"))
-    (
-        post.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= int(champions))
-        .select("t", "doc", "tf", "dl")
-        .write.parquet(f"{stage}/champions")
-    )
+    for name, frame in _stat_partials(post, champions).items():
+        frame.write.parquet(f"{stage}/{name}")
     if positions:
         # one extra tokenize pass over the increment only — the
         # positional lists are per-(term, doc) sorted offsets, the
@@ -587,7 +596,7 @@ def append_bm25_index_from_snapshot(
                 cdc.filter(F.col("_cdc_sign") == -1)
                 .select(id_col)
                 .distinct()
-                .localCheckpoint(eager=True)
+                .transform(pin_frame)
             )
             increment = cdc.filter(F.col("_cdc_sign") == 1).drop(
                 "_cdc_sign"
@@ -731,7 +740,7 @@ def _merged_state(spark: SparkSession, index_dir: str) -> dict:
         spark, index_dir, "tombstones", imeta=imeta, required=False
     )
     if tomb is not None:
-        tomb = tomb.select("doc").distinct().localCheckpoint(eager=True)
+        tomb = pin_frame(tomb.select("doc").distinct())
     dead_df = None
     if tomb is not None:
         dead_post = post.join(F.broadcast(tomb), "doc", "left_semi")
@@ -744,10 +753,8 @@ def _merged_state(spark: SparkSession, index_dir: str) -> dict:
         ) or 0
         # per-term df of the dead docs — the exact correction the
         # live idf needs, derived from the dead postings themselves
-        dead_df = (
-            dead_post.groupBy("t")
-            .agg(F.count(F.lit(1)).alias("_dead_df"))
-            .localCheckpoint(eager=True)
+        dead_df = pin_frame(
+            dead_post.groupBy("t").agg(F.count(F.lit(1)).alias("_dead_df"))
         )
         post = post.join(F.broadcast(tomb), "doc", "left_anti")
         champ = champ.join(F.broadcast(tomb), "doc", "left_anti")
@@ -764,13 +771,40 @@ def _merged_state(spark: SparkSession, index_dir: str) -> dict:
     }
 
 
+def _query_term_stats(st: dict, terms: DataFrame, *aggs) -> DataFrame:
+    """Merged per-term stats of ``terms`` (a distinct ``t`` frame): raw
+    df ``_df_raw``, live df ``_df`` and any extra aggregates over the
+    termstats partials. The semi-join prunes the vocabulary-sized
+    partial table before the merge aggregate. Live df is raw df minus
+    the tombstoned docs' postings per term; the raw extremes stay for
+    bounds (admissible — a dead doc's max can only loosen them) and for
+    the blockstats completeness guard (block partials count raw
+    postings)."""
+    tstats = (
+        st["stats"]
+        .join(F.broadcast(terms), "t", "left_semi")
+        .groupBy("t")
+        .agg(F.sum("df_delta").alias("_df_raw"), *aggs)
+    )
+    if st["dead_df"] is None:
+        return tstats.withColumn("_df", F.col("_df_raw"))
+    return (
+        tstats.join(F.broadcast(st["dead_df"]), "t", "left")
+        .withColumn(
+            "_df",
+            F.col("_df_raw") - F.coalesce(F.col("_dead_df"), F.lit(0)),
+        )
+        .drop("_dead_df")
+    )
+
+
 def _blockmax_candidates(
     spark: SparkSession,
     index_dir: str,
     post: DataFrame,
     flagged: DataFrame,
     tstats: DataFrame,
-    idf,
+    n_docs: int,
     avgdl: float,
 ) -> DataFrame:
     """Candidates from surviving (essential-term, doc-block) pairs —
@@ -825,49 +859,19 @@ def _blockmax_candidates(
             f"{index_dir}/blockstats does not cover every query term's "
             "postings — the index predates block bounds; rebuild it"
         )
-    tfp_bub = (F.col("_bmaxtf") * F.lit(K1_PLUS_1)) / (
-        F.col("_bmaxtf")
-        + F.lit(K1)
-        * (F.lit(ONE_MINUS_B) + F.lit(B) * F.col("_bmindl") / F.lit(avgdl))
-    )
     bounds_blk = (
         merged.join(F.broadcast(tstats.select("t", "_df")), "t")
         .withColumn(
             "_bub",
-            (F.floor(idf * tfp_bub * F.lit(1000000.0)) + F.lit(1)).cast(
-                "long"
+            bm25.micro_ub(
+                bm25.idf(n_docs) * bm25.tf_part("_bmaxtf", "_bmindl", avgdl)
             ),
         )
         .select("t", "blk", "_bub")
     )
-    totals = flagged.groupBy("_qid").agg(F.sum("_ub").alias("_total_ub"))
-    ess = (
-        flagged.filter(F.col("_essential"))
-        .select("_qid", "t", "_ub", "_theta")
-        .join(F.broadcast(totals), "_qid")
+    return bm25.block_candidates(
+        post, bm25.block_survival(flagged, bounds_blk), BLOCK_SIZE
     )
-    surviving = (
-        ess.join(bounds_blk, "t")
-        .filter(
-            F.col("_theta").isNull()
-            | (
-                F.col("_total_ub") - F.col("_ub") + F.col("_bub")
-                >= F.col("_theta")
-            )
-        )
-        .select("_qid", "t", "blk")
-    )
-    return (
-        post.withColumn("blk", F.expr(f"doc div {BLOCK_SIZE}"))
-        .join(F.broadcast(surviving), ["t", "blk"])
-        .filter(F.col("doc") != F.col("_qid"))
-        .select("_qid", "doc")
-    )
-
-
-#: Candidate-broadcast auto-guard ceiling, same number and rationale
-#: as pipeline._BROADCAST_CAND_MAX.
-_BROADCAST_CAND_MAX = 2_000_000
 
 
 def bm25_index_serve(
@@ -882,16 +886,16 @@ def bm25_index_serve(
     """Top-``k`` BM25 more-like-this served FROM the index — output
     contract identical to ``pipeline.bm25_more_like_this`` (query_id,
     doc_id, bm25, rank), hash-exact against the exact rung's oracle
-    regardless of how many appends built the index.
+    regardless of how many appends built the index. Scoring, θ, the
+    essential split, block survival and rank are the shared kernel's
+    (:mod:`cmsspark_spark.operators.bm25`, which also holds the
+    exactness argument); this serve only derives the state they read.
 
-    ``mode='exact'`` scores every posting of every query term — the
-    exact rung replayed off persisted postings (no tokenize at all).
-    ``mode='maxscore'`` prunes with the STORED state: champions seed
-    θ (k-th exact seed score), the merged per-term (df, max_tf,
-    min_dl) yield admissible integer upper bounds under the current
-    avgdl, the ascending-bound prefix below θ is non-essential, and
-    only essential-term postings ∪ seeds are exact-scored — same
-    exactness argument as ``pipeline.bm25_maxscore_parts``, with the
+    ``mode='exact'`` scores every posting of every query term in one
+    pass — the exact rung replayed off persisted postings (no
+    tokenize at all). ``mode='maxscore'`` prunes with the STORED
+    state: champions seed θ, and the merged per-term (df, max_tf,
+    min_dl) yield the admissible bounds of the module docstring —
     bound inputs maintained incrementally instead of recomputed from
     the corpus.
 
@@ -899,24 +903,20 @@ def bm25_index_serve(
     essential terms using the maintained ``blockstats/`` partials —
     the same (max_tf, min_dl) monoid one level down, so block bounds
     too are extended per append (only blocks the increment touches
-    get new partial rows) and merged at serve. Survival rule and
-    exactness argument are ``pipeline.bm25_blockmax_parts``'s
-    verbatim: a block of essential term t survives iff
-    ``total_ub(q) − ub(t) + bub(t, blk) ≥ θ``; every bound here
-    DOMINATES the in-session one (block (max_tf, min_dl) may not
-    co-occur in one doc), so pruning is weaker-or-equal, never
-    wrong. A guard compares block-grain df against term-grain df for
-    the query terms and refuses an index whose blockstats are
+    get new partial rows) and merged at serve. Every bound here
+    DOMINATES the in-session one, so pruning is weaker-or-equal,
+    never wrong. A guard compares block-grain df against term-grain
+    df for the query terms and refuses an index whose blockstats are
     incomplete (a dir built by hand without them) — missing bounds
     must fail loudly, not skip blocks.
 
-    ``broadcast_candidates`` mirrors the in-session rungs' escape
-    hatch (pipeline._bm25_prune_state): a stop-word-only query in
-    exact mode (or a weak θ in the pruned modes) makes the candidate
-    id set approach corpus scale, where a pinned broadcast would OOM
-    the driver. True (default) pins the broadcast; False hash-joins;
-    None counts the persisted candidate frame and broadcasts only
-    under the 2M-row guard."""
+    ``broadcast_candidates`` selects how the pruned modes join their
+    candidate ids back onto the postings (``bm25.score_candidates``):
+    a weak θ makes the candidate set approach corpus scale, where a
+    pinned broadcast would OOM the driver. True (default) pins the
+    broadcast; False hash-joins; None counts the checkpointed
+    candidate frame and broadcasts only under the 2M-row guard. Exact
+    mode has no candidate join."""
     if mode not in ("exact", "maxscore", "blockmax"):
         raise ValueError(
             f"mode must be exact|maxscore|blockmax, got {mode!r}"
@@ -927,164 +927,42 @@ def bm25_index_serve(
         post.filter(F.col("doc") < query_max_id)
         .select(F.col("doc").alias("_qid"), "t")
     )
-    # merged per-term stats, query terms only (semi-join prunes the
-    # vocabulary-sized partial table before the merge aggregate)
-    tstats = (
-        st["stats"]
-        .join(F.broadcast(qterms.select("t").distinct()), "t", "left_semi")
-        .groupBy("t")
-        .agg(
-            F.sum("df_delta").alias("_df_raw"),
-            F.max("max_tf").alias("_maxtf"),
-            F.min("min_dl").alias("_mindl"),
-        )
+    tdist = qterms.select("t").distinct()
+    tstats = _query_term_stats(
+        st, tdist, F.max("max_tf").alias("_maxtf"),
+        F.min("min_dl").alias("_mindl"),
     )
-    if st["dead_df"] is not None:
-        # live df = raw df minus the tombstoned docs' postings per
-        # term; the raw extremes stay for bounds (admissible — a dead
-        # doc's max can only loosen them) and for the blockstats
-        # completeness guard (block partials count raw postings)
-        tstats = tstats.join(
-            F.broadcast(st["dead_df"]), "t", "left"
-        ).withColumn(
-            "_df",
-            F.col("_df_raw") - F.coalesce(F.col("_dead_df"), F.lit(0)),
-        ).drop("_dead_df")
-    else:
-        tstats = tstats.withColumn("_df", F.col("_df_raw"))
     df_tab = tstats.select("t", "_df")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("_df") + F.lit(0.5))
-        / (F.col("_df") + F.lit(0.5))
-    )
-    tf_part = (F.col("tf") * F.lit(K1_PLUS_1)) / (
-        F.col("tf")
-        + F.lit(K1)
-        * (F.lit(ONE_MINUS_B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-    )
-
-    def exact_scores(cand: DataFrame) -> DataFrame:
-        bcast = broadcast_candidates
-        if bcast is None:
-            # eager checkpoint, not a bare persist: the materialized
-            # copy is freed by the ContextCleaner when the frame goes
-            # out of scope, so repeated serves cannot accumulate
-            # never-unpersisted candidate frames in the block manager
-            cand = cand.localCheckpoint(eager=True)
-            bcast = cand.count() <= _BROADCAST_CAND_MAX
-        if bcast:
-            cand = F.broadcast(cand)
-        return (
-            post.join(cand, "doc")
-            .join(F.broadcast(qterms), ["_qid", "t"], "left_semi")
-            .join(F.broadcast(df_tab), "t")
-            .groupBy("_qid", "doc")
-            .agg(F.sum(idf * tf_part).alias("_score"))
-        )
-
     if mode == "exact":
-        cand = (
-            post.join(F.broadcast(qterms), "t")
-            .filter(F.col("doc") != F.col("_qid"))
-            .select("_qid", "doc")
-            .distinct()
-        )
+        scored = bm25.score_query_terms(post, qterms, df_tab, n_docs, avgdl)
+        return bm25.ranked(scored, k)
+    # champion monoid re-cut: per-term top-c of the per-commit
+    # top-c partials — identical to a full-corpus cut
+    champ = _champion_cut(
+        st["champ"].join(F.broadcast(tdist), "t", "left_semi"), champions
+    ).select("t", "doc")
+    seed = bm25.query_docs(qterms, champ, "t").distinct()
+    bounds = tstats.withColumn(
+        "_ub",
+        bm25.micro_ub(
+            bm25.idf(n_docs) * bm25.tf_part("_maxtf", "_mindl", avgdl)
+        ),
+    )
+    theta = bm25.theta(
+        bm25.score_candidates(post, seed, qterms, df_tab, n_docs, avgdl), k
+    )
+    flagged = bm25.essential_split(qterms, bounds.select("t", "_ub"), theta)
+    if mode == "maxscore":
+        ess_cand = bm25.essential_candidates(post, flagged)
     else:
-        # champion monoid re-cut: per-term top-c of the per-commit
-        # top-c partials — identical to a full-corpus cut
-        w_ch = Window.partitionBy("t").orderBy(
-            F.col("tf").desc(), F.col("doc")
+        ess_cand = _blockmax_candidates(
+            spark, index_dir, post, flagged, tstats, n_docs, avgdl
         )
-        champ = (
-            st["champ"]
-            .join(
-                F.broadcast(qterms.select("t").distinct()), "t", "left_semi"
-            )
-            .withColumn("_rk", F.row_number().over(w_ch))
-            .filter(F.col("_rk") <= int(champions))
-            .select("t", "doc")
-        )
-        seed = (
-            qterms.join(champ, "t")
-            .filter(F.col("doc") != F.col("_qid"))
-            .select("_qid", "doc")
-            .distinct()
-        )
-        # admissible bound from the MAINTAINED stats: tf_part rises
-        # in tf and falls in dl, so (max_tf, min_dl) dominates every
-        # real posting of the term under the current avgdl
-        tfp_ub = (F.col("_maxtf") * F.lit(K1_PLUS_1)) / (
-            F.col("_maxtf")
-            + F.lit(K1)
-            * (
-                F.lit(ONE_MINUS_B)
-                + F.lit(B) * F.col("_mindl") / F.lit(avgdl)
-            )
-        )
-        bounds = tstats.withColumn(
-            "_ub",
-            (F.floor(idf * tfp_ub * F.lit(1000000.0)) + F.lit(1)).cast(
-                "long"
-            ),
-        )
-        s_micro = F.floor(
-            F.col("_score") * F.lit(1000000.0) + F.lit(0.5)
-        ).cast("long")
-        w_seed = Window.partitionBy("_qid").orderBy(
-            F.col("_smicro").desc(), F.col("doc")
-        )
-        theta = (
-            exact_scores(seed)
-            .withColumn("_smicro", s_micro)
-            .withColumn("_rk", F.row_number().over(w_seed))
-            .filter(F.col("_rk") == int(k))
-            .select("_qid", F.col("_smicro").alias("_theta"))
-        )
-        w_cum = (
-            Window.partitionBy("_qid")
-            .orderBy(F.col("_ub").asc(), F.col("t").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        flagged = (
-            qterms.join(F.broadcast(bounds.select("t", "_ub")), "t")
-            .join(F.broadcast(theta), "_qid", "left")
-            .withColumn("_cum", F.sum("_ub").over(w_cum))
-            .withColumn(
-                "_essential",
-                F.col("_theta").isNull()
-                | (F.col("_cum") >= F.col("_theta")),
-            )
-        )
-        essential_terms = flagged.filter(F.col("_essential")).select(
-            "_qid", "t"
-        )
-        if mode == "maxscore":
-            ess_cand = (
-                post.join(F.broadcast(essential_terms), "t")
-                .filter(F.col("doc") != F.col("_qid"))
-                .select("_qid", "doc")
-            )
-        else:
-            ess_cand = _blockmax_candidates(
-                spark, index_dir, post, flagged, tstats, idf, avgdl
-            )
-        cand = ess_cand.unionByName(seed).distinct()
-
-    w = Window.partitionBy("_qid").orderBy(
-        F.round("_score", 6).desc(), F.col("doc")
+    cand = ess_cand.unionByName(seed).distinct()
+    scored = bm25.score_candidates(
+        post, cand, qterms, df_tab, n_docs, avgdl, broadcast_candidates
     )
-    return (
-        exact_scores(cand)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= int(k))
-        .select(
-            F.col("_qid").alias("query_id"),
-            F.col("doc").alias("doc_id"),
-            F.round("_score", 6).alias("bm25"),
-            "rank",
-        )
-    )
+    return bm25.ranked(scored, k)
 
 
 def _boolean_parts(
@@ -1109,32 +987,7 @@ def _boolean_parts(
         F.countDistinct("t").alias("_nt"),
         F.count(F.lit(1)).alias("_noff"),
     )
-    tstats = (
-        st["stats"]
-        .join(F.broadcast(tdist), "t", "left_semi")
-        .groupBy("t")
-        .agg(F.sum("df_delta").alias("_df_raw"))
-    )
-    if st["dead_df"] is not None:
-        tstats = tstats.join(
-            F.broadcast(st["dead_df"]), "t", "left"
-        ).withColumn(
-            "_df",
-            F.col("_df_raw") - F.coalesce(F.col("_dead_df"), F.lit(0)),
-        ).drop("_dead_df")
-    else:
-        tstats = tstats.withColumn("_df", F.col("_df_raw"))
-    df_tab = tstats.select("t", "_df")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("_df") + F.lit(0.5))
-        / (F.col("_df") + F.lit(0.5))
-    )
-    tf_part = (F.col("tf") * F.lit(K1_PLUS_1)) / (
-        F.col("tf")
-        + F.lit(K1)
-        * (F.lit(ONE_MINUS_B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-    )
+    df_tab = _query_term_stats(st, tdist).select("t", "_df")
     braw = index_table(spark, index_dir, "blockstats", required=False)
     if braw is None:
         raise ValueError(
@@ -1159,7 +1012,7 @@ def _boolean_parts(
     )
     scanned = (
         post.join(F.broadcast(tdist), "t", "left_semi")
-        .withColumn("blk", F.expr(f"doc div {BLOCK_SIZE}"))
+        .withColumn("blk", bm25.block_id(BLOCK_SIZE))
         .join(F.broadcast(surviving), "blk")
         .join(F.broadcast(qterms), ["_qid", "t"], "left_semi")
     )
@@ -1168,7 +1021,7 @@ def _boolean_parts(
         .groupBy("_qid", "doc")
         .agg(
             F.countDistinct("t").alias("_cnt"),
-            F.sum(idf * tf_part).alias("_score"),
+            F.sum(bm25.contribution(n_docs, avgdl)).alias("_score"),
         )
         .join(F.broadcast(qlens), "_qid")
         .filter(F.col("_cnt") == F.col("_nt"))
@@ -1299,19 +1152,7 @@ def bm25_index_boolean_serve(
             .select("_qid", "doc")
         )
         hits = hits.join(matched, ["_qid", "doc"], "left_semi")
-    w = Window.partitionBy("_qid").orderBy(
-        F.round("_score", 6).desc(), F.col("doc")
-    )
-    return (
-        hits.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= int(k))
-        .select(
-            F.col("_qid").alias("query_id"),
-            F.col("doc").alias("doc_id"),
-            F.round("_score", 6).alias("bm25"),
-            "rank",
-        )
-    )
+    return bm25.ranked(hits, k)
 
 
 def bm25_boolean_prune_report(
@@ -1443,35 +1284,8 @@ def compact_bm25_index(
     # truth for the new base; stats/champions recomputed from them
     st["post"].write.mode("overwrite").parquet(f"{base}/postings")
     live = spark.read.parquet(f"{base}/postings")
-    (
-        live.groupBy("t")
-        .agg(
-            F.count(F.lit(1)).alias("df_delta"),
-            F.max("tf").alias("max_tf"),
-            F.min("dl").alias("min_dl"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{base}/termstats")
-    )
-    (
-        live.withColumn("blk", F.expr(f"doc div {BLOCK_SIZE}"))
-        .groupBy("t", "blk")
-        .agg(
-            F.count(F.lit(1)).alias("df_delta"),
-            F.max("tf").alias("max_tf"),
-            F.min("dl").alias("min_dl"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{base}/blockstats")
-    )
-    w = Window.partitionBy("t").orderBy(F.col("tf").desc(), F.col("doc"))
-    (
-        live.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= int(champions))
-        .select("t", "doc", "tf", "dl")
-        .write.mode("overwrite")
-        .parquet(f"{base}/champions")
-    )
+    for name, frame in _stat_partials(live, champions).items():
+        frame.write.mode("overwrite").parquet(f"{base}/{name}")
     (
         spark.createDataFrame(
             [(int(st["n_docs"]), int(st["sum_dl"]))],

@@ -289,7 +289,7 @@ MEMO_CASES = {
     "bm25_prune_state": (
         [(PL, "_bm25_prune_state")],
         lambda i, counted: PL._bm25_prune_state_shared(
-            i.docs, "doc_id", "text", 2, 3, 2, 1.2, 0.75, 2.2, 0.25, True
+            i.docs, "doc_id", "text", 2, 3, 2
         ),
     ),
     "logreg": (
@@ -462,26 +462,55 @@ def test_pin_frame_default_local_reliable_opt_in(spark, tmp_path):
     (no files written); with spark.cmsspark.checkpoint.reliable=true
     and a checkpoint dir it routes through the RELIABLE
     DataFrame.checkpoint (blocks survive executor loss), writing to
-    the configured dir. Values identical either way."""
+    the configured dir. Values identical either way — for a bare
+    frame, for an in-session block-max call (postings, seeds, θ,
+    essential split, surviving blocks) and for a tombstoned index
+    serve (tombstones, dead-doc df)."""
     import os
 
+    from cmsspark_spark.operators import retrieval as R
     from cmsspark_spark.operators.memo import pin_frame
+    from tests.conftest import SF_SMOKE
 
     ckdir = str(tmp_path / "ck")
     df = spark.range(5).withColumnRenamed("id", "x")
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    idx = str(tmp_path / "idx")
+    R.append_bm25_index(docs, idx)
+    R.tombstone_bm25_index(
+        docs.filter(F.col("doc_id") % 7 == 3).select("doc_id"), idx
+    )
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    def blockmax():
+        invalidate_session_memos(spark)
+        ranked, report = PL.bm25_blockmax_parts(docs)
+        return rows(ranked), rows(report)
+
+    def serve():
+        return rows(R.bm25_index_serve(spark, idx, mode="blockmax"))
+
+    def ck_files():
+        return sum(len(files) for _, _, files in os.walk(ckdir))
+
     local = pin_frame(df)
     assert sorted(r.x for r in local.collect()) == [0, 1, 2, 3, 4]
+    want_blockmax, want_serve = blockmax(), serve()
     assert not os.path.isdir(ckdir)  # default never touches disk
     spark.sparkContext.setCheckpointDir(ckdir)
     spark.conf.set("spark.cmsspark.checkpoint.reliable", "true")
     try:
         rel = pin_frame(df)
         assert sorted(r.x for r in rel.collect()) == [0, 1, 2, 3, 4]
-        found = [
-            f
-            for _, _, files in os.walk(ckdir)
-            for f in files
-        ]
-        assert found  # reliable blocks landed in the checkpoint dir
+        n0 = ck_files()
+        assert n0  # reliable blocks landed in the checkpoint dir
+        assert blockmax() == want_blockmax
+        n1 = ck_files()
+        assert n1 > n0
+        assert serve() == want_serve
+        assert ck_files() > n1
     finally:
         spark.conf.set("spark.cmsspark.checkpoint.reliable", "false")
+        invalidate_session_memos(spark)

@@ -692,12 +692,10 @@ def test_bm25_no_sortmerge_joins_broadcast_everywhere(spark):
     out of keyed shuffles (only (doc, term) cells travel)."""
     # assert on the UN-memoized builder — the plan a memo miss runs
     # (the registry query returns a checkpointed top-k frame)
-    from cmsspark_spark.operators.pipeline import _bm25_exact_build
+    from cmsspark_spark.operators.pipeline import bm25_more_like_this
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
-    df = _bm25_exact_build(
-        d, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-    )
+    df = bm25_more_like_this(d, "doc_id", "text", 5, 10)
     plan = plans.formatted_plan(df)
     assert "BroadcastHashJoin" in plan
     assert plans.count_nodes(df, "SortMergeJoin") == 0
@@ -717,12 +715,10 @@ def test_bm25_champion_candidate_join_broadcasts(spark):
     pinned broadcast — not left to AQE's size estimate, which at scale
     could misestimate under threshold and sort-merge the postings by
     doc. The whole plan stays sort-merge-free."""
-    from cmsspark_spark.operators.pipeline import _bm25_champion_build
+    from cmsspark_spark.operators.pipeline import bm25_champion_topk
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
-    df = _bm25_champion_build(
-        d, "doc_id", "text", 5, 10, 16, 1.2, 0.75, 2.2, 0.25
-    )
+    df = bm25_champion_topk(d, "doc_id", "text", 5, 10, 16)
     plan = plans.formatted_plan(df)
     assert "BroadcastHashJoin" in plan
     assert plans.count_nodes(df, "SortMergeJoin") == 0
@@ -853,9 +849,7 @@ def test_bm25_champion_seeding_is_two_phase(spark):
     # the UN-memoized state: seed is lazily checkpointed for reuse
     # (which truncates its lineage out of ranked's plan), so the
     # plan contract is asserted on the exposed un-checkpointed twin
-    st = PL._bm25_prune_state(
-        df, "doc_id", "text", 2, 3, 3, 1.2, 0.75, 2.2, 0.25, True
-    )
+    st = PL._bm25_prune_state(df, "doc_id", "text", 2, 3, 3)
     plan = st["seed_plan"]._jdf.queryExecution().optimizedPlan().toString()
     # phase-1 window partitions by [_t, _salt]; phase-2 by [_t] alone
     assert "_salt" in plan, "partial (term, salt) top-c window missing"

@@ -20,7 +20,8 @@ def _ranked(df):
 def test_append_then_serve_equals_full_rebuild(spark, tmp_path):
     """The train-once/serve-increment contract: an index built by
     three successive appends serves results row-identical to a
-    single-shot build AND to the in-session exact rung."""
+    single-shot build AND to the in-session exact, max-score and
+    block-max rungs — both stacks serve through one BM25 kernel."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     multi = str(tmp_path / "multi")
     for part in range(3):
@@ -28,11 +29,7 @@ def test_append_then_serve_equals_full_rebuild(spark, tmp_path):
     single = str(tmp_path / "single")
     R.append_bm25_index(docs, single)
 
-    want = _ranked(
-        PL._bm25_exact_build(
-            docs, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(docs, "doc_id", "text", 5, 10))
     assert _ranked(R.bm25_index_serve(spark, multi)) == want
     assert _ranked(R.bm25_index_serve(spark, single)) == want
     # pruned serves off the MAINTAINED bounds: exact too
@@ -43,6 +40,8 @@ def test_append_then_serve_equals_full_rebuild(spark, tmp_path):
         assert (
             _ranked(R.bm25_index_serve(spark, single, mode=mode)) == want
         )
+    for parts in (PL.bm25_maxscore_parts, PL.bm25_blockmax_parts):
+        assert _ranked(parts(docs)[0]) == want
 
     rep = R.bm25_index_commit_report(spark, multi).first()
     assert rep.n_commits == 3 and rep.n_docs == docs.count()
@@ -88,11 +87,7 @@ def test_zero_token_docs_count_toward_n(spark, tmp_path):
     rep = R.bm25_index_commit_report(spark, idx).first()
     assert rep.n_docs == 52  # empty docs counted
 
-    want = _ranked(
-        PL._bm25_exact_build(
-            corpus, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(corpus, "doc_id", "text", 5, 10))
     assert _ranked(R.bm25_index_serve(spark, idx)) == want
 
 
@@ -141,11 +136,7 @@ def test_compaction_preserves_serving_and_later_appends(spark, tmp_path):
 
     # append the last quarter on top of the compacted state
     R.append_bm25_index(docs.filter(F.col("doc_id") % 4 == 3), idx)
-    want = _ranked(
-        PL._bm25_exact_build(
-            docs, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(docs, "doc_id", "text", 5, 10))
     assert _ranked(R.bm25_index_serve(spark, idx, mode="maxscore")) == want
 
 
@@ -170,11 +161,7 @@ def test_build_index_cli_e2e(spark, tmp_path, capsys):
     build_index.main(
         ["serve", "--index", idx, "--mode", "maxscore", "--out", out]
     )
-    want = _ranked(
-        PL._bm25_exact_build(
-            docs, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(docs, "doc_id", "text", 5, 10))
     got = sorted(
         (r.query_id, r.doc_id, r.bm25, r.rank)
         for r in spark.read.parquet(out).collect()
@@ -263,11 +250,7 @@ def test_snapshot_pinned_index_consumes_versions_exactly_once(
     r2 = R.append_bm25_index_from_snapshot(spark, table, idx)
     assert r2 == {"from": 1, "to": 2, "noop": False}
 
-    want = _ranked(
-        PL._bm25_exact_build(
-            docs, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(docs, "doc_id", "text", 5, 10))
     assert _ranked(R.bm25_index_serve(spark, idx, mode="blockmax")) == want
 
     # a rollback removes files: the append-only index refuses
@@ -294,11 +277,7 @@ def test_tombstones_serve_exactly_like_live_corpus(spark, tmp_path):
         docs.filter(F.col("doc_id") % 7 == 3).select("doc_id"), idx
     )
     live = docs.filter(F.col("doc_id") % 7 != 3)
-    want = _ranked(
-        PL._bm25_exact_build(
-            live, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(live, "doc_id", "text", 5, 10))
     for mode in ("exact", "maxscore", "blockmax"):
         assert _ranked(R.bm25_index_serve(spark, idx, mode=mode)) == want
 
@@ -337,11 +316,7 @@ def test_consume_removals_as_tombstones(spark, tmp_path):
     assert r["noop"] is False
 
     live = docs.filter(F.col("doc_id") % 2 == 0)
-    want = _ranked(
-        PL._bm25_exact_build(
-            live, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(live, "doc_id", "text", 5, 10))
     assert _ranked(R.bm25_index_serve(spark, idx, mode="blockmax")) == want
 
     # a REWRITE (remove + re-add same id) is refused even with
@@ -431,11 +406,7 @@ def test_consume_crash_mid_staging_resumes_cleanly(
     # the RETRY consumes v2 without a rebuild and serves exactly
     r = R.append_bm25_index_from_snapshot(spark, table, idx)
     assert r == {"from": 1, "to": 2, "noop": False}
-    want = _ranked(
-        PL._bm25_exact_build(
-            docs, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(docs, "doc_id", "text", 5, 10))
     assert _ranked(R.bm25_index_serve(spark, idx, mode="blockmax")) == want
     # the crashed attempt's staging orphan exists but is invisible;
     # an aged vacuum reclaims it
@@ -479,11 +450,7 @@ def test_consume_crash_after_rename_resumes_pin_only(
     assert r == {"from": 1, "to": 2, "noop": False, "resumed": True}
     # exactly TWO commits (no double-append), serve exact
     assert R.bm25_index_commit_report(spark, idx).first().n_commits == 2
-    want = _ranked(
-        PL._bm25_exact_build(
-            docs, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(docs, "doc_id", "text", 5, 10))
     assert _ranked(R.bm25_index_serve(spark, idx, mode="maxscore")) == want
     # and the replay after the resume is a clean no-op
     assert R.append_bm25_index_from_snapshot(spark, table, idx)["noop"]
@@ -576,9 +543,8 @@ def test_compaction_folds_tombstones_into_base(spark, tmp_path):
     )
     before = _ranked(R.bm25_index_serve(spark, idx, mode="blockmax"))
     want = _ranked(
-        PL._bm25_exact_build(
-            docs.filter(F.col("doc_id") % 7 != 3),
-            "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25,
+        PL.bm25_more_like_this(
+            docs.filter(F.col("doc_id") % 7 != 3), "doc_id", "text", 5, 10
         )
     )
     assert before == want
@@ -728,9 +694,7 @@ def test_partlog_to_snapshot_to_index_pipeline(spark, tmp_path):
 
     corpus = spark.createDataFrame(docs, "doc_id long, text string")
     want = _ranked(
-        PL._bm25_exact_build(
-            corpus, "doc_id", "text", 3, 5, 1.2, 0.75, 2.2, 0.25
-        )
+        PL.bm25_more_like_this(corpus, "doc_id", "text", 3, 5)
     )
     got = _ranked(
         R.bm25_index_serve(spark, idx, query_max_id=3, k=5,
@@ -823,9 +787,7 @@ def test_bm25_index_sink_streaming_maintenance(spark, tmp_path, monkeypatch):
 
     corpus = spark.createDataFrame(docs, "doc_id long, text string")
     want = _ranked(
-        PL._bm25_exact_build(
-            corpus, "doc_id", "text", 3, 5, 1.2, 0.75, 2.2, 0.25
-        )
+        PL.bm25_more_like_this(corpus, "doc_id", "text", 3, 5)
     )
     assert _ranked(
         R.bm25_index_serve(spark, idx, query_max_id=3, k=5,
@@ -860,11 +822,7 @@ def test_consume_equality_delete_version_tombstones(spark, tmp_path):
     assert r == {"from": 1, "to": 2, "noop": False}
 
     live = docs.join(dead, "doc_id", "left_anti")
-    want = _ranked(
-        PL._bm25_exact_build(
-            live, "doc_id", "text", 5, 10, 1.2, 0.75, 2.2, 0.25
-        )
-    )
+    want = _ranked(PL.bm25_more_like_this(live, "doc_id", "text", 5, 10))
     assert _ranked(R.bm25_index_serve(spark, idx, mode="blockmax")) \
         == want
 

@@ -445,6 +445,41 @@ def test_rucio_summary_job_end_to_end(spark, tmp_path):
     assert any(d.get("AcquisitionEraName") == "UNKNOWN" for d in amq_docs)
 
 
+def test_rucio_summary_reports_every_failed_sink(spark, tmp_path, monkeypatch):
+    """Two of the three concurrent sinks raise: the job's RuntimeError
+    names both sinks, carries the second error's repr in its message,
+    and chains the first error as its cause."""
+    import pytest
+
+    from cmsspark_spark.jobs import rucio_summary
+    from tests.cms_fixtures import all_fixtures
+
+    fx = all_fixtures(spark)
+    src = str(tmp_path / "dumps")
+    for name in rucio_summary.SOURCE_TABLES:
+        fx[name].write.parquet(f"{src}/{name}.parquet")
+    csv_err = OSError("csv disk full")
+    report_err = ValueError("report template broken")
+
+    def raise_(err):
+        def sink(*a, **k):
+            raise err
+
+        return sink
+
+    monkeypatch.setattr(rucio_summary.sinks, "write_csv", raise_(csv_err))
+    monkeypatch.setattr(
+        rucio_summary.report, "write_report", raise_(report_err)
+    )
+    sources = rucio_summary.load_sources(spark, src)
+    with pytest.raises(RuntimeError) as info:
+        rucio_summary.run(spark, sources, str(tmp_path / "out"), "2024-01-15")
+    msg = str(info.value)
+    assert "csv" in msg and "report" in msg
+    assert repr(report_err) in msg
+    assert info.value.__cause__ is csv_err
+
+
 def test_clean_corpus_near_dup_policy(spark, tmp_path):
     """r5: --near-dup-policy wires LSH clustering + survivor election
     into the job. With the resampler AND decontamination disabled
