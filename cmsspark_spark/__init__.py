@@ -19,6 +19,9 @@ coherent Spark-first engine instead of ~40 standalone scripts:
 - ``sinks``     — partitioned parquet / CSV / JSON writers and chunked
                   document sinks (reference: osearch/osearch.py:170-217,
                   rucio_datasets_stats.py:688-743).
+- ``fsops``     — the driver-side filesystem seam every commit protocol
+                  goes through (one local and one Hadoop branch per
+                  metadata primitive).
 - ``streaming`` — Structured Streaming upgrades of the reference's batch
                   micro-architecture (late-data slack, dedup, tumbling
                   windows; reference SURVEY §2.9).

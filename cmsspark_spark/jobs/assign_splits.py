@@ -36,6 +36,7 @@ import argparse
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from cmsspark_spark import fsops
 from cmsspark_spark.session import get_spark
 
 
@@ -83,7 +84,6 @@ def run_batch(
     from cmsspark_spark.operators.snapshots import (
         list_snapshots,
         read_snapshot,
-        write_json_meta,
     )
 
     pin: dict | None = None
@@ -101,7 +101,7 @@ def run_batch(
         # (old pin + new census, or new pin + old census — both let a
         # guarded increment apply against the wrong state), so the
         # guard refuses any state whose rebuild died mid-write
-        write_json_meta(
+        fsops.write_json_meta(
             spark, f"{state}/_pin.json", {**pin, "in_progress": True}
         )
     else:
@@ -115,11 +115,7 @@ def run_batch(
         # rewriting) keeps the contract 'no pin file = unpinned', and
         # a crash after the delete still fails the guard loudly
         # (recorded version None != expected).
-        from cmsspark_spark.operators.layout import _fs_for
-
-        fs, p = _fs_for(spark, f"{state}/_pin.json")
-        if fs.exists(p):
-            fs.delete(p, False)
+        fsops.delete(spark, f"{state}/_pin.json")
     cand = D.minhash_lsh_pairs(
         docs, "doc_id", "text", hot_bucket_cap=hot_bucket_cap
     )
@@ -158,16 +154,14 @@ def run_batch(
     commit_census_minhash(spark, docs, f"{state}/census", mode="overwrite")
     if pin is not None:
         # final pin (clears in_progress) only after the census commit
-        write_json_meta(spark, f"{state}/_pin.json", pin)
+        fsops.write_json_meta(spark, f"{state}/_pin.json", pin)
     return assign
 
 
 def state_pin(spark: SparkSession, state: str) -> dict | None:
     """The snapshot pin a batch run recorded (``{"table", "version"}``)
     or None for an unpinned (sf_dir-built) state."""
-    from cmsspark_spark.operators.snapshots import read_json_meta
-
-    return read_json_meta(spark, f"{state}/_pin.json")
+    return fsops.read_json_meta(spark, f"{state}/_pin.json")
 
 
 def run_increment(

@@ -41,12 +41,8 @@ from collections import OrderedDict
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from cmsspark_spark.operators.layout import (
-    _fs_for,
-    _list_parquet_files,
-    manifest_location,
-    pruned_files,
-)
+from cmsspark_spark import fsops
+from cmsspark_spark.operators.layout import manifest_location, pruned_files
 from cmsspark_spark.session import get_spark
 
 
@@ -107,24 +103,15 @@ def _py_positions(value, m: int, k: int) -> list[int]:
 
 
 def _meta_stamp(spark: SparkSession, table: str, all_files) -> tuple:
-    fs, _ = _fs_for(spark, table)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     parts = [tuple(all_files)]
     for suffix in ("", "_bloom", "_rowgroups_bloom"):
-        jp = Path(manifest_location(table) + suffix)
-        try:
-            sts = fs.listStatus(jp) if fs.exists(jp) else []
-        except Exception:
-            sts = []
         parts.append(
             tuple(
                 sorted(
-                    (
-                        st.getPath().getName(),
-                        st.getLen(),
-                        st.getModificationTime(),
+                    (name, size, mtime_ms)
+                    for name, _d, size, mtime_ms in fsops.listdir(
+                        spark, manifest_location(table) + suffix
                     )
-                    for st in sts
                 )
             )
         )
@@ -141,7 +128,7 @@ def _table_meta(spark: SparkSession, table: str) -> dict:
 
 
 def _table_meta_locked(spark: SparkSession, table: str) -> dict:
-    all_files = _list_parquet_files(spark, table)
+    all_files = fsops.list_parquet_files(spark, table)
     stamp = _meta_stamp(spark, table, all_files)
     per = _META_CACHE.get(spark)
     if per is None:

@@ -16,6 +16,7 @@ from typing import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from cmsspark_spark import fsops
 from cmsspark_spark.sinks import write_partitioned_parquet
 
 
@@ -309,21 +310,18 @@ def enforce_retention(
     overwrite-by-delete K8 applied to retention). Returns the dropped
     day values."""
     import datetime as _dt
-    import os
-    import shutil
 
     cutoff = (
         _dt.date.fromisoformat(as_of) - _dt.timedelta(days=int(keep_days))
     ).isoformat()
     dropped = []
-    if not os.path.isdir(table_path):
-        return dropped
-    for entry in sorted(os.listdir(table_path)):
-        if not entry.startswith(f"{day_col}="):
+    root = table_path.rstrip("/")
+    for entry, is_dir, _s, _m in sorted(fsops.listdir(spark, root)):
+        if not (is_dir and entry.startswith(f"{day_col}=")):
             continue
         day = entry.split("=", 1)[1]
         if day < cutoff:
-            shutil.rmtree(os.path.join(table_path, entry))
+            fsops.delete(spark, f"{root}/{entry}", recursive=True)
             dropped.append(day)
     return dropped
 
@@ -383,20 +381,28 @@ def compact_partitions(
     Returns {day: (files_before, files_after)} for rewritten
     partitions."""
     import math
-    import os
 
     if manifest_dims is None and cluster_by is not None:
         manifest_dims = tuple(cluster_by)
+
+    def _parquet_sizes(pdir: str) -> list:
+        return [
+            size
+            for name, _d, size, _m in fsops.listdir(spark, pdir)
+            if name.endswith(".parquet")
+        ]
+
     report = {}
-    for entry in sorted(os.listdir(table_path)):
-        if not entry.startswith(f"{day_col}="):
+    root = table_path.rstrip("/")
+    for entry, is_dir, _s, _m in sorted(fsops.listdir(spark, root)):
+        if not (is_dir and entry.startswith(f"{day_col}=")):
             continue
-        pdir = os.path.join(table_path, entry)
-        files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-        if len(files) < min_files:
+        pdir = f"{root}/{entry}"
+        sizes = _parquet_sizes(pdir)
+        if len(sizes) < min_files:
             continue
         day = entry.split("=", 1)[1]
-        nbytes = sum(os.path.getsize(os.path.join(pdir, f)) for f in files)
+        nbytes = sum(sizes)
         n_out = max(1, math.ceil(nbytes / target_bytes))
         part = (
             spark.read.option("basePath", table_path)
@@ -420,15 +426,9 @@ def compact_partitions(
             out, table_path, partition_by=(day_col,),
             mode="overwrite", dynamic=True,
         )
-        after = len(
-            [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-        )
-        report[day] = (len(files), after)
+        report[day] = (len(sizes), len(_parquet_sizes(pdir)))
         if manifest_dims:
-            from cmsspark_spark.operators.layout import (
-                _list_parquet_files,
-                write_file_manifest,
-            )
+            from cmsspark_spark.operators.layout import write_file_manifest
 
             # footer-parse ONLY this partition's rewritten files and
             # dynamic-overwrite its manifest rows; other days stand
@@ -436,7 +436,7 @@ def compact_partitions(
                 spark,
                 table_path,
                 manifest_dims,
-                files=_list_parquet_files(spark, pdir),
+                files=fsops.list_parquet_files(spark, pdir),
                 literals={day_col: day},
                 partition_by=(day_col,),
             )

@@ -34,6 +34,8 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from cmsspark_spark import fsops
+
 #: bits per dimension in the z-order key (two dims -> 2*BITS-bit key)
 ZORDER_BITS = 8
 
@@ -422,7 +424,10 @@ def read_rowgroups(
         pairs = [(r.file, int(r.row_group)) for r in plan.collect()]
     else:
         pairs = [(f, int(rg)) for f, rg in plan]
-    full = {p.rsplit("/", 1)[-1]: p for p in _list_parquet_files(spark, path)}
+    full = {
+        p.rsplit("/", 1)[-1]: p
+        for p in fsops.list_parquet_files(spark, path)
+    }
     missing = sorted({f for f, _ in pairs if f not in full})
     if missing:
         # a stale plan (sidecar not rebuilt after compaction/vacuum)
@@ -817,10 +822,10 @@ def append_with_manifest(
     triggered off the manifest's span degradation without ever
     re-scanning the data. Returns the appended file paths."""
     spark = df.sparkSession
-    before = set(_list_parquet_files(spark, path))
+    before = set(fsops.list_parquet_files(spark, path))
     df.write.mode("append").parquet(path)
     new_files = [
-        f for f in _list_parquet_files(spark, path) if f not in before
+        f for f in fsops.list_parquet_files(spark, path) if f not in before
     ]
     rg = rowgroup_stats_manifest(spark, path, dims, files=new_files)
     if rowgroups:
@@ -885,98 +890,6 @@ def append_with_manifest(
                 mode="append",
             )
     return new_files
-
-
-def _local_fs_path(spark, path: str) -> str | None:
-    """OS path when ``path`` resolves to the LOCAL filesystem under the
-    session's Hadoop conf, else None. Driver-side metadata operations
-    (listings, manifest/sidecar IO) go through py4j at ~5-10 ms per
-    round-trip; at snapshot-commit rates that is seconds of pure
-    gateway latency per lifecycle (measured: 80 manifest writes =
-    0.88 s, an 80-file staged listing = 0.6 s), so local deployments
-    take the os-level path and remote schemes keep the generic Hadoop
-    path. A bare path only counts as local when ``fs.defaultFS`` says
-    so (cached per SparkContext — one py4j call per session)."""
-    if "://" in path:
-        if path.startswith("file://"):
-            return path[len("file://"):] or "/"
-        return None
-    if path.startswith("file:"):
-        return path[len("file:"):] or "/"
-    sc = spark.sparkContext
-    scheme = getattr(sc, "_cmsspark_default_fs_scheme", None)
-    if scheme is None:
-        default = (
-            sc._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-        )
-        scheme = default.split(":", 1)[0] if ":" in default else "file"
-        sc._cmsspark_default_fs_scheme = scheme
-    return path if scheme == "file" else None
-
-
-def _list_parquet_files(spark, path: str) -> list[str]:
-    """Recursive parquet-file listing through the Hadoop FileSystem
-    API (driver-side, metadata-only) — works on any scheme the
-    executors can read, unlike an os-level glob. The iteration is
-    retried a few times: a CONCURRENT writer's staging files
-    (_temporary/…) can vanish between the iterator statting a
-    directory and visiting its entries, which surfaces as a
-    FileNotFoundException mid-listing — transient by construction, so
-    a fresh listing pass resolves it (seen in the snapshot
-    concurrent-append test).
-
-    Local filesystems short-circuit to os.walk with the same skip
-    rules and the same qualified ``file:`` rendering — the Hadoop
-    RemoteIterator costs 3-4 py4j round-trips PER FILE, which at
-    commit rates is most of a snapshot write's wall time."""
-    local = _local_fs_path(spark, path)
-    if local is not None:
-        import os as _os
-
-        if not _os.path.isdir(local):
-            raise FileNotFoundError(path)
-        out = []
-        root = local.rstrip("/")
-        for dirpath, dirnames, filenames in _os.walk(root):
-            # prune underscore/dot-prefixed subdirectories in place
-            dirnames[:] = [
-                d for d in dirnames if not d.startswith(("_", "."))
-            ]
-            for name in filenames:
-                if name.endswith(".parquet") and not name.startswith(
-                    ("_", ".")
-                ):
-                    out.append(f"file:{dirpath}/{name}")
-        return sorted(out)
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    # Files under underscore/dot-prefixed SUBDIRECTORIES (a snapshot
-    # commit's _staging area, Spark's _temporary) are invisible to
-    # parquet readers by convention and must be invisible here too —
-    # the relative path below the listed root is what gets checked, so
-    # listing a staging dir directly still works.
-    qualified = fs.makeQualified(jpath).toString().rstrip("/")
-    last_err = None
-    for _ in range(5):
-        out = []
-        try:
-            it = fs.listFiles(jpath, True)
-            while it.hasNext():
-                p = it.next().getPath().toString()
-                rel = p[len(qualified) + 1 :] if p.startswith(qualified) else p
-                segs = rel.split("/")
-                if any(s.startswith(("_", ".")) for s in segs[:-1]):
-                    continue
-                name = segs[-1]
-                if name.endswith(".parquet") and not name.startswith(
-                    ("_", ".")
-                ):
-                    out.append(p)
-            return sorted(out)
-        except Exception as exc:
-            last_err = exc
-    raise last_err
 
 
 #: URI schemes the EXECUTOR-side pyarrow reader handles natively (see
@@ -1185,7 +1098,7 @@ def rowgroup_stats_manifest(
     cols = ["file", "row_group", "n_rows"] + [
         f"{m}_{d}" for d in dims for m in ("min", "max")
     ]
-    paths = list(files) if files is not None else _list_parquet_files(
+    paths = list(files) if files is not None else fsops.list_parquet_files(
         spark, path
     )
     exec_paths = [
@@ -1257,13 +1170,6 @@ def rowgroup_stats_manifest(
     return out
 
 
-def _fs_for(spark, path: str):
-    """(Hadoop FileSystem, Path) pair for a URI — driver-side."""
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath
-
-
 def orphan_files(
     spark,
     data_path: str,
@@ -1284,22 +1190,22 @@ def orphan_files(
 
     manifest = spark.read.parquet(manifest_location(data_path))
     known = {r.file for r in manifest.select("file").distinct().collect()}
-    fs, _ = _fs_for(spark, data_path)
-    sc = spark.sparkContext
     now_ms = int(time.time() * 1000)
     out = []
-    it = fs.listFiles(sc._jvm.org.apache.hadoop.fs.Path(data_path), True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        name = p.rsplit("/", 1)[-1]
-        if not name.endswith(".parquet") or name.startswith(("_", ".")):
-            continue
-        if name in known:
-            continue
-        age_s = max(0, (now_ms - st.getModificationTime()) // 1000)
-        if age_s >= min_age_s:
-            out.append((p, st.getLen(), int(age_s)))
+    dirs = [data_path.rstrip("/")]
+    while dirs:
+        d = dirs.pop()
+        for name, is_dir, size, mtime_ms in fsops.listdir(spark, d):
+            if is_dir:
+                dirs.append(f"{d}/{name}")
+                continue
+            if not name.endswith(".parquet") or name.startswith(("_", ".")):
+                continue
+            if name in known:
+                continue
+            age_s = max(0, (now_ms - mtime_ms) // 1000)
+            if age_s >= min_age_s:
+                out.append((f"{d}/{name}", size, int(age_s)))
     return sorted(out)
 
 
@@ -1320,10 +1226,8 @@ def vacuum_table(
     orphans = orphan_files(spark, data_path, min_age_s=min_age_s)
     deleted: list[str] = []
     if not dry_run and orphans:
-        fs, _ = _fs_for(spark, data_path)
-        jvm = spark.sparkContext._jvm
         for p, _size, _age in orphans:
-            if fs.delete(jvm.org.apache.hadoop.fs.Path(p), False):
+            if fsops.delete(spark, p):
                 deleted.append(p)
     return {
         "orphans": orphans,
@@ -1353,23 +1257,19 @@ def retain_day_partitions(
     after deletion (the file-grain manifest stores basenames, so
     expired rows can't be dropped in place); cost ∝ surviving files.
     Returns ``{"kept": [...], "expired": [...], "deleted": bool}``."""
-    fs, jroot = _fs_for(spark, table_path)
-    days = []
-    for st in fs.listStatus(jroot):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(f"{day_col}="):
-            days.append(name)
+    days = [
+        name
+        for name, is_dir, _s, _m in fsops.listdir(spark, table_path)
+        if is_dir and name.startswith(f"{day_col}=")
+    ]
     if keep_days <= 0:
         raise ValueError("keep_days must be positive")
     days.sort()
     kept, expired = days[-keep_days:], days[:-keep_days]
     did_delete = False
     if not dry_run and expired:
-        jvm = spark.sparkContext._jvm
         for name in expired:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{table_path}/{name}"), True
-            )
+            fsops.delete(spark, f"{table_path}/{name}", recursive=True)
         did_delete = True
         if refresh_manifest_dims:
             write_file_manifest(spark, table_path, refresh_manifest_dims)

@@ -73,21 +73,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from cmsspark_spark import fsops
 from cmsspark_spark.functions.text import tokens
 from cmsspark_spark.operators import bm25
 from cmsspark_spark.operators.memo import pin_frame
-
-
-def _state_table_exists(spark: SparkSession, path: str) -> bool:
-    """Explicit existence probe for an optional index table. The serve
-    paths must DISTINGUISH 'this index has no tombstones/blockstats'
-    (fine — older or append-only index) from 'the read failed'
-    (permissions, corrupt footer — must propagate, or a serve would
-    silently resurrect deleted documents / drop pruning state)."""
-    from cmsspark_spark.operators.layout import _fs_for
-
-    fs, p = _fs_for(spark, path)
-    return bool(fs.exists(p))
 
 
 # ---------------------------------------------------------------------------
@@ -125,15 +114,9 @@ def _list_commit_dirs(
 ) -> list[tuple[int, str]]:
     """(seq, path) of committed increment dirs, ascending seq. One
     driver-side listing, O(commits since last compaction)."""
-    from cmsspark_spark.operators.layout import _fs_for
-
     root = _commits_dir(index_dir)
-    fs, p = _fs_for(spark, root)
-    if not fs.exists(p):
-        return []
     out: list[tuple[int, str]] = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
+    for name, _d, _s, _m in fsops.listdir(spark, root):
         if not name.startswith("c-"):
             continue
         try:
@@ -155,29 +138,31 @@ def _index_table_paths(
     compacted base, and each commit dir past the base. The base
     SUBSUMES the flat dir and the folded commits, so those are
     excluded the moment the meta points at a base — a crash between
-    the meta flip and the best-effort deletes can never double-count."""
-    from cmsspark_spark.operators.snapshots import read_json_meta
-
+    the meta flip and the best-effort deletes can never double-count.
+    A failed existence probe (permissions) propagates: a serve must not
+    mistake it for 'this index has no tombstones' and resurrect
+    deleted documents."""
     if imeta is None:
         imeta = (
-            read_json_meta(spark, f"{index_dir}/_index_meta.json") or {}
+            fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json")
+            or {}
         )
     paths: list[str] = []
     base_v = int(imeta.get("base_version", 0))
     if base_v:
         p = f"{index_dir.rstrip('/')}/base/v{base_v:08d}/{table}"
-        if _state_table_exists(spark, p):
+        if fsops.size(spark, p) is not None:
             paths.append(p)
     else:
         flat = f"{index_dir.rstrip('/')}/{table}"
-        if _state_table_exists(spark, flat):
+        if fsops.size(spark, flat) is not None:
             paths.append(flat)
     through = int(imeta.get("base_through_seq", 0))
     for seq, cdir in _list_commit_dirs(spark, index_dir):
         if seq <= through:
             continue
         p = f"{cdir}/{table}"
-        if _state_table_exists(spark, p):
+        if fsops.size(spark, p) is not None:
             paths.append(p)
     return paths
 
@@ -211,24 +196,20 @@ def _finalize_commit(
 ) -> str:
     """Make a staged increment visible as commits/c-<seq>-<uuid>, with
     the SEQUENCE claimed exclusively first: an empty marker file
-    ``commits/s-<seq>`` is created with no-overwrite semantics (the
-    filesystem rejects a second creator), and only the claim winner
-    renames its payload to the c-<seq>-… name. The payload rename
-    alone could NOT claim the seq — its destination embeds this
-    writer's staging uuid, so two racers renaming "the same seq" land
-    under different names and both succeed (ADVICE r12); the marker is
-    the uuid-free name whose collision the race needs. A crash between
-    claim and rename leaves a harmless seq GAP (readers key on c-*
-    dirs; sequences need monotonicity, not density). Until the rename
-    nothing of the staging dir is readable, after it the whole commit
-    is."""
-    from cmsspark_spark.operators.layout import _fs_for
-    from cmsspark_spark.operators.snapshots import read_json_meta
-
-    fs, _ = _fs_for(spark, index_dir)
-    jvm = spark.sparkContext._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(Path(_commits_dir(index_dir)))
+    ``commits/s-<seq>`` is created with :func:`fsops.put_no_overwrite`
+    (``O_EXCL`` on POSIX, ``create(p, false)`` on HDFS-class stores —
+    the filesystem rejects a second creator), and only the claim
+    winner renames its payload to the c-<seq>-… name. Object stores
+    without an atomic exclusive create cannot host a multi-writer
+    index (same requirement as ``snapshots.default_claim``). The
+    payload rename alone could NOT claim the seq — its destination
+    embeds this writer's staging uuid, so two racers renaming "the
+    same seq" land under different names and both succeed (ADVICE
+    r12); the marker is the uuid-free name whose collision the race
+    needs. A crash between claim and rename leaves a harmless seq GAP
+    (readers key on c-* dirs; sequences need monotonicity, not
+    density). Until the rename nothing of the staging dir is
+    readable, after it the whole commit is."""
     suffix = stage_path.rstrip("/").rsplit("/", 1)[-1]
     # sequences must stay monotone PAST vacuumed commits: after a
     # compaction folds seq ≤ base_through_seq and vacuum deletes those
@@ -237,34 +218,32 @@ def _finalize_commit(
     # base_through_seq, not just the surviving dirs' max
     floor_seq = int(
         (
-            read_json_meta(spark, f"{index_dir}/_index_meta.json") or {}
+            fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json")
+            or {}
         ).get("base_through_seq", 0)
     )
-    last_err: Exception | None = None
     for _attempt in range(20):
         commits = _list_commit_dirs(spark, index_dir)
         seq = max(commits[-1][0] if commits else 0, floor_seq) + 1
-        marker = Path(f"{_commits_dir(index_dir)}/s-{seq:08d}")
         try:
-            out = fs.create(marker, False)  # exclusive: claims the seq
-            out.close()
-        except Exception as exc:  # noqa: BLE001 — seq taken: retry
-            last_err = exc
+            fsops.put_no_overwrite(
+                spark, f"{_commits_dir(index_dir)}/s-{seq:08d}"
+            )
+        except FileExistsError:
+            # taken by a concurrent writer, or left as a gap by a crash
+            # before its rename: either way the next claim goes past it
+            floor_seq = seq
             continue
         dst = f"{_commits_dir(index_dir)}/c-{seq:08d}-{suffix}"
-        if fs.rename(Path(stage_path), Path(dst)):
-            return dst
-        # rename of our OWN staging dir to a claimed, collision-free
-        # name failed: filesystem trouble, not a race — fail loudly
-        # (the marker stays; the seq becomes a gap)
-        raise RuntimeError(
-            f"claimed commit seq {seq} under {index_dir} but the "
-            f"payload rename to {dst} failed"
-        )
+        # our OWN staging dir to a claimed, collision-free name: a
+        # failure is filesystem trouble, not a race — it raises (the
+        # marker stays; the seq becomes a gap)
+        fsops.rename(spark, stage_path, dst)
+        return dst
     raise RuntimeError(
         f"could not claim a commit sequence under {index_dir} after "
         f"20 attempts (concurrent-writer contention on a single-writer "
-        f"index?); last error: {last_err}"
+        f"index?)"
     )
 
 #: Doc-id block width for the maintained block-max bounds
@@ -371,19 +350,14 @@ def append_bm25_index(
 
     from pyspark import StorageLevel
 
-    from cmsspark_spark.operators.snapshots import (
-        read_json_meta,
-        write_json_meta,
-    )
-
     spark = increment.sparkSession
     meta_path = f"{index_dir}/_index_meta.json"
-    imeta = read_json_meta(spark, meta_path)
+    imeta = fsops.read_json_meta(spark, meta_path)
     if imeta is None or "block_size" not in imeta:
         # first data append (the meta may already exist carrying a
         # snapshot pin): pin the grain + positional-ness, keep other
         # fields
-        write_json_meta(
+        fsops.write_json_meta(
             spark,
             meta_path,
             {
@@ -450,7 +424,7 @@ def append_bm25_index(
     post.unpersist()
     # the tag lands INSIDE the staging dir before the rename, so a
     # visible commit always carries its provenance
-    write_json_meta(
+    fsops.write_json_meta(
         spark,
         f"{stage}/_commit.json",
         {"n_docs": int(n_docs), **({"tag": commit_tag} if commit_tag else {})},
@@ -498,11 +472,9 @@ def append_bm25_index_from_snapshot(
     loudly."""
     from cmsspark_spark.operators.snapshots import (
         list_snapshots,
-        read_json_meta,
         read_snapshot,
         snapshot_changes,
         snapshot_files,
-        write_json_meta,
     )
 
     versions = list_snapshots(spark, table)
@@ -510,7 +482,7 @@ def append_bm25_index_from_snapshot(
         raise FileNotFoundError(f"{table} has no snapshots to consume")
     target = to_version if to_version is not None else versions[-1]
     meta_path = f"{index_dir}/_index_meta.json"
-    imeta = read_json_meta(spark, meta_path) or {}
+    imeta = fsops.read_json_meta(spark, meta_path) or {}
     if imeta.get("consume_in_progress"):
         raise ValueError(
             f"{index_dir} has an unfinished PRE-V2 snapshot consume "
@@ -541,15 +513,14 @@ def append_bm25_index_from_snapshot(
             snapshot_table=table.rstrip("/"),
             snapshot_version=int(target),
         )
-        write_json_meta(spark, meta_path, imeta)
+        fsops.write_json_meta(spark, meta_path, imeta)
         return {"from": last, "to": int(target), "noop": False,
                 "resumed": True}
     if last is None and (
         _list_commit_dirs(spark, index_dir)
         or int(imeta.get("base_version", 0))
-        or _state_table_exists(
-            spark, f"{index_dir.rstrip('/')}/postings"
-        )
+        or fsops.size(spark, f"{index_dir.rstrip('/')}/postings")
+        is not None
     ):
         # real indexed data with no pin = an index built via --docs
         # appends; a first consume over it would double-index the
@@ -657,11 +628,11 @@ def append_bm25_index_from_snapshot(
             }
         },
     )
-    imeta = read_json_meta(spark, meta_path) or {}
+    imeta = fsops.read_json_meta(spark, meta_path) or {}
     imeta.update(
         snapshot_table=table.rstrip("/"), snapshot_version=int(target)
     )
-    write_json_meta(spark, meta_path, imeta)
+    fsops.write_json_meta(spark, meta_path, imeta)
     return {"from": last, "to": int(target), "noop": False}
 
 
@@ -672,11 +643,9 @@ def _find_consume_commit(
     to ``target`` — how an interrupted consume recognizes that its
     increment already landed. One _commit.json read per live commit
     (bounded by compaction)."""
-    from cmsspark_spark.operators.snapshots import read_json_meta
-
     for _seq, cdir in _list_commit_dirs(spark, index_dir):
         tag = (
-            read_json_meta(spark, f"{cdir}/_commit.json") or {}
+            fsops.read_json_meta(spark, f"{cdir}/_commit.json") or {}
         ).get("tag") or {}
         c = tag.get("consume") or {}
         if c.get("table") == table.rstrip("/") and c.get("to") == int(
@@ -705,8 +674,6 @@ def tombstone_bm25_index(
     tombstones, folding the deletion into the base."""
     import uuid as _uuid
 
-    from cmsspark_spark.operators.snapshots import write_json_meta
-
     spark = ids.sparkSession
     stage = f"{_staging_root(index_dir)}/{_uuid.uuid4().hex}"
     (
@@ -714,16 +681,16 @@ def tombstone_bm25_index(
         .distinct()
         .write.parquet(f"{stage}/tombstones")
     )
-    write_json_meta(spark, f"{stage}/_commit.json", {"n_docs": 0})
+    fsops.write_json_meta(spark, f"{stage}/_commit.json", {"n_docs": 0})
     _finalize_commit(spark, index_dir, stage)
 
 
 def _merged_state(spark: SparkSession, index_dir: str) -> dict:
     """Scalars + lazily-merged stat frames of an index directory
     (base + live commits; see the transactional-layout section)."""
-    from cmsspark_spark.operators.snapshots import read_json_meta
-
-    imeta = read_json_meta(spark, f"{index_dir}/_index_meta.json") or {}
+    imeta = (
+        fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json") or {}
+    )
     g = (
         index_table(spark, index_dir, "globals", imeta=imeta)
         .agg(F.sum("n_docs"), F.sum("sum_dl"))
@@ -815,9 +782,7 @@ def _blockmax_candidates(
     pin is verified — serving a 64-grain index with a 128-grain build
     would join bounds onto the wrong doc ranges and silently drop
     candidates."""
-    from cmsspark_spark.operators.snapshots import read_json_meta
-
-    imeta = read_json_meta(spark, f"{index_dir}/_index_meta.json")
+    imeta = fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json")
     pinned = (imeta or {}).get("block_size")
     if pinned != BLOCK_SIZE:
         raise ValueError(
@@ -1236,13 +1201,8 @@ def compact_bm25_index(
     must run first (folding it would destroy the tag the resume needs).
     Single-writer, like every maintenance pass here. Returns
     before/after row counts per table."""
-    from cmsspark_spark.operators.snapshots import (
-        read_json_meta,
-        write_json_meta,
-    )
-
     meta_path = f"{index_dir}/_index_meta.json"
-    imeta = read_json_meta(spark, meta_path) or {}
+    imeta = fsops.read_json_meta(spark, meta_path) or {}
     commits = _list_commit_dirs(spark, index_dir)
     through = int(imeta.get("base_through_seq", 0))
     pin = imeta.get("snapshot_version")
@@ -1250,7 +1210,7 @@ def compact_bm25_index(
         if seq <= through:
             continue
         tag = (
-            read_json_meta(spark, f"{cdir}/_commit.json") or {}
+            fsops.read_json_meta(spark, f"{cdir}/_commit.json") or {}
         ).get("tag") or {}
         c = tag.get("consume") or {}
         if c and (pin is None or int(c.get("to", -1)) > int(pin)):
@@ -1320,7 +1280,7 @@ def compact_bm25_index(
     # below is reclamation of now-unreferenced dirs
     last_seq = commits[-1][0] if commits else through
     imeta.update(layout=2, base_version=new_v, base_through_seq=last_seq)
-    write_json_meta(spark, meta_path, imeta)
+    fsops.write_json_meta(spark, meta_path, imeta)
     vacuum_bm25_index(spark, index_dir)
     return {k: (before[k], after[k]) for k in before}
 
@@ -1337,59 +1297,46 @@ def vacuum_bm25_index(
     just leaves work for the next run."""
     import time
 
-    from cmsspark_spark.operators.layout import _fs_for
-    from cmsspark_spark.operators.snapshots import read_json_meta
-
-    imeta = read_json_meta(spark, f"{index_dir}/_index_meta.json") or {}
+    imeta = (
+        fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json") or {}
+    )
     base_v = int(imeta.get("base_version", 0))
     through = int(imeta.get("base_through_seq", 0))
-    fs, _ = _fs_for(spark, index_dir)
-    jvm = spark.sparkContext._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
     removed: list[str] = []
 
     def _rm(path: str) -> None:
-        p = Path(path)
-        if fs.exists(p):
-            fs.delete(p, True)
+        if fsops.delete(spark, path, recursive=True):
             removed.append(path)
 
+    root = index_dir.rstrip("/")
     if base_v:
-        root = index_dir.rstrip("/")
-        base_root = Path(f"{root}/base")
-        if fs.exists(base_root):
-            for stt in fs.listStatus(base_root):
-                name = stt.getPath().getName()
-                if name.startswith("v") and name != f"v{base_v:08d}":
-                    _rm(f"{root}/base/{name}")
+        for name, _d, _s, _m in fsops.listdir(spark, f"{root}/base"):
+            if name.startswith("v") and name != f"v{base_v:08d}":
+                _rm(f"{root}/base/{name}")
         for t in _INDEX_TABLES:
             _rm(f"{root}/{t}")
-        for seq, cdir in _list_commit_dirs(spark, index_dir):
-            if seq <= through:
-                _rm(cdir)
-                _rm(f"{_commits_dir(index_dir)}/s-{seq:08d}")
+        # folded c-<seq>-<uuid> dirs and their s-<seq> claim markers,
+        # including the gap marker a crash before the rename leaves
+        commits = _commits_dir(index_dir)
+        for name, _d, _s, _m in fsops.listdir(spark, commits):
+            seq = name.split("-")[1] if name[:2] in ("c-", "s-") else ""
+            if seq.isdigit() and int(seq) <= through:
+                _rm(f"{commits}/{name}")
     now_ms = time.time() * 1000.0
-    sroot = Path(_staging_root(index_dir))
-    if fs.exists(sroot):
-        for stt in fs.listStatus(sroot):
-            if (
-                now_ms - stt.getModificationTime()
-                >= staging_min_age_s * 1000.0
-            ):
-                _rm(stt.getPath().toString())
+    aged = staging_min_age_s * 1000.0
+    sroot = _staging_root(index_dir)
+    for name, _d, _s, mtime_ms in fsops.listdir(spark, sroot):
+        if now_ms - mtime_ms >= aged:
+            _rm(f"{sroot}/{name}")
     # crashed write_json_meta temporaries beside the meta (the atomic
     # replace leaves one per crash-before-rename) — same age gate
-    iroot = Path(index_dir.rstrip("/"))
-    if fs.exists(iroot):
-        for stt in fs.listStatus(iroot):
-            name = stt.getPath().getName()
-            if (
-                ".tmp." in name
-                and name.startswith("_index_meta.json")
-                and now_ms - stt.getModificationTime()
-                >= staging_min_age_s * 1000.0
-            ):
-                _rm(stt.getPath().toString())
+    for name, _d, _s, mtime_ms in fsops.listdir(spark, root):
+        if (
+            ".tmp." in name
+            and name.startswith("_index_meta.json")
+            and now_ms - mtime_ms >= aged
+        ):
+            _rm(f"{root}/{name}")
     return {"removed": removed}
 
 

@@ -23,18 +23,18 @@ a tiny version log):
   (``layout.vacuum_table`` keeps only what the single manifest lists;
   this keeps the union of all retained versions).
 
-Concurrency: a commit writes ``_tmp.<uuid>`` then RENAMES to
-``v<NNNNNNNN>.json`` — on HDFS-class stores (server-side rename) the
-no-overwrite rename is atomic, so two racing writers cannot both claim
-a version; the loser retries at the next number (optimistic
-concurrency, bounded retries). On local/posix filesystems the
-AbstractFileSystem implementation is an exists-check followed by a
-rename — a narrow same-host TOCTOU window — and object stores without
-atomic rename have no claim at all. For those, the claim is PLUGGABLE:
-pass ``claim=`` to :func:`commit_snapshot` (a callable that must
-atomically move the temp file to the version name and report whether
-it won) backed by whatever lock/CAS primitive the store offers (a DB
-row, a DynamoDB conditional put, a lock service).
+Concurrency: a commit writes ``_tmp.<uuid>`` then CLAIMS
+``v<NNNNNNNN>.json`` with a no-overwrite move, so two racing writers
+cannot both claim a version; the loser retries at the next number
+(optimistic concurrency, bounded retries). Every filesystem step goes
+through :mod:`cmsspark_spark.fsops`, whose ``claim`` is atomic on POSIX
+(a hard link) and on HDFS-class stores (a server-side rename without
+overwrite). Object stores without atomic rename have no claim at all.
+For those, the claim is PLUGGABLE: pass ``claim=`` to
+:func:`commit_snapshot` (a callable that must atomically move the temp
+file to the version name and report whether it won) backed by whatever
+lock/CAS primitive the store offers (a DB row, a DynamoDB conditional
+put, a lock service).
 
 Scale: everything here is driver-side metadata ∝ file count — and past
 :data:`MANIFEST_INLINE_MAX` live files the version entry switches to
@@ -66,11 +66,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from cmsspark_spark.operators.layout import (
-    _fs_for,
-    _list_parquet_files,
-    _local_fs_path,
-)
+from cmsspark_spark import fsops
 
 SNAPDIR = "_snapshots"
 
@@ -89,17 +85,19 @@ def _write_attributed(
     df: DataFrame,
     table: str,
     precommit: Callable[[], None] | None = None,
+    prefix: str = "snap",
 ) -> list[str]:
     """Write ``df``'s parquet files into ``table`` and return EXACTLY
     the basenames this write produced — by construction, not by
     listing-diff. The files land in a per-commit staging subdir
     (``_staging/<uuid>``, invisible to parquet readers per the
     underscore convention) and are then renamed into the table root
-    under a ``snap-<uuid>-`` prefix. A concurrent writer's in-flight
-    files can never be claimed by this commit: the attributed set is
-    the staged listing, which only this writer populates. (ADVICE r10:
-    the old before/after directory diff attributed a concurrent
-    writer's partially-landed batch to this snapshot.)
+    under a ``<prefix>-<uuid>-`` prefix. A concurrent writer's
+    in-flight files can never be claimed by this commit: the
+    attributed set is the staged listing, which only this writer
+    populates. (ADVICE r10: the old before/after directory diff
+    attributed a concurrent writer's partially-landed batch to this
+    snapshot.)
 
     ``precommit`` (if given) runs after the staged write completes and
     BEFORE any file is renamed into the table root — the barrier that
@@ -116,17 +114,14 @@ def _write_attributed(
         try:
             precommit()
         except BaseException:
-            _delete_dir(spark, staging)
+            fsops.delete(spark, staging, recursive=True)
             raise
-    staged = _list_parquet_files(spark, staging)
     names = []
-    moves = []
-    for p in staged:
-        base = f"snap-{token}-" + p.rsplit("/", 1)[-1]
-        moves.append((p, f"{root}/{base}"))
+    for p in fsops.list_parquet_files(spark, staging):
+        base = f"{prefix}-{token}-" + p.rsplit("/", 1)[-1]
+        fsops.rename(spark, p, f"{root}/{base}")
         names.append(base)
-    _move_staged_files(spark, moves)
-    _delete_dir(spark, staging)
+    fsops.delete(spark, staging, recursive=True)
     return names
 
 
@@ -138,115 +133,10 @@ def _version_name(v: int) -> str:
     return f"v{v:08d}.json"
 
 
-def _put_bytes_no_overwrite(
-    spark: SparkSession, fs, path: str, payload: bytes
-) -> None:
-    """Create ``path`` with ``payload`` (fail if it exists). Local
-    filesystems write with plain open('xb') — same no-overwrite
-    contract, none of the py4j create/stream round-trips."""
-    local = _local_fs_path(spark, path)
-    if local is not None:
-        import os as _os
-
-        # fs.create makes parent dirs implicitly; match it
-        _os.makedirs(_os.path.dirname(local), exist_ok=True)
-        with open(local, "xb") as fh:
-            fh.write(payload)
-        return
-    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    out = fs.create(p, False)
-    try:
-        out.write(bytearray(payload))
-    finally:
-        out.close()
-
-
-def _delete_file(spark: SparkSession, fs, path: str) -> None:
-    local = _local_fs_path(spark, path)
-    if local is not None:
-        import os as _os
-
-        try:
-            _os.unlink(local)
-        except FileNotFoundError:
-            pass
-        return
-    fs.delete(
-        spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path), False
-    )
-
-
-def _move_staged_files(
-    spark: SparkSession, moves: Sequence[tuple[str, str]]
-) -> None:
-    """Rename each (src, dest) pair, failing loudly on the first miss.
-    Local filesystems use os.rename (no py4j Path/rename round-trips —
-    a staged commit moves one file per task output, so this loop runs
-    at file-count rate); other schemes keep the Hadoop rename."""
-    if not moves:
-        return
-    local0 = _local_fs_path(spark, moves[0][0])
-    if local0 is not None:
-        import os as _os
-
-        for src, dest in moves:
-            s = _local_fs_path(spark, src)
-            d = _local_fs_path(spark, dest)
-            try:
-                _os.rename(s, d)
-            except OSError as exc:
-                raise IOError(
-                    f"could not move staged file {src} to {dest}: {exc}"
-                ) from exc
-        return
-    fs, _ = _fs_for(spark, moves[0][0])
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    for src, dest in moves:
-        if not fs.rename(Path(src), Path(dest)):
-            raise IOError(f"could not move staged file {src} to {dest}")
-
-
-def _delete_dir(spark: SparkSession, path: str) -> None:
-    local = _local_fs_path(spark, path)
-    if local is not None:
-        import shutil as _shutil
-
-        _shutil.rmtree(local, ignore_errors=True)
-        return
-    fs, _ = _fs_for(spark, path)
-    fs.delete(
-        spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path), True
-    )
-
-
 def list_snapshots(spark: SparkSession, table: str) -> list[int]:
-    """Committed version numbers, ascending. Metadata listing only.
-    Local filesystems use os.listdir — the py4j listStatus round-trips
-    cost more than the listing itself at commit rates."""
-    local = _local_fs_path(spark, _snap_dir(table))
-    if local is not None:
-        import os as _os
-
-        try:
-            names = _os.listdir(local)
-        except FileNotFoundError:
-            return []
-        out = []
-        for name in names:
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    out.append(int(name[1:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    d = jvm.org.apache.hadoop.fs.Path(_snap_dir(table))
-    if not fs.exists(d):
-        return []
+    """Committed version numbers, ascending. Metadata listing only."""
     out = []
-    for st in fs.listStatus(d):
-        name = st.getPath().getName()
+    for name, _d, _s, _m in fsops.listdir(spark, _snap_dir(table)):
         if name.startswith("v") and name.endswith(".json"):
             try:
                 out.append(int(name[1:-5]))
@@ -255,38 +145,21 @@ def list_snapshots(spark: SparkSession, table: str) -> list[int]:
     return sorted(out)
 
 
+def _read_required(spark: SparkSession, path: str, missing: str):
+    meta = fsops.read_json_meta(spark, path)
+    if meta is None:
+        raise FileNotFoundError(missing)
+    return meta
+
+
 def read_snapshot_meta(spark: SparkSession, table: str, version: int) -> dict:
     """Parse one version file. Raises FileNotFoundError for an unknown
     or EXPIRED version — time travel past the retention window must
     fail loudly, never silently read the current state."""
-    rel = _snap_dir(table) + "/" + _version_name(version)
-    local = _local_fs_path(spark, rel)
-    if local is not None:
-        try:
-            with open(local, "rb") as fh:
-                return json.loads(fh.read().decode("utf-8"))
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"snapshot v{version} of {table} does not exist or "
-                "was expired"
-            ) from None
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(rel)
-    if not fs.exists(p):
-        raise FileNotFoundError(
-            f"snapshot v{version} of {table} does not exist or was expired"
-        )
-    stream = fs.open(p)
-    try:
-        data = bytes(
-            spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                stream
-            )
-        )
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
+    return _read_required(
+        spark, _snap_dir(table) + "/" + _version_name(version),
+        f"snapshot v{version} of {table} does not exist or was expired",
+    )
 
 
 def _write_manifest_file(
@@ -298,45 +171,18 @@ def _write_manifest_file(
     a commit attempt that loses its version race leaves an orphan
     manifest, which expire_snapshots reclaims as unreferenced."""
     name = f"m-{uuid.uuid4().hex}.json"
-    payload = json.dumps(sorted(names)).encode("utf-8")
-    local = _local_fs_path(spark, _snap_dir(table) + "/" + name)
-    if local is not None:
-        import os as _os
-
-        # "xb" preserves the create(p, False) no-overwrite contract;
-        # fs.create makes parent dirs implicitly — match it
-        _os.makedirs(_os.path.dirname(local), exist_ok=True)
-        with open(local, "xb") as fh:
-            fh.write(payload)
-        return name
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(_snap_dir(table) + "/" + name)
-    out = fs.create(p, False)
-    try:
-        out.write(bytearray(payload))
-    finally:
-        out.close()
+    fsops.put_no_overwrite(
+        spark, _snap_dir(table) + "/" + name,
+        json.dumps(sorted(names)).encode("utf-8"),
+    )
     return name
 
 
 def _read_manifest_file(
     spark: SparkSession, table: str, name: str
 ) -> list:
-    rel = _snap_dir(table) + "/" + name
-    local = _local_fs_path(spark, rel)
-    if local is not None:
-        with open(local, "rb") as fh:
-            return json.loads(fh.read().decode("utf-8"))
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(rel)
-    stream = fs.open(p)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
+    path = _snap_dir(table) + "/" + name
+    return _read_required(spark, path, f"manifest {path} does not exist")
 
 
 def _read_manifest_files(
@@ -349,7 +195,7 @@ def _read_manifest_files(
     so resolving a manifest-list of N chunks costs ~N/8 round-trips
     of latency instead of N."""
     names = list(names)
-    if len(names) <= 2 or _local_fs_path(spark, table) is not None:
+    if len(names) <= 2 or fsops.local_path(spark, table) is not None:
         return {m: _read_manifest_file(spark, table, m) for m in names}
     from concurrent.futures import ThreadPoolExecutor
 
@@ -369,7 +215,7 @@ def _write_manifest_chunks(
     partition commit's #partitions manifests cost ~N/8 round-trips
     of latency instead of N."""
     chunks = list(chunks)
-    if len(chunks) <= 2 or _local_fs_path(spark, table) is not None:
+    if len(chunks) <= 2 or fsops.local_path(spark, table) is not None:
         return [_write_manifest_file(spark, table, c) for c in chunks]
     from concurrent.futures import ThreadPoolExecutor
 
@@ -407,54 +253,37 @@ def snapshot_files(
 
 
 def default_claim(spark: SparkSession, table: str) -> Callable[[str, str], bool]:
-    """The built-in version claim: ``FileContext.rename`` with no
-    OVERWRITE option. On HDFS-class stores the server enforces
-    dest-must-not-exist atomically; on local/posix AbstractFileSystem
-    implementations it is an exists-check then a rename — not atomic,
-    but the window is a few syscalls and the per-process claims in one
-    JVM serialize through the same FileContext. Object stores without
-    atomic rename need a caller-provided claim instead (see
-    :func:`commit_snapshot`). Returns a ``claim(tmp, dest) -> bool``
-    callable: True = this writer owns ``dest``; False = lost the race."""
-    if _local_fs_path(spark, table) is not None:
-        import os as _os
+    """The built-in version claim, :func:`fsops.claim`: a no-overwrite
+    move that is atomic on POSIX (a hard link) and on HDFS-class stores
+    (a rename without overwrite — the server enforces
+    dest-must-not-exist). Object stores without atomic rename need a
+    caller-provided claim instead (see :func:`commit_snapshot`).
+    Returns a ``claim(tmp, dest) -> bool`` callable: True = this
+    writer owns ``dest``; False = lost the race."""
+    return lambda tmp, dest: fsops.claim(spark, tmp, dest)
 
-        def _local_claim(tmp: str, dest: str) -> bool:
-            # os.link fails with EEXIST when dest exists — a genuinely
-            # atomic no-overwrite claim on POSIX, strictly stronger
-            # than the local AbstractFileSystem's exists-then-rename
-            t = tmp[5:] if tmp.startswith("file:") else tmp
-            d = dest[5:] if dest.startswith("file:") else dest
-            try:
-                _os.link(t, d)
-            except FileExistsError:
-                return False
-            except OSError:
-                return False
-            _os.unlink(t)
-            return True
 
-        return _local_claim
-    jvm = spark.sparkContext._jvm
-    d = jvm.org.apache.hadoop.fs.Path(_snap_dir(table))
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        d.toUri(), spark.sparkContext._jsc.hadoopConfiguration()
-    )
-    # FileContext.rename is varargs(Options.Rename...) — py4j needs the
-    # empty array passed explicitly or no overload matches
-    no_overwrite = spark.sparkContext._gateway.new_array(
-        jvm.org.apache.hadoop.fs.Options.Rename, 0
-    )
-    Path = jvm.org.apache.hadoop.fs.Path
-
-    def _claim(tmp: str, dest: str) -> bool:
-        try:
-            fc.rename(Path(tmp), Path(dest), no_overwrite)
-            return True
-        except Exception:
-            return False
-
-    return _claim
+def _claim_version(
+    spark: SparkSession,
+    table: str,
+    v: int,
+    meta: dict,
+    claim: Callable[[str, str], bool],
+) -> Exception | None:
+    """Write ``meta`` to a temp file and claim version ``v`` with it.
+    None when this writer won; otherwise the reason it lost (the temp
+    is deleted and the caller renumbers and retries)."""
+    tmp = _snap_dir(table) + f"/_tmp.{uuid.uuid4().hex}"
+    fsops.put_no_overwrite(spark, tmp, json.dumps(meta).encode("utf-8"))
+    dest = _snap_dir(table) + "/" + _version_name(v)
+    try:
+        if claim(tmp, dest):
+            return None
+        err: Exception = RuntimeError(f"version claim lost for {dest}")
+    except Exception as exc:
+        err = exc
+    fsops.delete(spark, tmp)
+    return err
 
 
 def commit_snapshot(
@@ -485,11 +314,11 @@ def commit_snapshot(
     the name is unclaimed, returning True on success and False when
     another writer won (this writer then renumbers and retries, after
     deleting its temp). The default (:func:`default_claim`) is a
-    no-overwrite ``FileContext.rename`` — atomic on HDFS-class
-    stores. On S3-like stores whose rename/copy overwrites, pass a
-    claim backed by a real CAS primitive (conditional put, a lock
-    table) — with the default there, two racers could both "win" a
-    version and one commit would silently vanish. ``extra`` adds
+    no-overwrite move — atomic on POSIX and HDFS-class stores. On
+    S3-like stores whose rename/copy overwrites, pass a claim backed
+    by a real CAS primitive (conditional put, a lock table) — with the
+    default there, two racers could both "win" a version and one
+    commit would silently vanish. ``extra`` adds
     metadata fields to the commit (the streaming sink records its
     batch_id this way). Returns the committed version number.
 
@@ -524,11 +353,6 @@ def commit_snapshot(
         MANIFEST_INLINE_MAX if manifest_threshold is None
         else int(manifest_threshold)
     )
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    d = Path(_snap_dir(table))
-    fs.mkdirs(d)
     if claim is None:
         claim = default_claim(spark, table)
     last_err: Exception | None = None
@@ -721,19 +545,9 @@ def commit_snapshot(
             for n in nd:
                 dseqs[n] = v
             meta["delete_seqs"] = dseqs
-        tmp = _snap_dir(table) + f"/_tmp.{uuid.uuid4().hex}"
-        _put_bytes_no_overwrite(
-            spark, fs, tmp, json.dumps(meta).encode("utf-8")
-        )
-        dest = _snap_dir(table) + "/" + _version_name(v)
-        try:
-            if claim(tmp, dest):
-                return v
-            last_err = RuntimeError(f"version claim lost for {dest}")
-        except Exception as exc:
-            last_err = exc
-        # lost the race: renumber and retry
-        _delete_file(spark, fs, tmp)
+        last_err = _claim_version(spark, table, v, meta, claim)
+        if last_err is None:
+            return v
     raise RuntimeError(
         f"could not commit a snapshot of {table} after {max_retries} "
         f"attempts (heavy concurrent-writer contention); last error: "
@@ -865,27 +679,10 @@ def _stage_delete_files(
     through one task — AQE's partition coalescing already collapses a
     small distinct() output to one or a few files, and a billion-key
     delete writes in parallel (ADVICE r12)."""
-    root = table.rstrip("/")
-    token = uuid.uuid4().hex[:12]
-    staging = f"{root}/_staging/{token}"
-    keys.select(*key_cols).distinct().write.mode(
-        "error"
-    ).parquet(staging)
-    if precommit is not None:
-        try:
-            precommit()
-        except BaseException:
-            _delete_dir(spark, staging)
-            raise
-    del_names = []
-    moves = []
-    for p in _list_parquet_files(spark, staging):
-        base = f"snapdel-{token}-" + p.rsplit("/", 1)[-1]
-        moves.append((p, f"{root}/{base}"))
-        del_names.append(base)
-    _move_staged_files(spark, moves)
-    _delete_dir(spark, staging)
-    return del_names
+    return _write_attributed(
+        keys.select(*key_cols).distinct(), table, precommit,
+        prefix="snapdel",
+    )
 
 
 def snapshot_delete(
@@ -1216,31 +1013,24 @@ def snapshot_write_staged(
     versions = list_snapshots(spark, table)
     if versions:
         entry["staged_at_version"] = versions[-1]
-    write_json_meta(spark, _staged_path(table, sid), entry)
+    fsops.write_json_meta(spark, _staged_path(table, sid), entry)
     return sid
 
 
 def list_staged(spark: SparkSession, table: str) -> list[dict]:
     """All pending stage entries (metadata listing only)."""
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    d = jvm.org.apache.hadoop.fs.Path(_snap_dir(table) + "/staged")
-    if not fs.exists(d):
-        return []
     out = []
-    for st in fs.listStatus(d):
-        name = st.getPath().getName()
+    d = _snap_dir(table) + "/staged"
+    for name, _d, _s, _m in fsops.listdir(spark, d):
         if name.startswith("s-") and name.endswith(".json"):
-            e = read_json_meta(
-                spark, _snap_dir(table) + "/staged/" + name
-            )
+            e = fsops.read_json_meta(spark, f"{d}/{name}")
             if e is not None:
                 out.append(e)
     return sorted(out, key=lambda e: e.get("stage_id", ""))
 
 
 def _staged_entry(spark: SparkSession, table: str, stage_id: str) -> dict:
-    e = read_json_meta(spark, _staged_path(table, stage_id))
+    e = fsops.read_json_meta(spark, _staged_path(table, stage_id))
     if e is None:
         raise FileNotFoundError(
             f"stage {stage_id} of {table} does not exist (published, "
@@ -1297,14 +1087,12 @@ def publish_staged(
     parent, delete state inherited and add-sequences stamped inside
     the commit retry loop); an ``overwrite`` stage replaces the live
     set. Returns the committed version."""
-    fs, _ = _fs_for(spark, table)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     for v in sorted(list_snapshots(spark, table), reverse=True):
         if str(
             read_snapshot_meta(spark, table, v).get("stage_id")
         ) == str(stage_id):
             # already published (crash between commit and entry sweep)
-            fs.delete(Path(_staged_path(table, stage_id)), False)
+            fsops.delete(spark, _staged_path(table, stage_id))
             return v
     e = _staged_entry(spark, table, stage_id)
     extra: dict = {"stage_id": stage_id, "schema": e["schema"]}
@@ -1350,7 +1138,7 @@ def publish_staged(
             append_files=e["files"], extra=extra,
             new_delete_files=del_names,
         )
-        fs.delete(Path(_staged_path(table, stage_id)), False)
+        fsops.delete(spark, _staged_path(table, stage_id))
         return v
     if e["op"] == "append":
         versions = list_snapshots(spark, table)
@@ -1376,7 +1164,7 @@ def publish_staged(
             spark, table, e["files"], op="publish-overwrite",
             extra=extra,
         )
-    fs.delete(Path(_staged_path(table, stage_id)), False)
+    fsops.delete(spark, _staged_path(table, stage_id))
     return v
 
 
@@ -1388,9 +1176,7 @@ def discard_staged(
     never-referenced residue that :func:`vacuum_snapshot_table`
     reclaims after its age gate. Returns the discarded entry."""
     e = _staged_entry(spark, table, stage_id)
-    fs, _ = _fs_for(spark, table)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs.delete(Path(_staged_path(table, stage_id)), False)
+    fsops.delete(spark, _staged_path(table, stage_id))
     return e
 
 
@@ -1452,24 +1238,12 @@ def _delete_keys_df(
     del_df = spark.read.parquet(
         *[f"{root}/{n}" for n in names]
     ).distinct()
-    local = _local_fs_path(spark, root)
     total = 0
-    if local is not None:
-        import os as _os
-
-        try:
-            for n in names:
-                total += _os.path.getsize(f"{local}/{n}")
-        except OSError:
+    for n in names:
+        nbytes = fsops.size(spark, f"{root}/{n}")
+        if nbytes is None:
             return del_df  # unknown size: let AQE decide
-    else:
-        fs, _ = _fs_for(spark, table)
-        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-        for n in names:
-            try:
-                total += fs.getFileStatus(Path(f"{root}/{n}")).getLen()
-            except Exception:
-                return del_df  # unknown size: let AQE decide
+        total += nbytes
     if total <= BROADCAST_DELETES_MAX_BYTES:
         return F.broadcast(del_df)
     return del_df
@@ -1747,12 +1521,12 @@ def _commit_ms(
     ms = meta.get("committed_ms")
     if ms is not None:
         return float(ms)
-    fs, _ = _fs_for(spark, table)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    return float(
-        fs.getFileStatus(
-            Path(_snap_dir(table) + "/" + _version_name(version))
-        ).getModificationTime()
+    name = _version_name(version)
+    for n, _d, _s, mtime_ms in fsops.listdir(spark, _snap_dir(table)):
+        if n == name:
+            return float(mtime_ms)
+    raise FileNotFoundError(
+        f"snapshot v{version} of {table} does not exist or was expired"
     )
 
 
@@ -2082,14 +1856,14 @@ def snapshot_tag(
         raise FileNotFoundError(
             f"cannot tag v{version} of {table}: not in the version log"
         )
-    if not replace and read_json_meta(
+    if not replace and fsops.read_json_meta(
         spark, _ref_path(table, name)
     ) is not None:
         raise FileExistsError(
             f"tag {name!r} already exists on {table} — pass "
             "replace=True to move it"
         )
-    write_json_meta(
+    fsops.write_json_meta(
         spark, _ref_path(table, name),
         {"name": name, "version": int(version)},
     )
@@ -2098,18 +1872,11 @@ def snapshot_tag(
 
 def snapshot_tags(spark: SparkSession, table: str) -> dict:
     """All named refs: ``{name: version}`` (metadata listing only)."""
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    d = jvm.org.apache.hadoop.fs.Path(_snap_dir(table) + "/refs")
-    if not fs.exists(d):
-        return {}
     out: dict = {}
-    for st in fs.listStatus(d):
-        fname = st.getPath().getName()
+    d = _snap_dir(table) + "/refs"
+    for fname, _d, _s, _m in fsops.listdir(spark, d):
         if fname.endswith(".json"):
-            e = read_json_meta(
-                spark, _snap_dir(table) + "/refs/" + fname
-            )
+            e = fsops.read_json_meta(spark, f"{d}/{fname}")
             if e is not None:
                 out[e["name"]] = int(e["version"])
     return out
@@ -2119,12 +1886,10 @@ def snapshot_untag(spark: SparkSession, table: str, name: str) -> int:
     """Delete a named ref; the version it pinned becomes expirable
     again. Returns that version. Unknown tags fail loudly."""
     _check_ref_name(name)
-    e = read_json_meta(spark, _ref_path(table, name))
+    e = fsops.read_json_meta(spark, _ref_path(table, name))
     if e is None:
         raise FileNotFoundError(f"no tag {name!r} on {table}")
-    fs, _ = _fs_for(spark, table)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs.delete(Path(_ref_path(table, name)), False)
+    fsops.delete(spark, _ref_path(table, name))
     return int(e["version"])
 
 
@@ -2227,25 +1992,18 @@ def expire_snapshots(
     # attempts) + crashed claim temporaries, age-gated
     import time
 
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
     orphan_manifests: list[str] = []
-    snap_dir = Path(_snap_dir(table))
-    if fs.exists(snap_dir):
-        now_ms = time.time() * 1000.0
-        for st in fs.listStatus(snap_dir):
-            name = st.getPath().getName()
-            is_orphan_manifest = (
-                name.startswith("m-")
-                and name.endswith(".json")
-                and name not in retained_manifests
-            )
-            if (is_orphan_manifest or name.startswith("_tmp.")) and (
-                now_ms - st.getModificationTime()
-                >= orphan_min_age_s * 1000.0
-            ):
-                orphan_manifests.append(name)
+    now_ms = time.time() * 1000.0
+    for name, _d, _s, mtime_ms in fsops.listdir(spark, _snap_dir(table)):
+        is_orphan_manifest = (
+            name.startswith("m-")
+            and name.endswith(".json")
+            and name not in retained_manifests
+        )
+        if (is_orphan_manifest or name.startswith("_tmp.")) and (
+            now_ms - mtime_ms >= orphan_min_age_s * 1000.0
+        ):
+            orphan_manifests.append(name)
     out = {
         "kept_versions": kept,
         "expired_versions": expired,
@@ -2269,17 +2027,17 @@ def expire_snapshots(
                 f"a tag was created on {table} while planning expire "
                 "and pins a version scheduled for deletion; re-run"
             )
+        # versions go FIRST: a crash part-way must never leave a listed
+        # version whose files are gone (it would read as a scan error,
+        # not as expired); files and manifests a crash leaves behind
+        # are unreferenced residue for vacuum and the orphan sweep
         root = table.rstrip("/")
-        for n in sorted(doomed_files):
-            fs.delete(Path(f"{root}/{n}"), False)
-        for n in sorted(doomed_manifests):
-            fs.delete(Path(_snap_dir(table) + "/" + n), False)
-        for n in sorted(orphan_manifests):
-            fs.delete(Path(_snap_dir(table) + "/" + n), False)
         for v in expired:
-            fs.delete(
-                Path(_snap_dir(table) + "/" + _version_name(v)), False
-            )
+            fsops.delete(spark, _snap_dir(table) + "/" + _version_name(v))
+        for n in sorted(doomed_files):
+            fsops.delete(spark, f"{root}/{n}")
+        for n in sorted(doomed_manifests) + sorted(orphan_manifests):
+            fsops.delete(spark, _snap_dir(table) + "/" + n)
     return out
 
 
@@ -2324,30 +2082,21 @@ def vacuum_snapshot_table(
     # files age into ordinary reclaimable residue
     for e in list_staged(spark, table):
         referenced.update(e.get("files", []))
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
     root = table.rstrip("/")
     now_ms = time.time() * 1000.0
     doomed: list = []
-    rp = Path(root)
-    if fs.exists(rp):
-        for st in fs.listStatus(rp):
-            name = st.getPath().getName()
-            if st.isDirectory() or not name.startswith(
-                ("snap-", "snapdel-")
-            ):
-                continue
-            if name in referenced:
-                continue
-            if now_ms - st.getModificationTime() >= min_age_s * 1000.0:
-                doomed.append(name)
-    stale_staging: list = []
-    sp = Path(f"{root}/_staging")
-    if fs.exists(sp):
-        for st in fs.listStatus(sp):
-            if now_ms - st.getModificationTime() >= min_age_s * 1000.0:
-                stale_staging.append(st.getPath().getName())
+    for name, is_dir, _s, mtime_ms in fsops.listdir(spark, root):
+        if is_dir or not name.startswith(("snap-", "snapdel-")):
+            continue
+        if name in referenced:
+            continue
+        if now_ms - mtime_ms >= min_age_s * 1000.0:
+            doomed.append(name)
+    stale_staging = [
+        name
+        for name, _d, _s, mtime_ms in fsops.listdir(spark, f"{root}/_staging")
+        if now_ms - mtime_ms >= min_age_s * 1000.0
+    ]
     out = {
         "unreferenced": sorted(doomed),
         "staging": sorted(stale_staging),
@@ -2360,9 +2109,9 @@ def vacuum_snapshot_table(
                 "for deletion; re-run in a quiet window"
             )
         for n in out["unreferenced"]:
-            fs.delete(Path(f"{root}/{n}"), False)
+            fsops.delete(spark, f"{root}/{n}")
         for n in out["staging"]:
-            fs.delete(Path(f"{root}/_staging/{n}"), True)
+            fsops.delete(spark, f"{root}/_staging/{n}", recursive=True)
     return out
 
 
@@ -2726,86 +2475,18 @@ def snapshot_cdc(
     return out
 
 
-def read_json_meta(spark: SparkSession, path: str) -> dict | None:
-    """Small JSON sidecar read through the Hadoop FS (works on any
-    scheme the session can reach); None when absent. The generic
-    metadata primitive the maintained states share (aggregate state
-    versions, snapshot pins)."""
-    local = _local_fs_path(spark, path)
-    if local is not None:
-        try:
-            with open(local, "rb") as fh:
-                return json.loads(fh.read().decode("utf-8"))
-        except FileNotFoundError:
-            return None
-    fs, _ = _fs_for(spark, path)
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        data = bytes(
-            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
-
-
-def write_json_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    """Atomically replace a JSON sidecar: the bytes land in a temp
-    sibling first, then one FileContext rename-with-OVERWRITE moves it
-    over the destination. A crash mid-write therefore leaves the
-    PREVIOUS complete version (plus a reclaimable ``.tmp.*`` orphan),
-    never a truncated file — the block-size pins and the
-    consume/compact crash fences that live in these sidecars survive
-    the writer dying at any instruction."""
-    local = _local_fs_path(spark, path)
-    if local is not None:
-        import os as _os
-
-        _os.makedirs(_os.path.dirname(local), exist_ok=True)
-        tmp_local = local + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp_local, "xb") as fh:
-            fh.write(json.dumps(meta).encode("utf-8"))
-        # os.replace is the POSIX atomic overwrite-rename — same
-        # crash contract as the FileContext OVERWRITE rename below
-        _os.replace(tmp_local, local)
-        return
-    sc = spark.sparkContext
-    fs, _ = _fs_for(spark, path)
-    jvm = sc._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        path + f".tmp.{uuid.uuid4().hex}"
-    )
-    out = fs.create(tmp, False)
-    try:
-        out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    finally:
-        out.close()
-    rename_opt = jvm.org.apache.hadoop.fs.Options.Rename
-    fctx = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri(), sc._jsc.hadoopConfiguration()
-    )
-    opts = sc._gateway.new_array(rename_opt, 1)
-    opts[0] = rename_opt.OVERWRITE
-    fctx.rename(tmp, p, opts)
-
-
 def _agg_meta_path(state_path: str) -> str:
     return state_path.rstrip("/") + "/_agg_meta.json"
 
 
 def _read_agg_meta(spark: SparkSession, state_path: str) -> dict | None:
-    return read_json_meta(spark, _agg_meta_path(state_path))
+    return fsops.read_json_meta(spark, _agg_meta_path(state_path))
 
 
 def _write_agg_meta(
     spark: SparkSession, state_path: str, meta: dict
 ) -> None:
-    write_json_meta(spark, _agg_meta_path(state_path), meta)
+    fsops.write_json_meta(spark, _agg_meta_path(state_path), meta)
 
 
 def maintain_snapshot_agg(
@@ -2947,11 +2628,7 @@ def maintain_snapshot_agg(
             },
         )
         if old_data is not None and old_data != data_rel:
-            fs, _ = _fs_for(spark, state_path)
-            jvm = spark.sparkContext._jvm
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{root}/{old_data}"), True
-            )
+            fsops.delete(spark, f"{root}/{old_data}", recursive=True)
         return spark.read.parquet(f"{root}/{data_rel}")
 
     meta = _read_agg_meta(spark, state_path)
@@ -3118,11 +2795,10 @@ def _write_partition_attributed(
         staged_df = staged_df.withColumn(pc, F.col(c).cast("string"))
         pcols.append(pc)
     staged_df.write.partitionBy(*pcols).mode("error").parquet(staging)
-    staged = _list_parquet_files(spark, staging)
     marker = f"/_staging/{token}/"
     out: dict = {}
     moves = []
-    for i, p in enumerate(sorted(staged)):
+    for i, p in enumerate(fsops.list_parquet_files(spark, staging)):
         rel = p.split(marker, 1)[1]
         segs = rel.split("/")[:-1]
         if len(segs) != len(part_cols):
@@ -3145,8 +2821,9 @@ def _write_partition_attributed(
         base = f"snap-{token}-{i:05d}-" + p.rsplit("/", 1)[-1]
         moves.append((p, f"{root}/{base}"))
         out.setdefault(_pk_key(vals), []).append(base)
-    _move_staged_files(spark, moves)
-    _delete_dir(spark, staging)
+    for src, dest in moves:
+        fsops.rename(spark, src, dest)
+    fsops.delete(spark, staging, recursive=True)
     return out
 
 
@@ -3190,10 +2867,6 @@ def commit_partition_snapshot(
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     part_cols = list(part_cols)
-    fs, _ = _fs_for(spark, table)
-    jvm = spark.sparkContext._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(Path(_snap_dir(table)))
     if claim is None:
         claim = default_claim(spark, table)
     mine = set(files_by_part)
@@ -3281,18 +2954,9 @@ def commit_partition_snapshot(
             "committed_ms": int(_time.time() * 1000),
         }
         meta.update(extra or {})
-        tmp = _snap_dir(table) + f"/_tmp.{uuid.uuid4().hex}"
-        _put_bytes_no_overwrite(
-            spark, fs, tmp, json.dumps(meta).encode("utf-8")
-        )
-        dest = _snap_dir(table) + "/" + _version_name(v)
-        try:
-            if claim(tmp, dest):
-                return v
-            last_err = RuntimeError(f"version claim lost for {dest}")
-        except Exception as exc:
-            last_err = exc
-        _delete_file(spark, fs, tmp)
+        last_err = _claim_version(spark, table, v, meta, claim)
+        if last_err is None:
+            return v
     raise RuntimeError(
         f"could not commit a partition snapshot of {table} after "
         f"{max_retries} attempts; last error: {last_err}"

@@ -9,7 +9,7 @@ import duckdb
 import pyspark.sql.functions as F
 import pytest
 
-from cmsspark_spark import plans
+from cmsspark_spark import fsops, plans
 from cmsspark_spark.operators import layout as L
 
 
@@ -257,7 +257,9 @@ def test_append_with_manifest_extends_sidecar_incrementally(spark, tmp_path):
     }
     for f, row in man1.items():  # old rows untouched
         assert man2[f] == row
-    on_disk = {p.rsplit("/", 1)[-1] for p in L._list_parquet_files(spark, path)}
+    on_disk = {
+        p.rsplit("/", 1)[-1] for p in fsops.list_parquet_files(spark, path)
+    }
     assert set(man2) == on_disk
     # the appended file is de-clustered: spans ~the whole key space
     new_name = new_files[0].rsplit("/", 1)[-1]

@@ -179,7 +179,7 @@ def test_blockmax_guards(spark, tmp_path):
     block size refuses further appends."""
     import shutil
 
-    from cmsspark_spark.operators.snapshots import write_json_meta
+    from cmsspark_spark import fsops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     idx = str(tmp_path / "idx")
@@ -198,7 +198,9 @@ def test_blockmax_guards(spark, tmp_path):
     # block-size pin: a mismatched meta refuses the append
     idx2 = str(tmp_path / "idx2")
     R.append_bm25_index(docs.limit(10), idx2)
-    write_json_meta(spark, f"{idx2}/_index_meta.json", {"block_size": 999})
+    fsops.write_json_meta(
+        spark, f"{idx2}/_index_meta.json", {"block_size": 999}
+    )
     with pytest.raises(ValueError, match="block_size"):
         R.append_bm25_index(docs.limit(5), idx2)
 
@@ -367,58 +369,6 @@ def test_corrupt_tombstones_fail_loudly_not_resurrect(spark, tmp_path):
     assert "resurrect" not in str(exc.value)  # it raised, good enough
 
 
-def test_consume_crash_mid_staging_resumes_cleanly(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r11 item 2: the consume is ONE atomic commit. A crash
-    in the MIDDLE of the staged table writes leaves no visible state
-    (only an invisible staging orphan), so the retry simply re-runs
-    and the final serve is hash-identical to an uninterrupted build —
-    resume, not rebuild."""
-    from cmsspark_spark.operators import snapshots as SN
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    table = str(tmp_path / "corpus")
-    SN.snapshot_write(docs.filter(F.col("doc_id") % 2 == 0), table,
-                      mode="append")
-    SN.snapshot_write(docs.filter(F.col("doc_id") % 2 == 1), table,
-                      mode="append")
-    idx = str(tmp_path / "idx")
-    R.append_bm25_index_from_snapshot(spark, table, idx, to_version=1)
-
-    # crash INSIDE the staged writes of the v2 consume: die when the
-    # champions table (4th of 6 staged artifacts) is about to land
-    real_finalize = R._finalize_commit
-
-    def _boom(*a, **k):
-        raise RuntimeError("simulated crash before commit rename")
-
-    monkeypatch.setattr(R, "_finalize_commit", _boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        R.append_bm25_index_from_snapshot(spark, table, idx)
-    monkeypatch.setattr(R, "_finalize_commit", real_finalize)
-
-    # nothing visible: still pinned at v1, one commit, serve works
-    assert R.bm25_index_commit_report(spark, idx).first().n_commits == 1
-
-    # the RETRY consumes v2 without a rebuild and serves exactly
-    r = R.append_bm25_index_from_snapshot(spark, table, idx)
-    assert r == {"from": 1, "to": 2, "noop": False}
-    want = _ranked(PL.bm25_more_like_this(docs, "doc_id", "text", 5, 10))
-    assert _ranked(R.bm25_index_serve(spark, idx, mode="blockmax")) == want
-    # the crashed attempt's staging orphan exists but is invisible;
-    # an aged vacuum reclaims it
-    import os
-
-    orphans = os.listdir(f"{idx}/_staging")
-    assert len(orphans) == 1
-    rep = R.vacuum_bm25_index(spark, idx, staging_min_age_s=0)
-    assert any("_staging" in p for p in rep["removed"])
-    assert os.listdir(f"{idx}/_staging") == []
-
-
 def test_consume_crash_after_rename_resumes_pin_only(
     spark, tmp_path, monkeypatch
 ):
@@ -454,51 +404,6 @@ def test_consume_crash_after_rename_resumes_pin_only(
     assert _ranked(R.bm25_index_serve(spark, idx, mode="maxscore")) == want
     # and the replay after the resume is a clean no-op
     assert R.append_bm25_index_from_snapshot(spark, table, idx)["noop"]
-
-
-def test_compaction_crash_before_meta_flip_is_invisible(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r11 (medium): compaction must never leave a half-folded
-    read. The fold lands in a NEW versioned base published by one
-    atomic meta flip — a crash just before the flip leaves every
-    reader on the old state, and the re-run compacts cleanly."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    idx = str(tmp_path / "idx")
-    for part in range(2):
-        R.append_bm25_index(docs.filter(F.col("doc_id") % 2 == part), idx)
-    before = _ranked(R.bm25_index_serve(spark, idx, mode="blockmax"))
-
-    from cmsspark_spark.operators import snapshots as SN
-
-    real = SN.write_json_meta
-
-    def _crash_on_flip(spark_, path, meta):
-        if path.endswith("_index_meta.json") and "base_version" in meta:
-            raise RuntimeError("simulated crash at the meta flip")
-        return real(spark_, path, meta)
-
-    monkeypatch.setattr(SN, "write_json_meta", _crash_on_flip)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        R.compact_bm25_index(spark, idx)
-    monkeypatch.setattr(SN, "write_json_meta", real)
-
-    # reader state untouched: same results, still 2 live commits
-    assert _ranked(R.bm25_index_serve(spark, idx, mode="blockmax")) \
-        == before
-    assert R.bm25_index_commit_report(spark, idx).first().n_commits == 2
-
-    # re-run compacts for real: the meta never flipped, so the retry
-    # claims the SAME version, overwriting the crashed attempt's stale
-    # dir — exactly one published base remains
-    rep = R.compact_bm25_index(spark, idx)
-    assert rep["globals_rows"] == (2, 1)
-    assert _ranked(R.bm25_index_serve(spark, idx, mode="blockmax")) \
-        == before
-    import os
-
-    assert os.listdir(f"{idx}/base") == ["v00000001"]
-    assert R.bm25_index_commit_report(spark, idx).first().n_commits == 1
 
 
 def test_compaction_refuses_unresolved_consume_commit(spark, tmp_path):
@@ -561,12 +466,13 @@ def test_compaction_folds_tombstones_into_base(spark, tmp_path):
     assert post.filter(F.col("doc") % 7 == 3).count() == 0
 
 
-def test_first_consume_crash_windows_recover(spark, tmp_path, monkeypatch):
-    """Self-review r12: the FIRST consume's crash windows. (A) a crash
-    mid-staging leaves a block_size-only meta — the retry must re-run,
-    not be refused as a '--docs index'; (B) a crash after the rename
+def test_first_consume_crash_windows_recover(spark, tmp_path):
+    """Self-review r12: the FIRST consume's crash after the rename
     leaves a tagged commit with no pin — the retry must resume off the
-    tag, again not refuse."""
+    tag, not refuse it as a '--docs index'; a genuine --docs index is
+    still refused. (The crash before the rename, which leaves a
+    block_size-only meta, is a case of the crash-point enumeration in
+    tests/test_fsops.py.)"""
     from cmsspark_spark.operators import snapshots as SN
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
@@ -575,23 +481,7 @@ def test_first_consume_crash_windows_recover(spark, tmp_path, monkeypatch):
     table = str(tmp_path / "corpus")
     SN.snapshot_write(docs, table, mode="append")
 
-    # window A: crash before the rename on the very first consume
-    idx_a = str(tmp_path / "idx_a")
-    real = R._finalize_commit
-    monkeypatch.setattr(
-        R, "_finalize_commit",
-        lambda *a, **k: (_ for _ in ()).throw(
-            RuntimeError("simulated crash before rename")
-        ),
-    )
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        R.append_bm25_index_from_snapshot(spark, table, idx_a)
-    monkeypatch.setattr(R, "_finalize_commit", real)
-    r = R.append_bm25_index_from_snapshot(spark, table, idx_a)
-    assert r == {"from": None, "to": 1, "noop": False}
-    assert R.bm25_index_serve(spark, idx_a).count() > 0
-
-    # window B: first consume's commit landed, pin never advanced
+    # first consume's commit landed, pin never advanced
     idx_b = str(tmp_path / "idx_b")
     R.append_bm25_index(
         SN.read_snapshot(spark, table, 1), idx_b,
@@ -625,6 +515,30 @@ def test_vacuum_sweeps_aged_meta_temporaries(spark, tmp_path):
     rep = R.vacuum_bm25_index(spark, idx, staging_min_age_s=3600)
     assert any(p.endswith("tmp.deadbeef") for p in rep["removed"])
     assert not os.path.exists(aged) and os.path.exists(fresh)
+
+
+def test_vacuum_reclaims_folded_commits_and_gap_markers(spark, tmp_path):
+    """Vacuum removes every commit dir and sequence marker a compaction
+    folded (seq <= base_through_seq), including a marker whose commit
+    never landed (a crash between the claim and the rename), and
+    nothing past the base."""
+    import os
+
+    from cmsspark_spark import fsops
+
+    idx = str(tmp_path / "idx")
+    fsops.write_json_meta(
+        spark, f"{idx}/_index_meta.json",
+        {"base_version": 1, "base_through_seq": 3},
+    )
+    for name in ("c-00000001-a", "c-00000003-b", "c-00000004-c"):
+        os.makedirs(f"{idx}/commits/{name}")
+    for seq in (1, 2, 3, 4):
+        fsops.put_no_overwrite(spark, f"{idx}/commits/s-{seq:08d}")
+    R.vacuum_bm25_index(spark, idx)
+    assert sorted(os.listdir(f"{idx}/commits")) == [
+        "c-00000004-c", "s-00000004"
+    ]
 
 
 def test_partlog_to_snapshot_to_index_pipeline(spark, tmp_path):

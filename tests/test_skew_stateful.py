@@ -208,14 +208,16 @@ def test_enforce_retention_drops_old_partitions(spark, tmp_path):
         [(f"2024-01-{d:02d}", d) for d in range(1, 11)],
         "day: string, v: long",
     )
-    path = str(tmp_path / "tbl")
-    write_partitioned_parquet(df, path, partition_by=("day",))
-    dropped = enforce_retention(
-        spark, path, keep_days=3, as_of="2024-01-10"
-    )
-    assert dropped == [f"2024-01-{d:02d}" for d in range(1, 7)]
-    left = {str(r["day"]) for r in read_curated(spark, path).collect()}
-    assert left == {f"2024-01-{d:02d}" for d in range(7, 11)}
+    # a bare path and a file: URI drop the same partitions
+    for prefix in ("", "file:"):
+        path = prefix + str(tmp_path / f"tbl{len(prefix)}")
+        write_partitioned_parquet(df, path, partition_by=("day",))
+        dropped = enforce_retention(
+            spark, path, keep_days=3, as_of="2024-01-10"
+        )
+        assert dropped == [f"2024-01-{d:02d}" for d in range(1, 7)]
+        left = {str(r["day"]) for r in read_curated(spark, path).collect()}
+        assert left == {f"2024-01-{d:02d}" for d in range(7, 11)}
 
 
 def test_schema_evolution_merge_schema(spark, tmp_path):

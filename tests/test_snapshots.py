@@ -66,10 +66,10 @@ def test_expire_deletes_only_unreferenced_files(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         S.read_snapshot(spark, t, 2)
     # deleted files are really gone from disk
-    from cmsspark_spark.operators.layout import _list_parquet_files
+    from cmsspark_spark import fsops
 
     on_disk = {
-        f.rsplit("/", 1)[-1] for f in _list_parquet_files(spark, t)
+        f.rsplit("/", 1)[-1] for f in fsops.list_parquet_files(spark, t)
     }
     assert on_disk.isdisjoint(set(res["deleted_files"]))
     meta = S.read_snapshot_meta(spark, t, 3)
@@ -298,19 +298,19 @@ def test_write_attribution_ignores_foreign_inflight_files(spark, tmp_path):
 
 def test_staging_files_invisible_to_listing(spark, tmp_path):
     """Files under an underscore-prefixed subdir (_staging, _temporary)
-    must be invisible to _list_parquet_files — they are another
+    must be invisible to fsops.list_parquet_files — they are another
     commit's in-flight data."""
-    from cmsspark_spark.operators.layout import _list_parquet_files
+    from cmsspark_spark import fsops
 
     t = tmp_path / "t"
     spark.range(0, 5).write.parquet(str(t))
     spark.range(5, 8).write.parquet(str(t / "_staging" / "abc"))
-    listed = _list_parquet_files(spark, str(t))
+    listed = fsops.list_parquet_files(spark, str(t))
     assert listed  # the real files are there
     assert all("/_staging/" not in p for p in listed)
     # listing the staging dir DIRECTLY still works (the write path
     # enumerates its own staged files this way)
-    inner = _list_parquet_files(spark, str(t / "_staging" / "abc"))
+    inner = fsops.list_parquet_files(spark, str(t / "_staging" / "abc"))
     assert inner and all(p.endswith(".parquet") for p in inner)
 
 
@@ -627,81 +627,21 @@ def test_manifest_mode_expire_reclaims_unreferenced_chunks(
         SN.MANIFEST_INLINE_MAX = old_max
 
 
-def test_maintained_agg_crash_between_data_and_meta_is_safe(
-    spark, tmp_path, monkeypatch
-):
-    """Review r11: a crash AFTER the new state data lands but BEFORE
-    the meta flips must not double-fold the delta on the next refresh
-    — the meta keeps pointing at the old (state, version) pair, so the
-    retry re-derives the SAME delta from the same base. Also: a state
-    dir refuses refreshes against a different table."""
+def test_maintained_agg_refuses_wrong_table(spark, tmp_path):
+    """A state dir refuses refreshes against a different table: folding
+    another table's CDC would silently corrupt the aggregate. (Crash
+    safety of the refresh is a case of the crash-point enumeration in
+    tests/test_fsops.py.)"""
     t = str(tmp_path / "t")
     state = str(tmp_path / "agg")
     S.snapshot_write(spark.range(0, 10).selectExpr("id", "id * 2 as v"),
                      t, mode="append")
     S.maintain_snapshot_agg(spark, t, state, [], ["v"])
-    S.snapshot_write(spark.range(10, 15).selectExpr("id", "id * 2 as v"),
-                     t, mode="append")
-
-    real_write = S._write_agg_meta
-    def crash_write(spark_, path_, meta_):
-        raise RuntimeError("simulated crash before meta flip")
-
-    monkeypatch.setattr(S, "_write_agg_meta", crash_write)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        S.maintain_snapshot_agg(spark, t, state, [], ["v"])
-    monkeypatch.setattr(S, "_write_agg_meta", real_write)
-
-    # retry: the delta is applied exactly once
-    row = S.maintain_snapshot_agg(spark, t, state, [], ["v"]).first()
-    assert row.n_rows == 15 and row.sum_v == sum(2 * i for i in range(15))
-
-    # wrong-table guard
     t2 = str(tmp_path / "other")
     S.snapshot_write(spark.range(0, 3).selectExpr("id", "id as v"),
                      t2, mode="append")
     with pytest.raises(ValueError, match="refusing to refresh"):
         S.maintain_snapshot_agg(spark, t2, state, [], ["v"])
-
-
-def test_write_json_meta_crash_mid_replace_keeps_old_version(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r11: meta sidecars are replaced via temp + atomic rename.
-    A writer dying between the temp write and the rename must leave
-    the PREVIOUS complete meta readable (plus a reclaimable .tmp
-    orphan) — never a truncated file that destroys pins and crash
-    fences."""
-    import os
-
-    p = str(tmp_path / "m" / "_index_meta.json")
-    os.makedirs(str(tmp_path / "m"))
-    S.write_json_meta(spark, p, {"block_size": 64, "v": 1})
-    assert S.read_json_meta(spark, p) == {"block_size": 64, "v": 1}
-
-    # crash AFTER the temp file lands, BEFORE the rename: the local
-    # fast path replaces via os.replace (the Hadoop path's equivalent
-    # is the FileContext OVERWRITE rename)
-    def _boom(*a, **k):
-        raise RuntimeError("simulated crash before rename")
-
-    monkeypatch.setattr(os, "replace", _boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        S.write_json_meta(spark, p, {"block_size": 64, "v": 2})
-    monkeypatch.undo()
-
-    # old version intact, temp orphan present but ignored by readers
-    assert S.read_json_meta(spark, p) == {"block_size": 64, "v": 1}
-    orphans = [
-        n
-        for n in os.listdir(str(tmp_path / "m"))
-        if ".tmp." in n and not n.startswith(".")  # skip .crc siblings
-    ]
-    assert len(orphans) == 1
-
-    # a healthy replace still overwrites atomically
-    S.write_json_meta(spark, p, {"block_size": 64, "v": 3})
-    assert S.read_json_meta(spark, p) == {"block_size": 64, "v": 3}
 
 
 def test_expire_reclaims_aged_orphan_manifests(spark, tmp_path):
