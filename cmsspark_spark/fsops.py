@@ -24,6 +24,7 @@ import json
 import os
 import shutil
 import stat
+import time
 import uuid
 
 from py4j.protocol import Py4JJavaError
@@ -249,6 +250,44 @@ def size(spark, path: str) -> int | None:
         if _java_raised(exc, "FileNotFound"):
             return None
         raise
+
+
+def aged(spark, path: str, min_age_s: float, match=None) -> list[str]:
+    """Sorted names of the entries of directory ``path`` (matching
+    ``match(name)`` when given) last modified at least ``min_age_s``
+    ago — the selection every orphan sweep makes. The age gate keeps a
+    concurrent writer's just-written entry safe."""
+    now_ms = time.time() * 1000.0
+    return sorted(
+        name
+        for name, _d, _s, mtime_ms in listdir(spark, path)
+        if (match is None or match(name))
+        and now_ms - mtime_ms >= min_age_s * 1000.0
+    )
+
+
+def tree_size(spark, path: str) -> int:
+    """Total bytes of the files under ``path``, as Hadoop's content
+    summary counts them (checksum sidecars ``.<name>.crc`` excluded)."""
+    local = local_path(spark, path)
+    if local is not None:
+        return sum(
+            os.path.getsize(os.path.join(dirpath, name))
+            for dirpath, _dirs, names in os.walk(local)
+            for name in names
+            if not (name.startswith(".") and name.endswith(".crc"))
+        )
+    fs, p = _hadoop(spark, path)
+    return int(fs.getContentSummary(p).getLength())
+
+
+def qualify(spark, path: str) -> str:
+    """``path`` with its filesystem scheme, as listings return it."""
+    local = local_path(spark, path)
+    if local is not None:
+        return f"file:{local.rstrip('/')}"
+    fs, p = _hadoop(spark, path)
+    return fs.makeQualified(p).toString().rstrip("/")
 
 
 def list_parquet_files(spark, path: str) -> list[str]:

@@ -26,6 +26,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from cmsspark_spark import fsops
 from cmsspark_spark.operators.layout import (
     compaction_candidates,
     curve_key,
@@ -57,15 +58,12 @@ def _span_summary(manifest_pdf, x: str, y: str) -> dict:
 
 
 def table_bytes(spark: SparkSession, table: str) -> int:
-    """Total on-disk bytes of a table through the Hadoop FileSystem
-    API — resolves whatever scheme the path carries (HDFS, s3a,
-    file:). A driver-local ``glob``+``getsize`` would silently see
-    nothing on a cluster filesystem and undersize the rewrite to one
-    file; this asks the same FS the executors will read."""
-    sc = spark.sparkContext
-    path = sc._jvm.org.apache.hadoop.fs.Path(table)
-    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-    return int(fs.getContentSummary(path).getLength())
+    """Total on-disk bytes of a table (:func:`fsops.tree_size`) —
+    resolves whatever scheme the path carries (HDFS, s3a, file:). A
+    flat driver-local glob would miss files in partition
+    subdirectories and see nothing on a cluster filesystem,
+    undersizing the rewrite to one file."""
+    return fsops.tree_size(spark, table)
 
 
 def run(

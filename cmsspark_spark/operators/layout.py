@@ -813,19 +813,23 @@ def append_with_manifest(
 ) -> list[str]:
     """APPEND an increment to an (unpartitioned) table and extend its
     stats-manifest sidecar by footer-parsing ONLY the files the append
-    created (before/after listing diff — a metadata call, never a
-    scan). The incremental complement of the clustered write paths:
-    appends de-cluster a table — new files span wide key ranges — and
-    after this call the manifest SAYS so, so a planner's
+    created (a metadata call, never a scan). The increment and its
+    manifest rows land through the snapshot staged write
+    (``snapshots._write_attributed``), so the appended set is exactly
+    this write's files — a concurrent appender's files are never
+    manifested twice. The incremental complement of the clustered
+    write paths: appends de-cluster a table — new files span wide key
+    ranges — and after this call the manifest SAYS so, so a planner's
     :func:`pruned_files` stays correct (it keeps the sloppy new files
     for most predicates) and an OPTIMIZE/compaction pass can be
     triggered off the manifest's span degradation without ever
     re-scanning the data. Returns the appended file paths."""
+    from cmsspark_spark.operators.snapshots import _write_attributed
+
     spark = df.sparkSession
-    before = set(fsops.list_parquet_files(spark, path))
-    df.write.mode("append").parquet(path)
+    root = fsops.qualify(spark, path)
     new_files = [
-        f for f in fsops.list_parquet_files(spark, path) if f not in before
+        f"{root}/{n}" for n in _write_attributed(df, path, prefix="append")
     ]
     rg = rowgroup_stats_manifest(spark, path, dims, files=new_files)
     if rowgroups:
@@ -836,9 +840,9 @@ def append_with_manifest(
         aggs.append(F.max(f"max_{d}").alias(f"max_{d}"))
     man = rg.groupBy("file").agg(*aggs)
     dest = manifest_location(path)
-    man.write.mode("append").parquet(dest)
+    _write_attributed(man, dest, prefix="append")
     if rowgroups:
-        rg.write.mode("append").parquet(dest + "_rowgroups")
+        _write_attributed(rg, dest + "_rowgroups", prefix="append")
     if bloom_dim is not None and new_files:
         # Bloom sidecar rows for exactly the appended files (scan ∝
         # increment); append-extends <manifest>_bloom like the stats.

@@ -75,7 +75,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from cmsspark_spark import fsops
 from cmsspark_spark.functions.text import tokens
-from cmsspark_spark.operators import bm25
+from cmsspark_spark.operators import bm25, snapmeta
 from cmsspark_spark.operators.memo import pin_frame
 
 
@@ -473,8 +473,8 @@ def append_bm25_index_from_snapshot(
     from cmsspark_spark.operators.snapshots import (
         list_snapshots,
         read_snapshot,
+        snapshot_cdc_plan,
         snapshot_changes,
-        snapshot_files,
     )
 
     versions = list_snapshots(spark, table)
@@ -533,33 +533,23 @@ def append_bm25_index_from_snapshot(
             "the snapshot instead"
         )
     if last is not None:
-        from cmsspark_spark.operators.snapshots import read_snapshot_meta
-
-        old = set(snapshot_files(spark, table, last))
-        new = set(snapshot_files(spark, table, target))
         # equality deletes remove CONTENT without touching the file
         # sets — a delete-only version must take the CDC path too, or
         # the pin would advance while the index keeps serving the
         # dead docs
-        dels_changed = set(
-            read_snapshot_meta(spark, table, last).get(
-                "delete_files", []
-            )
-        ) != set(
-            read_snapshot_meta(spark, table, target).get(
-                "delete_files", []
-            )
+        dropped, dels_changed = snapmeta.removals(
+            snapshot_cdc_plan(spark, table, last, target)
         )
-        if (old - new or dels_changed) and not allow_removals:
+        if (dropped or dels_changed) and not allow_removals:
             raise ValueError(
                 f"snapshot v{last}→v{target} of {table} REMOVES content "
-                f"({len(old - new)} files dropped"
+                f"({dropped} files dropped"
                 f"{', delete set changed' if dels_changed else ''}) — an "
                 "append-only index cannot un-index; rebuild it from "
                 f"v{target}, or pass allow_removals=True to TOMBSTONE "
                 "the removed docs"
             )
-        if old - new or dels_changed:
+        if dropped or dels_changed:
             from cmsspark_spark.operators.snapshots import snapshot_cdc
 
             cdc = snapshot_cdc(spark, table, last, target)
@@ -1295,8 +1285,6 @@ def vacuum_bm25_index(
     keeps a concurrent in-flight append's staging safe). Runs after
     every compaction and is itself idempotent — a crash mid-delete
     just leaves work for the next run."""
-    import time
-
     imeta = (
         fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json") or {}
     )
@@ -1322,21 +1310,16 @@ def vacuum_bm25_index(
             seq = name.split("-")[1] if name[:2] in ("c-", "s-") else ""
             if seq.isdigit() and int(seq) <= through:
                 _rm(f"{commits}/{name}")
-    now_ms = time.time() * 1000.0
-    aged = staging_min_age_s * 1000.0
     sroot = _staging_root(index_dir)
-    for name, _d, _s, mtime_ms in fsops.listdir(spark, sroot):
-        if now_ms - mtime_ms >= aged:
-            _rm(f"{sroot}/{name}")
+    for name in fsops.aged(spark, sroot, staging_min_age_s):
+        _rm(f"{sroot}/{name}")
     # crashed write_json_meta temporaries beside the meta (the atomic
     # replace leaves one per crash-before-rename) — same age gate
-    for name, _d, _s, mtime_ms in fsops.listdir(spark, root):
-        if (
-            ".tmp." in name
-            and name.startswith("_index_meta.json")
-            and now_ms - mtime_ms >= aged
-        ):
-            _rm(f"{root}/{name}")
+    for name in fsops.aged(
+        spark, root, staging_min_age_s,
+        lambda n: n.startswith("_index_meta.json.tmp."),
+    ):
+        _rm(f"{root}/{name}")
     return {"removed": removed}
 
 

@@ -15,27 +15,23 @@ Why this shape scales:
   idempotently from the checkpoint because version files are
   immutable.
 - PLANNING IS METADATA-ONLY. ``partitions(start, end)`` diffs the
-  per-version FILE LISTS (inline or manifest pointers — plain JSON):
-  cost ∝ changed files, never table size, the same economics as the
-  batch CDC. Data files are immutable, so file identity is the change
-  log.
+  per-version file lists (plain JSON): cost ∝ changed files, never
+  table size, the same economics as the batch CDC.
 - READS RUN ON EXECUTORS. Each input partition is one data file plus
   the key-sized delete files that scope to it; the reader emits Arrow
   record batches (parquet → anti/semi join on keys → batch), no
   driver-side row handling.
 
-Semantics match :func:`snapshot_cdc` exactly, per version step:
-files only in ``v`` emit +1 (filtered by v's equality deletes at
-Iceberg v2 sequence scope), files only in ``v-1`` emit −1 (filtered
-by v−1's deletes), and the delete-set delta over common files emits
-the newly-dead rows as −1 / revived rows as +1. An UPSERT commit
-(``snapshot_upsert``) therefore streams as exact update images: old
-row −1, new row +1, in one batch. Output schema = the table's
-committed schema + ``_cdc_sign`` (int) + ``_cdc_version`` (long).
+Each version step is planned by :func:`snapmeta.plan`, the planner
+:func:`snapshot_cdc` uses too, so the two emit the same signed rows.
+An UPSERT commit (``snapshot_upsert``) therefore streams as exact
+update images: old row −1, new row +1, in one batch. Output schema =
+the table's committed schema + ``_cdc_sign`` (int) + ``_cdc_version``
+(long).
 
 Driver-side methods here run in Spark's Python data-source runner
-process (no SparkSession, no JVM) — all metadata access is pure
-stdlib file I/O, which also documents the connector boundary: an
+process (no SparkSession, no JVM) — all metadata access is standard
+library file I/O, which also documents the connector boundary: an
 object-store deployment swaps ``_list_versions``/``_read_json`` for
 its listing/get client and nothing else moves.
 
@@ -45,7 +41,7 @@ gone raises instead of skipping (start past it explicitly with
 ``start_version``). Tables must record their schema in the commit
 (every write path here does) unless the user supplies one.
 
-No reference twin: the reference re-reads whole HDFS day directories
+Not in the reference: the reference re-reads whole HDFS day directories
 to refresh downstream aggregates; this is beyond-reference
 operability for incremental consumers (maintained aggregates, index
 maintenance, downstream training-data gates).
@@ -70,12 +66,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cmsspark_spark.operators import snapmeta
+
 
 def _local_root(path: str) -> str:
-    """Normalize a table root to a plain filesystem path. The pure-
-    python planner only speaks local paths (tests, single-node); a
-    cluster deployment replaces the three helpers below with a store
-    client."""
+    """Normalize a table root to a plain filesystem path. The planner
+    here only speaks local paths (tests, single-node); a cluster
+    deployment replaces ``_list_versions`` and ``_read_json`` with a
+    store client."""
     if path.startswith("file://"):
         return path[len("file://"):]
     if path.startswith("file:"):
@@ -84,14 +82,11 @@ def _local_root(path: str) -> str:
 
 
 def _list_versions(root: str) -> list:
-    out = []
-    for p in glob.glob(os.path.join(root, "_snapshots", "v*.json")):
-        base = os.path.basename(p)
-        try:
-            out.append(int(base[1:-5]))
-        except ValueError:
-            continue
-    return sorted(out)
+    versions = (
+        snapmeta.parse_version_name(os.path.basename(p))
+        for p in glob.glob(os.path.join(root, "_snapshots", "v*.json"))
+    )
+    return sorted(v for v in versions if v is not None)
 
 
 def _read_json(root: str, name: str):
@@ -101,55 +96,14 @@ def _read_json(root: str, name: str):
 
 
 def _load_meta(root: str, version: int) -> dict:
-    name = f"v{version:08d}.json"
     try:
-        return _read_json(root, name)
+        return _read_json(root, snapmeta.version_name(version))
     except FileNotFoundError:
         raise FileNotFoundError(
             f"snapshot_cdc: version {version} of {root} is not in the "
             "version log (expired?) — the range cannot be replayed; "
             "restart the stream with start_version past it"
         )
-
-
-def _resolve_files(root: str, meta: dict) -> set:
-    """Live file basenames of one version (inline or manifest mode) —
-    the pure-python twin of snapshots.snapshot_files."""
-    if "files" in meta:
-        return set(meta["files"])
-    names: set = set()
-    for m in meta.get("manifests", []):
-        names.update(_read_json(root, m))
-    return names
-
-
-def _name_seqs(root: str, meta: dict) -> dict:
-    """file basename → add-sequence (pure-python twin of
-    snapshots._live_name_seqs; untracked files default to 0)."""
-    if "files" in meta:
-        fseqs = meta.get("file_seqs") or {}
-        return {n: int(fseqs.get(n, 0)) for n in meta["files"]}
-    mseqs = meta.get("manifest_seqs") or {}
-    out: dict = {}
-    for m in meta.get("manifests", []):
-        s = int(mseqs.get(m, 0))
-        for n in _read_json(root, m):
-            if n not in out or s < out[n]:
-                out[n] = s
-    return out
-
-
-def _applicable_deletes(meta: dict, file_seq: int) -> list:
-    """Delete-file basenames that reach a data file with the given
-    add-sequence: strictly-higher seq (Iceberg v2); an unstamped
-    delete (pre-sequencing table) applies to everything."""
-    dseqs = meta.get("delete_seqs") or {}
-    out = []
-    for n in meta.get("delete_files", []):
-        s = dseqs.get(n)
-        if s is None or int(s) > file_seq:
-            out.append(n)
-    return out
 
 
 # Spark primitive type name → pyarrow type factory. Used to pad
@@ -217,64 +171,31 @@ class _CDCPartition(InputPartition):
         self.fields = fields  # [(name, spark_type_name)] data columns
 
 
-def _plan_version_step(
-    root: str, v: int, fields: list
+def _plan_step(
+    root: str, from_v: int | None, to_v: int, fields: list
 ) -> list:
-    """Input partitions for the delta of version ``v`` against its
-    PREDECESSOR IN THE LOG (v-1) — the same file-identity algebra as
-    snapshots.snapshot_cdc, one partition per (file, branch)."""
-    to_meta = _load_meta(root, v)
-    from_meta = _load_meta(root, v - 1) if v > 1 else None
-    new = _resolve_files(root, to_meta)
-    old = _resolve_files(root, from_meta) if from_meta else set()
-    to_seqs = _name_seqs(root, to_meta)
-    from_seqs = _name_seqs(root, from_meta) if from_meta else {}
-    kc = list(
-        to_meta.get("delete_key_cols")
-        or (from_meta or {}).get("delete_key_cols")
-        or []
-    )
+    """Input partitions for the change from version ``from_v`` (None:
+    an empty table) to ``to_v``, one per :func:`snapmeta.plan` entry,
+    attributed to ``to_v``."""
+    to_meta = _load_meta(root, to_v)
+    from_meta = None if from_v is None else _load_meta(root, from_v)
+    kc = snapmeta.key_cols(to_meta, from_meta)
 
-    def _paths(names):
-        return [os.path.join(root, n) for n in sorted(names)]
+    def read_manifests(names):
+        return {m: _read_json(root, m) for m in names}
 
-    parts = []
-    for n in sorted(new - old):
-        parts.append(_CDCPartition(
-            v, 1, os.path.join(root, n),
-            _paths(_applicable_deletes(to_meta, to_seqs.get(n, 0))),
-            [], kc, fields,
-        ))
-    for n in sorted(old - new):
-        parts.append(_CDCPartition(
-            v, -1, os.path.join(root, n),
-            _paths(_applicable_deletes(from_meta, from_seqs.get(n, 0))),
-            [], kc, fields,
-        ))
-    common = new & old
-    from_dels = set((from_meta or {}).get("delete_files", []))
-    to_dels = set(to_meta.get("delete_files", []))
-    if common and from_dels != to_dels:
-        newly_dead = _paths(to_dels - from_dels)
-        revived = _paths(from_dels - to_dels)
-        for n in sorted(common):
-            if newly_dead:
-                # rows live at v-1 whose keys v newly deletes → -1
-                parts.append(_CDCPartition(
-                    v, -1, os.path.join(root, n),
-                    _paths(_applicable_deletes(
-                        from_meta, from_seqs.get(n, 0))),
-                    newly_dead, kc, fields,
-                ))
-            if revived:
-                # keys whose deletion rolled off: live again at v → +1
-                parts.append(_CDCPartition(
-                    v, 1, os.path.join(root, n),
-                    _paths(_applicable_deletes(
-                        to_meta, to_seqs.get(n, 0))),
-                    revived, kc, fields,
-                ))
-    return parts
+    def paths(names):
+        return [os.path.join(root, n) for n in names]
+
+    return [
+        _CDCPartition(
+            to_v, sign, os.path.join(root, n), paths(anti), paths(semi),
+            kc, fields,
+        )
+        for sign, n, anti, semi in snapmeta.plan(
+            from_meta, to_meta, read_manifests
+        )
+    ]
 
 
 def _read_cdc_partition(part: _CDCPartition):
@@ -373,34 +294,15 @@ class SnapshotCDCReader(DataSourceReader):
         )
         parts = []
         for v in range(self._start + 1, end + 1):
-            parts.extend(_plan_version_step(self._root, v, self._fields))
+            parts.extend(_plan_step(
+                self._root, v - 1 if v > 1 else None, v, self._fields
+            ))
         return parts or [_EmptyPartition()]
 
     def read(self, partition):
         if isinstance(partition, _EmptyPartition):
             return iter(())
         return _read_cdc_partition(partition)
-
-
-def _plan_live_snapshot(root: str, v: int, fields: list) -> list:
-    """Input partitions for one version's ENTIRE live content as +1
-    rows (the ``initial_snapshot`` first batch): every live file,
-    filtered by the version's own deletes — exactly what
-    read_snapshot plans, re-expressed as CDC partitions."""
-    meta = _load_meta(root, v)
-    seqs = _name_seqs(root, meta)
-    kc = list(meta.get("delete_key_cols") or [])
-    parts = []
-    for n in sorted(_resolve_files(root, meta)):
-        parts.append(_CDCPartition(
-            v, 1, os.path.join(root, n),
-            [
-                os.path.join(root, d)
-                for d in _applicable_deletes(meta, seqs.get(n, 0))
-            ],
-            [], kc, fields,
-        ))
-    return parts
 
 
 class SnapshotCDCStreamReader(DataSourceStreamReader):
@@ -465,12 +367,14 @@ class SnapshotCDCStreamReader(DataSourceStreamReader):
         lo = start["version"]
         if start.get("init") and end["version"] > lo:
             # first batch: the end version's live content, then follow
-            parts.extend(_plan_live_snapshot(
-                self._root, end["version"], self._fields
+            parts.extend(_plan_step(
+                self._root, None, end["version"], self._fields
             ))
             lo = end["version"]
         for v in range(lo + 1, end["version"] + 1):
-            parts.extend(_plan_version_step(self._root, v, self._fields))
+            parts.extend(_plan_step(
+                self._root, v - 1 if v > 1 else None, v, self._fields
+            ))
         return parts or [_EmptyPartition()]
 
     def read(self, partition):
@@ -533,17 +437,18 @@ class SnapshotCDCDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Register the source with a session, pickling this MODULE BY
-    VALUE (pyspark's vendored cloudpickle): Spark's data-source runner
-    and the executors unpickle the class without ``cmsspark_spark`` on
-    their python path — the connector ships itself, the same property
-    a ``--py-files``-less cluster deployment needs. Without this, the
-    class pickles by reference and every worker raises
-    ``ModuleNotFoundError: cmsspark_spark`` (the by-reference closure
-    bug class the verify harness exists to catch)."""
+    """Register the source with a session, pickling this module and
+    :mod:`snapmeta` BY VALUE (pyspark's vendored cloudpickle): Spark's
+    data-source runner and the executors unpickle the class and its
+    planner without ``cmsspark_spark`` on their python path — the
+    connector ships itself, the same property a ``--py-files``-less
+    cluster deployment needs. Without this, they pickle by reference
+    and every worker raises ``ModuleNotFoundError: cmsspark_spark``
+    (pinned by a test whose workers start outside the repo)."""
     import sys
 
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(snapmeta)
     spark.dataSource.register(SnapshotCDCDataSource)

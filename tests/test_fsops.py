@@ -94,6 +94,22 @@ def test_seam_contract(spark, tmp_path, branch, monkeypatch):
     listed = fsops.list_parquet_files(spark, f"{d}/t")
     assert listed and all(x.endswith(".parquet") for x in listed)
     assert all("/_staging/" not in x and "/.hidden/" not in x for x in listed)
+    # the tree size counts every file but checksum sidecars; the
+    # qualified root prefixes what the listing returns; the aged
+    # selection filters entries by name and age
+    assert fsops.tree_size(spark, f"{d}/t") == sum(
+        os.path.getsize(os.path.join(r, n))
+        for r, _, names in os.walk(f"{d}/t")
+        for n in names
+        if not n.endswith(".crc")
+    ) > 0
+    assert all(
+        x.startswith(fsops.qualify(spark, f"{d}/t") + "/") for x in listed
+    )
+    assert fsops.aged(
+        spark, f"{d}/t", 0, lambda n: n.endswith(".parquet")
+    ) == sorted(x.rsplit("/", 1)[-1] for x in listed)
+    assert fsops.aged(spark, f"{d}/t", 3600) == []
     # JSON sidecars round-trip through the same primitives
     fsops.write_json_meta(spark, f"{d}/m/meta.json", {"v": 1})
     assert fsops.read_json_meta(spark, f"{d}/m/meta.json") == {"v": 1}

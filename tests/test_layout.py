@@ -274,6 +274,53 @@ def test_append_with_manifest_extends_sidecar_incrementally(spark, tmp_path):
     ).count()
 
 
+def test_concurrent_appends_with_manifest_attribute_disjoint_files(
+    spark, tmp_path
+):
+    """Two appenders racing on one table each get back exactly their
+    own files, and the manifest names every landed file once — the
+    files are attributed by a staged write, not a listing diff in
+    which each appender would also see the other's files."""
+    import threading
+
+    path = str(tmp_path / "t")
+    rows = [(x, y, x * 16 + y) for x in range(16) for y in range(16)]
+    L.zorder_write(
+        spark.createDataFrame(rows, "a: long, b: long, payload: long"),
+        path, "a", "b", n_files=2,
+    )
+    out: dict = {}
+
+    def append(i: int) -> None:
+        inc = spark.range(i * 100, i * 100 + 50).selectExpr(
+            "id AS a", "id % 7 AS b", "id AS payload"
+        ).repartition(3)
+        try:
+            out[i] = L.append_with_manifest(inc, path, ["a", "b"])
+        except Exception as exc:  # reported by the assert below
+            out[i] = exc
+
+    threads = [threading.Thread(target=append, args=(i,)) for i in (1, 2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not any(th.is_alive() for th in threads)
+    assert all(isinstance(out[i], list) and out[i] for i in (1, 2)), out
+    assert not set(out[1]) & set(out[2])
+    manifested = [
+        r.file for r in spark.read.parquet(L.manifest_location(path))
+        .select("file").collect()
+    ]
+    assert len(manifested) == len(set(manifested))
+    on_disk = {
+        p.rsplit("/", 1)[-1] for p in fsops.list_parquet_files(spark, path)
+    }
+    assert set(manifested) == on_disk
+    assert {f.rsplit("/", 1)[-1] for f in out[1] + out[2]} <= on_disk
+    assert spark.read.parquet(path).count() == 256 + 100
+
+
 def test_compaction_candidates_flag_declustered_appends(spark, tmp_path):
     """r8: the manifest-only OPTIMIZE trigger — a freshly clustered
     table is healthy (not flagged); after an append the manifest

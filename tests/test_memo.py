@@ -464,11 +464,13 @@ def test_pin_frame_default_local_reliable_opt_in(spark, tmp_path):
     DataFrame.checkpoint (blocks survive executor loss), writing to
     the configured dir. Values identical either way — for a bare
     frame, for an in-session block-max call (postings, seeds, θ,
-    essential split, surviving blocks) and for a tombstoned index
-    serve (tombstones, dead-doc df)."""
+    essential split, surviving blocks), for a tombstoned index
+    serve (tombstones, dead-doc df) and for a min/max snapshot
+    aggregate refresh with removals (affected groups)."""
     import os
 
     from cmsspark_spark.operators import retrieval as R
+    from cmsspark_spark.operators import snapshots as SN
     from cmsspark_spark.operators.memo import pin_frame
     from tests.conftest import SF_SMOKE
 
@@ -495,9 +497,30 @@ def test_pin_frame_default_local_reliable_opt_in(spark, tmp_path):
     def ck_files():
         return sum(len(files) for _, _, files in os.walk(ckdir))
 
+    # a min/max refresh with removals pins its affected-group set: two
+    # states of one table at v1, each refreshed to the v2 delete
+    table = str(tmp_path / "snap")
+    SN.snapshot_write(
+        spark.range(0, 40).selectExpr("id", "id % 4 AS g", "id * 3 AS v"),
+        table,
+    )
+
+    def agg(state):
+        return rows(SN.maintain_snapshot_agg(
+            spark, table, str(tmp_path / state), ["g"], ["v"],
+            min_cols=["v"], max_cols=["v"],
+        ))
+
+    for state in ("agg_local", "agg_reliable"):
+        agg(state)
+    SN.snapshot_delete(
+        spark, table, spark.range(30, 40).selectExpr("id"), ["id"]
+    )
+
     local = pin_frame(df)
     assert sorted(r.x for r in local.collect()) == [0, 1, 2, 3, 4]
     want_blockmax, want_serve = blockmax(), serve()
+    want_agg = agg("agg_local")
     assert not os.path.isdir(ckdir)  # default never touches disk
     spark.sparkContext.setCheckpointDir(ckdir)
     spark.conf.set("spark.cmsspark.checkpoint.reliable", "true")
@@ -510,7 +533,10 @@ def test_pin_frame_default_local_reliable_opt_in(spark, tmp_path):
         n1 = ck_files()
         assert n1 > n0
         assert serve() == want_serve
-        assert ck_files() > n1
+        n2 = ck_files()
+        assert n2 > n1
+        assert agg("agg_reliable") == want_agg
+        assert ck_files() > n2
     finally:
         spark.conf.set("spark.cmsspark.checkpoint.reliable", "false")
         invalidate_session_memos(spark)

@@ -687,6 +687,55 @@ def test_expire_reclaims_aged_orphan_manifests(spark, tmp_path):
         S.MANIFEST_INLINE_MAX = old_max
 
 
+def test_expire_reclaims_crashed_ref_and_stage_temporaries(
+    spark, tmp_path, monkeypatch
+):
+    """A crash inside the atomic JSON replace of a tag move or a stage
+    entry leaves a ``<name>.tmp.<uuid>`` beside it; an aged expire
+    lists it (dry run) and deletes it, and the tag and the staged data
+    are untouched by the crash."""
+    import os
+
+    t = str(tmp_path / "t")
+    S.snapshot_write(spark.range(0, 5).coalesce(1), t, mode="append")
+    S.snapshot_write(spark.range(5, 8).coalesce(1), t, mode="append")
+    S.snapshot_tag(spark, t, "base", 1)
+
+    def crash(*a, **k):
+        raise RuntimeError("simulated crash in the rename step")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            S.snapshot_tag(spark, t, "base", 2, replace=True)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            S.snapshot_write_staged(spark.range(8, 9), t)
+    snapdir = os.path.join(t, S.SNAPDIR)
+
+    def temps():
+        return sorted(
+            os.path.relpath(os.path.join(d, n), snapdir)
+            for d, _, names in os.walk(snapdir)
+            for n in names
+            if ".tmp." in n
+        )
+
+    left = temps()
+    assert [p.split("/")[0] for p in left] == ["refs", "staged"]
+    assert S.snapshot_tags(spark, t) == {"base": 1}
+    assert S.list_staged(spark, t) == []
+
+    kept = S.expire_snapshots(spark, t, keep_last=5)  # not aged yet
+    assert kept["orphan_temps"] == []
+    plan = S.expire_snapshots(spark, t, keep_last=5, orphan_min_age_s=0)
+    assert plan["orphan_temps"] == left
+    S.expire_snapshots(
+        spark, t, keep_last=5, orphan_min_age_s=0, dry_run=False
+    )
+    assert temps() == []
+    assert _ids(S.read_snapshot(spark, t, "base")) == list(range(0, 5))
+
+
 def test_maintained_minmax_agg_equals_recompute_at_every_version(
     spark, tmp_path
 ):
@@ -1570,11 +1619,18 @@ def test_streaming_upsert_sink_exactly_once(spark, tmp_path):
     } == {(1, 10), (2, 21), (3, 30)}
 
 
-def test_snapshot_cdc_source_batch_matches_engine_cdc(spark, tmp_path):
+@pytest.mark.parametrize("lineage", ["inline", "manifest", "partition"])
+def test_snapshot_cdc_source_batch_matches_engine_cdc(
+    spark, tmp_path, monkeypatch, lineage
+):
     """The snapshot_cdc DataSource (batch mode) emits the same signed
     rows as the engine's snapshot_cdc() across append, upsert, delete,
     and rollback commits — file-identity planning, executor-side
-    arrow reads, per-version _cdc_version attribution."""
+    arrow reads, per-version _cdc_version attribution. Three lineages
+    go through the one planner: inline file lists, manifest pointers
+    (every commit past one live file), and a partition-attributed
+    table, where the upsert is a partition merge and the delete of
+    key 1 a partition overwrite."""
     from cmsspark_spark.sources import snapcdc
 
     t = str(tmp_path / "t")
@@ -1584,9 +1640,22 @@ def test_snapshot_cdc_source_batch_matches_engine_cdc(spark, tmp_path):
             [(int(i), int(v)) for i, v in pairs], "id long, v long"
         )
 
-    S.snapshot_write(rows([(1, 10), (2, 20), (3, 30)]), t)        # v1
-    S.snapshot_upsert(rows([(2, 21), (4, 40)]), t, ["id"])        # v2
-    S.snapshot_delete(spark, t, rows([(1, 0)]).select("id"), ["id"])  # v3
+    if lineage == "manifest":
+        monkeypatch.setattr(S, "MANIFEST_INLINE_MAX", 1)
+    if lineage == "partition":
+        S.snapshot_write_partitions(
+            rows([(1, 10), (2, 20), (3, 30)]), t, ["id"]
+        )                                                         # v1
+        S.snapshot_upsert_partitions(
+            rows([(2, 21), (4, 40)]), t, ["id"], ["id"]
+        )                                                         # v2
+        S.snapshot_write_partitions(rows([(1, 11)]), t, ["id"])   # v3
+    else:
+        S.snapshot_write(rows([(1, 10), (2, 20), (3, 30)]), t)    # v1
+        S.snapshot_upsert(rows([(2, 21), (4, 40)]), t, ["id"])    # v2
+        S.snapshot_delete(
+            spark, t, rows([(1, 0)]).select("id"), ["id"]
+        )                                                         # v3
     S.rollback_snapshot(spark, t, 2)                              # v4
 
     snapcdc.register(spark)
@@ -1636,6 +1705,59 @@ def test_snapshot_cdc_source_batch_matches_engine_cdc(spark, tmp_path):
     assert {
         (r.id, r.v, r._cdc_sign) for r in sliced.collect()
     } == {(2, 20, -1), (2, 21, 1), (4, 40, 1)}
+
+
+_CDC_OUTSIDE_REPO = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from cmsspark_spark.operators import snapshots as S
+from cmsspark_spark.session import get_spark
+from cmsspark_spark.sources import snapcdc
+
+spark = get_spark("cdc-outside-repo", master="local[2]", shuffle_partitions=2)
+t = sys.argv[2]
+rows = lambda pairs: spark.createDataFrame(pairs, "id long, v long")
+S.snapshot_write(rows([(1, 10), (2, 20)]), t)
+S.snapshot_upsert(rows([(2, 21)]), t, ["id"])
+S.snapshot_delete(spark, t, rows([(1, 0)]).select("id"), ["id"])
+snapcdc.register(spark)
+feed = spark.read.format("snapshot_cdc").option("path", t).load()
+got = sorted((r.id, r.v, r._cdc_sign, r._cdc_version) for r in feed.collect())
+want = sorted(
+    (r.id, r.v, r._cdc_sign, v)
+    for v in (2, 3)
+    for r in S.snapshot_cdc(spark, t, v - 1, v).collect()
+) + [(1, 10, 1, 1), (2, 20, 1, 1)]
+print(json.dumps({"got": got, "want": sorted(want)}))
+spark.stop()
+"""
+
+
+def test_snapshot_cdc_source_runs_without_the_package_on_workers(tmp_path):
+    """The source's Python workers start in a directory where
+    ``cmsspark_spark`` is not importable (no PYTHONPATH entry, working
+    directory outside the repo): the source and its planner must reach
+    them pickled by value, or every worker fails to import them."""
+    import json
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = str(pathlib.Path(__file__).resolve().parents[1])
+    env = {
+        k: v for k, v in os.environ.items() if k != "PYTHONPATH"
+    }
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", _CDC_OUTSIDE_REPO, repo, str(tmp_path / "t")],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["got"] == out["want"]
+    assert [2, 20, -1, 2] in out["got"] and [1, 10, -1, 3] in out["got"]
 
 
 def test_snapshot_cdc_source_streaming_exactly_once(spark, tmp_path):
