@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import stat
 import time
@@ -128,7 +129,7 @@ def put_no_overwrite(spark, path: str, payload: bytes = b"") -> None:
 def replace(spark, path: str, payload: bytes) -> None:
     """Temp sibling + atomic overwrite-rename: a reader sees the old or
     the new bytes, never a torn file; a crash leaves a
-    ``<path>.tmp.<uuid>`` orphan."""
+    ``<path>.tmp.<uuid>`` orphan (:func:`is_replace_temp`)."""
     tmp = f"{path}.tmp.{uuid.uuid4().hex}"
     put_no_overwrite(spark, tmp, payload)
     local = local_path(spark, path)
@@ -136,6 +137,18 @@ def replace(spark, path: str, payload: bytes) -> None:
         os.replace(local_path(spark, tmp), local)
         return
     _context_rename(spark, tmp, path, overwrite=True)
+
+
+_REPLACE_TEMP = re.compile(r"(.+)\.tmp\.[0-9a-f]+")
+
+
+def is_replace_temp(name: str, base: str | None = None) -> bool:
+    """True when ``name`` is a temp sibling :func:`replace` writes
+    (``<base>.tmp.<hex>``; of ``base`` only, when given). A name that
+    merely contains ``.tmp.``, such as a tag's ``x.tmp.1.json``, is
+    not one."""
+    m = _REPLACE_TEMP.fullmatch(name)
+    return m is not None and (base is None or m.group(1) == base)
 
 
 def claim(spark, tmp: str, dest: str) -> bool:

@@ -1317,7 +1317,7 @@ def vacuum_bm25_index(
     # replace leaves one per crash-before-rename) — same age gate
     for name in fsops.aged(
         spark, root, staging_min_age_s,
-        lambda n: n.startswith("_index_meta.json.tmp."),
+        lambda n: fsops.is_replace_temp(n, "_index_meta.json"),
     ):
         _rm(f"{root}/{name}")
     return {"removed": removed}

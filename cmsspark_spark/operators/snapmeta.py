@@ -8,7 +8,7 @@ Each live file has an ADD-SEQUENCE, the version that committed it
 (inline ``file_seqs``; ``manifest_seqs``, one per chunk); a file with no
 recorded sequence has sequence 0. Equality-delete files in force are
 listed in ``delete_files``, stamped in ``delete_seqs`` and keyed by
-``delete_key_cols``.
+the version's ``delete_key_cols``.
 
 This module is the one reader of those keys. It is standard library
 only and reads manifests through a caller-supplied bulk reader,
@@ -70,13 +70,17 @@ def delete_files(meta: dict | None) -> list:
     return list((meta or {}).get("delete_files", []))
 
 
-def key_cols(*metas: dict | None) -> list:
-    """The delete key columns of the first of ``metas`` that pins any."""
-    for meta in metas:
-        kc = (meta or {}).get("delete_key_cols")
-        if kc:
-            return list(kc)
-    return []
+def delete_keys(*metas: dict | None) -> dict:
+    """Delete basename → the key columns it was written under. One
+    version's delete files share its pinned ``delete_key_cols``, but
+    the pin may differ between versions (a delete after an optimize
+    pins afresh), so a plan over two versions keys each delete set by
+    its own side."""
+    return {
+        d: list(meta.get("delete_key_cols") or [])
+        for meta in metas
+        for d in delete_files(meta)
+    }
 
 
 def delete_scope(meta: dict, names, read_manifests) -> dict:
@@ -107,8 +111,9 @@ def plan(from_meta: dict | None, to_meta: dict, read_manifests) -> list:
     table) to ``to_meta`` as ``[(sign, file, anti_deletes,
     semi_deletes)]``: the file's rows, minus the keys of
     ``anti_deletes``, restricted to the keys of ``semi_deletes`` when
-    that is non-empty, carry ``sign``. Data files are immutable, so
-    file identity is the change log:
+    that is non-empty, carry ``sign``. Each delete set comes from one
+    version, so :func:`delete_keys` gives one key list per set. Data
+    files are immutable, so file identity is the change log:
 
     - a file only in ``to`` is +1, filtered by ``to``'s deletes;
     - a file only in ``from`` is −1, filtered by ``from``'s deletes;

@@ -1259,38 +1259,54 @@ def _scan_entries(
     spark: SparkSession,
     table: str,
     entries: Sequence[tuple],
-    key_cols: Sequence[str],
+    del_keys: dict,
     merge_schema: bool | None,
 ) -> DataFrame | None:
     """Explicit-path scan of ``(sign, file, anti_deletes,
     semi_deletes)`` entries (:func:`snapmeta.plan`'s shape; ``sign``
-    None adds no ``_cdc_sign`` column): ONE scan per distinct (sign,
-    anti-set, semi-set), with one anti-join over the union of its anti
-    deletes and one semi-join over its semi deletes — never a
-    per-delete-file join chain. Under sequence scoping the anti-sets
-    of one version are nested suffixes of its seq-ordered delete list,
-    so a side of the plan is at most ``#delete-commits + 1`` branches.
-    None when there are no entries."""
+    None adds no ``_cdc_sign`` column), each delete set joined on its
+    own key columns (``del_keys``, :func:`snapmeta.delete_keys`): ONE
+    scan per distinct (sign, anti-set, semi-set) with one anti-join
+    over the union of its anti deletes, the scans of one (sign,
+    semi-set) unioned under ONE semi-join, and each distinct delete
+    set's key frame built once — never a per-delete-file join chain.
+    Under sequence scoping the anti-sets of one version are nested
+    suffixes of its seq-ordered delete list, so a side of the plan is
+    at most ``#delete-commits + 1`` branches. None when there are no
+    entries."""
     root = table.rstrip("/")
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
+    key_frames: dict = {}
+
+    def restrict(df: DataFrame, dels: tuple, how: str) -> DataFrame:
+        if not dels:
+            return df
+        if dels not in key_frames:
+            key_frames[dels] = _delete_keys_df(spark, table, dels)
+        return df.join(key_frames[dels], del_keys[dels[0]], how)
+
+    def union(a: DataFrame | None, b: DataFrame) -> DataFrame:
+        return b if a is None else a.unionByName(b, allowMissingColumns=True)
+
     groups: dict = {}
     for sign, name, anti, semi in entries:
-        groups.setdefault((sign, tuple(anti), tuple(semi)), []).append(name)
+        groups.setdefault((sign, tuple(semi)), {}).setdefault(
+            tuple(anti), []
+        ).append(name)
     out = None
-    for (sign, anti, semi), names in groups.items():
-        df = reader.parquet(*[f"{root}/{n}" for n in sorted(names)])
-        for dels, how in ((anti, "left_anti"), (semi, "left_semi")):
-            if dels:
-                df = df.join(
-                    _delete_keys_df(spark, table, dels), list(key_cols), how
-                )
+    for (sign, semi), by_anti in groups.items():
+        df = None
+        for anti, names in by_anti.items():
+            df = union(df, restrict(
+                reader.parquet(*[f"{root}/{n}" for n in sorted(names)]),
+                anti, "left_anti",
+            ))
+        df = restrict(df, semi, "left_semi")
         if sign is not None:
             df = df.withColumn("_cdc_sign", F.lit(sign))
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=True
-        )
+        out = union(out, df)
     return out
 
 
@@ -1318,7 +1334,7 @@ def _scan_with_deletes(
         key=lambda e: -len(e[2]),
     )
     return _scan_entries(
-        spark, table, entries, snapmeta.key_cols(meta),
+        spark, table, entries, snapmeta.delete_keys(meta),
         meta.get("mixed_schemas"),
     )
 
@@ -1923,8 +1939,9 @@ def expire_snapshots(
     in-flight commit's just-written manifest safe, same grace as
     data-file vacuum). Crashed version-claim temporaries
     (``_tmp.*`` in the snapshot dir) get the same age-gated sweep, as
-    do the ``*.tmp.*`` files a crashed tag or stage-entry replace
-    leaves under ``refs/`` and ``staged/`` (``orphan_temps``).
+    do the ``<name>.tmp.<uuid>`` files a crashed tag or stage-entry
+    replace leaves under ``refs/`` and ``staged/`` (``orphan_temps``;
+    a tag whose own name contains ``.tmp.`` is not one).
 
     Concurrency: expire must not run alongside commits that can
     reference expiring files (a rollback past the retention window, or
@@ -2006,7 +2023,7 @@ def expire_snapshots(
         for sub in ("refs", "staged")
         for n in fsops.aged(
             spark, f"{snapdir}/{sub}", orphan_min_age_s,
-            lambda n: ".tmp." in n,
+            fsops.is_replace_temp,
         )
     ]
     out = {
@@ -2138,7 +2155,7 @@ def snapshot_changes(
     if not added:
         return read_snapshot(spark, table, to_version).limit(0)
     return _scan_entries(
-        spark, table, added, snapmeta.key_cols(to_meta),
+        spark, table, added, snapmeta.delete_keys(to_meta),
         to_meta.get("mixed_schemas"),
     )
 
@@ -2396,7 +2413,7 @@ def snapshot_cdc(
         spark, table, from_version, to_version
     )
     out = _scan_entries(
-        spark, table, entries, snapmeta.key_cols(to_meta, from_meta),
+        spark, table, entries, snapmeta.delete_keys(from_meta, to_meta),
         to_meta.get("mixed_schemas") or from_meta.get("mixed_schemas"),
     )
     if out is None:

@@ -157,17 +157,15 @@ class _CDCPartition(InputPartition):
         version: int,
         sign: int,
         path: str,
-        anti_paths: list,
-        semi_paths: list,
-        key_cols: list,
+        anti: tuple,
+        semi: tuple,
         fields: list,
     ):
         self.version = version
         self.sign = sign
         self.path = path
-        self.anti_paths = anti_paths
-        self.semi_paths = semi_paths
-        self.key_cols = key_cols
+        self.anti = anti  # (delete file paths, their key columns)
+        self.semi = semi
         self.fields = fields  # [(name, spark_type_name)] data columns
 
 
@@ -179,18 +177,21 @@ def _plan_step(
     attributed to ``to_v``."""
     to_meta = _load_meta(root, to_v)
     from_meta = None if from_v is None else _load_meta(root, from_v)
-    kc = snapmeta.key_cols(to_meta, from_meta)
+    del_keys = snapmeta.delete_keys(from_meta, to_meta)
 
     def read_manifests(names):
         return {m: _read_json(root, m) for m in names}
 
-    def paths(names):
-        return [os.path.join(root, n) for n in names]
+    def keyed(dels):
+        return (
+            [os.path.join(root, d) for d in dels],
+            del_keys[dels[0]] if dels else [],
+        )
 
     return [
         _CDCPartition(
-            to_v, sign, os.path.join(root, n), paths(anti), paths(semi),
-            kc, fields,
+            to_v, sign, os.path.join(root, n), keyed(anti), keyed(semi),
+            fields,
         )
         for sign, n, anti, semi in snapmeta.plan(
             from_meta, to_meta, read_manifests
@@ -235,23 +236,17 @@ def _read_cdc_partition(part: _CDCPartition):
             arrays.append(pa.nulls(tbl.num_rows, type=f.type))
     tbl = pa.table(arrays, schema=want)
 
-    def _keys(paths):
-        t = pa.concat_tables(
-            [pq.read_table(p, columns=part.key_cols) for p in paths]
-        )
-        # distinct keys: join semantics must not depend on dup rows
-        return t.group_by(part.key_cols).aggregate([])
-
-    if part.anti_paths and tbl.num_rows:
-        tbl = tbl.join(
-            _keys(part.anti_paths), keys=part.key_cols,
-            join_type="left anti",
-        )
-    if part.semi_paths and tbl.num_rows:
-        tbl = tbl.join(
-            _keys(part.semi_paths), keys=part.key_cols,
-            join_type="left semi",
-        )
+    for (paths, kc), how in (
+        (part.anti, "left anti"), (part.semi, "left semi")
+    ):
+        if paths and tbl.num_rows:
+            keys = pa.concat_tables(
+                [pq.read_table(p, columns=kc) for p in paths]
+            )
+            # distinct keys: join semantics must not depend on dup rows
+            tbl = tbl.join(
+                keys.group_by(kc).aggregate([]), keys=kc, join_type=how
+            )
     # joins may reorder columns; restore the declared order
     tbl = tbl.select([f.name for f in want])
     tbl = tbl.append_column(

@@ -693,13 +693,16 @@ def test_expire_reclaims_crashed_ref_and_stage_temporaries(
     """A crash inside the atomic JSON replace of a tag move or a stage
     entry leaves a ``<name>.tmp.<uuid>`` beside it; an aged expire
     lists it (dry run) and deletes it, and the tag and the staged data
-    are untouched by the crash."""
+    are untouched by the crash. An aged tag whose own name contains
+    ``.tmp.`` is a real ref, not a temporary, and survives."""
     import os
+    import re
 
     t = str(tmp_path / "t")
     S.snapshot_write(spark.range(0, 5).coalesce(1), t, mode="append")
     S.snapshot_write(spark.range(5, 8).coalesce(1), t, mode="append")
     S.snapshot_tag(spark, t, "base", 1)
+    S.snapshot_tag(spark, t, "nightly.tmp.1", 2)
 
     def crash(*a, **k):
         raise RuntimeError("simulated crash in the rename step")
@@ -717,12 +720,13 @@ def test_expire_reclaims_crashed_ref_and_stage_temporaries(
             os.path.relpath(os.path.join(d, n), snapdir)
             for d, _, names in os.walk(snapdir)
             for n in names
-            if ".tmp." in n
+            if re.fullmatch(r".+\.tmp\.[0-9a-f]{32}", n)
         )
 
+    tags = {"base": 1, "nightly.tmp.1": 2}
     left = temps()
     assert [p.split("/")[0] for p in left] == ["refs", "staged"]
-    assert S.snapshot_tags(spark, t) == {"base": 1}
+    assert S.snapshot_tags(spark, t) == tags
     assert S.list_staged(spark, t) == []
 
     kept = S.expire_snapshots(spark, t, keep_last=5)  # not aged yet
@@ -733,7 +737,11 @@ def test_expire_reclaims_crashed_ref_and_stage_temporaries(
         spark, t, keep_last=5, orphan_min_age_s=0, dry_run=False
     )
     assert temps() == []
+    assert S.snapshot_tags(spark, t) == tags
     assert _ids(S.read_snapshot(spark, t, "base")) == list(range(0, 5))
+    assert _ids(S.read_snapshot(spark, t, "nightly.tmp.1")) == list(
+        range(0, 8)
+    )
 
 
 def test_maintained_minmax_agg_equals_recompute_at_every_version(
@@ -1705,6 +1713,65 @@ def test_snapshot_cdc_source_batch_matches_engine_cdc(
     assert {
         (r.id, r.v, r._cdc_sign) for r in sliced.collect()
     } == {(2, 20, -1), (2, 21, 1), (4, 40, 1)}
+
+
+
+def test_snapshot_cdc_keys_each_delete_set_by_its_own_version(
+    spark, tmp_path
+):
+    """An optimize drops the delete pin, so a later delete may pin other
+    key columns: v2 deletes by ``id``, v3 optimizes, v4 deletes by
+    ``v``, v5 rolls back to v2. Every span the engine's snapshot_cdc
+    plans, and every step of the snapshot_cdc source, joins each delete
+    set on the key columns of the version it came from, and the signed
+    rows fold to the live-view difference."""
+    from collections import Counter
+
+    from cmsspark_spark.sources import snapcdc
+
+    t = str(tmp_path / "t")
+    S.snapshot_write(
+        spark.createDataFrame(
+            [(i, 10 * i) for i in range(1, 7)], "id long, v long"
+        ).repartition(2),
+        t,
+    )                                                                # v1
+    S.snapshot_delete(
+        spark, t, spark.createDataFrame([(1,)], "id long"), ["id"]
+    )                                                                # v2
+    S.optimize_snapshot(spark, t, 1)                                 # v3
+    S.snapshot_delete(
+        spark, t, spark.createDataFrame([(30,)], "v long"), ["v"]
+    )                                                                # v4
+    S.rollback_snapshot(spark, t, 2)                                 # v5
+
+    lives = {
+        v: Counter(
+            (r.id, r.v) for r in S.read_snapshot(spark, t, v).collect()
+        )
+        for v in range(1, 6)
+    }
+    live = lives.__getitem__
+
+    def net(rows):
+        out = Counter()
+        for r in rows:
+            out[(r.id, r.v)] += r._cdc_sign
+        return {k: n for k, n in out.items() if n}
+
+    for a in range(1, 6):
+        for b in range(a + 1, 6):
+            want = dict(live(b))
+            for k, n in live(a).items():
+                want[k] = want.get(k, 0) - n
+            assert net(S.snapshot_cdc(spark, t, a, b).collect()) == {
+                k: n for k, n in want.items() if n
+            }, (a, b)
+    snapcdc.register(spark)
+    feed = spark.read.format("snapshot_cdc").option("path", t).load()
+    assert net(feed.collect()) == dict(live(5))
+    assert live(4) == Counter({(i, 10 * i): 1 for i in (2, 4, 5, 6)})
+    assert live(5) == Counter({(i, 10 * i): 1 for i in range(2, 7)})
 
 
 _CDC_OUTSIDE_REPO = """
