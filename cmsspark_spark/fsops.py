@@ -151,6 +151,11 @@ def is_replace_temp(name: str, base: str | None = None) -> bool:
     return m is not None and (base is None or m.group(1) == base)
 
 
+#: A :func:`replace` temp lives from its write to its rename; one this
+#: old was left by a writer that died in between.
+REPLACE_TEMP_MIN_AGE_S = 3600
+
+
 def claim(spark, tmp: str, dest: str) -> bool:
     """Move ``tmp`` to ``dest`` iff ``dest`` does not exist; True when
     this caller won. Atomic on POSIX (a hard link fails on an existing

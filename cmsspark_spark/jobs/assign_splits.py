@@ -37,6 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from cmsspark_spark import fsops
+from cmsspark_spark.operators.memo import pin_frame
 from cmsspark_spark.session import get_spark
 
 
@@ -139,7 +140,7 @@ def run_batch(
         comp = D.connected_components(pairs, "id_a", "id_b")
         assign = cluster_split_assign(
             docs, comp, boundaries=boundaries
-        ).localCheckpoint(eager=True)  # pin before the state writes below
+        ).transform(pin_frame)  # pin before the state writes below
         f_report.result()
     # state commit ORDER matters for crash-safety: splits first (the
     # increment path's election only considers census matches that
@@ -155,6 +156,12 @@ def run_batch(
     if pin is not None:
         # final pin (clears in_progress) only after the census commit
         fsops.write_json_meta(spark, f"{state}/_pin.json", pin)
+    # pin temps a crashed replace left beside the pin, age-gated
+    for n in fsops.aged(
+        spark, state, fsops.REPLACE_TEMP_MIN_AGE_S,
+        lambda n: fsops.is_replace_temp(n, "_pin.json"),
+    ):
+        fsops.delete(spark, f"{state}/{n}")
     return assign
 
 
@@ -222,13 +229,13 @@ def run_increment(
     # is row-identical to banding the anti-joined increment.
     bands = _increment_minhash_bands(
         increment, 3, 8, 2, "doc_id", "text"
-    ).localCheckpoint(eager=True)
+    ).transform(pin_frame)
     out = split_assign_increment(
         increment, census, splits,
         boundaries=boundaries,
         broadcast_increment=broadcast_increment,
         bands=bands,
-    ).localCheckpoint(eager=True)  # pin the verdict before state writes
+    ).transform(pin_frame)  # pin the verdict before state writes
     out.select("doc_id", "split").join(
         splits.select("doc_id"), "doc_id", "left_anti"
     ).write.mode("append").parquet(f"{state}/splits")

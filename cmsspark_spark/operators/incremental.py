@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from cmsspark_spark import fsops
+from cmsspark_spark.operators.memo import pin_frame
 from cmsspark_spark.sinks import write_partitioned_parquet
 
 
@@ -86,7 +87,7 @@ def ingest_increment_dedup(
         fresh = survivors.join(seen, on=fingerprint_col, how="left_anti")
     except AnalysisException:  # first run: empty store
         fresh = survivors
-    fresh = fresh.localCheckpoint(eager=True)  # cut lineage before append
+    fresh = pin_frame(fresh)  # cut lineage before append
     fresh.write.mode("append").parquet(corpus_path)
     return fresh
 
@@ -483,7 +484,7 @@ def score_increment_span_dedup(
     then calls ``commit_census_spans`` (the two-step seam exists so a
     failed downstream write can be retried: an uncommitted census
     can't refuse its own partial run). Returns the admitted docs with
-    (n_windows, n_dup_windows, dup_ratio), pinned via localCheckpoint
+    (n_windows, n_dup_windows, dup_ratio), pinned via ``memo.pin_frame``
     so the verdict can't shift between the caller's write and the
     census commit.
 
@@ -524,7 +525,7 @@ def score_increment_span_dedup(
         )
     )
     admitted = scored.filter(F.col("dup_ratio") <= max_dup_ratio)
-    return admitted.localCheckpoint(eager=True)  # pin the verdict
+    return pin_frame(admitted)  # pin the verdict
 
 
 def commit_census_spans(
@@ -654,14 +655,14 @@ def score_increment_minhash_dedup(
     exact verifier remains the batch LSH→Jaccard path.
 
     Returns admitted docs with (n_candidates, max_est_jaccard),
-    pinned via localCheckpoint (the score/commit seam of the span
+    pinned via ``memo.pin_frame`` (the score/commit seam of the span
     gate: commit only after the caller's own write succeeds).
     """
     from pyspark.errors import AnalysisException
 
     inc = _increment_minhash_bands(
         increment, n, num_hashes, rows_per_band, id_col, text_col
-    ).localCheckpoint(eager=True)  # consumed by probe + self-join + commit
+    ).transform(pin_frame)  # consumed by probe + self-join + commit
     try:
         census = spark.read.parquet(census_path).select(
             F.col(id_col).alias("_bid"),
@@ -730,7 +731,7 @@ def score_increment_minhash_dedup(
         )
     )
     admitted = scored.filter(F.col("max_est_jaccard") < max_est_jaccard)
-    return admitted.localCheckpoint(eager=True)  # pin the verdict
+    return pin_frame(admitted)  # pin the verdict
 
 
 def split_assign_increment(
@@ -807,7 +808,7 @@ def split_assign_increment(
     else:
         inc = _increment_minhash_bands(
             increment, n, num_hashes, rows_per_band, id_col, text_col
-        ).localCheckpoint(eager=True)  # consumed by probe + self-join
+        ).transform(pin_frame)  # consumed by probe + self-join
     agree = F.aggregate(
         F.zip_with(
             F.col("_nsig"),

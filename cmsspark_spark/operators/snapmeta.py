@@ -1,5 +1,5 @@
-"""The version-entry format of snapshot tables, and the change planner
-built on it.
+"""The version-entry format of snapshot tables, the lineage rules a
+commit inherits from its parent, and the change planner built on them.
 
 A version entry (``_snapshots/v%08d.json``) names the table's live data
 files either inline (``files``) or through manifest pointers
@@ -81,6 +81,89 @@ def delete_keys(*metas: dict | None) -> dict:
         for meta in metas
         for d in delete_files(meta)
     }
+
+
+def _field_names(schema: dict | None) -> set:
+    return {f["name"] for f in (schema or {}).get("fields", [])}
+
+
+def inherit(
+    table: str,
+    pmeta: dict | None,
+    schema: dict | None = None,
+    key_cols=None,
+    part_cols=None,
+) -> dict:
+    """The lineage fields a commit takes from ``pmeta``, the parent
+    whose live files it keeps (None or ``{}``: an empty table, or a
+    commit that keeps none), after checking the lineage rules; a
+    broken rule raises ValueError. ``schema`` is the batch's recorded
+    schema (None: carry the parent's), ``key_cols`` the delete keys a
+    keyed commit writes under, ``part_cols`` the columns a partition
+    commit attributes by.
+
+    - Grain: a keyed commit refuses a partition-attributed parent, and
+      a partition commit refuses a parent with equality-delete state
+      or with unattributed live files.
+    - Pins: ``delete_key_cols`` and ``part_cols`` pin at their first
+      commit and must match on every later one.
+    - Delete state carries: dropping it would resurrect deleted rows.
+    - Schema: ``mixed_schemas`` is set when the batch's column names
+      differ from the parent's recorded ones, and carried once set."""
+    pmeta = pmeta or {}
+    pinned_parts = pmeta.get("part_cols")
+    if part_cols is not None:
+        if delete_files(pmeta):
+            raise ValueError(
+                f"{table} carries equality-delete state — fold it "
+                "(optimize_snapshot) before partition-grain commits"
+            )
+        if pinned_parts is None and pmeta.get("n_files", 0) > 0:
+            raise ValueError(
+                f"{table} is not partition-attributed: it has live "
+                "files with no partition attribution — partition-grain "
+                "commits need an attributed lineage from the first "
+                "write (keyed tables take snapshot_upsert)"
+            )
+        if pinned_parts is not None and list(pinned_parts) != list(part_cols):
+            raise ValueError(
+                f"{table} pins partition columns {pinned_parts}, "
+                f"refusing {list(part_cols)}"
+            )
+    if key_cols is not None:
+        if pinned_parts is not None:
+            raise ValueError(
+                f"{table} is partition-attributed — at that grain the "
+                "delete and replace mechanism is overwriting the "
+                "partition (snapshot_write_partitions), not keyed "
+                "equality deletes"
+            )
+        pinned_keys = pmeta.get("delete_key_cols")
+        if pinned_keys is not None and list(pinned_keys) != list(key_cols):
+            raise ValueError(
+                f"{table} pins delete keys {pinned_keys}, refusing "
+                f"{list(key_cols)} — mixed key shapes would corrupt the "
+                "delete anti-join"
+            )
+    out = {
+        k: pmeta[k]
+        for k in ("delete_files", "delete_key_cols", "delete_seqs")
+        if k in pmeta
+    }
+    if key_cols is not None:
+        out["delete_key_cols"] = list(key_cols)
+    if part_cols is not None:
+        out["part_cols"] = list(part_cols)
+    if schema is None:
+        schema = pmeta.get("schema")
+    if schema is not None:
+        out["schema"] = schema
+    pfields = _field_names(pmeta.get("schema"))
+    if pmeta.get("mixed_schemas") or (
+        pfields and pfields != _field_names(schema)
+    ):
+        out["mixed_schemas"] = True
+    return out
 
 
 def delete_scope(meta: dict, names, read_manifests) -> dict:

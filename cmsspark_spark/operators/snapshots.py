@@ -328,24 +328,28 @@ def default_claim(spark: SparkSession, table: str) -> Callable[[str, str], bool]
     return lambda tmp, dest: fsops.claim(spark, tmp, dest)
 
 
+#: Version-claim attempts before a commit gives up under contention.
+COMMIT_ATTEMPTS = 16
+
+
 def _commit(
     spark: SparkSession,
     table: str,
     build: Callable[[int, list], dict],
     claim: Callable[[str, str], bool] | None = None,
-    max_retries: int = 16,
 ) -> int:
     """The optimistic commit loop under every snapshot commit. Each
     attempt lists the version log, asks ``build(v, versions)`` for the
     meta of the next version ``v`` (``build`` re-reads the real parent
-    itself, so a writer that lost a race re-applies its change on top
-    of the winner's commit; it may raise to refuse), writes it to a
-    temp file and claims ``v`` with it. A lost claim deletes the temp
-    and retries. Returns the committed version."""
+    itself and makes every parent-dependent decision against it, so a
+    writer that lost a race re-applies its change on top of the
+    winner's commit; it may raise to refuse), writes it to a temp file
+    and claims ``v`` with it. A lost claim deletes the temp and
+    retries. Returns the committed version."""
     if claim is None:
         claim = default_claim(spark, table)
     last_err: Exception | None = None
-    for _ in range(max_retries):
+    for _ in range(COMMIT_ATTEMPTS):
         versions = list_snapshots(spark, table)
         v = (versions[-1] + 1) if versions else 1
         meta = build(v, versions)
@@ -362,10 +366,49 @@ def _commit(
             last_err = exc
         fsops.delete(spark, tmp)
     raise RuntimeError(
-        f"could not commit a snapshot of {table} after {max_retries} "
+        f"could not commit a snapshot of {table} after {COMMIT_ATTEMPTS} "
         f"attempts (heavy concurrent-writer contention); last error: "
         f"{last_err}"
     )
+
+
+def _refuse_early(
+    spark: SparkSession,
+    table: str,
+    key_cols: Sequence[str] | None = None,
+    part_cols: Sequence[str] | None = None,
+) -> bool:
+    """Check the lineage rules (:func:`snapmeta.inherit`) against the
+    latest version BEFORE any file lands, so a refused batch leaves no
+    residue; the commit attempt checks them again against the parent
+    it actually lands on. False when the table has no version yet."""
+    versions = list_snapshots(spark, table)
+    if versions:
+        snapmeta.inherit(
+            table, read_snapshot_meta(spark, table, versions[-1]),
+            key_cols=key_cols, part_cols=part_cols,
+        )
+    return bool(versions)
+
+
+def _refuse_duplicate_keys(df: DataFrame, key_cols: Sequence[str]) -> None:
+    """Refuse an upsert batch with several rows for one key: every one
+    would survive the merge (a batch's rows are immune to its own
+    delete). One batch-sized aggregation."""
+    dup = (
+        df.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > 1)
+        .limit(1)
+        .collect()
+    )
+    if dup:
+        raise ValueError(
+            "upsert batch carries multiple rows for key "
+            f"{tuple(dup[0][c] for c in key_cols)} — every one would "
+            "survive the merge; dedupe the batch, or pass "
+            "allow_duplicate_keys=True where the operation takes it"
+        )
 
 
 def commit_snapshot(
@@ -373,13 +416,11 @@ def commit_snapshot(
     table: str,
     files: Sequence[str] | None = None,
     op: str = "append",
-    parent: int | None = None,
+    expected_parent: int | None = None,
     extra: dict | None = None,
-    max_retries: int = 16,
     append_files: Sequence[str] | None = None,
     claim: Callable[[str, str], bool] | None = None,
     manifests: Sequence[str] | None = None,
-    manifest_threshold: int | None = None,
     new_delete_files: Sequence[str] | None = None,
 ) -> int:
     """Atomically commit the next snapshot version. With ``files`` the
@@ -390,6 +431,14 @@ def commit_snapshot(
     loses a version race re-applies its append on top of the winner's
     commit instead of re-numbering a stale list (which would silently
     drop the winner's files from the live view).
+
+    Every decision that depends on the parent is made per attempt,
+    against the parent the claim lands on: the lineage rules, the
+    inherited delete state, schema and ``mixed_schemas`` flag
+    (:func:`snapmeta.inherit`; the batch's ``schema`` and a keyed
+    commit's ``delete_key_cols`` come in ``extra``). ``expected_parent``
+    (the version a rewrite was planned against) refuses with a
+    "concurrent commit" error when any other version is the parent.
 
     The version claim is PLUGGABLE: ``claim(tmp_path, dest_path)``
     must atomically move the written temp file to the version name iff
@@ -405,8 +454,8 @@ def commit_snapshot(
     batch_id this way). Returns the committed version number.
 
     Large tables go through MANIFEST POINTERS (the Iceberg
-    manifest-list shape): past ``manifest_threshold`` live files
-    (default :data:`MANIFEST_INLINE_MAX`) the version entry stores
+    manifest-list shape): past :data:`MANIFEST_INLINE_MAX` live files
+    the version entry stores
     ``m-*.json`` sidecar names instead of the inline list, and an
     APPEND on a manifest-mode parent reuses the parent's pointers
     plus one new manifest for its own files — commit cost
@@ -431,10 +480,7 @@ def commit_snapshot(
             )
     elif (files is None) == (append_files is None):
         raise ValueError("pass exactly one of files / append_files")
-    threshold = (
-        MANIFEST_INLINE_MAX if manifest_threshold is None
-        else int(manifest_threshold)
-    )
+    threshold = MANIFEST_INLINE_MAX
     # manifests whose content does not depend on the parent are
     # written once and reused across version-race retries (a retry
     # that rewrote them would orphan the prior set)
@@ -535,32 +581,37 @@ def commit_snapshot(
         return out
 
     def build(v: int, versions: list) -> dict:
+        parent = versions[-1] if versions else None
+        if expected_parent is not None and parent != expected_parent:
+            raise RuntimeError(
+                f"concurrent commit detected on {table}: v{parent} "
+                f"landed after this commit was planned against "
+                f"v{expected_parent} — publishing would drop its rows; "
+                "re-run in a quiet window (files this commit landed are "
+                "unreferenced residue, reclaimed by vacuum)"
+            )
+        # only an append keeps the parent's live files, so only an
+        # append inherits from it; the other shapes list their own set
         pmeta = (
-            read_snapshot_meta(spark, table, versions[-1])
+            read_snapshot_meta(spark, table, parent)
             if append_files is not None and versions
             else None
         )
-        listing = listing_of(v, pmeta)
+        extra_eff = dict(extra or {})
         meta = {
             "version": v,
             "op": op,
-            "parent": parent if parent is not None else (
-                versions[-1] if versions else None
-            ),
+            "parent": parent,
             # wall-clock commit stamp (re-stamped per retry attempt):
             # powers TIMESTAMP AS OF resolution (version_as_of)
             "committed_ms": int(_time.time() * 1000),
         }
-        if pmeta:
-            # an APPEND inherits the parent's equality-delete state:
-            # dropping it would silently resurrect every deleted row.
-            # Inherited per attempt (pmeta tracks the real parent),
-            # overridable via extra (rollback's path).
-            for k in ("delete_files", "delete_key_cols", "delete_seqs"):
-                if k in pmeta:
-                    meta[k] = pmeta[k]
+        meta.update(snapmeta.inherit(
+            table, pmeta, extra_eff.get("schema"),
+            extra_eff.get("delete_key_cols"),
+        ))
+        listing = listing_of(v, pmeta)
         meta.update(listing)
-        extra_eff = dict(extra or {})
         if files is not None and "manifests" in listing:
             # chunking already folded the caller's per-file seqs into
             # manifest_seqs; the inline map must not leak into meta
@@ -599,7 +650,7 @@ def commit_snapshot(
             meta["delete_seqs"] = dseqs
         return meta
 
-    return _commit(spark, table, build, claim, max_retries)
+    return _commit(spark, table, build, claim)
 
 
 def _compute_file_stats(
@@ -672,8 +723,9 @@ def snapshot_write(
     the new column as null (the lakehouse add-column contract). The
     flag propagates along append chains and clears on overwrite or
     :func:`optimize_snapshot` (both rewrite to one homogeneous
-    schema). Evolving appends assume a single writer (the flag is
-    derived from the parent read before the commit claim).
+    schema). The flag is derived inside the commit attempt, against
+    the parent the claim lands on, so a concurrent writer's evolution
+    is compared too.
 
     ``stats_cols``: record per-file MIN/MAX of these columns in the
     commit (one extra grouped job over the new files) — the skipping
@@ -693,16 +745,6 @@ def snapshot_write(
             [p.rsplit("/", 1)[-1] for p in new_files], list(stats_cols),
         )
     if mode == "append":
-        versions = list_snapshots(spark, table)
-        if versions:
-            pmeta = read_snapshot_meta(spark, table, versions[-1])
-            pschema = pmeta.get("schema") or {}
-            pfields = {f["name"] for f in pschema.get("fields", [])}
-            fields = {f.name for f in df.schema.fields}
-            if pmeta.get("mixed_schemas") or (
-                pfields and pfields != fields
-            ):
-                extra["mixed_schemas"] = True
         # parent's live list resolved inside the commit retry loop —
         # concurrent appends compose instead of clobbering
         return commit_snapshot(
@@ -754,9 +796,10 @@ def snapshot_delete(
 
     ``key_cols`` is pinned at the first delete and must match on every
     later one (mixing key shapes would make the anti-join silently
-    wrong). Single-writer, like every maintenance op here — the delete
-    set is derived from the parent before the commit claim. Returns
-    the committed version.
+    wrong). The pin, the accumulated delete set and the carried schema
+    are all decided inside the commit attempt, against the parent the
+    claim lands on, so a racing delete under other keys is refused.
+    Returns the committed version.
 
     SEQUENCE SCOPING (Iceberg v2): the delete file is stamped with the
     commit's version as its sequence and applies ONLY to data files
@@ -767,34 +810,15 @@ def snapshot_delete(
     tracking keep their old whole-table delete semantics (an
     unstamped delete file sorts after every data file)."""
     key_cols = list(key_cols)
-    versions = list_snapshots(spark, table)
-    if not versions:
+    if not _refuse_early(spark, table, key_cols=key_cols):
         raise FileNotFoundError(f"{table} has no snapshots")
-    pmeta = read_snapshot_meta(spark, table, versions[-1])
-    if pmeta.get("part_cols"):
-        raise ValueError(
-            f"{table} is partition-attributed — at that grain the "
-            "delete mechanism is overwriting the partition "
-            "(snapshot_write_partitions), not equality-delete files"
-        )
-    pinned = pmeta.get("delete_key_cols")
-    if pinned is not None and list(pinned) != key_cols:
-        raise ValueError(
-            f"{table} pins delete keys {pinned}, refusing {key_cols} — "
-            "mixed key shapes would corrupt the delete anti-join"
-        )
     del_names = _stage_delete_files(spark, table, keys, key_cols)
-    extra = {"delete_key_cols": key_cols}
-    if "schema" in pmeta:
-        extra["schema"] = pmeta["schema"]
-    if pmeta.get("mixed_schemas"):
-        extra["mixed_schemas"] = True
     # the accumulated delete list and the new files' sequence stamps
     # are assembled INSIDE the commit retry loop (parent re-read, seq
     # = final version) — see commit_snapshot(new_delete_files=...)
     return commit_snapshot(
-        spark, table, op="delete", append_files=[], extra=extra,
-        new_delete_files=del_names,
+        spark, table, op="delete", append_files=[],
+        extra={"delete_key_cols": key_cols}, new_delete_files=del_names,
     )
 
 
@@ -836,9 +860,11 @@ def snapshot_upsert(
     delete), which is almost always a caller bug — detected with one
     batch-sized aggregation and refused loudly unless
     ``allow_duplicate_keys=True`` (intentional multi-row replacement:
-    "replace key k's rows with THESE n rows"). Single-writer like the
-    other maintenance ops; partition-attributed tables refuse (at that
-    grain the replace mechanism is overwriting the partition)."""
+    "replace key k's rows with THESE n rows"). Concurrent writers
+    compose: the key pin, the carried delete state and the schema flag
+    are decided inside the commit attempt, against the parent the
+    claim lands on. Partition-attributed tables refuse (at that grain
+    the replace mechanism is overwriting the partition)."""
     return snapshot_apply_changes(
         df.sparkSession, table, key_cols, upserts=df,
         allow_duplicate_keys=allow_duplicate_keys, op="upsert",
@@ -883,57 +909,10 @@ def snapshot_apply_changes(
             )
     if upserts is None and delete_keys is None:
         raise ValueError("pass at least one of upserts / delete_keys")
-    versions = list_snapshots(spark, table)
-    extra_eff: dict = dict(extra or {})
-    extra_eff["delete_key_cols"] = key_cols
+    _refuse_early(spark, table, key_cols=key_cols)
+    extra_eff: dict = {**(extra or {}), "delete_key_cols": key_cols}
     if upserts is not None:
         extra_eff["schema"] = upserts.schema.jsonValue()
-    pmeta = None
-    if versions:
-        pmeta = read_snapshot_meta(spark, table, versions[-1])
-        if pmeta.get("part_cols"):
-            raise ValueError(
-                f"{table} is partition-attributed — at that grain the "
-                "replace mechanism is overwriting the partition "
-                "(snapshot_write_partitions), not keyed upsert"
-            )
-        pinned = pmeta.get("delete_key_cols")
-        if pinned is not None and list(pinned) != key_cols:
-            raise ValueError(
-                f"{table} pins delete keys {pinned}, refusing "
-                f"{key_cols} — mixed key shapes would corrupt the "
-                "delete anti-join"
-            )
-        if "schema" not in extra_eff and "schema" in pmeta:
-            extra_eff["schema"] = pmeta["schema"]
-        if upserts is not None:
-            pschema = pmeta.get("schema") or {}
-            pfields = {f["name"] for f in pschema.get("fields", [])}
-            fields = {f.name for f in upserts.schema.fields}
-            if pmeta.get("mixed_schemas") or (
-                pfields and pfields != fields
-            ):
-                extra_eff["mixed_schemas"] = True
-    if pmeta and pmeta.get("mixed_schemas") and upserts is None:
-        # a pure-delete application must not clear the lineage's
-        # merged-read flag
-        extra_eff["mixed_schemas"] = True
-    def _dup_check() -> None:
-        dup = (
-            upserts.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                "upsert batch carries multiple rows for key "
-                f"{tuple(dup[0][c] for c in key_cols)} — all would "
-                "survive (a batch's rows are immune to its own delete); "
-                "dedupe the batch or pass allow_duplicate_keys=True"
-            )
-
     keys = None
     if upserts is not None:
         keys = upserts.select(*key_cols)
@@ -949,7 +928,7 @@ def snapshot_apply_changes(
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         fut_dup = (
-            pool.submit(_dup_check)
+            pool.submit(_refuse_duplicate_keys, upserts, key_cols)
             if upserts is not None and not allow_duplicate_keys
             else None
         )
@@ -1027,24 +1006,13 @@ def snapshot_write_staged(
             raise ValueError(f"upsert df lacks key columns {missing}")
         versions = list_snapshots(spark, table)
         if versions:
-            pmeta = read_snapshot_meta(spark, table, versions[-1])
-            if pmeta.get("part_cols"):
-                raise ValueError(
-                    f"{table} is partition-attributed — stage a "
-                    "partition overwrite, not a keyed upsert"
-                )
-        dup = (
-            df.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                "staged upsert batch carries multiple rows for key "
-                f"{tuple(dup[0][c] for c in key_cols)} — dedupe it"
+            # a stage is no commit: its grain is final here, its key pin
+            # is checked at publish (an optimize in between re-pins)
+            latest = read_snapshot_meta(spark, table, versions[-1])
+            snapmeta.inherit(
+                table, {**latest, "delete_key_cols": None}, key_cols=key_cols
             )
+        _refuse_duplicate_keys(df, key_cols)
     elif key_cols:
         raise ValueError("key_cols only applies to mode='upsert'")
     new_files = _write_attributed(df, table)
@@ -1110,17 +1078,6 @@ def read_staged(
     return base.unionByName(inc, allowMissingColumns=True)
 
 
-def published_stage_ids(spark: SparkSession, table: str) -> set[str]:
-    """Stage ids already turned into commits — the publish ledger
-    (same walk as committed_batch_ids; driver-side metadata only)."""
-    out: set[str] = set()
-    for v in list_snapshots(spark, table):
-        sid = read_snapshot_meta(spark, table, v).get("stage_id")
-        if sid:
-            out.add(str(sid))
-    return out
-
-
 def publish_staged(
     spark: SparkSession, table: str, stage_id: str
 ) -> int:
@@ -1131,45 +1088,19 @@ def publish_staged(
     leftover entry is swept, the committed version is returned) —
     never a double-apply. An ``append`` stage composes with every
     commit made since staging (its increment replays onto the current
-    parent, delete state inherited and add-sequences stamped inside
-    the commit retry loop); an ``overwrite`` stage replaces the live
-    set. Returns the committed version."""
-    for v in sorted(list_snapshots(spark, table), reverse=True):
-        if str(
-            read_snapshot_meta(spark, table, v).get("stage_id")
-        ) == str(stage_id):
-            # already published (crash between commit and entry sweep)
-            fsops.delete(spark, _staged_path(table, stage_id))
-            return v
+    parent; delete state, key pin and schema flag decided and
+    add-sequences stamped inside the commit attempt); an ``overwrite``
+    stage replaces the live set. Returns the committed version."""
+    done = replay_ledger(spark, table, "stage_id").get(str(stage_id))
+    if done is not None:
+        # already published (crash between commit and entry sweep)
+        fsops.delete(spark, _staged_path(table, stage_id))
+        return done
     e = _staged_entry(spark, table, stage_id)
     extra: dict = {"stage_id": stage_id, "schema": e["schema"]}
     if e["op"] == "upsert":
         kc = list(e["key_cols"])
-        versions = list_snapshots(spark, table)
-        if versions:
-            pmeta = read_snapshot_meta(spark, table, versions[-1])
-            if pmeta.get("part_cols"):
-                raise ValueError(
-                    f"{table} became partition-attributed since "
-                    "staging — upsert stages cannot publish here"
-                )
-            pinned = pmeta.get("delete_key_cols")
-            if pinned is not None and list(pinned) != kc:
-                raise ValueError(
-                    f"{table} pins delete keys {pinned}, the stage "
-                    f"carries {kc} — discard and restage"
-                )
-            pfields = {
-                f["name"]
-                for f in (pmeta.get("schema") or {}).get("fields", [])
-            }
-            fields = {
-                f["name"] for f in e["schema"].get("fields", [])
-            }
-            if pmeta.get("mixed_schemas") or (
-                pfields and pfields != fields
-            ):
-                extra["mixed_schemas"] = True
+        _refuse_early(spark, table, key_cols=kc)
         extra["delete_key_cols"] = kc
         root = table.rstrip("/")
         keys = spark.read.parquet(
@@ -1185,23 +1116,7 @@ def publish_staged(
             append_files=e["files"], extra=extra,
             new_delete_files=del_names,
         )
-        fsops.delete(spark, _staged_path(table, stage_id))
-        return v
-    if e["op"] == "append":
-        versions = list_snapshots(spark, table)
-        if versions:
-            pmeta = read_snapshot_meta(spark, table, versions[-1])
-            pfields = {
-                f["name"]
-                for f in (pmeta.get("schema") or {}).get("fields", [])
-            }
-            fields = {
-                f["name"] for f in e["schema"].get("fields", [])
-            }
-            if pmeta.get("mixed_schemas") or (
-                pfields and pfields != fields
-            ):
-                extra["mixed_schemas"] = True
+    elif e["op"] == "append":
         v = commit_snapshot(
             spark, table, op="publish", append_files=e["files"],
             extra=extra,
@@ -1285,7 +1200,12 @@ def _scan_entries(
             return df
         if dels not in key_frames:
             key_frames[dels] = _delete_keys_df(spark, table, dels)
-        return df.join(key_frames[dels], del_keys[dels[0]], how)
+        # a USING join moves its keys to the front; keep the scan's
+        # order (names quoted: a column name may hold a dot)
+        order = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
+        return df.join(key_frames[dels], del_keys[dels[0]], how).select(
+            *order
+        )
 
     def union(a: DataFrame | None, b: DataFrame) -> DataFrame:
         return b if a is None else a.unionByName(b, allowMissingColumns=True)
@@ -1364,10 +1284,13 @@ def optimize_snapshot(
     stats manifest rebuilt after the optimize prunes multi-dimension
     lookups (the layout family's skipping reports quantify it).
 
-    Concurrency: single-writer maintenance, like expire — the commit
-    re-checks that no version landed since the rewrite was planned and
-    ABORTS instead of publishing a version that silently drops the
-    concurrent append's rows. Returns the committed version."""
+    Concurrency: the commit attempt checks that its parent is still
+    the version the rewrite read, and refuses with a "concurrent
+    commit" error instead of publishing a version that silently drops
+    a concurrent append's rows (a partition-attributed table composes
+    with commits to partitions the rewrite did not touch, under
+    :func:`commit_partition_snapshot`'s conflict audit). Returns the
+    committed version."""
     if n_files < 1:
         raise ValueError("n_files must be >= 1")
     versions = list_snapshots(spark, table)
@@ -1396,13 +1319,6 @@ def optimize_snapshot(
         by_part = _write_attributed(
             out, table, part_cols=pcols, distribute=False
         )
-        if list_snapshots(spark, table) != versions:
-            raise RuntimeError(
-                f"concurrent commit detected on {table} while "
-                f"rewriting v{src_v} — re-run in a quiet window (the "
-                "rewrite files are unreferenced residue, reclaimed by "
-                "vacuum)"
-            )
         return commit_partition_snapshot(
             spark, table, pcols, by_part, mode="overwrite",
             expected_parent=src_v,
@@ -1424,13 +1340,6 @@ def optimize_snapshot(
     else:
         out = df.repartition(int(n_files))
     new_files = _write_attributed(out, table)
-    if list_snapshots(spark, table) != versions:
-        raise RuntimeError(
-            f"concurrent commit detected on {table} while rewriting "
-            f"v{src_v} — publishing the optimize would drop the new "
-            "version's rows; re-run in a quiet window (the rewrite "
-            "files are unreferenced residue, reclaimed by vacuum)"
-        )
     # the rewrite homogenizes: record the (possibly merged) schema the
     # rewrite actually wrote and do NOT carry a mixed_schemas flag
     extra = {
@@ -1446,7 +1355,8 @@ def optimize_snapshot(
             list(stats_cols),
         )
     return commit_snapshot(
-        spark, table, new_files, op=f"optimize:{src_v}", extra=extra
+        spark, table, new_files, op=f"optimize:{src_v}", extra=extra,
+        expected_parent=src_v,
     )
 
 
@@ -1681,24 +1591,21 @@ def rewrite_manifests(
     attribution preserved; partitions already at one chunk are
     reused, not rewritten). Returns the new version, or None when the
     table is inline-mode or already fully folded (no commit made —
-    rewriting nothing would only grow history). Single-writer
-    maintenance op, like OPTIMIZE."""
+    rewriting nothing would only grow history). Like OPTIMIZE, the
+    commit refuses with a "concurrent commit" error when a version
+    lands after the one it folded."""
     versions = list_snapshots(spark, table)
     if not versions:
         raise FileNotFoundError(f"{table} has no snapshots")
-    meta = read_snapshot_meta(spark, table, versions[-1])
+    src_v = versions[-1]
+    meta = read_snapshot_meta(spark, table, src_v)
     if "manifests" not in meta:
         return None
     threshold = (
         MANIFEST_INLINE_MAX if chunk is None else max(1, int(chunk))
     )
-    extra: dict = {}
-    for k in (
-        "delete_files", "delete_key_cols", "delete_seqs",
-        "schema", "mixed_schemas", "part_cols",
-    ):
-        if k in meta:
-            extra[k] = meta[k]
+    # the fold keeps every live file, so it inherits the whole lineage
+    extra = snapmeta.inherit(table, meta, part_cols=meta.get("part_cols"))
     if meta.get("part_cols"):
         # fold within each partition; single-chunk partitions reuse
         # their pointer untouched
@@ -1730,6 +1637,7 @@ def rewrite_manifests(
         return commit_snapshot(
             spark, table, op="rewrite-manifests",
             manifests=[m for m, _, _ in written], extra=extra,
+            expected_parent=src_v,
         )
     groups = _seq_groups(
         snapmeta.add_seqs(meta, _manifest_reader(spark, table))
@@ -1744,6 +1652,7 @@ def rewrite_manifests(
     return commit_snapshot(
         spark, table, op="rewrite-manifests",
         manifests=[m for m, _, _ in written], extra=extra,
+        expected_parent=src_v,
     )
 
 
@@ -2160,60 +2069,72 @@ def snapshot_changes(
     )
 
 
-def committed_batch_ids(spark: SparkSession, table: str) -> set[str]:
-    """Batch ids recorded by snapshot commits (``snapshot_sink``) —
-    the replay ledger an exactly-once streaming writer consults."""
-    out: set[str] = set()
+def replay_ledger(
+    spark: SparkSession, table: str, key: str = "batch_id"
+) -> dict:
+    """``{id: version}`` of the commits that recorded ``key`` — a
+    streaming sink's ``batch_id`` or a WAP publish's ``stage_id`` —
+    the ledger an exactly-once writer consults before committing
+    again (driver-side metadata only)."""
+    out: dict = {}
     for v in list_snapshots(spark, table):
-        b = read_snapshot_meta(spark, table, v).get("batch_id")
-        if b is not None:
-            out.add(str(b))
+        i = read_snapshot_meta(spark, table, v).get(key)
+        if i is not None:
+            out[str(i)] = v
     return out
+
+
+def committed_batch_ids(spark: SparkSession, table: str) -> set[str]:
+    """Batch ids recorded by the snapshot sinks' commits."""
+    return set(replay_ledger(spark, table))
+
+
+def _exactly_once(table: str, apply: Callable[[DataFrame, dict], None]):
+    """The foreachBatch wrapper under every snapshot sink.
+    ``apply(batch_df, extra)`` lands one micro-batch as ONE commit
+    carrying ``extra`` (the batch id), so the version log is the
+    replay ledger: a batch id already in it is skipped, and the
+    version history is exactly-once even though foreachBatch delivers
+    at least once (a restart between the data write and the checkpoint
+    commit replays the batch). Readers pinned to any version never see
+    a torn batch: the data files land before the version file that
+    references them, and an unreferenced landing from a crashed
+    attempt is invisible to every snapshot (expire/vacuum residue).
+
+    The ledger is read once per closure (the first batch after a start
+    or restart) and kept in memory after that, so a micro-batch does
+    not re-parse every version file. One streaming query owns the
+    table, as it owns its checkpoint."""
+    state: dict = {"ids": None}
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if state["ids"] is None:
+            state["ids"] = committed_batch_ids(batch_df.sparkSession, table)
+        bid = str(batch_id)
+        if bid not in state["ids"]:
+            apply(batch_df, {"batch_id": bid})
+            state["ids"].add(bid)
+
+    return _sink
 
 
 def snapshot_sink(table: str):
     """foreachBatch sink that lands each micro-batch as a SNAPSHOT
-    APPEND with the epoch id recorded in the commit — replayed batches
-    (restart between the data write and the checkpoint commit) are
-    detected by their batch_id in the version log and SKIPPED, so the
-    version history is exactly-once even though Structured Streaming's
-    foreachBatch contract is at-least-once. Readers pinned to any
-    version never see a torn batch: the data files land before the
-    version file that references them, and an unreferenced landing
-    from a crashed attempt is invisible to every snapshot (and
-    reclaimable as expire/vacuum residue).
+    APPEND, exactly once (:func:`_exactly_once`).
 
     Use: ``df.writeStream.foreachBatch(snapshot_sink(path)).start()``.
     """
 
-    # replay ledger cached in the sink closure: loaded from the version
-    # log ONCE (first batch after a start/restart), then maintained
-    # in-memory — without this every micro-batch re-parses every
-    # version file, O(history) driver reads per batch. Single-writer
-    # assumption (one streaming query owns the table), same as the
-    # checkpoint itself.
-    state: dict = {"ids": None}
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if state["ids"] is None:
-            state["ids"] = committed_batch_ids(spark, table)
-        if str(batch_id) in state["ids"]:
-            return  # replay of an already-committed batch
-        new_files = _write_attributed(batch_df, table)
+    def _apply(batch_df: DataFrame, extra: dict) -> None:
         commit_snapshot(
-            spark,
+            batch_df.sparkSession,
             table,
             op="stream-append",
-            extra={
-                "batch_id": str(batch_id),
-                "schema": batch_df.schema.jsonValue(),
-            },
-            append_files=new_files,
+            extra={**extra, "schema": batch_df.schema.jsonValue()},
+            append_files=_write_attributed(batch_df, table),
         )
-        state["ids"].add(str(batch_id))
 
-    return _sink
+    return _exactly_once(table, _apply)
 
 
 def snapshot_upsert_sink(
@@ -2232,22 +2153,15 @@ def snapshot_upsert_sink(
     so the order MUST come from the data). Without ``order_col`` the
     batch is required to be key-unique and duplicate keys fail loudly
     (:func:`snapshot_upsert`'s check) rather than resolving
-    nondeterministically. Exactly-once like :func:`snapshot_sink`: the
-    epoch id rides in the commit and replayed batches are skipped via
-    the version log, so a replay can never double-apply a batch's
-    deletes onto its own re-inserted rows.
+    nondeterministically. Exactly-once (:func:`_exactly_once`): the
+    epoch id rides in the upsert's commit, so a replay can never
+    double-apply a batch's deletes onto its own re-inserted rows.
 
     Use: ``df.writeStream.foreachBatch(
     snapshot_upsert_sink(path, ["k"], order_col="seq")).start()``."""
     key_cols = list(key_cols)
-    state: dict = {"ids": None}
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if state["ids"] is None:
-            state["ids"] = committed_batch_ids(spark, table)
-        if str(batch_id) in state["ids"]:
-            return  # replay of an already-committed batch
+    def _apply(batch_df: DataFrame, extra: dict) -> None:
         latest = batch_df
         if order_col is not None:
             val_cols = [c for c in batch_df.columns if c not in key_cols]
@@ -2263,10 +2177,12 @@ def snapshot_upsert_sink(
                 )
                 .select(*batch_df.columns)
             )
-        snapshot_upsert(latest, table, key_cols)
-        state["ids"].add(str(batch_id))
+        snapshot_apply_changes(
+            batch_df.sparkSession, table, key_cols, upserts=latest,
+            extra=extra, op="upsert",
+        )
 
-    return _sink
+    return _exactly_once(table, _apply)
 
 
 def snapshot_replicate_sink(table: str, key_cols: Sequence[str]):
@@ -2282,26 +2198,19 @@ def snapshot_replicate_sink(table: str, key_cols: Sequence[str]):
     the key died (delete); earlier versions inside the same batch are
     superseded, so a key updated five times in one batch lands once.
 
-    Exactly-once: the epoch id rides in B's commit metadata and
-    replayed batches are skipped, and because upsert+delete land in
-    ONE commit there is no torn middle state for a crash to expose.
-    Requires a keyed feed (the upstream table's delete/upsert key
-    discipline); ties inside one source version (a key with several
-    +1 rows in one upstream commit, i.e. allow_duplicate_keys
+    Exactly-once (:func:`_exactly_once`), and because upsert+delete
+    land in ONE commit there is no torn middle state for a crash to
+    expose. Requires a keyed feed (the upstream table's delete/upsert
+    key discipline); ties inside one source version (a key with
+    several +1 rows in one upstream commit, i.e. allow_duplicate_keys
     upstream) replicate them all.
 
     Use: ``spark.readStream.format("snapshot_cdc").option("path", A)
     .load().writeStream.foreachBatch(
     snapshot_replicate_sink(B, ["k"])).start()``."""
     key_cols = list(key_cols)
-    state: dict = {"ids": None}
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if state["ids"] is None:
-            state["ids"] = committed_batch_ids(spark, table)
-        if str(batch_id) in state["ids"]:
-            return  # replay of an already-committed batch
+    def _apply(batch_df: DataFrame, extra: dict) -> None:
         vmax = batch_df.groupBy(*key_cols).agg(
             F.max("_cdc_version").alias("_vmax")
         )
@@ -2325,15 +2234,14 @@ def snapshot_replicate_sink(table: str, key_cols: Sequence[str]):
         if not ups.limit(1).count() and not dead.limit(1).count():
             return  # nothing net; skipping is replay-idempotent
         snapshot_apply_changes(
-            spark, table, key_cols,
+            batch_df.sparkSession, table, key_cols,
             upserts=ups, delete_keys=dead,
             allow_duplicate_keys=True,
-            extra={"batch_id": str(batch_id)},
+            extra=extra,
             op="replicate",
         )
-        state["ids"].add(str(batch_id))
 
-    return _sink
+    return _exactly_once(table, _apply)
 
 
 def snapshot_partition_sink(
@@ -2351,38 +2259,24 @@ def snapshot_partition_sink(
     batch overwrites of OTHER partitions (the conflict audit is
     mode-aware). ``mode='overwrite'`` replaces each batch's
     partitions — only correct when a batch carries a partition's full
-    refreshed content (e.g. re-emitting whole days). Exactly-once the
-    same way as :func:`snapshot_sink`: the epoch id rides in the
-    commit and replayed batches are skipped via the version log.
+    refreshed content (e.g. re-emitting whole days). Exactly-once
+    (:func:`_exactly_once`).
 
     Use: ``df.writeStream.foreachBatch(
     snapshot_partition_sink(path, ["day"])).start()``."""
     part_cols = list(part_cols)
-    state: dict = {"ids": None}
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if state["ids"] is None:
-            state["ids"] = committed_batch_ids(spark, table)
-        if str(batch_id) in state["ids"]:
-            return  # replay of an already-committed batch
-        files_by_part = _write_attributed(
-            batch_df, table, part_cols=part_cols
-        )
+    def _apply(batch_df: DataFrame, extra: dict) -> None:
         commit_partition_snapshot(
-            spark,
+            batch_df.sparkSession,
             table,
             part_cols,
-            files_by_part,
+            _write_attributed(batch_df, table, part_cols=part_cols),
             mode=mode,
-            extra={
-                "batch_id": str(batch_id),
-                "schema": batch_df.schema.jsonValue(),
-            },
+            extra={**extra, "schema": batch_df.schema.jsonValue()},
         )
-        state["ids"].add(str(batch_id))
 
-    return _sink
+    return _exactly_once(table, _apply)
 
 
 def snapshot_cdc(
@@ -2607,6 +2501,12 @@ def maintain_snapshot_agg(
         )
         if old_data is not None and old_data != data_rel:
             fsops.delete(spark, f"{root}/{old_data}", recursive=True)
+        # meta temps a crashed replace left beside the meta, age-gated
+        for n in fsops.aged(
+            spark, root, fsops.REPLACE_TEMP_MIN_AGE_S,
+            lambda n: fsops.is_replace_temp(n, "_agg_meta.json"),
+        ):
+            fsops.delete(spark, f"{root}/{n}")
         return spark.read.parquet(f"{root}/{data_rel}")
 
     meta = _read_agg_meta(spark, state_path)
@@ -2733,7 +2633,6 @@ def commit_partition_snapshot(
     mode: str = "overwrite",
     expected_parent: int | None = None,
     extra: dict | None = None,
-    max_retries: int = 16,
     claim: Callable[[str, str], bool] | None = None,
 ) -> int:
     """Commit partition-attributed files: ``overwrite`` atomically
@@ -2757,11 +2656,15 @@ def commit_partition_snapshot(
     (rollback, non-partition writes) — fails loudly instead of
     publishing a lost update. Appends never conflict (they commute).
 
-    Lineage rules, enforced loudly: ``part_cols`` pins at the first
-    partition commit; a table with unattributed live files refuses
-    partition commits; a table carrying equality-delete state refuses
-    them too (fold the deletes with :func:`optimize_snapshot` first —
-    partition overwrite IS the delete mechanism at this grain)."""
+    Lineage rules (:func:`snapmeta.inherit`), enforced loudly on every
+    attempt against the parent the claim lands on: ``part_cols`` pins
+    at the first partition commit; a table with unattributed live
+    files refuses partition commits; a table carrying equality-delete
+    state refuses them too (fold the deletes with
+    :func:`optimize_snapshot` first — partition overwrite IS the delete
+    mechanism at this grain). The schema in ``extra`` sets
+    ``mixed_schemas`` as for a flat append while any parent file
+    stays live."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     part_cols = list(part_cols)
@@ -2774,24 +2677,9 @@ def commit_partition_snapshot(
             if versions
             else {}
         )
-        if pmeta:
-            if snapmeta.delete_files(pmeta):
-                raise ValueError(
-                    f"{table} carries equality-delete state — fold it "
-                    "(optimize_snapshot) before partition-grain commits"
-                )
-            pinned = pmeta.get("part_cols")
-            if pinned is None and pmeta.get("n_files", 0) > 0:
-                raise ValueError(
-                    f"{table} has live files with no partition "
-                    "attribution — partition-grain commits need an "
-                    "attributed lineage from the first write"
-                )
-            if pinned is not None and list(pinned) != part_cols:
-                raise ValueError(
-                    f"{table} pins partition columns {pinned}, "
-                    f"refusing {part_cols}"
-                )
+        lineage = snapmeta.inherit(
+            table, pmeta, (extra or {}).get("schema"), part_cols=part_cols
+        )
         if expected_parent is not None:
             for iv in versions:
                 if iv <= expected_parent:
@@ -2829,6 +2717,9 @@ def commit_partition_snapshot(
         for m, pk, n in new_manifests:
             mparts[m] = pk
             msizes[m] = n
+        if not keep:
+            # every parent file is replaced: one homogeneous schema
+            lineage.pop("mixed_schemas", None)
         meta = {
             "version": v,
             "op": f"part-{mode}",
@@ -2837,14 +2728,14 @@ def commit_partition_snapshot(
             "manifest_parts": mparts,
             "manifest_sizes": msizes,
             "n_files": sum(msizes.values()),
-            "part_cols": part_cols,
             "touched_parts": sorted(mine),
             "committed_ms": int(_time.time() * 1000),
+            **lineage,
         }
         meta.update(extra or {})
         return meta
 
-    return _commit(spark, table, build, claim, max_retries)
+    return _commit(spark, table, build, claim)
 
 
 def snapshot_write_partitions(
@@ -2923,31 +2814,10 @@ def snapshot_upsert_partitions(
         )
     if expected_parent is None:
         expected_parent = versions[-1]
+    # the planning read: the merge reads the touched partitions as of
+    # this version, and the lineage rules refuse before anything lands
     pmeta = read_snapshot_meta(spark, table, expected_parent)
-    pinned = pmeta.get("part_cols")
-    if pinned is None:
-        raise ValueError(
-            f"{table} is not partition-attributed — use snapshot_upsert"
-        )
-    if list(pinned) != part_cols:
-        raise ValueError(
-            f"{table} pins partition columns {pinned}, got {part_cols}"
-        )
-    def _dup_check() -> None:
-        dup = (
-            df.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                "upsert batch carries multiple rows for key "
-                f"{tuple(dup[0][c] for c in key_cols)} — dedupe the "
-                "batch or pass allow_duplicate_keys=True"
-            )
-
+    snapmeta.inherit(table, pmeta, part_cols=part_cols)
     # touched partition values: k-row collect (#partitions, never
     # rows) — overlapped with the dup-check as concurrent jobs (both
     # are batch-sized; nothing is written until both return)
@@ -2955,7 +2825,9 @@ def snapshot_upsert_partitions(
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         fut_dup = (
-            pool.submit(_dup_check) if not allow_duplicate_keys else None
+            pool.submit(_refuse_duplicate_keys, df, key_cols)
+            if not allow_duplicate_keys
+            else None
         )
         touched = df.select(*part_cols).distinct().collect()
         if fut_dup is not None:

@@ -465,8 +465,9 @@ def test_pin_frame_default_local_reliable_opt_in(spark, tmp_path):
     the configured dir. Values identical either way — for a bare
     frame, for an in-session block-max call (postings, seeds, θ,
     essential split, surviving blocks), for a tombstoned index
-    serve (tombstones, dead-doc df) and for a min/max snapshot
-    aggregate refresh with removals (affected groups)."""
+    serve (tombstones, dead-doc df), for a min/max snapshot
+    aggregate refresh with removals (affected groups) and for the
+    span ingest gate's verdict."""
     import os
 
     from cmsspark_spark.operators import retrieval as R
@@ -497,6 +498,16 @@ def test_pin_frame_default_local_reliable_opt_in(spark, tmp_path):
     def ck_files():
         return sum(len(files) for _, _, files in os.walk(ckdir))
 
+    def span_gate():
+        from cmsspark_spark.operators.incremental import (
+            score_increment_span_dedup,
+        )
+
+        inc = docs.select("doc_id", "text").limit(20)
+        return rows(score_increment_span_dedup(
+            spark, inc, str(tmp_path / "census"), window=4
+        ))
+
     # a min/max refresh with removals pins its affected-group set: two
     # states of one table at v1, each refreshed to the v2 delete
     table = str(tmp_path / "snap")
@@ -521,6 +532,8 @@ def test_pin_frame_default_local_reliable_opt_in(spark, tmp_path):
     assert sorted(r.x for r in local.collect()) == [0, 1, 2, 3, 4]
     want_blockmax, want_serve = blockmax(), serve()
     want_agg = agg("agg_local")
+    want_gate = span_gate()
+    assert want_gate  # an empty census admits the increment
     assert not os.path.isdir(ckdir)  # default never touches disk
     spark.sparkContext.setCheckpointDir(ckdir)
     spark.conf.set("spark.cmsspark.checkpoint.reliable", "true")
@@ -536,7 +549,10 @@ def test_pin_frame_default_local_reliable_opt_in(spark, tmp_path):
         n2 = ck_files()
         assert n2 > n1
         assert agg("agg_reliable") == want_agg
-        assert ck_files() > n2
+        n3 = ck_files()
+        assert n3 > n2
+        assert span_gate() == want_gate
+        assert ck_files() > n3
     finally:
         spark.conf.set("spark.cmsspark.checkpoint.reliable", "false")
         invalidate_session_memos(spark)

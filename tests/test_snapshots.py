@@ -2840,3 +2840,168 @@ def test_staged_upsert_write_audit_publish(spark, tmp_path):
     with pytest.raises(ValueError, match="pins delete keys"):
         S.publish_staged(spark, t, bad)
     S.discard_staged(spark, t, bad)
+
+
+# ---------------------------------------------------------------------------
+# The parent contract: every parent-dependent decision is made inside the
+# commit attempt, against the parent the claim lands on. Each race lands a
+# competing commit deterministically inside the writer's own commit path.
+# ---------------------------------------------------------------------------
+
+
+def _race_inside(monkeypatch, name, competing):
+    """Run ``competing()`` once, when the writer next calls ``S.<name>``
+    — after it made every decision that precedes that step."""
+    real = getattr(S, name)
+
+    def racing(*args, **kwargs):
+        monkeypatch.setattr(S, name, real)
+        competing()
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, name, racing)
+
+
+def test_evolving_append_race_keeps_mixed_schemas(spark, tmp_path, monkeypatch):
+    """An append whose parent gains a column before the claim derives
+    the schema flag from the parent it lands on: the commit stays
+    mixed_schemas and the concurrent writer's column reads back."""
+    t = str(tmp_path / "t")
+    S.snapshot_write(spark.range(0, 3), t)
+    _race_inside(monkeypatch, "_commit", lambda: S.snapshot_write(
+        spark.range(10, 12).selectExpr("id", "id * 7 AS x"), t
+    ))
+    v = S.snapshot_write(spark.range(3, 5), t)
+    assert v == 3
+    assert S.read_snapshot_meta(spark, t, v).get("mixed_schemas") is True
+    got = {r.id: r.x for r in S.read_snapshot(spark, t).collect()}
+    assert got == {0: None, 1: None, 2: None, 3: None, 4: None,
+                   10: 70, 11: 77}
+
+
+def test_delete_race_on_other_keys_is_refused(spark, tmp_path, monkeypatch):
+    """A delete keyed on ``v`` that loses its race to a delete keyed on
+    ``id`` is refused at the claim (the winner pinned the keys), and
+    the winner's deleted row stays dead."""
+    t = str(tmp_path / "t")
+    S.snapshot_write(
+        spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "id long, v long"),
+        t,
+    )
+    _race_inside(monkeypatch, "_commit", lambda: S.snapshot_delete(
+        spark, t, spark.createDataFrame([(1,)], "id long"), ["id"]
+    ))
+    with pytest.raises(ValueError, match="pins delete keys"):
+        S.snapshot_delete(
+            spark, t, spark.createDataFrame([(30,)], "v long"), ["v"]
+        )
+    assert S.list_snapshots(spark, t) == [1, 2]
+    assert _ids(S.read_snapshot(spark, t)) == [2, 3]
+
+
+def test_rewrite_manifests_refuses_concurrent_append(
+    spark, tmp_path, monkeypatch
+):
+    """A manifest fold that a concurrent append lands under refuses
+    with "concurrent commit" instead of dropping the append's rows."""
+    monkeypatch.setattr(S, "MANIFEST_INLINE_MAX", 1)
+    t = str(tmp_path / "t")
+    for lo in (0, 1, 2):
+        S.snapshot_write(spark.range(lo, lo + 1), t)
+    _race_inside(monkeypatch, "_write_manifests", lambda: S.snapshot_write(
+        spark.range(99, 100), t
+    ))
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        S.rewrite_manifests(spark, t, chunk=100)
+    assert _ids(S.read_snapshot(spark, t)) == [0, 1, 2, 99]
+
+
+def test_optimize_with_stats_refuses_append_during_stats_job(
+    spark, tmp_path, monkeypatch
+):
+    """An append that lands while OPTIMIZE computes its file stats —
+    after the rewrite files landed — is caught at the claim."""
+    t = str(tmp_path / "t")
+    S.snapshot_write(spark.range(0, 20), t)
+    S.snapshot_write(spark.range(20, 30), t)
+    _race_inside(monkeypatch, "_compute_file_stats", lambda: S.snapshot_write(
+        spark.range(99, 100), t
+    ))
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        S.optimize_snapshot(spark, t, n_files=1, stats_cols=["id"])
+    assert _ids(S.read_snapshot(spark, t)) == list(range(30)) + [99]
+
+
+def _replay_batch(spark, kind):
+    rows = [(1, 10, "d1"), (2, 20, "d2")]
+    df = spark.createDataFrame(rows, "id long, v long, day string")
+    if kind == "replicate":
+        return df.withColumn("_cdc_sign", F.lit(1)).withColumn(
+            "_cdc_version", F.lit(1).cast("long")
+        )
+    return df
+
+
+SINKS = {
+    "append": lambda t: S.snapshot_sink(t),
+    "upsert": lambda t: S.snapshot_upsert_sink(t, ["id"]),
+    "replicate": lambda t: S.snapshot_replicate_sink(t, ["id"]),
+    "partition": lambda t: S.snapshot_partition_sink(t, ["day"]),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(SINKS))
+def test_sink_replay_through_fresh_closure_commits_once(spark, tmp_path, kind):
+    """Every snapshot sink records its batch id in its commit: the same
+    batch delivered again through a fresh closure (a restarted query)
+    is skipped, so the table holds one version of it."""
+    t = str(tmp_path / "t")
+    SINKS[kind](t)(_replay_batch(spark, kind), 0)
+    SINKS[kind](t)(_replay_batch(spark, kind), 0)
+    assert S.list_snapshots(spark, t) == [1]
+    assert S.committed_batch_ids(spark, t) == {"0"}
+    assert _ids(S.read_snapshot(spark, t)) == [1, 2]
+
+
+def test_key_join_keeps_column_order(spark, tmp_path):
+    """Deletes keyed on a non-leading column leave every read in the
+    table's own column order (a USING join would move the key first)."""
+    t = str(tmp_path / "t")
+    rows = "id long, v long"
+    S.snapshot_write(spark.createDataFrame([(1, 10), (2, 20)], rows), t)
+    S.snapshot_write(spark.createDataFrame([(3, 30), (4, 40)], rows), t)
+    S.snapshot_delete(
+        spark, t, spark.createDataFrame([(20,), (30,)], "v long"), ["v"]
+    )
+    assert S.read_snapshot(spark, t).columns == ["id", "v"]
+    assert _ids(S.read_snapshot(spark, t)) == [1, 4]
+    cdc = S.snapshot_cdc(spark, t, 1, 3)
+    assert cdc.columns == ["id", "v", "_cdc_sign"]
+    assert sorted(tuple(r) for r in cdc.collect()) == [
+        (2, 20, -1), (4, 40, 1),
+    ]
+    changes = S.snapshot_changes(spark, t, 1, 3)
+    assert changes.columns == ["id", "v"]
+    assert sorted(tuple(r) for r in changes.collect()) == [(4, 40)]
+
+
+def test_agg_refresh_reclaims_aged_meta_temps(spark, tmp_path):
+    """A refresh sweeps the temporaries a crashed ``_agg_meta.json``
+    replace left beside the meta once they are old; a fresh temp (a
+    writer mid-replace) and the meta itself stay."""
+    import os
+    import time
+
+    t, state = str(tmp_path / "t"), tmp_path / "agg"
+    S.snapshot_write(spark.range(0, 6).selectExpr("id", "id % 2 AS g"), t)
+    S.maintain_snapshot_agg(spark, t, str(state), ["g"], ["id"])
+    aged = state / "_agg_meta.json.tmp.0123abcd"
+    fresh = state / "_agg_meta.json.tmp.4567ef01"
+    for p in (aged, fresh):
+        p.write_text("{}")
+    old = time.time() - 2 * 3600
+    os.utime(aged, (old, old))
+    S.snapshot_write(spark.range(6, 8).selectExpr("id", "id % 2 AS g"), t)
+    S.maintain_snapshot_agg(spark, t, str(state), ["g"], ["id"])
+    assert not aged.exists()
+    assert fresh.exists() and (state / "_agg_meta.json").exists()

@@ -1468,6 +1468,39 @@ def test_assign_splits_snapshot_pinned_state(spark, tmp_path):
     assert assign_splits.state_pin(spark, state)["version"] == 2
 
 
+def test_assign_splits_reclaims_aged_pin_temps(spark, tmp_path):
+    """A pinned batch run sweeps the temporaries a crashed ``_pin.json``
+    replace left in the state dir once they are old; a fresh temp (a
+    writer mid-replace) and the pin itself stay."""
+    import os
+    import time
+
+    from cmsspark_spark.jobs import assign_splits
+    from cmsspark_spark.operators import snapshots as SN
+
+    table = str(tmp_path / "corpus_snap")
+    SN.snapshot_write(
+        spark.createDataFrame(
+            [(1, "alpha beta gamma delta"), (2, "epsilon zeta eta theta")],
+            ["doc_id", "text"],
+        ),
+        table,
+    )
+    state = tmp_path / "state"
+    state.mkdir()
+    aged = state / "_pin.json.tmp.0123abcd"
+    fresh = state / "_pin.json.tmp.4567ef01"
+    for p in (aged, fresh):
+        p.write_text("{}")
+    old = time.time() - 2 * 3600
+    os.utime(aged, (old, old))
+    assign_splits.run_batch(
+        spark, sf_dir=None, state=str(state), snapshot_table=table
+    )
+    assert not aged.exists()
+    assert fresh.exists() and (state / "_pin.json").exists()
+
+
 def test_unpinned_rebuild_clears_stale_pin(spark, tmp_path):
     """ADVICE r11: an UNPINNED rebuild (snapshot_table=None) over a
     previously-pinned state dir must retire the old _pin.json —
