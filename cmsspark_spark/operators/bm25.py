@@ -2,15 +2,18 @@
 scoring, rank, the max-score θ / essential-term split and the
 block-max survival rule, each written once.
 
-Two stacks derive the state this kernel reads:
+Both stacks start from one postings step, :func:`postings_state`:
+one tokenize pass per corpus per session, memoized as
+(postings, sum_dl, n_docs). From it they derive the state this
+kernel reads:
 
 - the in-session rungs (operators/pipeline.py: exact, RM3, champion,
-  max-score, block-max) derive it from memoized postings of the corpus
-  frame — exact bounds (max tf-part over the real postings) and the
-  two-phase salted champion cut by rounded tf-part;
-- the persisted index (operators/retrieval.py) derives it from monoid
-  partials merged at serve time — (max_tf, min_dl) bounds, tf-ordered
-  champions, tombstone corrections.
+  max-score, block-max) serve it directly — exact bounds (max tf-part
+  over the real postings) and the two-phase salted champion cut by
+  rounded tf-part;
+- the persisted index (operators/retrieval.py) writes it as one
+  commit of monoid partials, merged at serve time — (max_tf, min_dl)
+  bounds, tf-ordered champions, tombstone corrections.
 
 Both hand the kernel frames over the index's column names: postings
 ``(doc, t, dl, tf)``, query terms ``(_qid, t)``, a df table
@@ -65,7 +68,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from cmsspark_spark.operators.memo import pin_frame
+from cmsspark_spark.functions.text import doc_term_postings
+from cmsspark_spark.operators.memo import SessionMemo, composite_key, pin_frame
 
 #: Okapi scoring constants; the derived sums are literals (see the
 #: module docstring on float parity with the oracles).
@@ -76,6 +80,77 @@ K1, B, K1_PLUS_1, ONE_MINUS_B = 1.2, 0.75, 2.2, 0.25
 #: MB serialized — comfortably broadcastable; beyond it the
 #: candidate-scoring join falls back to a hash join.
 _BROADCAST_CAND_MAX = 2_000_000
+
+
+def _spread_small_scan(df: DataFrame) -> DataFrame:
+    """Round out scan parallelism for CPU-heavy narrow maps
+    (tokenize → explode): a corpus that arrives in fewer scan splits
+    than the cluster has slots runs its per-row work serially on
+    those few tasks (the classic one-small-file shape — guide §2.5
+    'input skew'). When the plan has fewer partitions than
+    ``defaultParallelism``, repartition up to it BEFORE the heavy map
+    so the explode/aggregate runs on every core; at scale the scan
+    already has more splits than slots and this is a no-op (no
+    shuffle is added), so the fix is scale-adaptive, not a local
+    tuning constant."""
+    sc = df.sparkSession.sparkContext
+    n = sc.defaultParallelism
+    if df.rdd.getNumPartitions() < n:
+        return df.repartition(n)
+    return df
+
+
+#: Session memo for the (postings, sum_dl, n_docs) triple both stacks
+#: start from: the in-session rungs (exact, champion, max-score,
+#: block-max, RM3, hard negatives) and the persisted index's append
+#: tokenize the SAME corpus — without sharing, each pays the full
+#: postings kernel pass plus the two scalar driver jobs. The memoized
+#: postings frame is pinned (pin_frame: (doc, t, dl, tf)
+#: ids-and-tokens rows, no raw text), so clearCache() between queries
+#: does not drop it; the postings and the scalars sit under their own
+#: tagged keys; fresh-data keys per operators/memo.py, unsafe keys
+#: fall back to a persist per call.
+_POSTINGS_MEMO = SessionMemo("bm25_postings")
+
+
+def postings_state(
+    docs: DataFrame, id_col: str, text_col: str
+) -> tuple[DataFrame, int, int]:
+    """(postings, sum_dl, n_docs) for the corpus — built once per
+    session per (plan, files) and shared by every BM25 rung and by
+    the index append: the pinned postings frame, over the kernel's
+    (doc, t, dl, tf) column names, and the two scalars under their own
+    keys. ``n_docs`` counts every row of ``docs``, zero-token ones
+    included. An unmemoizable ``docs`` gets a persisted (``is_cached``)
+    postings frame instead, which the caller may unpersist when done."""
+    spark = docs.sparkSession
+    key = _POSTINGS_MEMO.key_for(docs, id_col, text_col)
+    post = _POSTINGS_MEMO.get_or(
+        spark,
+        composite_key("post", key),
+        lambda: doc_term_postings(
+            _spread_small_scan(docs.select(id_col, text_col)),
+            id_col, text_col, cols=("doc", "t", "dl", "tf"),
+        ),
+        pin=True,
+    )
+    if key is None:
+        # unmemoized and unpinned: persist, so the stats actions and
+        # every later consumer share one tokenize pass
+        from pyspark import StorageLevel
+
+        post = post.persist(StorageLevel.MEMORY_AND_DISK)
+
+    def stats() -> tuple[int, int]:
+        # every token adds one to exactly one posting's tf, so Σ tf is
+        # Σ dl over the docs: one global sum, no per-doc shuffle
+        sum_dl = post.select(F.sum("tf")).first()[0] or 0
+        return sum_dl, docs.count()
+
+    sum_dl, n_docs = _POSTINGS_MEMO.get_or(
+        spark, composite_key("stats", key), stats
+    )
+    return post, sum_dl, n_docs
 
 
 def idf(n_docs: int) -> Column:

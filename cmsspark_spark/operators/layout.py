@@ -35,6 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from cmsspark_spark import fsops
+from cmsspark_spark.session import local_frame
 
 #: bits per dimension in the z-order key (two dims -> 2*BITS-bit key)
 ZORDER_BITS = 8
@@ -442,7 +443,7 @@ def read_rowgroups(
     out_schema = src.select(*columns).schema if columns else src.schema
     cols = list(columns) if columns else [f.name for f in src.schema.fields]
     if not pairs:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     unmapped = {
         urlparse(full[f]).scheme
         for f, _ in pairs
@@ -456,7 +457,8 @@ def read_rowgroups(
             "mapped: file, s3/s3a/s3n, gs/gcs, hdfs/viewfs"
         )
     rows = [(full[f], rg) for f, rg in pairs if f in full]
-    plan_df = spark.createDataFrame(
+    plan_df = local_frame(
+        spark,
         rows, "path string, row_group int"
     ).repartition(max(1, min(len(rows), spark.sparkContext.defaultParallelism)))
 
@@ -1139,7 +1141,8 @@ def rowgroup_stats_manifest(
 
     parts = []
     if exec_paths:
-        files_df = spark.createDataFrame(
+        files_df = local_frame(
+            spark,
             [(p,) for p in exec_paths], "path string"
         ).repartition(max(1, min(len(exec_paths), 32)))
         parts.append(files_df.mapInPandas(parse, schema=schema))
@@ -1165,9 +1168,9 @@ def rowgroup_stats_manifest(
                     rec[f"min_{d}"] = st.min
                     rec[f"max_{d}"] = st.max
                 rows.append(tuple(rec[c] for c in cols))
-        parts.append(spark.createDataFrame(rows, schema))
+        parts.append(local_frame(spark, rows, schema))
     if not parts:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     out = parts[0]
     for extra in parts[1:]:
         out = out.unionByName(extra)

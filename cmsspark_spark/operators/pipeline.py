@@ -27,32 +27,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
-from cmsspark_spark.functions.text import (
-    doc_term_postings,
-    raw_ngrams,
-    tokens,
-)
+from cmsspark_spark.functions.text import raw_ngrams, tokens
 from cmsspark_spark.operators import bm25
 from cmsspark_spark.operators.memo import SessionMemo as _SessionMemo
 from cmsspark_spark.operators.memo import composite_key, pin_frame
-
-
-def _spread_small_scan(df: DataFrame) -> DataFrame:
-    """Round out scan parallelism for CPU-heavy narrow maps
-    (tokenize → explode): a corpus that arrives in fewer scan splits
-    than the cluster has slots runs its per-row work serially on
-    those few tasks (the classic one-small-file shape — guide §2.5
-    'input skew'). When the plan has fewer partitions than
-    ``defaultParallelism``, repartition up to it BEFORE the heavy map
-    so the explode/aggregate runs on every core; at scale the scan
-    already has more splits than slots and this is a no-op (no
-    shuffle is added), so the fix is scale-adaptive, not a local
-    tuning constant."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
+from cmsspark_spark.session import local_frame
 
 
 def ngram_overlap(
@@ -241,7 +220,7 @@ def bm25_more_like_this(
 
     Downstream compositions — the champion recall report,
     hard-negative mining — share the postings STATE via
-    ``_postings_stats``; the ranking itself recomputes on every call
+    ``bm25.postings_state``; the ranking itself recomputes on every call
     (the r12-era ranked-OUTPUT memo was result caching and is retired
     — VERDICT r13 item 1).
     """
@@ -254,64 +233,12 @@ def bm25_more_like_this(
     return bm25.ranked(scored, k, id_col)
 
 
-#: Session memo for the (postings, sum_dl, n_docs) triple every BM25
-#: rung starts from: six registry rungs (exact, champion, max-score,
-#: block-max, RM3, hard negatives) tokenize the SAME corpus — without
-#: sharing, each pays the full sort+RLE postings pass plus the two
-#: scalar driver jobs. The memoized postings frame is pinned
-#: (pin_frame: (doc, t, dl, tf) ids-and-tokens rows, no raw text),
-#: so clearCache() between queries does not drop it; the postings and
-#: the scalars sit under their own tagged keys; fresh-data keys per
-#: operators/memo.py, unsafe keys fall back to the per-rung persist.
-_POSTINGS_MEMO = _SessionMemo("bm25_postings")
-
-
-def _postings_stats(
-    docs: DataFrame, id_col: str, text_col: str
-) -> tuple[DataFrame, int, int]:
-    """(postings, sum_dl, n_docs) for the corpus — built once per
-    session per (plan, files) and shared by every BM25 rung: the
-    pinned postings frame, over the kernel's (doc, t, dl, tf) column
-    names, and the two scalars under their own keys."""
-    spark = docs.sparkSession
-    key = _POSTINGS_MEMO.key_for(docs, id_col, text_col)
-    post = _POSTINGS_MEMO.get_or(
-        spark,
-        composite_key("post", key),
-        lambda: doc_term_postings(
-            _spread_small_scan(docs.select(id_col, text_col)),
-            id_col, text_col, cols=("doc", "t", "dl", "tf"),
-        ),
-        pin=True,
-    )
-    if key is None:
-        # unmemoized and unpinned: persist, so the stats actions and
-        # every later consumer share one tokenize pass
-        from pyspark import StorageLevel
-
-        post = post.persist(StorageLevel.MEMORY_AND_DISK)
-
-    def stats() -> tuple[int, int]:
-        sum_dl = (
-            post.groupBy("doc")
-            .agg(F.first("dl").alias("dl"))
-            .select(F.sum("dl"))
-            .first()[0]
-        ) or 0
-        return sum_dl, docs.count()
-
-    sum_dl, n_docs = _POSTINGS_MEMO.get_or(
-        spark, composite_key("stats", key), stats
-    )
-    return post, sum_dl, n_docs
-
-
 def _query_view(
     docs: DataFrame, id_col: str, text_col: str, query_max_id: int
 ) -> tuple[DataFrame, int, float, DataFrame]:
     """(postings, n_docs, avgdl, query terms) — the in-session state
     every rung starts from; docs with id < ``query_max_id`` query."""
-    post, sum_dl, n_docs = _postings_stats(docs, id_col, text_col)
+    post, sum_dl, n_docs = bm25.postings_state(docs, id_col, text_col)
     qterms = post.filter(F.col("doc") < query_max_id).select(
         F.col("doc").alias("_qid"), "t"
     )
@@ -364,7 +291,7 @@ def bm25_rm3_more_like_this(
     postings — expansion cost never scales with the corpus.
 
     Both rounds recompute on every call from the shared postings
-    STATE (``_postings_stats``); the ranked output is not memoized
+    STATE (``bm25.postings_state``); the ranked output is not memoized
     (VERDICT r13 item 1)."""
     post, n_docs, avgdl, qterms = _query_view(
         docs, id_col, text_col, query_max_id
@@ -504,7 +431,7 @@ def bm25_champion_topk(
     shuffles.
 
     The recall report shares this rung's postings STATE
-    (``_postings_stats``); the champion cut and ranking recompute on
+    (``bm25.postings_state``); the champion cut and ranking recompute on
     every call (ranked-output memoization retired — VERDICT r13
     item 1).
     """
@@ -816,10 +743,11 @@ def bm25_blockmax_parts(
     from it (VERDICT r13 item 1)."""
     if (
         min_prune_docs is not None
-        and _postings_stats(docs, id_col, text_col)[2] < int(min_prune_docs)
+        and bm25.postings_state(docs, id_col, text_col)[2] < int(min_prune_docs)
     ):
         ranked = bm25_more_like_this(docs, id_col, text_col, query_max_id, k)
-        empty_report = docs.sparkSession.createDataFrame(
+        empty_report = local_frame(
+            docs.sparkSession,
             [],
             "query_id long, n_terms long, n_essential long, "
             "blocks_total long, blocks_pruned long, "
@@ -1473,7 +1401,8 @@ def logreg_hashed_score(feat: DataFrame, weights: list) -> DataFrame:
     per-doc aggregation as training. Returns (_id, _y, p) with
     ``p = σ(Σ c·w)`` un-rounded (callers round for display/parity)."""
     spark = feat.sparkSession
-    w_df = spark.createDataFrame(
+    w_df = local_frame(
+        spark,
         [(b, float(wv)) for b, wv in enumerate(weights)], "_b long, _w double"
     )
     return (

@@ -44,13 +44,13 @@ construction, under the CURRENT avgdl (a global scalar read at serve
 time; bounds are recomputed from the merged per-term stats in one
 vocabulary-sized pass, never from postings).
 
-Scale: an append tokenizes only the increment (one (doc, term)
-shuffle over increment rows); serve reads postings with the doc/term
-predicates pushed to parquet; scoring, θ, the essential split, block
-survival and rank run through the kernel the in-session rungs use
-(operators/bm25.py: query terms, df table and candidate ids
-broadcast; text never shuffles — text is never even stored in the
-index).
+Scale: an append tokenizes only the increment, through the postings
+step both stacks share (bm25.postings_state); serve reads postings
+with the doc/term predicates pushed to parquet; scoring, θ, the
+essential split, block survival and rank run through the kernel the
+in-session rungs use (operators/bm25.py: query terms, df table and
+candidate ids broadcast; text never shuffles — text is never even
+stored in the index).
 
 DURABILITY (VERDICT r11 item 2): every append is ONE ATOMIC COMMIT —
 all tables staged under ``_staging/<uuid>/`` and published by a single
@@ -77,6 +77,7 @@ from cmsspark_spark import fsops
 from cmsspark_spark.functions.text import tokens
 from cmsspark_spark.operators import bm25, snapmeta
 from cmsspark_spark.operators.memo import pin_frame
+from cmsspark_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -256,19 +257,6 @@ def _finalize_commit(
 BLOCK_SIZE = 64
 
 
-def _inc_postings(
-    increment: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """(doc, t, tf, dl) for the increment only — the one tokenize
-    pass an append pays. Row-local run-length counting
-    (``doc_term_postings``): no token-level shuffle."""
-    from cmsspark_spark.functions.text import doc_term_postings
-
-    return doc_term_postings(
-        increment, id_col, text_col, cols=("doc", "t", "dl", "tf")
-    )
-
-
 def _champion_cut(rows: DataFrame, champions: int) -> DataFrame:
     """Per-term top-``champions`` rows by (tf desc, doc asc)."""
     w = Window.partitionBy("t").orderBy(F.col("tf").desc(), F.col("doc"))
@@ -331,6 +319,15 @@ def append_bm25_index(
     contract as every appendable state here: disjoint doc sets per
     commit).
 
+    The postings and the globals row's (n_docs, sum_dl) come from the
+    SHARED POSTINGS STATE, :func:`bm25.postings_state` — the session
+    memo the in-session rungs read too. So an append of a corpus this
+    session already tokenized (an in-session serve over the same
+    frame, or the other way round) runs no second kernel pass, and a
+    memoized increment stays in that memo, bounded by its LRU. An
+    unmemoizable increment is tokenized once, persisted for this
+    append and released when it ends.
+
     ``tombstones`` rides IN THE SAME COMMIT when the increment also
     deletes (the snapshot-consume removals path) — delete + append
     become one atomic unit. ``commit_tag`` is recorded in the commit's
@@ -347,8 +344,6 @@ def append_bm25_index(
     silently miss phrase matches in the uncovered docs. Returns the
     committed directory path."""
     import uuid as _uuid
-
-    from pyspark import StorageLevel
 
     spark = increment.sparkSession
     meta_path = f"{index_dir}/_index_meta.json"
@@ -380,48 +375,42 @@ def append_bm25_index(
             "index would silently miss phrase matches; rebuild"
         )
     stage = f"{_staging_root(index_dir)}/{_uuid.uuid4().hex}"
-    post = _inc_postings(increment, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    post.write.parquet(f"{stage}/postings")
-    # block-grain bound partials are the same (count, max_tf, min_dl)
-    # monoid one level down — only blocks the increment touches get
-    # new rows, and the serve-time merge per (t, blk) equals a
-    # full-corpus block cut
-    for name, frame in _stat_partials(post, champions).items():
-        frame.write.parquet(f"{stage}/{name}")
-    if positions:
-        # one extra tokenize pass over the increment only — the
-        # positional lists are per-(term, doc) sorted offsets, the
-        # exact shape the phrase check's shift-and-intersect needs
-        (
-            increment.select(
-                F.col(id_col).alias("doc"), tokens(text_col).alias("_tk")
+    post, sum_dl, n_docs = bm25.postings_state(increment, id_col, text_col)
+    try:
+        post.write.parquet(f"{stage}/postings")
+        # block-grain bound partials are the same (count, max_tf, min_dl)
+        # monoid one level down — only blocks the increment touches get
+        # new rows, and the serve-time merge per (t, blk) equals a
+        # full-corpus block cut
+        for name, frame in _stat_partials(post, champions).items():
+            frame.write.parquet(f"{stage}/{name}")
+        if positions:
+            # one extra tokenize pass over the increment only — the
+            # positional lists are per-(term, doc) sorted offsets, the
+            # exact shape the phrase check's shift-and-intersect needs
+            (
+                increment.select(
+                    F.col(id_col).alias("doc"), tokens(text_col).alias("_tk")
+                )
+                .select("doc", F.posexplode("_tk").alias("pos", "t"))
+                .groupBy("t", "doc")
+                .agg(F.sort_array(F.collect_list("pos")).alias("posns"))
+                .write.parquet(f"{stage}/positions")
             )
-            .select("doc", F.posexplode("_tk").alias("pos", "t"))
-            .groupBy("t", "doc")
-            .agg(F.sort_array(F.collect_list("pos")).alias("posns"))
-            .write.parquet(f"{stage}/positions")
-        )
-    if tombstones is not None:
-        (
-            tombstones.select(F.col(id_col).alias("doc"))
-            .distinct()
-            .write.parquet(f"{stage}/tombstones")
-        )
-    n_docs = increment.count()
-    sum_dl = (
-        post.groupBy("doc").agg(F.first("dl").alias("dl"))
-        .select(F.sum("dl"))
-        .first()[0]
-    ) or 0
-    (
-        spark.createDataFrame(
-            [(int(n_docs), int(sum_dl))], "n_docs long, sum_dl long"
-        )
-        .write.parquet(f"{stage}/globals")
-    )
-    post.unpersist()
+        if tombstones is not None:
+            (
+                tombstones.select(F.col(id_col).alias("doc"))
+                .distinct()
+                .write.parquet(f"{stage}/tombstones")
+            )
+        local_frame(
+            spark, [(int(n_docs), int(sum_dl))], "n_docs long, sum_dl long"
+        ).write.parquet(f"{stage}/globals")
+    finally:
+        if post.is_cached:
+            # an unmemoizable increment: its postings were persisted
+            # for this append only
+            post.unpersist()
     # the tag lands INSIDE the staging dir before the rename, so a
     # visible commit always carries its provenance
     fsops.write_json_meta(
@@ -935,7 +924,7 @@ def _boolean_parts(
     ]
     if not qrows:
         raise ValueError("queries must carry at least one term")
-    qdf = spark.createDataFrame(qrows, "_qid long, _off int, t string")
+    qdf = local_frame(spark, qrows, "_qid long, _off int, t string")
     tdist = qdf.select("t").distinct()
     qterms = qdf.select("_qid", "t").distinct()
     qlens = qdf.groupBy("_qid").agg(
@@ -1042,7 +1031,7 @@ def bm25_index_boolean_serve(
             for t in terms
         ]
         if ex_rows:
-            ex_df = spark.createDataFrame(ex_rows, "_qid long, t string")
+            ex_df = local_frame(spark, ex_rows, "_qid long, t string")
             dead = parts["post"].join(F.broadcast(ex_df), "t").select(
                 "_qid", "doc"
             )
@@ -1237,7 +1226,8 @@ def compact_bm25_index(
     for name, frame in _stat_partials(live, champions).items():
         frame.write.mode("overwrite").parquet(f"{base}/{name}")
     (
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(st["n_docs"]), int(st["sum_dl"]))],
             "n_docs long, sum_dl long",
         )
@@ -1332,7 +1322,8 @@ def bm25_index_commit_report(
     one per live commit, plus one for the compacted base."""
     n_commits = index_table(spark, index_dir, "globals").count()
     g = _merged_state(spark, index_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(n_commits),

@@ -27,6 +27,7 @@ from cmsspark_spark.functions.vectors import (
     l2_norm,
     sign_buckets_arrow,
 )
+from cmsspark_spark.session import local_frame
 
 
 #: (gateway id, element type, value bytes) → Column. Array-literal
@@ -1337,7 +1338,8 @@ def save_kmeans_model(
         (ci, list(map(int, c)), int(scale), shares.get(ci, 0) / total)
         for ci, c in enumerate(cents)
     ]
-    spark.createDataFrame(
+    local_frame(
+        spark,
         rows,
         "cluster int, centroid array<bigint>, scale int, train_share double",
     ).write.mode("overwrite").parquet(path)

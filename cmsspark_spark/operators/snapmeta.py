@@ -102,9 +102,11 @@ def inherit(
     keyed commit writes under, ``part_cols`` the columns a partition
     commit attributes by.
 
-    - Grain: a keyed commit refuses a partition-attributed parent, and
-      a partition commit refuses a parent with equality-delete state
-      or with unattributed live files.
+    - Grain: a keyed commit refuses a partition-attributed parent, a
+      flat commit (neither keys nor partition columns) refuses one
+      too — it would drop the attribution — and a partition commit
+      refuses a parent with equality-delete state or with
+      unattributed live files.
     - Pins: ``delete_key_cols`` and ``part_cols`` pin at their first
       commit and must match on every later one.
     - Delete state carries: dropping it would resurrect deleted rows.
@@ -130,6 +132,12 @@ def inherit(
                 f"{table} pins partition columns {pinned_parts}, "
                 f"refusing {list(part_cols)}"
             )
+    if key_cols is None and part_cols is None and pinned_parts is not None:
+        raise ValueError(
+            f"{table} is partition-attributed by {list(pinned_parts)} — "
+            "a flat commit keeping its files would drop the attribution; "
+            "write it through snapshot_write_partitions"
+        )
     if key_cols is not None:
         if pinned_parts is not None:
             raise ValueError(

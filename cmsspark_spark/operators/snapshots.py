@@ -68,6 +68,7 @@ from pyspark.sql.types import StructType
 from cmsspark_spark import fsops
 from cmsspark_spark.operators import snapmeta
 from cmsspark_spark.operators.memo import pin_frame
+from cmsspark_spark.session import local_frame
 
 SNAPDIR = "_snapshots"
 
@@ -377,18 +378,19 @@ def _refuse_early(
     table: str,
     key_cols: Sequence[str] | None = None,
     part_cols: Sequence[str] | None = None,
-) -> bool:
+) -> list[int]:
     """Check the lineage rules (:func:`snapmeta.inherit`) against the
     latest version BEFORE any file lands, so a refused batch leaves no
     residue; the commit attempt checks them again against the parent
-    it actually lands on. False when the table has no version yet."""
+    it actually lands on. Returns the version listing it checked
+    (empty when the table has no version yet)."""
     versions = list_snapshots(spark, table)
     if versions:
         snapmeta.inherit(
             table, read_snapshot_meta(spark, table, versions[-1]),
             key_cols=key_cols, part_cols=part_cols,
         )
-    return bool(versions)
+    return versions
 
 
 def _refuse_duplicate_keys(df: DataFrame, key_cols: Sequence[str]) -> None:
@@ -737,6 +739,8 @@ def snapshot_write(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     spark = df.sparkSession
+    if mode == "append":
+        _refuse_early(spark, table)
     new_files = _write_attributed(df, table)
     extra: dict = {"schema": df.schema.jsonValue()}
     if stats_cols:
@@ -1438,12 +1442,12 @@ def read_snapshot(
         # newer version's drifted schema (and a first-write-empty
         # table has no footers to infer from at all)
         if "schema" in meta:
-            out = spark.createDataFrame(
-                [], StructType.fromJson(meta["schema"])
+            out = local_frame(
+                spark, [], StructType.fromJson(meta["schema"])
             )
         else:
-            out = spark.createDataFrame(
-                [], spark.read.parquet(table).schema
+            out = local_frame(
+                spark, [], spark.read.parquet(table).schema
             )
     else:
         out = _scan_with_deletes(spark, table, meta, live)
@@ -1567,7 +1571,8 @@ def snapshot_history(spark: SparkSession, table: str) -> DataFrame:
             for v in list_snapshots(spark, table)
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, op string, parent int, n_files int, "
         "committed_ms long",
@@ -2753,8 +2758,8 @@ def snapshot_write_partitions(
     run concurrently; see :func:`commit_partition_snapshot` for the
     compose/conflict rules. Returns the committed version."""
     spark = df.sparkSession
+    versions = _refuse_early(spark, table, part_cols=part_cols)
     if expected_parent is None:
-        versions = list_snapshots(spark, table)
         expected_parent = versions[-1] if versions else 0
     files_by_part = _write_attributed(df, table, part_cols=part_cols)
     return commit_partition_snapshot(
@@ -2856,7 +2861,8 @@ def snapshot_upsert_partitions(
             current = read_snapshot(
                 spark, table, expected_parent, partitions=sel
             )
-            combos = spark.createDataFrame(
+            combos = local_frame(
+                spark,
                 [tuple(r[c] for c in part_cols) for r in touched_known],
                 current.select(*part_cols).schema,
             )
@@ -2897,7 +2903,7 @@ def snapshot_partitions(
         )
     rows = [tuple(json.loads(pk)) + (n,) for pk, n in sorted(agg.items())]
     schema = ", ".join(f"`{c}` string" for c in pcols) + ", n_files int"
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 class PartitionRange:

@@ -31,6 +31,7 @@ from cmsspark_spark.operators import multimodal as M
 from cmsspark_spark.operators import similarity as S
 from cmsspark_spark.operators import sketches as K
 from cmsspark_spark.operators.memo import SessionMemo
+from cmsspark_spark.session import local_frame
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
@@ -1947,7 +1948,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         truth = f_truth.result()
     n_truth = len(truth)
     n_hit = sum(1 for r in truth if (r.query_id, r.vec_id) in got)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_truth, n_hit * 10 >= n_truth * 4)],
         "n_truth: bigint, recall_ok: boolean",
     )
@@ -4894,7 +4896,8 @@ def bpe_vocab_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (i + 1, left, right, left + right)
         for i, (left, right) in enumerate(merges)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "rank: int, left: string, right: string, merged: string"
     )
 
@@ -7984,7 +7987,8 @@ def ann_ladder_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (label, n_truth, h) for (label, _), h in zip(methods, hits)
     ]
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         rows, "method string, n_truth long, n_hit long"
     )
     return out.select(
@@ -9434,7 +9438,8 @@ def quality_logreg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, F.col("source").isin("src0", "src1"),
         n_buckets=_LOGREG_B, iters=_LOGREG_ITERS, lr=_LOGREG_LR,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(b, float(v)) for b, v in enumerate(w)], "b long, weight double"
     ).select("b", F.round("weight", 6).alias("weight"))
 
@@ -12747,7 +12752,8 @@ def snapshot_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         with ThreadPoolExecutor(max_workers=6) as pool:
             rows = list(pool.map(_lookup, range(6)))
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows, "doc_id long, hits_v1 long, hits_v2 long"
         )
     finally:

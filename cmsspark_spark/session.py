@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Confs that can be set on a live session. Keep this list minimal and
 #: runtime-settable only (static confs would be silently ignored).
@@ -64,6 +64,37 @@ def tune(spark: SparkSession) -> SparkSession:
             # over tuning.
             pass
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """The rows of ``spark.createDataFrame(rows, schema)`` as a JVM
+    ``LocalRelation``: no Python task ever evaluates them.
+
+    A list given to ``createDataFrame`` becomes a Python RDD, so every
+    action over it starts one Python worker task per
+    ``defaultParallelism`` slot — even for one row — and each such
+    task pays pyspark's per-task start-up before any user code runs.
+    An Arrow table crosses the boundary once, on the driver. Each row
+    goes through ``StructType.toInternal`` first, the conversion the
+    classic path applies, so naive timestamps keep its local-time
+    reading (Arrow built from the raw datetimes would read them in
+    the session zone instead); the Arrow arrays are then built from
+    the internal values. ``schema`` is a ``StructType`` or a DDL
+    string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*internal)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

@@ -290,6 +290,8 @@ def count_partlog_segments(spark, root: str) -> int:
     import json
     import os
 
+    from cmsspark_spark.session import local_frame
+
     todo = []
     for _p, segs in _partlog_scan(root):
         for path in segs:
@@ -316,7 +318,8 @@ def count_partlog_segments(spark, root: str) -> int:
             )
 
     counted = (
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(p,) for p, _ in todo], "path string"
         )
         .repartition(len(todo))

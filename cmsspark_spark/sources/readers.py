@@ -28,6 +28,8 @@ from datetime import date, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from cmsspark_spark.session import local_frame
+
 _FORMAT_DEFAULTS: dict[str, dict[str, str]] = {
     # DBS/PhEDEx CSV dumps normalize literal 'null' (spark_utils.py:287-290).
     "csv": {"header": "true", "nullValue": "null"},
@@ -106,7 +108,7 @@ def read_source(
             raise FileNotFoundError(
                 f"source {spec.name}: no files for range and no fallback schema"
             )
-        df = spark.createDataFrame([], spec.schema)
+        df = local_frame(spark, [], spec.schema)
     elif spec.fmt == "avro" and not spark_avro_available(spark):
         # No spark-avro module jar in this deployment: decode with the
         # vendored pure-Python Avro codec, distributed via binaryFile +

@@ -21,6 +21,8 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from cmsspark_spark.session import local_frame
+
 
 def with_late_data_watermark(df: DataFrame, ts_col: str, delay: str = "1 day") -> DataFrame:
     """Event-time watermark bounding state for late data (T1: the
@@ -723,7 +725,8 @@ def kmeans_serve_batch_fn(
             p_ref = (shares.get(ci, 0.0) * n + 0.5) / (n + 0.5 * k)
             psi += (p_cur - p_ref) * math.log(p_cur / p_ref)
         (
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(batch_id, n, round(psi, 6), psi > psi_threshold)],
                 "batch_id long, n_vecs long, psi double, retrain boolean",
             )

@@ -15,6 +15,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+import cmsspark_spark.operators.bm25 as BM
 import cmsspark_spark.operators.dedup as D
 import cmsspark_spark.operators.pipeline as PL
 import cmsspark_spark.operators.similarity as S
@@ -283,8 +284,8 @@ MEMO_CASES = {
         lambda i, counted: D.connected_components(i.pairs),
     ),
     "bm25_postings": (
-        [(PL, "doc_term_postings")],
-        lambda i, counted: PL._postings_stats(i.docs, "doc_id", "text"),
+        [(BM, "doc_term_postings")],
+        lambda i, counted: BM.postings_state(i.docs, "doc_id", "text"),
     ),
     "bm25_prune_state": (
         [(PL, "_bm25_prune_state")],

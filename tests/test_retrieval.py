@@ -846,3 +846,108 @@ def test_commit_seq_claim_is_exclusive(spark, tmp_path):
         n for n in os.listdir(f"{idx}/commits") if n.startswith("s-")
     }
     assert left == set(), f"folded markers not vacuumed: {left}"
+
+
+# --- one postings state for both stacks ------------------------------------
+
+
+def _count_kernel_calls(monkeypatch):
+    """Count the postings kernel passes the shared postings step runs."""
+    from cmsspark_spark.operators import bm25
+
+    calls = []
+    kernel = bm25.doc_term_postings
+
+    def counted(*a, **k):
+        calls.append(1)
+        return kernel(*a, **k)
+
+    monkeypatch.setattr(bm25, "doc_term_postings", counted)
+    return calls
+
+
+def test_serve_then_append_tokenize_the_corpus_once(
+    spark, tmp_path, monkeypatch
+):
+    """The in-session serve and the index append of the same corpus
+    share one postings pass, in either order of first use."""
+    from cmsspark_spark.operators.memo import invalidate_session_memos
+
+    invalidate_session_memos(spark)
+    calls = _count_kernel_calls(monkeypatch)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    want = _ranked(PL.bm25_more_like_this(docs, query_max_id=5))
+    idx = str(tmp_path / "idx")
+    R.append_bm25_index(docs, idx)
+    assert len(calls) == 1
+    assert _ranked(R.bm25_index_serve(spark, idx)) == want
+
+
+def test_append_only_session_keeps_one_postings_entry(spark, tmp_path):
+    """An append in a fresh session leaves exactly one corpus in the
+    postings memo (its postings frame and its scalars), and the
+    blanket invalidation drops it."""
+    from cmsspark_spark.operators import bm25
+    from cmsspark_spark.operators.memo import invalidate_session_memos
+
+    fresh = spark.newSession()
+    docs = fresh.read.parquet(f"{SF}/documents.parquet")
+    R.append_bm25_index(docs, str(tmp_path / "idx"))
+    store = bm25._POSTINGS_MEMO._session_store(fresh)
+    assert {key[1] for key in store} == {
+        bm25._POSTINGS_MEMO.key_for(docs, "doc_id", "text")
+    }
+    assert sorted(key[0] for key in store) == ["post", "stats"]
+    invalidate_session_memos(fresh)
+    assert len(bm25._POSTINGS_MEMO._session_store(fresh)) == 0
+
+
+def test_unmemoizable_append_releases_its_postings(
+    spark, tmp_path, monkeypatch
+):
+    """An increment the memo cannot key is tokenized once, persisted
+    for the append and released when it ends: no persistent RDD is
+    left behind, and the index serves like the in-session rung."""
+    from cmsspark_spark.operators import bm25
+
+    calls = _count_kernel_calls(monkeypatch)
+    monkeypatch.setattr(
+        bm25._POSTINGS_MEMO, "key_for", lambda *a, **k: None
+    )
+    sc = spark.sparkContext
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    idx = str(tmp_path / "idx")
+    R.append_bm25_index(docs, idx)
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+    assert len(calls) == 1
+    monkeypatch.undo()
+    want = _ranked(PL.bm25_more_like_this(docs, query_max_id=5))
+    assert _ranked(R.bm25_index_serve(spark, idx)) == want
+
+
+def test_append_tables_equal_a_direct_kernel_build(spark, tmp_path):
+    """Every table an append commits holds the rows of the index
+    built straight from one kernel pass over the increment — the
+    shared postings state changes where the postings come from, not
+    what the index stores."""
+    from cmsspark_spark.functions.text import doc_term_postings
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    PL.bm25_more_like_this(docs, query_max_id=1)  # warm the shared state
+    cdir = R.append_bm25_index(docs, str(tmp_path / "idx"))
+    post = doc_term_postings(
+        docs, "doc_id", "text", cols=("doc", "t", "dl", "tf")
+    )
+    sum_dl = sum(r.dl for r in post.select("doc", "dl").distinct().collect())
+    want = {
+        "postings": post,
+        **R._stat_partials(post, 16),
+        "globals": spark.createDataFrame(
+            [(docs.count(), sum_dl)], "n_docs long, sum_dl long"
+        ),
+    }
+    for name, frame in want.items():
+        got = spark.read.parquet(f"{cdir}/{name}")
+        assert got.dtypes == frame.dtypes, name
+        assert _ranked(got) == _ranked(frame), name

@@ -3005,3 +3005,51 @@ def test_agg_refresh_reclaims_aged_meta_temps(spark, tmp_path):
     S.maintain_snapshot_agg(spark, t, str(state), ["g"], ["id"])
     assert not aged.exists()
     assert fresh.exists() and (state / "_agg_meta.json").exists()
+
+
+def _root_data_files(table):
+    import os
+
+    return sorted(n for n in os.listdir(table) if n.startswith("snap-"))
+
+
+def _day_rows(spark, d, lo, hi):
+    return spark.range(lo, hi).selectExpr("id", f"'{d}' AS day")
+
+
+def test_flat_append_onto_partition_table_is_refused_before_writing(
+    spark, tmp_path
+):
+    """A flat append would keep a partition-attributed table's files
+    under a version with no attribution, and every later partition
+    write would refuse. It is refused before any file lands; partition
+    writes carry on."""
+    t = str(tmp_path / "t")
+    S.snapshot_write_partitions(_day_rows(spark, "d1", 0, 2), t, ["day"])
+    before = _root_data_files(t)
+    with pytest.raises(ValueError, match="snapshot_write_partitions"):
+        S.snapshot_write(_day_rows(spark, "d2", 2, 3), t, mode="append")
+    assert _root_data_files(t) == before
+    assert S.list_snapshots(spark, t) == [1]
+    S.snapshot_write_partitions(_day_rows(spark, "d2", 2, 4), t, ["day"])
+    assert S.read_snapshot_meta(spark, t, 2)["part_cols"] == ["day"]
+    assert _ids(S.read_snapshot(spark, t)) == [0, 1, 2, 3]
+    # a flat overwrite keeps no parent file, so nothing is dropped
+    S.snapshot_write(_day_rows(spark, "d3", 7, 8), t, mode="overwrite")
+    assert _ids(S.read_snapshot(spark, t)) == [7]
+
+
+def test_refused_partition_write_leaves_no_residue(spark, tmp_path):
+    """A partition write that breaks a lineage rule (here the pinned
+    partition columns) is refused before its batch lands in the
+    table root."""
+    t = str(tmp_path / "t")
+    S.snapshot_write_partitions(_day_rows(spark, "d1", 0, 2), t, ["day"])
+    before = _root_data_files(t)
+    with pytest.raises(ValueError, match="pins partition columns"):
+        S.snapshot_write_partitions(
+            _day_rows(spark, "d2", 2, 3).withColumnRenamed("day", "d"),
+            t, ["d"],
+        )
+    assert _root_data_files(t) == before
+    assert S.list_snapshots(spark, t) == [1]
