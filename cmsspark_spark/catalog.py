@@ -16,6 +16,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from cmsspark_spark import fsops
+from cmsspark_spark.operators.memo import SessionMemo
 from cmsspark_spark.session import tune
 
 TABLES = [
@@ -45,23 +47,60 @@ NS_TIMESTAMP_COLS: dict[str, list[str]] = {
 #: an up-front repartition would just be a wasted extra shuffle.
 _WIDEN_TABLES = {"documents", "embeddings"}
 
-#: (sf_dir, name) → effective input split count, from parquet footers.
-_SPLITS_CACHE: dict[tuple[str, str], int] = {}
+#: Per session: (table path, file set) → the table's scan entry (schema,
+#: and input split count once a widen check asks for it).
+_SCAN_MEMO = SessionMemo("table_scan")
 
 
-def _effective_splits(sf_dir: str, name: str) -> int:
+def _file_set(spark: SparkSession, path: str) -> tuple:
+    """Sorted (name, is_dir, size, mtime_ms) of a table path's entries
+    from one driver-side listing — of the directory, or of its parent
+    filtered to the path for a single-file table. A rewrite changes
+    some size or mtime, so the scan entry keyed on it is resolved
+    again."""
+    entries = fsops.listdir(spark, path)
+    if not entries:
+        parent, _, base = path.rpartition("/")
+        entries = [e for e in fsops.listdir(spark, parent) if e[0] == base]
+    return tuple(sorted(entries))
+
+
+def _effective_splits(path: str) -> int:
     """Row groups are parquet's split unit: a single-row-group file can
     never scan in parallel no matter how many byte-range tasks Spark
-    makes. Counted once per table from the footer (cheap, cached)."""
-    key = (sf_dir, name)
-    if key not in _SPLITS_CACHE:
-        import glob
-        import pyarrow.parquet as pq
+    makes. Counted from the footers."""
+    import glob
+    import pyarrow.parquet as pq
 
-        path = f"{sf_dir}/{name}.parquet"
-        files = glob.glob(f"{path}/*.parquet") or [path]
-        _SPLITS_CACHE[key] = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-    return _SPLITS_CACHE[key]
+    files = glob.glob(f"{path}/*.parquet") or [path]
+    return sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
+
+
+def _infer_scan(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
+    """A read that infers the table's schema (one Spark job), and a
+    fresh scan entry holding that schema and no split count yet."""
+    df = spark.read.parquet(path)
+    return df, {"schema": df.schema, "splits": None}
+
+
+def _scan(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
+    """A fresh read of the table and its memoized scan entry: the
+    schema, inferred once per session and file set (ROADMAP 2(a):
+    schema inference is a Spark job per read), and the split count,
+    filled in by the first widen check. On a miss the inferring read is
+    the read; a hit reads with the stored schema and runs no job.
+    ``invalidate_session_memos`` drops the entry."""
+    inferred: list[DataFrame] = []
+
+    def build() -> dict:
+        df, entry = _infer_scan(spark, path)
+        inferred.append(df)
+        return entry
+
+    entry = _SCAN_MEMO.get_or(spark, (path, _file_set(spark, path)), build)
+    if inferred:
+        return inferred[0], entry
+    return spark.read.schema(entry["schema"]).parquet(path), entry
 
 
 def load_table(
@@ -76,7 +115,8 @@ def load_table(
     that redistributes anyway — hence opt-in, measured per query.
     """
     tune(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df, entry = _scan(spark, path)
     for c in NS_TIMESTAMP_COLS.get(name, []):
         dtype = dict(df.dtypes).get(c)
         if dtype == "bigint":
@@ -93,7 +133,9 @@ def load_table(
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     if widen if widen is not None else name in _WIDEN_TABLES:
         target = spark.sparkContext.defaultParallelism
-        if _effective_splits(sf_dir, name) < max(2, target // 2):
+        if entry["splits"] is None:
+            entry["splits"] = _effective_splits(path)
+        if entry["splits"] < max(2, target // 2):
             # Production layouts (many part-files) split naturally and
             # skip this; one round-robin shuffle of the raw rows buys
             # full-cluster parallelism for every later narrow stage.

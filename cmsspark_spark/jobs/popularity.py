@@ -27,23 +27,32 @@ def compute(spark: SparkSession, sf_dir: str, date: str) -> DataFrame:
     return cms_popularity_spine(spark, sf_dir).withColumn("day", F.lit(date))
 
 
+def writers(out: str, date: str) -> dict:
+    """The job's sinks, in write order, for :func:`sinks.fan_out`."""
+    return {
+        # Curated day-partitioned parquet: re-runs for the same day
+        # replace only that day's partition (T3 dynamic overwrite).
+        "parquet": lambda f: sinks.write_partitioned_parquet(
+            f, f"{out}/parquet", partition_by=("day",)
+        ),
+        # Human-facing CSV report (K1).
+        "csv": lambda f: sinks.write_csv(f, f"{out}/csv/{date}"),
+        # Driver-side report mile (K7): CSV + HTML table page of the
+        # aggregated result (condor_cpu_efficiency.py:398-445's shape).
+        "report": lambda f: report.write_report(
+            f,
+            f"{out}/report",
+            name=f"popularity_{date}",
+            title="Dataset popularity",
+            subtitle=f"run date {date}",
+        ),
+    }
+
+
 def run(spark: SparkSession, sf_dir: str, out: str, date: str) -> DataFrame:
-    df = compute(spark, sf_dir, date)
-    # Curated day-partitioned parquet: re-runs for the same day replace
-    # only that day's partition (T3 dynamic overwrite).
-    sinks.write_partitioned_parquet(df, f"{out}/parquet", partition_by=("day",))
-    # Human-facing CSV report (K1).
-    sinks.write_csv(df, f"{out}/csv/{date}")
-    # Driver-side report mile (K7): CSV + HTML table page of the
-    # aggregated result (condor_cpu_efficiency.py:398-445's shape).
-    report.write_report(
-        df,
-        f"{out}/report",
-        name=f"popularity_{date}",
-        title="Dataset popularity",
-        subtitle=f"run date {date}",
-    )
-    return df
+    """Compute the aggregate once and write it to every sink; returns
+    the pinned aggregate."""
+    return sinks.fan_out(compute(spark, sf_dir, date), writers(out, date))
 
 
 def main() -> None:

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cmsspark_spark import sinks
 from cmsspark_spark.jobs.cms_replicas import rucio_ds_summary
-from cmsspark_spark.operators.memo import pin_frame
 from cmsspark_spark.session import get_spark
 from cmsspark_spark.sinks import report
 from cmsspark_spark.sinks.osearch import OpenSearchSink
@@ -99,80 +98,44 @@ def run(
     osearch_sink: OpenSearchSink | None = None,
     amq_transport: Callable[[list[dict]], None] | None = None,
 ) -> DataFrame:
-    # Materialize the summary ONCE: the job has four terminal
-    # consumers (curated parquet, CSV, report, optional index/AMQ
-    # pushes) that would each re-execute the multi-join replica
-    # lineage. The summary is day-grain documents — far smaller than
-    # its sources — so an eager checkpoint (pin_frame) pins it at aggregate
-    # size and every sink replays the checkpoint (guide §5 reuse).
-    df = compute(sources, date).transform(pin_frame)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _parquet() -> None:
+    # The summary is day-grain documents, far smaller than its
+    # sources: fan_out pins it once and every sink replays the pin
+    # instead of re-executing the multi-join replica lineage.
+    writers = {
         # T3 curated table: re-running a day replaces only that
         # partition.
-        sinks.write_partitioned_parquet(
-            df, f"{out}/parquet", partition_by=("day",)
-        )
-
-    def _csv() -> None:
-        sinks.write_csv(df, f"{out}/csv/{date}")
-
-    def _report() -> None:
+        "parquet": lambda f: sinks.write_partitioned_parquet(
+            f, f"{out}/parquet", partition_by=("day",)
+        ),
+        "csv": lambda f: sinks.write_csv(f, f"{out}/csv/{date}"),
         # K7 report mile: CSV + HTML table.
-        report.write_report(
-            df.drop("timestamp"),
+        "report": lambda f: report.write_report(
+            f.drop("timestamp"),
             f"{out}/report",
             name=f"rucio_summary_{date}",
             title="Rucio dataset summary",
             subtitle=f"run date {date}",
-        )
-
-    # The three sinks are independent reads of the checkpointed
-    # summary: submit them as concurrent driver jobs so each backfills
-    # the others' stragglers (guide §2.6 overlap independent jobs).
-    # CONTRACT CHANGE vs the serial form (documented per ADVICE r13):
-    # sink completion is UNORDERED — a failed day can leave report/CSV
-    # output alongside a missing curated parquet partition, so
-    # downstream consumers must key on job success, not on any sink's
-    # presence. Every future is drained and EVERY failure is surfaced
-    # (not just the first): the first failure is the cause, and every
-    # later one is named in the message with its repr.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = {
-            name: pool.submit(fn)
-            for name, fn in (
-                ("parquet", _parquet), ("csv", _csv), ("report", _report)
-            )
-        }
-        errors = [
-            (name, f.exception())
-            for name, f in futures.items()
-            if f.exception() is not None
-        ]
-    if errors:
-        names = ", ".join(name for name, _ in errors)
-        also = "".join(f"; also failed: {n}: {e!r}" for n, e in errors[1:])
-        raise RuntimeError(
-            f"rucio summary sink(s) failed: {names}{also}"
-        ) from errors[0][1]
-    # K6: OpenSearch bulk push (driver-side batched like the
-    # reference's send loop; the transport is injected).
+        ),
+    }
     if osearch_sink is not None:
-        failed = 0
-        for docs in sinks.doc_batches(
-            df, chunk_size=osearch_sink.batch_size, drop_nulls=False
-        ):
-            failed += osearch_sink.send(docs, timestamp_field="timestamp")
-        if failed:
-            raise RuntimeError(f"OpenSearch push: {failed} docs failed")
-    # K5: AMQ document push through a STOMP-or-other transport.
+        # K6: OpenSearch bulk push (driver-side batched like the
+        # reference's send loop; the transport is injected).
+        def _osearch(f: DataFrame) -> None:
+            failed = 0
+            for docs in sinks.doc_batches(
+                f, chunk_size=osearch_sink.batch_size, drop_nulls=False
+            ):
+                failed += osearch_sink.send(docs, timestamp_field="timestamp")
+            if failed:
+                raise RuntimeError(f"OpenSearch push: {failed} docs failed")
+
+        writers["opensearch"] = _osearch
     if amq_transport is not None:
-        sinks.push_documents(
-            df, amq_transport, chunk_size=1000, executor_side=False
+        # K5: AMQ document push through a STOMP-or-other transport.
+        writers["amq"] = lambda f: sinks.push_documents(
+            f, amq_transport, chunk_size=1000, executor_side=False
         )
-    return df
+    return sinks.fan_out(compute(sources, date), writers)
 
 
 def main() -> None:

@@ -246,10 +246,9 @@ def _query_view(
 
 
 def _term_posts(post: DataFrame, terms: DataFrame) -> DataFrame:
-    """The postings of the distinct terms of ``terms`` (broadcast)."""
-    return post.join(
-        F.broadcast(terms.select("t").distinct()), "t", "left_semi"
-    )
+    """The postings of the terms of ``terms`` (broadcast; the semi-join
+    ignores duplicate terms, so none are removed first)."""
+    return post.join(F.broadcast(terms.select("t")), "t", "left_semi")
 
 
 def _df_tab(term_posts: DataFrame) -> DataFrame:

@@ -63,6 +63,13 @@ an interrupted snapshot consume RESUMES off its commit's tag.
 into a new versioned base published by one atomic meta flip;
 ``vacuum_bm25_index`` reclaims superseded dirs.
 
+Each commit records the schema of every table it writes in its
+``_commit.json`` (the base's ride in the compaction's meta flip), as
+Spark reads the table back. A serve lists the commits once, reads each
+record once, and reads every table with its recorded schema — no
+schema-inference job. Parts without a record (pre-v2 flat dirs, older
+commits) are inferred as before.
+
 No reference twin: the reference has no retrieval serving state; this
 is the train-once/serve-increment rung for the beyond-reference BM25
 family (same discipline as the k-means/census/manifest state).
@@ -70,7 +77,10 @@ family (same discipline as the k-means/census/manifest state).
 
 from __future__ import annotations
 
+import json
+
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from cmsspark_spark import fsops
@@ -128,60 +138,89 @@ def _list_commit_dirs(
     return sorted(out)
 
 
-def _index_table_paths(
-    spark: SparkSession,
-    index_dir: str,
-    table: str,
-    imeta: dict | None = None,
-) -> list[str]:
-    """Every live parquet dir holding rows of one index table: the
-    legacy flat dir (pre-v2 index, until its first compaction), the
-    compacted base, and each commit dir past the base. The base
-    SUBSUMES the flat dir and the folded commits, so those are
-    excluded the moment the meta points at a base — a crash between
-    the meta flip and the best-effort deletes can never double-count.
-    A failed existence probe (permissions) propagates: a serve must not
-    mistake it for 'this index has no tombstones' and resurrect
-    deleted documents."""
+def _read_back_schema(frame: DataFrame) -> dict:
+    """JSON form of the schema Spark reads ``frame``'s parquet write
+    back with: the JVM's ``asNullable``, which file sources apply to
+    every schema they read. A commit records it for each table it
+    writes, so a serve reads the table without a schema-inference
+    job."""
+    return json.loads(frame._jdf.schema().asNullable().json())
+
+
+def _write_tables(frames: dict, root: str, mode: str | None = None) -> dict:
+    """Write each named frame as parquet under ``root``; returns the
+    tables' read-back schemas for the commit record."""
+    for name, frame in frames.items():
+        w = frame.write if mode is None else frame.write.mode(mode)
+        w.parquet(f"{root}/{name}")
+    return {name: _read_back_schema(f) for name, f in frames.items()}
+
+
+def _live_parts(
+    spark: SparkSession, index_dir: str, imeta: dict | None = None
+) -> list[tuple[str, dict | None]]:
+    """(dir, recorded table schemas) of every live part of an index: the
+    compacted base (schemas from ``_index_meta.json``) or the legacy
+    flat dir (pre-v2 index, until its first compaction; no schemas),
+    then each commit dir past the base (schemas from its
+    ``_commit.json``). The base SUBSUMES the flat dir and the folded
+    commits, so those are excluded the moment the meta points at a
+    base — a crash between the meta flip and the best-effort deletes
+    can never double-count. One commits/ listing plus one
+    ``_commit.json`` read per live commit; a serve lists once and
+    reads every table through the result."""
     if imeta is None:
         imeta = (
             fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json")
             or {}
         )
-    paths: list[str] = []
+    root = index_dir.rstrip("/")
     base_v = int(imeta.get("base_version", 0))
-    if base_v:
-        p = f"{index_dir.rstrip('/')}/base/v{base_v:08d}/{table}"
-        if fsops.size(spark, p) is not None:
-            paths.append(p)
-    else:
-        flat = f"{index_dir.rstrip('/')}/{table}"
-        if fsops.size(spark, flat) is not None:
-            paths.append(flat)
+    parts: list[tuple[str, dict | None]] = [
+        (f"{root}/base/v{base_v:08d}", imeta.get("base_schemas"))
+        if base_v
+        else (root, None)
+    ]
     through = int(imeta.get("base_through_seq", 0))
     for seq, cdir in _list_commit_dirs(spark, index_dir):
-        if seq <= through:
-            continue
-        p = f"{cdir}/{table}"
-        if fsops.size(spark, p) is not None:
-            paths.append(p)
-    return paths
+        if seq > through:
+            cmeta = fsops.read_json_meta(spark, f"{cdir}/_commit.json")
+            parts.append((cdir, (cmeta or {}).get("schemas")))
+    return parts
 
 
 def index_table(
     spark: SparkSession,
     index_dir: str,
     table: str,
-    imeta: dict | None = None,
+    parts: list | None = None,
     required: bool = True,
 ) -> DataFrame | None:
     """The merged read of one index table across base + live commits
-    (the public seam tests and tools use instead of layout paths).
-    ``required=False`` returns None when no source holds the table
+    (the public seam tests and tools use instead of layout paths);
+    ``parts`` is a :func:`_live_parts` result to reuse. When every part
+    holding the table recorded its schema and they agree, the read
+    takes that schema; otherwise (pre-v2 flat dirs, older commits)
+    Spark infers it. A part with recorded schemas holds exactly the
+    tables it names; any other part is probed, and a failed existence
+    probe (permissions) propagates — a serve must not mistake it for
+    'this index has no tombstones' and resurrect deleted documents.
+    ``required=False`` returns None when no part holds the table
     (tombstones/blockstats on an index that never wrote them);
     required tables raise a descriptive error instead of a bare
     path-not-found."""
-    paths = _index_table_paths(spark, index_dir, table, imeta=imeta)
+    if parts is None:
+        parts = _live_parts(spark, index_dir)
+    paths, schemas = [], []
+    for d, recorded in parts:
+        p = f"{d}/{table}"
+        if recorded is not None:
+            if table in recorded:
+                paths.append(p)
+                schemas.append(recorded[table])
+        elif fsops.size(spark, p) is not None:
+            paths.append(p)
+            schemas.append(None)
     if not paths:
         if required:
             raise FileNotFoundError(
@@ -189,7 +228,10 @@ def index_table(
                 "index (append an increment first)"
             )
         return None
-    return spark.read.parquet(*paths)
+    reader = spark.read
+    if schemas[0] is not None and all(x == schemas[0] for x in schemas):
+        reader = reader.schema(T.StructType.fromJson(schemas[0]))
+    return reader.parquet(*paths)
 
 
 def _finalize_commit(
@@ -376,36 +418,32 @@ def append_bm25_index(
         )
     stage = f"{_staging_root(index_dir)}/{_uuid.uuid4().hex}"
     post, sum_dl, n_docs = bm25.postings_state(increment, id_col, text_col)
+    # block-grain bound partials are the same (count, max_tf, min_dl)
+    # monoid one level down — only blocks the increment touches get new
+    # rows, and the serve-time merge per (t, blk) equals a full-corpus
+    # block cut
+    tables = {"postings": post, **_stat_partials(post, champions)}
+    if positions:
+        # one extra tokenize pass over the increment only — the
+        # positional lists are per-(term, doc) sorted offsets, the
+        # exact shape the phrase check's shift-and-intersect needs
+        tables["positions"] = (
+            increment.select(
+                F.col(id_col).alias("doc"), tokens(text_col).alias("_tk")
+            )
+            .select("doc", F.posexplode("_tk").alias("pos", "t"))
+            .groupBy("t", "doc")
+            .agg(F.sort_array(F.collect_list("pos")).alias("posns"))
+        )
+    if tombstones is not None:
+        tables["tombstones"] = tombstones.select(
+            F.col(id_col).alias("doc")
+        ).distinct()
+    tables["globals"] = local_frame(
+        spark, [(int(n_docs), int(sum_dl))], "n_docs long, sum_dl long"
+    )
     try:
-        post.write.parquet(f"{stage}/postings")
-        # block-grain bound partials are the same (count, max_tf, min_dl)
-        # monoid one level down — only blocks the increment touches get
-        # new rows, and the serve-time merge per (t, blk) equals a
-        # full-corpus block cut
-        for name, frame in _stat_partials(post, champions).items():
-            frame.write.parquet(f"{stage}/{name}")
-        if positions:
-            # one extra tokenize pass over the increment only — the
-            # positional lists are per-(term, doc) sorted offsets, the
-            # exact shape the phrase check's shift-and-intersect needs
-            (
-                increment.select(
-                    F.col(id_col).alias("doc"), tokens(text_col).alias("_tk")
-                )
-                .select("doc", F.posexplode("_tk").alias("pos", "t"))
-                .groupBy("t", "doc")
-                .agg(F.sort_array(F.collect_list("pos")).alias("posns"))
-                .write.parquet(f"{stage}/positions")
-            )
-        if tombstones is not None:
-            (
-                tombstones.select(F.col(id_col).alias("doc"))
-                .distinct()
-                .write.parquet(f"{stage}/tombstones")
-            )
-        local_frame(
-            spark, [(int(n_docs), int(sum_dl))], "n_docs long, sum_dl long"
-        ).write.parquet(f"{stage}/globals")
+        schemas = _write_tables(tables, stage)
     finally:
         if post.is_cached:
             # an unmemoizable increment: its postings were persisted
@@ -416,7 +454,11 @@ def append_bm25_index(
     fsops.write_json_meta(
         spark,
         f"{stage}/_commit.json",
-        {"n_docs": int(n_docs), **({"tag": commit_tag} if commit_tag else {})},
+        {
+            "n_docs": int(n_docs),
+            "schemas": schemas,
+            **({"tag": commit_tag} if commit_tag else {}),
+        },
     )
     return _finalize_commit(spark, index_dir, stage)
 
@@ -655,35 +697,39 @@ def tombstone_bm25_index(
 
     spark = ids.sparkSession
     stage = f"{_staging_root(index_dir)}/{_uuid.uuid4().hex}"
-    (
-        ids.select(F.col(id_col).alias("doc"))
-        .distinct()
-        .write.parquet(f"{stage}/tombstones")
+    schemas = _write_tables(
+        {"tombstones": ids.select(F.col(id_col).alias("doc")).distinct()},
+        stage,
     )
-    fsops.write_json_meta(spark, f"{stage}/_commit.json", {"n_docs": 0})
+    fsops.write_json_meta(
+        spark, f"{stage}/_commit.json", {"n_docs": 0, "schemas": schemas}
+    )
     _finalize_commit(spark, index_dir, stage)
 
 
 def _merged_state(spark: SparkSession, index_dir: str) -> dict:
     """Scalars + lazily-merged stat frames of an index directory
-    (base + live commits; see the transactional-layout section)."""
+    (base + live commits; see the transactional-layout section), plus
+    the meta and the live parts, so the rest of a serve reads its other
+    tables without listing or reading commit records again."""
     imeta = (
         fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json") or {}
     )
+    parts = _live_parts(spark, index_dir, imeta)
     g = (
-        index_table(spark, index_dir, "globals", imeta=imeta)
+        index_table(spark, index_dir, "globals", parts)
         .agg(F.sum("n_docs"), F.sum("sum_dl"))
         .first()
     )
     n_docs, sum_dl = int(g[0]), int(g[1] or 0)
-    post = index_table(spark, index_dir, "postings", imeta=imeta)
-    stats = index_table(spark, index_dir, "termstats", imeta=imeta)
-    champ = index_table(spark, index_dir, "champions", imeta=imeta)
+    post = index_table(spark, index_dir, "postings", parts)
+    stats = index_table(spark, index_dir, "termstats", parts)
+    champ = index_table(spark, index_dir, "champions", parts)
     # optional table: absence is fine (append-only index), but a READ
     # failure propagates — swallowing it would silently resurrect
     # every deleted document
     tomb = index_table(
-        spark, index_dir, "tombstones", imeta=imeta, required=False
+        spark, index_dir, "tombstones", parts, required=False
     )
     if tomb is not None:
         tomb = pin_frame(tomb.select("doc").distinct())
@@ -707,6 +753,8 @@ def _merged_state(spark: SparkSession, index_dir: str) -> dict:
         n_docs -= n_dead
         sum_dl -= int(sumdl_dead)
     return {
+        "imeta": imeta,
+        "parts": parts,
         "post": post,
         "stats": stats,
         "champ": champ,
@@ -718,8 +766,9 @@ def _merged_state(spark: SparkSession, index_dir: str) -> dict:
 
 
 def _query_term_stats(st: dict, terms: DataFrame, *aggs) -> DataFrame:
-    """Merged per-term stats of ``terms`` (a distinct ``t`` frame): raw
-    df ``_df_raw``, live df ``_df`` and any extra aggregates over the
+    """Merged per-term stats of ``terms`` (a ``t`` frame, broadcast;
+    duplicates are harmless, a semi-join ignores them): raw df
+    ``_df_raw``, live df ``_df`` and any extra aggregates over the
     termstats partials. The semi-join prunes the vocabulary-sized
     partial table before the merge aggregate. Live df is raw df minus
     the tombstoned docs' postings per term; the raw extremes stay for
@@ -747,11 +796,9 @@ def _query_term_stats(st: dict, terms: DataFrame, *aggs) -> DataFrame:
 def _blockmax_candidates(
     spark: SparkSession,
     index_dir: str,
-    post: DataFrame,
+    st: dict,
     flagged: DataFrame,
     tstats: DataFrame,
-    n_docs: int,
-    avgdl: float,
 ) -> DataFrame:
     """Candidates from surviving (essential-term, doc-block) pairs —
     the block-grain half of the blockmax serve (see bm25_index_serve).
@@ -761,8 +808,7 @@ def _blockmax_candidates(
     pin is verified — serving a 64-grain index with a 128-grain build
     would join bounds onto the wrong doc ranges and silently drop
     candidates."""
-    imeta = fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json")
-    pinned = (imeta or {}).get("block_size")
+    pinned = st["imeta"].get("block_size")
     if pinned != BLOCK_SIZE:
         raise ValueError(
             f"{index_dir} is pinned to block_size={pinned}, this build "
@@ -770,7 +816,7 @@ def _blockmax_candidates(
             "the block bounds; rebuild the index"
         )
     braw = index_table(
-        spark, index_dir, "blockstats", required=False
+        spark, index_dir, "blockstats", st["parts"], required=False
     )
     if braw is None:
         raise ValueError(
@@ -778,9 +824,7 @@ def _blockmax_candidates(
             "bounds; rebuild it (or serve mode='maxscore')"
         )
     merged = (
-        braw.join(
-            F.broadcast(flagged.select("t").distinct()), "t", "left_semi"
-        )
+        braw.join(F.broadcast(flagged.select("t")), "t", "left_semi")
         .groupBy("t", "blk")
         .agg(
             F.sum("df_delta").alias("_bdf"),
@@ -808,13 +852,14 @@ def _blockmax_candidates(
         .withColumn(
             "_bub",
             bm25.micro_ub(
-                bm25.idf(n_docs) * bm25.tf_part("_bmaxtf", "_bmindl", avgdl)
+                bm25.idf(st["n_docs"])
+                * bm25.tf_part("_bmaxtf", "_bmindl", st["avgdl"])
             ),
         )
         .select("t", "blk", "_bub")
     )
     return bm25.block_candidates(
-        post, bm25.block_survival(flagged, bounds_blk), BLOCK_SIZE
+        st["post"], bm25.block_survival(flagged, bounds_blk), BLOCK_SIZE
     )
 
 
@@ -871,9 +916,9 @@ def bm25_index_serve(
         post.filter(F.col("doc") < query_max_id)
         .select(F.col("doc").alias("_qid"), "t")
     )
-    tdist = qterms.select("t").distinct()
+    query_t = qterms.select("t")
     tstats = _query_term_stats(
-        st, tdist, F.max("max_tf").alias("_maxtf"),
+        st, query_t, F.max("max_tf").alias("_maxtf"),
         F.min("min_dl").alias("_mindl"),
     )
     df_tab = tstats.select("t", "_df")
@@ -883,7 +928,7 @@ def bm25_index_serve(
     # champion monoid re-cut: per-term top-c of the per-commit
     # top-c partials — identical to a full-corpus cut
     champ = _champion_cut(
-        st["champ"].join(F.broadcast(tdist), "t", "left_semi"), champions
+        st["champ"].join(F.broadcast(query_t), "t", "left_semi"), champions
     ).select("t", "doc")
     seed = bm25.query_docs(qterms, champ, "t").distinct()
     bounds = tstats.withColumn(
@@ -900,7 +945,7 @@ def bm25_index_serve(
         ess_cand = bm25.essential_candidates(post, flagged)
     else:
         ess_cand = _blockmax_candidates(
-            spark, index_dir, post, flagged, tstats, n_docs, avgdl
+            spark, index_dir, st, flagged, tstats
         )
     cand = ess_cand.unionByName(seed).distinct()
     scored = bm25.score_candidates(
@@ -925,14 +970,16 @@ def _boolean_parts(
     if not qrows:
         raise ValueError("queries must carry at least one term")
     qdf = local_frame(spark, qrows, "_qid long, _off int, t string")
-    tdist = qdf.select("t").distinct()
+    query_t = qdf.select("t")
     qterms = qdf.select("_qid", "t").distinct()
     qlens = qdf.groupBy("_qid").agg(
         F.countDistinct("t").alias("_nt"),
         F.count(F.lit(1)).alias("_noff"),
     )
-    df_tab = _query_term_stats(st, tdist).select("t", "_df")
-    braw = index_table(spark, index_dir, "blockstats", required=False)
+    df_tab = _query_term_stats(st, query_t).select("t", "_df")
+    braw = index_table(
+        spark, index_dir, "blockstats", st["parts"], required=False
+    )
     if braw is None:
         raise ValueError(
             f"{index_dir} has no blockstats — rebuild the index"
@@ -942,7 +989,7 @@ def _boolean_parts(
     # doc-ordered merge (the intersection runs on block metadata,
     # postings of pruned blocks are never read)
     tblocks = (
-        braw.join(F.broadcast(tdist), "t", "left_semi")
+        braw.join(F.broadcast(query_t), "t", "left_semi")
         .select("t", "blk")
         .distinct()
     )
@@ -955,7 +1002,7 @@ def _boolean_parts(
         .select("_qid", "blk")
     )
     scanned = (
-        post.join(F.broadcast(tdist), "t", "left_semi")
+        post.join(F.broadcast(query_t), "t", "left_semi")
         .withColumn("blk", bm25.block_id(BLOCK_SIZE))
         .join(F.broadcast(surviving), "blk")
         .join(F.broadcast(qterms), ["_qid", "t"], "left_semi")
@@ -979,6 +1026,7 @@ def _boolean_parts(
         "and_docs": and_docs,
         "df_tab": df_tab,
         "post": post,
+        "parts": st["parts"],
     }
 
 
@@ -1037,7 +1085,9 @@ def bm25_index_boolean_serve(
             )
             hits = hits.join(dead, ["_qid", "doc"], "left_anti")
     if phrase:
-        posi = index_table(spark, index_dir, "positions", required=False)
+        posi = index_table(
+            spark, index_dir, "positions", parts["parts"], required=False
+        )
         if posi is None:
             raise ValueError(
                 f"{index_dir} has no positions/ table — phrase serve "
@@ -1200,66 +1250,63 @@ def compact_bm25_index(
                 "compacting (folding it would orphan the resume tag)"
             )
     st = _merged_state(spark, index_dir)
+
+    def table(name: str, required: bool = True) -> DataFrame | None:
+        return index_table(spark, index_dir, name, st["parts"], required)
+
     before = {
-        "termstats_rows": index_table(spark, index_dir, "termstats")
-        .count(),
-        "champions_rows": index_table(spark, index_dir, "champions")
-        .count(),
+        "termstats_rows": table("termstats").count(),
+        "champions_rows": table("champions").count(),
         "blockstats_rows": (
-            b.count()
-            if (
-                b := index_table(
-                    spark, index_dir, "blockstats", required=False
-                )
-            )
-            is not None
-            else 0
+            b.count() if (b := table("blockstats", False)) is not None else 0
         ),
-        "globals_rows": index_table(spark, index_dir, "globals").count(),
+        "globals_rows": table("globals").count(),
     }
     new_v = int(imeta.get("base_version", 0)) + 1
     base = f"{index_dir.rstrip('/')}/base/v{new_v:08d}"
     # live postings (tombstones applied) are the single source of
     # truth for the new base; stats/champions recomputed from them
-    st["post"].write.mode("overwrite").parquet(f"{base}/postings")
-    live = spark.read.parquet(f"{base}/postings")
-    for name, frame in _stat_partials(live, champions).items():
-        frame.write.mode("overwrite").parquet(f"{base}/{name}")
-    (
-        local_frame(
+    schemas = _write_tables({"postings": st["post"]}, base, "overwrite")
+
+    def new_base(name: str) -> DataFrame:
+        return index_table(spark, index_dir, name, [(base, schemas)])
+
+    schemas |= _write_tables({
+        **_stat_partials(new_base("postings"), champions),
+        "globals": local_frame(
             spark,
             [(int(st["n_docs"]), int(st["sum_dl"]))],
             "n_docs long, sum_dl long",
-        )
-        .write.mode("overwrite")
-        .parquet(f"{base}/globals")
-    )
-    pos_raw = index_table(spark, index_dir, "positions", required=False)
+        ),
+    }, base, "overwrite")
+    pos_raw = table("positions", False)
     if pos_raw is not None:
         # positional index: fold the occurrence lists too, with the
         # tombstoned docs' rows dropped for good (same LSM semantics
         # as the postings fold)
-        tomb = index_table(
-            spark, index_dir, "tombstones", required=False
-        )
+        tomb = table("tombstones", False)
         if tomb is not None:
             pos_raw = pos_raw.join(
                 F.broadcast(tomb.select("doc").distinct()),
                 "doc",
                 "left_anti",
             )
-        pos_raw.write.mode("overwrite").parquet(f"{base}/positions")
+        schemas |= _write_tables({"positions": pos_raw}, base, "overwrite")
     after = {
-        "termstats_rows": spark.read.parquet(f"{base}/termstats").count(),
-        "champions_rows": spark.read.parquet(f"{base}/champions").count(),
-        "blockstats_rows": spark.read.parquet(f"{base}/blockstats")
-        .count(),
-        "globals_rows": 1,
+        f"{name}_rows": new_base(name).count()
+        for name in ("termstats", "champions", "blockstats")
     }
+    after["globals_rows"] = 1
     # THE publish point: everything above was invisible, everything
-    # below is reclamation of now-unreferenced dirs
+    # below is reclamation of now-unreferenced dirs; the base's table
+    # schemas ride in the same flip
     last_seq = commits[-1][0] if commits else through
-    imeta.update(layout=2, base_version=new_v, base_through_seq=last_seq)
+    imeta.update(
+        layout=2,
+        base_version=new_v,
+        base_through_seq=last_seq,
+        base_schemas=schemas,
+    )
     fsops.write_json_meta(spark, meta_path, imeta)
     vacuum_bm25_index(spark, index_dir)
     return {k: (before[k], after[k]) for k in before}
@@ -1320,8 +1367,8 @@ def bm25_index_commit_report(
     terms, postings rows — the no-silent-state companion a pipeline
     records after each append. ``n_commits`` counts globals rows:
     one per live commit, plus one for the compacted base."""
-    n_commits = index_table(spark, index_dir, "globals").count()
     g = _merged_state(spark, index_dir)
+    n_commits = index_table(spark, index_dir, "globals", g["parts"]).count()
     return local_frame(
         spark,
         [

@@ -11,14 +11,50 @@ Scale notes: document pushes run per *partition* on the executors
 (``foreachPartition``) — the driver never materializes the result; the
 reference's ``toLocalIterator`` pattern is kept only as an opt-in for
 transports that must run driver-side.
+
+A job that writes one result to several sinks goes through
+:func:`fan_out`, which computes the result once.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Callable, Iterable, Iterator, Sequence
+from typing import Callable, Iterable, Iterator, Mapping, Sequence
 
 from pyspark.sql import DataFrame
+
+from cmsspark_spark.operators.memo import pin_frame
+
+
+def fan_out(
+    df: DataFrame, writers: Mapping[str, Callable[[DataFrame], None]]
+) -> DataFrame:
+    """The multi-sink seam (data_collection.py:161-174: one aggregate,
+    several outputs). Pins ``df`` once through :func:`pin_frame` (so
+    the reliable-checkpoint conf applies), then calls each writer, in
+    order, on the pinned frame. A failing writer does not stop the
+    ones after it; once all have run, one ``RuntimeError`` names every
+    failed sink, carries each later error's repr, and chains the first
+    error as its cause. Returns the pinned frame, so later reads
+    replay the pin instead of recomputing ``df``.
+
+    Serial on purpose: at aggregate size each sink is a small job. A
+    3-thread pool over the pinned frame measured no wall gain on a
+    4-core host (perfbench star_batch, 4 interleaved pairs: median
+    wall_s 2.67 s pooled against 2.51 s serial) and cost about 1 s
+    more CPU per pass."""
+    pinned = pin_frame(df)
+    errors: list[tuple[str, Exception]] = []
+    for name, write in writers.items():
+        try:
+            write(pinned)
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append((name, exc))
+    if errors:
+        names = ", ".join(name for name, _ in errors)
+        also = "".join(f"; also failed: {n}: {e!r}" for n, e in errors[1:])
+        raise RuntimeError(f"sink(s) failed: {names}{also}") from errors[0][1]
+    return pinned
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -15,6 +15,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+import cmsspark_spark.catalog as C
 import cmsspark_spark.operators.bm25 as BM
 import cmsspark_spark.operators.dedup as D
 import cmsspark_spark.operators.pipeline as PL
@@ -260,6 +261,65 @@ def test_session_memo_store_is_bounded_lru():
     assert ("k", MEMO_MAX_ENTRIES) in store
 
 
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted in the status store."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_resolves_schema_once_per_file_set(spark, tmp_path):
+    """``catalog.load_table`` infers a table's schema once per session
+    and file set: a second load runs no Spark job, a rewritten file (new
+    size, or only a new mtime) is inferred again and gets its new split
+    count, and ``invalidate_session_memos`` drops the entry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cmsspark_spark.operators.memo import invalidate_session_memos
+
+    sf = str(tmp_path)
+    path = f"{sf}/t.parquet"
+
+    def write(n_rows: int, row_group: int) -> None:
+        pq.write_table(
+            pa.table({"k": list(range(n_rows))}), path,
+            row_group_size=row_group,
+        )
+
+    def load():
+        return C.load_table(spark, sf, "t", widen=True)
+
+    def widened(df) -> bool:
+        return "RoundRobinPartitioning" in (
+            df._jdf.queryExecution().executedPlan().toString()
+        )
+
+    write(30, 30)
+    assert _jobs_of(spark, load) == 1
+    assert _jobs_of(spark, load) == 0
+    assert C._scan(spark, path)[1]["splits"] == 1
+    assert widened(load())
+    write(30, 10)  # new size: three row groups
+    assert _jobs_of(spark, load) == 1
+    assert C._scan(spark, path)[1]["splits"] == 3
+    assert not widened(load())
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))
+    assert _jobs_of(spark, load) == 1
+    invalidate_session_memos(spark)
+    assert not C._SCAN_MEMO._store.get(spark)
+    assert _jobs_of(spark, load) == 1
+    assert sorted(r.k for r in load().collect()) == list(range(30))
+
+
 #: One concurrency case per memo declared in cmsspark_spark: the memo
 #: site's build functions (module attribute names, each counted) and a
 #: call through the site on the tiny memo_inputs. Builders a site takes
@@ -317,6 +377,12 @@ MEMO_CASES = {
         [],
         lambda i, counted: Q._bm25_index_dir(
             i.docs, "probe", counted(os.makedirs, "index")
+        ),
+    ),
+    "table_scan": (
+        [(C, "_infer_scan")],
+        lambda i, counted: C._scan(
+            i.docs.sparkSession, i.docs.inputFiles()[0].rsplit("/", 1)[0]
         ),
     ),
 }

@@ -709,6 +709,32 @@ def test_bm25_no_sortmerge_joins_broadcast_everywhere(spark):
             )
 
 
+def _final_shuffles(df) -> int:
+    """Shuffle Exchanges in the executed (final AQE) plan."""
+    import re
+
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return len(re.findall(r"[+-] Exchange ", final))
+
+
+def test_bm25_semi_join_build_sides_are_not_deduplicated(spark, tmp_path):
+    """A broadcast left-semi join ignores duplicate build rows, so the
+    query-term sides of both BM25 stacks skip ``distinct()``: the
+    in-session more-like-this and the exact index serve each run 3
+    shuffles (df aggregate, score aggregate, per-query rank)."""
+    from cmsspark_spark.operators import retrieval
+    from cmsspark_spark.operators.pipeline import bm25_more_like_this
+
+    d = spark.read.parquet(f"{SF}/documents.parquet")
+    assert _final_shuffles(bm25_more_like_this(d, "doc_id", "text", 5, 10)) == 3
+    idx = str(tmp_path / "idx")
+    retrieval.append_bm25_index(d.limit(400), idx)
+    served = retrieval.bm25_index_serve(spark, idx, query_max_id=5)
+    assert _final_shuffles(served) == 3
+
+
 def test_bm25_champion_candidate_join_broadcasts(spark):
     """r9: the champion candidate set is O(queries·terms·c) ids BY
     CONSTRUCTION, so its join back onto the corpus postings must be a

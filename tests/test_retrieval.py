@@ -951,3 +951,95 @@ def test_append_tables_equal_a_direct_kernel_build(spark, tmp_path):
         got = spark.read.parquet(f"{cdir}/{name}")
         assert got.dtypes == frame.dtypes, name
         assert _ranked(got) == _ranked(frame), name
+
+
+def _commit_dirs(spark, idx):
+    return [cdir for _seq, cdir in R._list_commit_dirs(spark, idx)]
+
+
+def test_commits_record_the_schema_spark_reads_back(spark, tmp_path):
+    """Every table a commit (or a compaction's base) writes carries its
+    schema in the commit record, equal to the schema Spark infers from
+    the written files: postings, termstats, blockstats, champions,
+    globals, positions and tombstones."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(120)
+    idx = str(tmp_path / "idx")
+    R.append_bm25_index(docs, idx, positions=True)
+    R.tombstone_bm25_index(docs.filter(F.col("doc_id") % 5 == 1), idx)
+    seen = set()
+
+    def check(part, recorded):
+        for table, js in recorded.items():
+            inferred = spark.read.parquet(f"{part}/{table}").schema
+            assert StructType.fromJson(js) == inferred, (part, table)
+            seen.add(table)
+
+    for cdir in _commit_dirs(spark, idx):
+        with open(f"{cdir}/_commit.json") as fh:
+            check(cdir, json.load(fh)["schemas"])
+    assert seen == set(R._INDEX_TABLES)
+    R.compact_bm25_index(spark, idx)
+    with open(f"{idx}/_index_meta.json") as fh:
+        imeta = json.load(fh)
+    base = f"{idx}/base/v{imeta['base_version']:08d}"
+    seen.clear()
+    check(base, imeta["base_schemas"])
+    assert seen == set(R._INDEX_TABLES) - {"tombstones"}
+
+
+def test_exact_serve_runs_no_schema_inference_job(spark, tmp_path):
+    """An exact serve over a one-commit, 400-doc index reads every
+    table with its recorded schema: at most 10 Spark jobs, none of
+    them a parquet schema inference."""
+    import uuid
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(400)
+    idx = str(tmp_path / "idx")
+    R.append_bm25_index(docs, idx)
+    sc = spark.sparkContext
+    group = f"serve-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        R.bm25_index_serve(spark, idx, query_max_id=5, mode="exact").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    store = sc._jsc.sc().statusStore()
+    names = [
+        store.job(j).name()
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    ]
+    assert len(names) <= 10, names
+    assert not [n for n in names if n.startswith("parquet at")], names
+
+
+def test_commits_without_recorded_schemas_serve_identically(
+    spark, tmp_path
+):
+    """A commit record without its ``schemas`` key (written before
+    commits recorded them) is read by inference, alone or beside parts
+    that record theirs, and serves identical rows."""
+    import json
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    idx = str(tmp_path / "idx")
+    for part in range(2):
+        R.append_bm25_index(docs.filter(F.col("doc_id") % 2 == part), idx)
+    R.tombstone_bm25_index(docs.filter(F.col("doc_id") % 9 == 4), idx)
+    want = {
+        mode: _ranked(R.bm25_index_serve(spark, idx, mode=mode))
+        for mode in ("exact", "blockmax")
+    }
+    for i, cdir in enumerate(_commit_dirs(spark, idx)):
+        with open(f"{cdir}/_commit.json") as fh:
+            meta = json.load(fh)
+        del meta["schemas"]
+        with open(f"{cdir}/_commit.json", "w") as fh:
+            json.dump(meta, fh)
+        for mode, rows in want.items():
+            assert _ranked(R.bm25_index_serve(spark, idx, mode=mode)) == rows, (
+                i, mode,
+            )

@@ -40,6 +40,93 @@ def test_popularity_job_end_to_end(spark, tmp_path):
     assert 'table id="dataframe"' in html and "Dataset popularity" in html
 
 
+def _sorted_lines(path: str) -> list[str]:
+    """Every line of a file, sorted; for a directory of CSV part files,
+    their header once plus every part's data lines, sorted (the part
+    count is the writer's, not the data's)."""
+    import glob
+    import os
+
+    if not os.path.isdir(path):
+        return sorted(open(path).read().splitlines())
+    parts = [
+        open(f).read().splitlines() for f in sorted(glob.glob(f"{path}/part-*"))
+    ]
+    return sorted({p[0] for p in parts if p}) + sorted(
+        ln for p in parts for ln in p[1:]
+    )
+
+
+def test_popularity_pins_once_and_writes_what_unpinned_sinks_write(
+    spark, tmp_path, monkeypatch
+):
+    """The daily job computes its aggregate once: ``fan_out`` pins the
+    spine a single time, and every sink's output equals the output of
+    the same writers run on the unpinned frame."""
+    from cmsspark_spark import sinks
+
+    pins = []
+    real_pin = sinks.pin_frame
+
+    def counting_pin(df, *a, **k):
+        pins.append(df)
+        return real_pin(df, *a, **k)
+
+    monkeypatch.setattr(sinks, "pin_frame", counting_pin)
+    date = "2024-06-01"
+    pinned_out, plain_out = str(tmp_path / "pinned"), str(tmp_path / "plain")
+    popularity.run(spark, SF, pinned_out, date)
+    assert len(pins) == 1
+    plain = popularity.compute(spark, SF, date)
+    for write in popularity.writers(plain_out, date).values():
+        write(plain)
+    assert len(pins) == 1
+
+    def rows(path):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(path).collect()
+        )
+
+    assert rows(f"{pinned_out}/parquet") == rows(f"{plain_out}/parquet")
+    assert rows(f"{pinned_out}/parquet")
+    for rel in (
+        f"csv/{date}",
+        f"report/popularity_{date}.csv",
+        f"report/popularity_{date}.html",
+    ):
+        assert _sorted_lines(f"{pinned_out}/{rel}") == _sorted_lines(
+            f"{plain_out}/{rel}"
+        ), rel
+
+
+def test_fan_out_runs_later_writers_after_a_failure(
+    spark, tmp_path, monkeypatch
+):
+    """A failing sink does not stop the sinks after it: with the CSV
+    writer raising, the popularity report is still written, and the
+    job's error names the CSV sink and chains its error."""
+    import os
+
+    import pytest
+
+    from cmsspark_spark import sinks
+
+    err = OSError("csv disk full")
+
+    def broken_csv(*a, **k):
+        raise err
+
+    monkeypatch.setattr(sinks, "write_csv", broken_csv)
+    out = str(tmp_path / "pop")
+    with pytest.raises(RuntimeError) as info:
+        popularity.run(spark, SF, out, "2024-06-01")
+    assert "csv" in str(info.value) and "report" not in str(info.value)
+    assert info.value.__cause__ is err
+    assert spark.read.parquet(f"{out}/parquet").count() > 0
+    assert os.path.exists(f"{out}/report/popularity_2024-06-01.csv")
+    assert os.path.exists(f"{out}/report/popularity_2024-06-01.html")
+
+
 def test_incremental_recompute_touches_only_window(spark, tmp_path):
     table = str(tmp_path / "curated")
 
@@ -446,7 +533,7 @@ def test_rucio_summary_job_end_to_end(spark, tmp_path):
 
 
 def test_rucio_summary_reports_every_failed_sink(spark, tmp_path, monkeypatch):
-    """Two of the three concurrent sinks raise: the job's RuntimeError
+    """Two of the three sinks raise: the job's RuntimeError
     names both sinks, carries the second error's repr in its message,
     and chains the first error as its cause."""
     import pytest
