@@ -189,7 +189,6 @@ def ingest_increment_embed_dedup(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Embedding-space sibling of ``ingest_increment_dedup``: admit only
     incoming vectors with NO near-duplicate (cosine ≥ ``threshold``)
@@ -208,8 +207,8 @@ def ingest_increment_embed_dedup(
     """
     import numpy as np
 
-    from cmsspark_spark.functions.vectors import dot, l2_norm
-    from cmsspark_spark.operators.similarity import _all_buckets, _dblvec
+    from cmsspark_spark.functions.vectors import dot, l2_norm, sign_buckets_arrow
+    from cmsspark_spark.operators.similarity import _dblvec
 
     rng = np.random.default_rng(seed)
     planes = [rng.standard_normal((num_planes, dim)) for _ in range(tables)]
@@ -217,7 +216,7 @@ def ingest_increment_embed_dedup(
     def bucketize(df, side):
         return df.select(
             F.col(id_col).alias(f"{side}_id"),
-            F.posexplode(_all_buckets(vec_col, planes, impl)).alias(
+            F.posexplode(sign_buckets_arrow(planes)(vec_col)).alias(
                 "_table", "_bucket"
             ),
         )

@@ -30,10 +30,13 @@ never reads (let alone rewrites) existing state:
   candidate SEED, not a correctness surface: the max-score serve
   stays exact with any seed set (θ from exact seed scores is a lower
   bound on the true k-th score by subset-ness).
-- ``globals/``   (n_docs, sum_dl): one row per commit, summed at
-  serve. n_docs counts EVERY increment row (zero-token docs score
-  nothing but belong in N, exactly like the in-session rung);
-  sum_dl sums per-doc token lengths from the increment's postings.
+- ``globals/``   (n_docs, sum_dl): one row per commit. The commit
+  record carries the same two scalars, and a serve sums the records
+  on the driver (it reads the table only for parts written before
+  records carried ``sum_dl``). n_docs counts EVERY increment row
+  (zero-token docs score nothing but belong in N, exactly like the
+  in-session rung); sum_dl sums per-doc token lengths from the
+  increment's postings.
 
 Serve-time bounds (max-score): per-term ub = floor(idf ·
 tf_part(max_tf, min_dl) · 1e6) + 1 micro-units. tf_part is increasing
@@ -65,10 +68,10 @@ into a new versioned base published by one atomic meta flip;
 
 Each commit records the schema of every table it writes in its
 ``_commit.json`` (the base's ride in the compaction's meta flip), as
-Spark reads the table back. A serve lists the commits once, reads each
-record once, and reads every table with its recorded schema — no
-schema-inference job. Parts without a record (pre-v2 flat dirs, older
-commits) are inferred as before.
+Spark reads the table back, next to its (n_docs, sum_dl). A serve
+lists the commits once, reads each record once, and reads every table
+with its recorded schema — no schema-inference job. Parts without a
+record (pre-v2 flat dirs, older commits) are inferred as before.
 
 No reference twin: the reference has no retrieval serving state; this
 is the train-once/serve-increment rung for the beyond-reference BM25
@@ -159,11 +162,12 @@ def _write_tables(frames: dict, root: str, mode: str | None = None) -> dict:
 def _live_parts(
     spark: SparkSession, index_dir: str, imeta: dict | None = None
 ) -> list[tuple[str, dict | None]]:
-    """(dir, recorded table schemas) of every live part of an index: the
-    compacted base (schemas from ``_index_meta.json``) or the legacy
-    flat dir (pre-v2 index, until its first compaction; no schemas),
-    then each commit dir past the base (schemas from its
-    ``_commit.json``). The base SUBSUMES the flat dir and the folded
+    """(dir, commit record) of every live part of an index: the
+    compacted base (its record is the ``base_*`` keys of
+    ``_index_meta.json``: ``schemas``, ``n_docs``, ``sum_dl``) or the
+    legacy flat dir (pre-v2 index, until its first compaction; no
+    record), then each commit dir past the base (its ``_commit.json``).
+    The base SUBSUMES the flat dir and the folded
     commits, so those are excluded the moment the meta points at a
     base — a crash between the meta flip and the best-effort deletes
     can never double-count. One commits/ listing plus one
@@ -176,17 +180,42 @@ def _live_parts(
         )
     root = index_dir.rstrip("/")
     base_v = int(imeta.get("base_version", 0))
+    base = {
+        k: imeta[f"base_{k}"]
+        for k in ("schemas", "n_docs", "sum_dl")
+        if f"base_{k}" in imeta
+    }
     parts: list[tuple[str, dict | None]] = [
-        (f"{root}/base/v{base_v:08d}", imeta.get("base_schemas"))
-        if base_v
-        else (root, None)
+        (f"{root}/base/v{base_v:08d}", base) if base_v else (root, None)
     ]
     through = int(imeta.get("base_through_seq", 0))
     for seq, cdir in _list_commit_dirs(spark, index_dir):
         if seq > through:
-            cmeta = fsops.read_json_meta(spark, f"{cdir}/_commit.json")
-            parts.append((cdir, (cmeta or {}).get("schemas")))
+            parts.append(
+                (cdir, fsops.read_json_meta(spark, f"{cdir}/_commit.json"))
+            )
     return parts
+
+
+def _table_paths(
+    spark: SparkSession, parts: list, table: str
+) -> list[tuple[str, dict | None]]:
+    """(path, recorded schema or None) of ``table`` in every part that
+    holds it. A part whose record names its tables' schemas holds
+    exactly those tables; any other part is probed, and a failed
+    existence probe (permissions) propagates — a serve must not mistake
+    it for 'this index has no tombstones' and resurrect deleted
+    documents."""
+    out = []
+    for d, record in parts:
+        recorded = (record or {}).get("schemas")
+        p = f"{d}/{table}"
+        if recorded is not None:
+            if table in recorded:
+                out.append((p, recorded[table]))
+        elif fsops.size(spark, p) is not None:
+            out.append((p, None))
+    return out
 
 
 def index_table(
@@ -201,33 +230,22 @@ def index_table(
     ``parts`` is a :func:`_live_parts` result to reuse. When every part
     holding the table recorded its schema and they agree, the read
     takes that schema; otherwise (pre-v2 flat dirs, older commits)
-    Spark infers it. A part with recorded schemas holds exactly the
-    tables it names; any other part is probed, and a failed existence
-    probe (permissions) propagates — a serve must not mistake it for
-    'this index has no tombstones' and resurrect deleted documents.
+    Spark infers it (see :func:`_table_paths`).
     ``required=False`` returns None when no part holds the table
     (tombstones/blockstats on an index that never wrote them);
     required tables raise a descriptive error instead of a bare
     path-not-found."""
     if parts is None:
         parts = _live_parts(spark, index_dir)
-    paths, schemas = [], []
-    for d, recorded in parts:
-        p = f"{d}/{table}"
-        if recorded is not None:
-            if table in recorded:
-                paths.append(p)
-                schemas.append(recorded[table])
-        elif fsops.size(spark, p) is not None:
-            paths.append(p)
-            schemas.append(None)
-    if not paths:
+    found = _table_paths(spark, parts, table)
+    if not found:
         if required:
             raise FileNotFoundError(
                 f"{index_dir} has no {table} data — empty or unbuilt "
                 "index (append an increment first)"
             )
         return None
+    paths, schemas = zip(*found)
     reader = spark.read
     if schemas[0] is not None and all(x == schemas[0] for x in schemas):
         reader = reader.schema(T.StructType.fromJson(schemas[0]))
@@ -456,6 +474,7 @@ def append_bm25_index(
         f"{stage}/_commit.json",
         {
             "n_docs": int(n_docs),
+            "sum_dl": int(sum_dl),
             "schemas": schemas,
             **({"tag": commit_tag} if commit_tag else {}),
         },
@@ -702,7 +721,9 @@ def tombstone_bm25_index(
         stage,
     )
     fsops.write_json_meta(
-        spark, f"{stage}/_commit.json", {"n_docs": 0, "schemas": schemas}
+        spark,
+        f"{stage}/_commit.json",
+        {"n_docs": 0, "sum_dl": 0, "schemas": schemas},
     )
     _finalize_commit(spark, index_dir, stage)
 
@@ -716,12 +737,21 @@ def _merged_state(spark: SparkSession, index_dir: str) -> dict:
         fsops.read_json_meta(spark, f"{index_dir}/_index_meta.json") or {}
     )
     parts = _live_parts(spark, index_dir, imeta)
-    g = (
-        index_table(spark, index_dir, "globals", parts)
-        .agg(F.sum("n_docs"), F.sum("sum_dl"))
-        .first()
-    )
-    n_docs, sum_dl = int(g[0]), int(g[1] or 0)
+    # the parts' recorded (n_docs, sum_dl) sum on the driver; a part
+    # holding a globals table without them (pre-v2 flat dirs, older
+    # commits and bases) makes the serve read the table instead
+    unrecorded = [(d, r) for d, r in parts if "sum_dl" not in (r or {})]
+    if _table_paths(spark, unrecorded, "globals"):
+        g = (
+            index_table(spark, index_dir, "globals", parts)
+            .agg(F.sum("n_docs"), F.sum("sum_dl"))
+            .first()
+        )
+        n_docs, sum_dl = int(g[0]), int(g[1] or 0)
+    else:
+        recs = [r for _, r in parts if "sum_dl" in (r or {})]
+        n_docs = sum(int(r["n_docs"]) for r in recs)
+        sum_dl = sum(int(r["sum_dl"]) for r in recs)
     post = index_table(spark, index_dir, "postings", parts)
     stats = index_table(spark, index_dir, "termstats", parts)
     champ = index_table(spark, index_dir, "champions", parts)
@@ -1269,7 +1299,9 @@ def compact_bm25_index(
     schemas = _write_tables({"postings": st["post"]}, base, "overwrite")
 
     def new_base(name: str) -> DataFrame:
-        return index_table(spark, index_dir, name, [(base, schemas)])
+        return index_table(
+            spark, index_dir, name, [(base, {"schemas": schemas})]
+        )
 
     schemas |= _write_tables({
         **_stat_partials(new_base("postings"), champions),
@@ -1306,6 +1338,8 @@ def compact_bm25_index(
         base_version=new_v,
         base_through_seq=last_seq,
         base_schemas=schemas,
+        base_n_docs=int(st["n_docs"]),
+        base_sum_dl=int(st["sum_dl"]),
     )
     fsops.write_json_meta(spark, meta_path, imeta)
     vacuum_bm25_index(spark, index_dir)

@@ -9,9 +9,15 @@ Beyond-reference operators for ANN over ``array<float>``:
   to sign-pattern buckets; candidates = same bucket (any of ``tables``
   independent tables); exact re-score on candidates only. The scale
   path: at 100 TB the bucket join replaces the full cross product.
+- ``ivf_topk`` / ``pq_adc_topk`` / ``ivfpq_static_topk`` — inverted
+  lists, product-quantized codes and their composition.
 
-Hyperplanes are generated from a seeded RNG in the driver and shipped as
-*literal arrays* into the plan — deterministic, no UDF, no side files.
+Hyperplanes, centroids and codebooks are seeded or trained on the
+driver. Each per-row kernel (sign buckets, IVF probes, PQ codes and
+scores) has ONE implementation, a batch kernel of
+``functions/vectors.py`` that folds every dot product in the oracle
+twins' order, so bucket ids, probe orders and codes are bit-identical
+to them. The pair rescores stay Catalyst folds (``_rescore_topk``).
 """
 
 from __future__ import annotations
@@ -25,6 +31,8 @@ from cmsspark_spark.functions.vectors import (
     cosine_similarity,
     dot,
     l2_norm,
+    pq_subspace_codes,
+    pq_subspace_scores,
     sign_buckets_arrow,
 )
 from cmsspark_spark.session import local_frame
@@ -145,11 +153,6 @@ def _int_mat_lit(mat) -> "F.Column":
     return F.array(*[_int_arr_lit(row) for row in mat])
 
 
-def _dbl_cube_lit(cube) -> "F.Column":
-    """``array<array<array<double>>>`` literal (see _dbl_mat_lit)."""
-    return F.array(*[_dbl_mat_lit(mat) for mat in cube])
-
-
 def _rescore_topk(
     cand, k: int, id_col: str, vec_col: str, query_id_col: str
 ) -> DataFrame:
@@ -160,8 +163,8 @@ def _rescore_topk(
     The rescore dot stays a Catalyst fold ON PURPOSE: an Arrow pandas
     UDF here must ship BOTH vectors of every candidate pair across the
     Python boundary (measured 2.8s → 13.2s on near-dup at sf0.1) —
-    vectorizing pays pre-join (one array per row, see ``_all_buckets``),
-    never post-join."""
+    vectorizing pays pre-join (one array per row, the batch kernels of
+    ``functions/vectors.py``), never post-join."""
     scored = cand.withColumn("cosine", cosine_similarity(vec_col, "_qvec"))
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cosine").desc(), F.col(id_col).asc()
@@ -237,16 +240,11 @@ def cosine_near_pairs_lsh(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Embedding near-dup pairs at scale: sign-LSH bucket self-join for
     candidates (high-cosine vectors land in the same bucket with
     probability (1 - θ/π)^planes per table), exact cosine only on
     candidates. Approximate: misses pairs no table co-buckets.
-
-    ``impl="arrow"`` (default) hashes with one vectorized numpy matmul
-    per Arrow batch; ``impl="sql"`` keeps the pure-Catalyst expression
-    form (UDF-free, for environments where Arrow is off).
 
     Shuffle discipline (the 100 TB shape): the bucket self-join carries
     ONLY (id, table, bucket) — candidate pairs are ids, never vectors.
@@ -261,7 +259,7 @@ def cosine_near_pairs_lsh(
     all_planes = [rng.standard_normal((num_planes, dim)) for _ in range(tables)]
     hashed = emb.select(
         F.col(id_col),
-        F.posexplode(_all_buckets(vec_col, all_planes, impl)).alias(
+        F.posexplode(sign_buckets_arrow(all_planes)(vec_col)).alias(
             "_table", "_bucket"
         ),
     )
@@ -331,48 +329,25 @@ def train_ivf_centroids(
     return cents
 
 
-def _centroid_assign(vec_col: str, centroids: np.ndarray, nprobe: int) -> "F.Column":
-    """Top-``nprobe`` centroid ids by cosine, as one bounded plan
-    subtree: the normalized centroids enter as ONE matrix literal and
-    a ``transform(sequence(...))`` computes the per-centroid (score,
-    id) structs — the tree is O(1) in |centroids|·dim instead of the
-    old per-centroid unrolled expression chain (same fold order, so
-    scores and tie-breaks are bit-identical: dot = left-to-right
-    aggregate over zip_with, sort ascending by (s, c), reversed)."""
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    m = _dbl_mat_lit(cn)
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    scored = F.transform(
-        F.sequence(F.lit(0), F.lit(len(cn) - 1)),
-        lambda i: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.element_at(m, i + F.lit(1)),
-                    lambda x, p: x.cast("double") * p,
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("s"),
-            i.alias("c"),
+def _ivf_lists(
+    corpus: DataFrame, centroids: np.ndarray, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, vector, ``_centroid``): each corpus vector in its ONE
+    nearest list. Shared index STATE (the in-memory form of
+    write_ivf_index's layout): one probe-kernel pass per (corpus,
+    centroids) per session, read by ``ivf_topk`` and
+    ``semantic_dedup``."""
+    return _corpus_index_shared(
+        corpus,
+        ("ivf_assign", id_col, vec_col, _np_digest(centroids)),
+        lambda: corpus.select(
+            F.col(id_col),
+            F.col(vec_col),
+            centroid_probe_arrow(centroids, 1)(vec_col)
+            .getItem(0)
+            .alias("_centroid"),
         ),
     )
-    return F.transform(
-        F.slice(F.reverse(F.array_sort(scored)), 1, nprobe), lambda e: e["c"]
-    )
-
-
-def _probe_lists(
-    vec_col: str, centroids: np.ndarray, nprobe: int, impl: str
-) -> "F.Column":
-    """Top-``nprobe`` inverted-list ids for one vector — arrow (numpy
-    matmul per Arrow batch, default) or sql (one expression tree per
-    centroid; oracle-safe/UDF-free fallback)."""
-    if impl == "arrow":
-        return centroid_probe_arrow(centroids, nprobe)(vec_col)
-    return _centroid_assign(vec_col, centroids, nprobe)
 
 
 def ivf_topk(
@@ -384,7 +359,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their nearest
     centroid's inverted list; each query probes its ``nprobe`` nearest
@@ -395,25 +369,13 @@ def ivf_topk(
     membership is a join key. Recall grows with nprobe (nprobe =
     n_centroids ⇒ exact).
     """
-    # the corpus-side inverted-list assignment is shared index
-    # STATE (the in-memory form of write_ivf_index's layout): one
-    # build per (corpus, centroids, impl) per session (r14)
-    c_assign = _corpus_index_shared(
-        corpus,
-        ("ivf_assign", id_col, vec_col, impl, _np_digest(centroids)),
-        lambda: corpus.select(
-            F.col(id_col),
-            F.col(vec_col),
-            # corpus side: nprobe=1 — each vector lives in ONE list
-            _probe_lists(vec_col, centroids, 1, impl)
-            .getItem(0)
-            .alias("_centroid"),
-        ),
-    )
+    c_assign = _ivf_lists(corpus, centroids, id_col, vec_col)
     q_assign = queries.select(
         F.col(id_col).alias(query_id_col),
         F.col(vec_col).alias("_qvec"),
-        F.explode(_probe_lists(vec_col, centroids, nprobe, impl)).alias("_centroid"),
+        F.explode(centroid_probe_arrow(centroids, nprobe)(vec_col)).alias(
+            "_centroid"
+        ),
     )
     cand = (
         c_assign.join(F.broadcast(q_assign), on="_centroid")
@@ -430,7 +392,6 @@ def write_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     mode: str = "overwrite",
-    impl: str = "arrow",
 ) -> None:
     """Materialize the IVF index: corpus partitioned on disk by nearest
     centroid. At query time a probe reads ONLY its nprobe partitions
@@ -440,7 +401,7 @@ def write_ivf_index(
     assigned = corpus.select(
         F.col(id_col),
         F.col(vec_col),
-        _probe_lists(vec_col, centroids, 1, impl).getItem(0).alias("_centroid"),
+        centroid_probe_arrow(centroids, 1)(vec_col).getItem(0).alias("_centroid"),
     )
     # repartition by list: one writer per inverted list → one file per
     # partition dir, no small-file explosion
@@ -459,7 +420,6 @@ def ivf_index_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Probe a materialized IVF index: queries hash to their nprobe
     centroid lists; the corpus scan carries a ``_centroid IN (...)``
@@ -467,7 +427,9 @@ def ivf_index_topk(
     q = queries.select(
         F.col(id_col).alias(query_id_col),
         F.col(vec_col).alias("_qvec"),
-        F.explode(_probe_lists(vec_col, centroids, nprobe, impl)).alias("_centroid"),
+        F.explode(centroid_probe_arrow(centroids, nprobe)(vec_col)).alias(
+            "_centroid"
+        ),
     )
     corpus = spark.read.option("basePath", index_path).parquet(index_path)
     cand = (
@@ -480,60 +442,6 @@ def ivf_index_topk(
 
 def _dblvec(vec_col: str) -> "F.Column":
     return F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-
-def _sign_bucket(vec_col: str, planes: np.ndarray) -> "F.Column":
-    """Bucket id = bit pattern of sign(plane · vec) over all planes.
-
-    The planes enter the plan as ONE matrix literal (one numpy-array
-    py4j call per plane) and the per-plane dot/sign/bit terms are a
-    ``transform(sequence(...))`` folded left-to-right — the plan
-    subtree is O(1) in planes·dims where the old per-element literal
-    chain was O(planes·dims) nodes Catalyst re-walked every pass
-    (measured: seconds of plan-building for 16 planes × 64 dims).
-    Bit values and the long sum are bit-identical to the unrolled
-    ``IF(...) + IF(...)`` chain.
-    """
-    m = _dbl_mat_lit(planes)
-    pow2 = _int_arr_lit([2 ** i for i in range(len(planes))])
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(len(planes) - 1)),
-        lambda i: F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.element_at(m, i + F.lit(1)),
-                    lambda x, p: x.cast("double") * p,
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            >= 0.0,
-            F.element_at(pow2, i + F.lit(1)),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    # left-to-right long sum == the old explicit `+` chain bit-for-bit
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda a, x: a + x)
-
-
-def _all_buckets(vec_col: str, all_planes: list, impl: str) -> "F.Column":
-    """``array<bigint>`` of every table's bucket id for one vector.
-
-    arrow: one vectorized pandas UDF (numpy matmul per Arrow batch) —
-    the hot path; the per-plane aggregate(zip_with) trees of the sql
-    form are interpreted (HOFs never reach whole-stage codegen) and
-    re-walk the vector per plane.
-    sql: pure Catalyst expressions, UDF-free (oracle-safe fallback).
-    """
-    if impl == "arrow":
-        return sign_buckets_arrow(all_planes)(vec_col)
-    return F.array(
-        *[
-            _sign_bucket(vec_col, planes).cast("bigint")
-            for planes in all_planes
-        ]
-    )
 
 
 def lsh_topk(
@@ -554,8 +462,6 @@ def lsh_topk(
     of ``tables`` independent hash tables; only candidates get the exact
     cosine. Recall grows with ``tables`` and shrinks with ``num_planes``.
     Returns (query_id, vec_id, cosine, rank) like ``brute_force_topk``.
-    Buckets come from the vectorized ``arrow`` hasher (see
-    ``cosine_near_pairs_lsh``).
     """
     rng = np.random.default_rng(seed)
     all_planes = [
@@ -564,12 +470,12 @@ def lsh_topk(
 
     def bucketize(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
         # ONE scan: every table's bucket in one array column (one UDF
-        # call or one expression tree), exploded narrowly — no
-        # union-of-branches re-reading the source.
+        # call), exploded narrowly — no union-of-branches re-reading
+        # the source.
         return df.select(
             F.col(id_col).alias(out_id),
             F.col(vec_col).alias(out_vec),
-            F.posexplode(_all_buckets(vec_col, all_planes, "arrow")).alias(
+            F.posexplode(sign_buckets_arrow(all_planes)(vec_col)).alias(
                 "_table", "_bucket"
             ),
         )
@@ -610,97 +516,34 @@ def pq_codebook(
     return rng.standard_normal((m, k, d_sub))
 
 
-def _pq_subspace_scores_all(vec_col, codebook: np.ndarray) -> "F.Column":
-    """ONE ``array<array<double>>`` column of every subspace's k scores
-    ``sub_j · C_jc − ½|C_jc|²`` (maximizing this over c minimizes the
-    L2 distance ‖sub_j − C_jc‖², since the ‖sub_j‖² term is constant
-    per row). Pure Catalyst folds — the identical left-to-right double
-    fold as the DuckDB twin's ``list_dot_product``, and the ½|C|²
-    constants are Python-computed literals shared by BOTH engines, so
-    assignment is hash-exact.
-
-    Callers that need the scores more than once MUST materialize this
-    column once (``.select(..., sall.alias(...))``) and reference the
-    attribute: HOF expressions are interpreted (never codegen'd), so
-    per-subspace ``element_at`` copies of the full tree each recompute
-    all m subspaces."""
-    m, k, d_sub = codebook.shape
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    dvec = F.transform(vec, lambda x: x.cast("double"))
-    # ALL m subspaces in ONE expression: the codebook enters as a
-    # single 3-D literal (one py4j call, folded to one Literal node),
-    # the ½-norms as one matrix literal, and the per-(subspace, code)
-    # scores come from a nested transform/zip_with — the whole build
-    # is O(10) driver round-trips where the per-subspace loop cost
-    # ~3 000 (measured ~2.4 s of socket wait per query build). Fold
-    # order per (j, c) — left-to-right dot, then −½|C|² — is
-    # unchanged, so scores stay bit-identical.
-    cb3 = _dbl_cube_lit(codebook)
-    hn2 = _dbl_mat_lit(
-        [
-            [
-                float(np.dot(codebook[j, c], codebook[j, c])) / 2.0
-                for c in range(k)
-            ]
-            for j in range(m)
-        ]
-    )
-    scores_all = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda j: F.zip_with(
-            F.element_at(cb3, j + F.lit(1)),
-            F.element_at(hn2, j + F.lit(1)),
-            lambda cent, hn: F.aggregate(
-                F.zip_with(
-                    F.slice(
-                        dvec, j * F.lit(d_sub) + F.lit(1), F.lit(d_sub)
-                    ),
-                    cent,
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            - hn,
-        ),
-    )
-    return scores_all
-
-
-def _pq_subspace_scores(vec_col, codebook: np.ndarray) -> list:
-    """Per-subspace score arrays as a list of Columns — ``element_at``
-    views over :func:`_pq_subspace_scores_all`. ONLY for frames where
-    each row is consumed O(1) times (the broadcast query side);
-    corpus-sized consumers materialize the _all column instead."""
-    sall = _pq_subspace_scores_all(vec_col, codebook)
-    return [F.element_at(sall, j + 1) for j in range(codebook.shape[0])]
-
-
 def pq_codes(
     df: DataFrame, id_col: str, vec_col: str, codebook: np.ndarray
 ) -> DataFrame:
     """Encode each vector as ``m`` small codes: per subspace, the
-    argmin-distance code (ties → smallest code id, via the
-    first-occurrence semantics of ``array_position(scores,
-    array_max(scores))``). Output (id, code_0..code_{m-1}) — this IS
+    argmin-distance code (ties → smallest code id; see
+    ``pq_subspace_codes``). Output (id, code_0..code_{m-1}) — this IS
     the index: 100 TB of float vectors compress to m bytes/vector, so
     the downstream scan is memory-bandwidth-bound on codes, never on
-    raw embeddings. A narrow zero-shuffle map (two stacked projections:
-    the scores array materializes ONCE per row, the code columns read
-    the attribute — CollapseProject keeps the split because the HOF
-    scores expression is not collapse-cheap)."""
-    m = codebook.shape[0]
-    staged = df.select(
-        F.col(id_col),
-        _pq_subspace_scores_all(vec_col, codebook).alias("_sall"),
+    raw embeddings. A narrow zero-shuffle map."""
+    return _split_array(
+        df.select(
+            F.col(id_col), pq_subspace_codes(codebook)(vec_col).alias("_a")
+        ),
+        "code_",
+        codebook.shape[0],
+        id_col,
     )
-    cols = [F.col(id_col)]
-    for j in range(m):
-        s = F.element_at(F.col("_sall"), j + 1)
-        cols.append(
-            F.array_position(s, F.array_max(s)).cast("int").alias(f"code_{j}")
-        )
-    return staged.select(*cols)
+
+
+def _split_array(df: DataFrame, prefix: str, m: int, *keep) -> DataFrame:
+    """``keep`` columns plus ``{prefix}0..{prefix}{m-1}``, the elements
+    of ``df``'s kernel output column ``_a``. A projection of its own,
+    so each element reads the attribute and the kernel runs once per
+    row."""
+    return df.select(
+        *keep,
+        *[F.element_at("_a", j + 1).alias(f"{prefix}{j}") for j in range(m)],
+    )
 
 
 def pq_adc_topk(
@@ -741,10 +584,14 @@ def _pq_adc_build(
         ("pq_codes", id_col, vec_col, _np_digest(codebook)),
         lambda: pq_codes(corpus, id_col, vec_col, codebook),
     )
-    qscores = _pq_subspace_scores(vec_col, codebook)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        *[s.alias(f"qs_{j}") for j, s in enumerate(qscores)],
+    q = _split_array(
+        queries.select(
+            F.col(id_col).alias("query_id"),
+            pq_subspace_scores(codebook)(vec_col).alias("_a"),
+        ),
+        "qs_",
+        m,
+        "query_id",
     )
     joined = codes.join(
         F.broadcast(q), on=F.col(id_col) != F.col("query_id")
@@ -766,45 +613,6 @@ def _pq_adc_build(
             F.round("_adc", 6).alias("adc_score"),
             F.col("rank").cast("long").alias("rank"),
         )
-    )
-
-
-def pq_codes_arrow(
-    df: DataFrame, id_col: str, vec_col: str, codebook: np.ndarray
-) -> DataFrame:
-    """Arrow fast path for PQ encoding: one numpy distance matrix per
-    (Arrow batch, subspace) — ``argmin_c ‖sub − C_jc‖²`` via the
-    ‖x‖²−2x·c+‖c‖² expansion — instead of m×k interpreted fold trees.
-    ``np.argmin`` takes the FIRST minimum, matching ``pq_codes``'s
-    smallest-code tie-break (bit-identical agreement is probabilistic —
-    the two paths sum in different orders — but a flip needs two
-    centroids within float error of equidistant: measure-zero for
-    continuous data). Closure pickles by value (numpy constants only).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    cb = codebook.astype(np.float64)
-    m, k, d_sub = cb.shape
-    flat = cb.reshape(m * k, d_sub)  # codes vary fastest within a subspace
-    cnorm = (flat * flat).sum(axis=1)  # (m*k,)
-
-    def _encode(vecs):
-        import pandas as pd
-
-        x = np.asarray(list(vecs), dtype=np.float64)  # (N, m*d_sub)
-        subs = x.reshape(len(x), m, d_sub)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for j in range(m):
-            cj = cb[j]  # (k, d_sub)
-            d = cnorm[j * k : (j + 1) * k] - 2.0 * subs[:, j, :] @ cj.T
-            codes[:, j] = np.argmin(d, axis=1) + 1  # 1-based like pq_codes
-        return pd.Series(list(codes))
-
-    enc = pandas_udf(_encode, "array<int>")
-    out = df.select(F.col(id_col), enc(F.col(vec_col)).alias("_codes"))
-    return out.select(
-        id_col,
-        *[F.element_at("_codes", j + 1).alias(f"code_{j}") for j in range(m)],
     )
 
 
@@ -850,7 +658,6 @@ def semantic_dedup(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "sql",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings by nearest centroid, then
@@ -872,13 +679,13 @@ def semantic_dedup(
     Returns one row per input vector: (``_cluster``, id, ``_dropped``
     flag).
     """
-    cl = corpus.select(
+    # the shared inverted lists: the self-join reads ``cl`` three
+    # times, and the probe kernel then runs once, not once per read
+    cl = _ivf_lists(corpus, centroids, id_col, vec_col).select(
         F.col(id_col),
         _dblvec(vec_col).alias("_v"),
         l2_norm(vec_col).alias("_n"),
-        F.element_at(_probe_lists(vec_col, centroids, 1, impl), 1).alias(
-            "_cluster"
-        ),
+        F.col("_centroid").alias("_cluster"),
     )
     return _cluster_leader_drops(cl, threshold, id_col)
 
@@ -930,11 +737,12 @@ def ivfpq_static_topk(
     Index = (list id + m residual codes) per vector: at 100 TB the
     store is ~9 bytes/vector and a query touches nprobe/n_lists of it —
     the two-level pruning neither IVF (full vectors in lists) nor flat
-    PQ (all codes scanned) achieves alone. Everything is Catalyst:
-    centroid selection is ``element_at`` into an array-of-arrays
-    literal, residuals are exact elementwise subtraction, and the ADC
-    ranking key folds in the same left-associative order as the DuckDB
-    twin, so the static-seed form is hash-exact cross-engine. Ranking
+    PQ (all codes scanned) achieves alone. Probes, codes and score
+    tables come from the fold kernels of ``functions/vectors.py``; the
+    centroid pick is ``element_at`` into an array-of-arrays literal,
+    residuals are exact elementwise subtraction, and the ADC ranking
+    key folds in the same left-associative order as the DuckDB twin,
+    so the static-seed form is hash-exact cross-engine. Ranking
     maximizes ``Σⱼ s_j(code_j) − ½‖q−c‖²`` ≡ L2 ADC distance ASC."""
     return _ivfpq_static_build(
         corpus, queries, centroids, codebook, k, nprobe, id_col, vec_col
@@ -950,66 +758,60 @@ def _ivfpq_static_build(
     )
     cents_lit = _dbl_mat_lit(cn)
 
-    def with_residual(df, cid_expr):
+    def residual(cid_expr):
         dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
         cent = F.element_at(cents_lit, cid_expr + 1)
         return F.zip_with(dvec, cent, lambda x, y: x - y)
 
     m = codebook.shape[0]
     # corpus: top-1 centroid, residual codes. Staged projections so the
-    # centroid pick, the residual vector and the subspace-score arrays
-    # each materialize ONCE per row and downstream columns read the
-    # attribute (HOF expressions are interpreted — per-code copies of
-    # the tree would recompute all m subspaces per column).
-    cstar = F.element_at(_centroid_assign(vec_col, centroids, 1), 1)
-    staged = (
-        corpus.withColumn("_c", cstar)
-        .select(
-            F.col(id_col), "_c",
-            with_residual(corpus, F.col("_c")).alias("_resid"),
-        )
-        .select(
-            F.col(id_col), "_c",
-            _pq_subspace_scores_all(
-                F.col("_resid"), codebook
-            ).alias("_sall"),
-        )
+    # centroid pick and the residual vector each materialize ONCE per
+    # row and the next kernel reads the attribute.
+    staged = corpus.withColumn(
+        "_c", F.element_at(centroid_probe_arrow(centroids, 1)(vec_col), 1)
+    ).select(
+        F.col(id_col), "_c", residual(F.col("_c")).alias("_resid")
     )
     # (list id + m residual codes) per vector IS the IVF-PQ index —
     # shared STATE per (corpus, centroids, codebook) (r14)
     codes = _corpus_index_shared(
         corpus,
         ("ivfpq_codes", id_col, vec_col, _np_digest(centroids, codebook)),
-        lambda: staged.select(
-            F.col(id_col),
+        lambda: _split_array(
+            staged.select(
+                F.col(id_col),
+                "_c",
+                pq_subspace_codes(codebook)("_resid").alias("_a"),
+            ),
+            "code_",
+            m,
+            id_col,
             "_c",
-            *[
-                F.array_position(
-                    F.element_at(F.col("_sall"), j + 1),
-                    F.array_max(F.element_at(F.col("_sall"), j + 1)),
-                ).cast("int").alias(f"code_{j}")
-                for j in range(m)
-            ],
         ),
     )
     # queries: nprobe probes, per-probe residual score tables + ‖q−c‖²
     probes = queries.select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.explode(_centroid_assign(vec_col, centroids, nprobe)).alias("_c"),
-    )
-    qresid = with_residual(probes.withColumnRenamed("_qv", vec_col), F.col("_c"))
-    qscores = _pq_subspace_scores(qresid, codebook)
+        F.col(vec_col),
+        F.explode(centroid_probe_arrow(centroids, nprobe)(vec_col)).alias("_c"),
+    ).select("query_id", "_c", residual(F.col("_c")).alias("_r"))
     qcn2 = F.aggregate(
-        F.zip_with(qresid, qresid, lambda x, y: x * y),
+        F.zip_with("_r", "_r", lambda x, y: x * y),
         F.lit(0.0),
         lambda a, x: a + x,
     )
-    q = probes.withColumnRenamed("_qv", vec_col).select(
+    q = _split_array(
+        probes.select(
+            "query_id",
+            "_c",
+            qcn2.alias("_qcn2"),
+            pq_subspace_scores(codebook)("_r").alias("_a"),
+        ),
+        "qs_",
+        m,
         "query_id",
         "_c",
-        qcn2.alias("_qcn2"),
-        *[sj.alias(f"qs_{j}") for j, sj in enumerate(qscores)],
+        "_qcn2",
     )
     joined = codes.join(F.broadcast(q), on="_c").filter(
         F.col(id_col) != F.col("query_id")
@@ -1099,17 +901,16 @@ def _kmeans_quantize(vec_col: str, scale: int) -> F.Column:
     )
 
 
-def _kmeans_best(q_col: str, cents: list[list[int]]) -> F.Column:
-    """argmin_j ||q - c_j||^2 as one bounded plan subtree: per-centroid
-    exact integer squared distance (zip_with fold), array_min over (d2,
-    cluster) structs — ties break to the lowest cluster index via
-    struct ordering. Narrow: no shuffle, no UDF; centroids enter as ONE
-    matrix literal and the per-centroid terms are a
-    ``transform(sequence(...))`` — O(1) tree vs the old per-element
-    unrolled chain (see _dbl_arr_lit), distances bit-identical."""
+def _kmeans_scored(q_col: str, cents: list[list[int]]) -> F.Column:
+    """The (d, c) struct per centroid c: exact integer squared distance
+    ``d = ||q - c||^2`` (zip_with fold). Narrow: no shuffle, no UDF;
+    centroids enter as ONE matrix literal and the per-centroid terms
+    are a ``transform(sequence(...))`` — O(1) tree vs the old
+    per-element unrolled chain (see _dbl_arr_lit). Struct ordering
+    sorts by d, then by the lower cluster index."""
     m = _int_mat_lit(cents)
     q = F.col(q_col) if isinstance(q_col, str) else q_col
-    scored = F.transform(
+    return F.transform(
         F.sequence(F.lit(0), F.lit(len(cents) - 1)),
         lambda i: F.struct(
             F.aggregate(
@@ -1124,7 +925,12 @@ def _kmeans_best(q_col: str, cents: list[list[int]]) -> F.Column:
             i.alias("c"),
         ),
     )
-    return F.array_min(scored)
+
+
+def _kmeans_best(q_col: str, cents: list[list[int]]) -> F.Column:
+    """argmin_j ||q - c_j||^2: array_min over the (d2, cluster)
+    structs — ties break to the lowest cluster index."""
+    return F.array_min(_kmeans_scored(q_col, cents))
 
 
 def kmeans_lloyd(
@@ -1425,27 +1231,11 @@ def semantic_dedup_assigned(
 def _kmeans_probes(q_col: str, cents: list, nprobe: int) -> "F.Column":
     """Top-``nprobe`` k-means clusters for one quantized vector by
     EXACT integer squared L2 (ascending, ties → lower cluster index):
-    sort the (d2, cluster) struct array, slice, project the ids — same
-    bounded-tree matrix-literal form as ``_kmeans_best``."""
-    m = _int_mat_lit(cents)
-    q = F.col(q_col) if isinstance(q_col, str) else q_col
-    scored = F.transform(
-        F.sequence(F.lit(0), F.lit(len(cents) - 1)),
-        lambda i: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    q,
-                    F.element_at(m, i + F.lit(1)),
-                    lambda x, p: (x - p) * (x - p),
-                ),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ).alias("d"),
-            i.alias("c"),
-        ),
-    )
+    sort the (d2, cluster) structs of ``_kmeans_scored``, slice,
+    project the ids."""
     return F.transform(
-        F.slice(F.array_sort(scored), 1, nprobe), lambda e: e["c"]
+        F.slice(F.array_sort(_kmeans_scored(q_col, cents)), 1, nprobe),
+        lambda e: e["c"],
     )
 
 

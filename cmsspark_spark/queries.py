@@ -1871,12 +1871,10 @@ def embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path embedding near-dup: sign-LSH bucket self-join for
     candidates, exact cosine re-score. Approximate vs the exact
     baseline (recall/precision-gated in tests/test_similarity.py) yet
-    deterministic in practice — the seeded hyperplanes are plan
-    literals, so a generated DuckDB twin (ORACLES assignment at module
-    end) reproduces candidates AND cosines. (The arrow impl's BLAS
-    summation order can in principle flip a sign on a plane dot within
-    float error of 0 — measure-zero for continuous embeddings; pin
-    impl='sql' for a hard bucket guarantee.)"""
+    deterministic — the seeded hyperplanes are plan constants, so a
+    generated DuckDB twin (ORACLES assignment at module end) reproduces
+    candidates AND cosines: the bucket kernel folds every plane dot in
+    the twin's order."""
     emb = _t(spark, sf_dir, "embeddings")
     pairs = S.cosine_near_pairs_lsh(emb, dim=64, threshold=0.3, num_planes=4, tables=8)
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
@@ -1886,9 +1884,9 @@ def embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path ANN: sign-LSH bucketing + exact re-score on candidates.
     Approximate vs brute force (recall ≥ 0.6 gated in tests) yet
-    deterministic in practice — seeded planes give a generated DuckDB
-    twin (ORACLES assignment at module end); see embed_near_dup_lsh's
-    docstring for the arrow-impl sign-order caveat."""
+    deterministic — seeded planes give a generated DuckDB twin
+    (ORACLES assignment at module end) whose buckets the kernel
+    reproduces exactly."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     out = S.lsh_topk(emb, queries, dim=64, k=5, num_planes=4, tables=4)
@@ -3443,15 +3441,13 @@ def ann_ivf_static_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors — the production shape where the index's coarse quantizer
     is built offline and shipped, and a legitimate ANN scheme in its
     own right). Unlike ann_ivf_topk's driver-trained k-means, every
-    step is SQL-reproducible: assignment uses the sequential-fold SQL
-    impl whose (score DESC, centroid DESC) tie-break the DuckDB twin
-    replicates, so inverted lists, probe sets, candidates and cosines
-    all match hash-exactly."""
+    step is SQL-reproducible: the probe kernel folds each score in the
+    DuckDB twin's order and breaks ties (score DESC, centroid DESC) as
+    it does, so inverted lists, probe sets, candidates and cosines all
+    match hash-exactly."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    out = S.ivf_topk(
-        emb, queries, _ivf_static_centroids(), k=5, nprobe=3, impl="sql"
-    )
+    out = S.ivf_topk(emb, queries, _ivf_static_centroids(), k=5, nprobe=3)
     return out.select(
         "query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"
     )
@@ -4701,8 +4697,8 @@ def _semantic_dedup_oracle(threshold: float = 0.4) -> str:
     import numpy as np
 
     cents = _ivf_static_centroids()
-    # mirror _centroid_assign's renormalization so literal values are
-    # the exact doubles Spark folds against
+    # mirror centroid_probe_arrow's renormalization so literal values
+    # are the exact doubles the probe kernel folds against
     cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
     cent_rows = ", ".join(f"({ci}, {_plane_sql(c)})" for ci, c in enumerate(cn))
     return f"""
@@ -4755,9 +4751,7 @@ def semantic_dedup_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     Assignment tie-break and every fold mirror the DuckDB twin, so the
     dropped SET is certified hash-exactly."""
     emb = _t(spark, sf_dir, "embeddings")
-    flagged = S.semantic_dedup(
-        emb, _ivf_static_centroids(), threshold=0.4, impl="sql"
-    )
+    flagged = S.semantic_dedup(emb, _ivf_static_centroids(), threshold=0.4)
     return flagged.groupBy(F.col("_cluster").alias("centroid")).agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.count("_dropped").alias("n_dropped"),
@@ -7568,7 +7562,7 @@ def embed_lsh_quality_report(
     ``ceil(count/_EMBED_TRUTH_TARGET)`` mod in SQL (one shared module
     constant — a non-default ``truth_target`` audits a different
     population than the registered oracle; don't hash-compare those,
-    ADVICE r6), pinned impl='sql' for the hard bucket guarantee."""
+    ADVICE r6)."""
     emb0 = _t(spark, sf_dir, "embeddings")
     # metadata-only count (unwidened scan) — see dedup_lsh_quality_report
     n_vecs = _t(spark, sf_dir, "embeddings", widen=False).count()
@@ -7576,7 +7570,7 @@ def embed_lsh_quality_report(
     emb = emb0.filter(F.col("vec_id") % mod == 0)
     cand = (
         S.cosine_near_pairs_lsh(
-            emb, dim=64, threshold=0.3, num_planes=4, tables=8, impl="sql"
+            emb, dim=64, threshold=0.3, num_planes=4, tables=8
         )
         .select("id_a", "id_b")
         .withColumn("is_cand", F.lit(True))

@@ -1043,3 +1043,65 @@ def test_commits_without_recorded_schemas_serve_identically(
             assert _ranked(R.bm25_index_serve(spark, idx, mode=mode)) == rows, (
                 i, mode,
             )
+
+
+def test_exact_serve_sums_recorded_globals_on_the_driver(
+    spark, tmp_path, monkeypatch
+):
+    """An exact serve over a one-commit, 400-doc index takes N and
+    sum_dl from the commit record: it never reads the globals table
+    (whose sum cost two jobs) and runs at most 7 Spark jobs."""
+    import uuid
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(400)
+    idx = str(tmp_path / "idx")
+    R.append_bm25_index(docs, idx)
+    read = []
+    real = R.index_table
+    monkeypatch.setattr(
+        R, "index_table", lambda s, d, table, *a, **k: (
+            read.append(table) or real(s, d, table, *a, **k)
+        ),
+    )
+    sc = spark.sparkContext
+    group = f"serve-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        R.bm25_index_serve(spark, idx, query_max_id=5, mode="exact").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    store = sc._jsc.sc().statusStore()
+    names = [
+        store.job(j).name()
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    ]
+    assert "globals" not in read, read
+    assert len(names) <= 7, names
+
+
+def test_commits_without_recorded_globals_serve_identically(spark, tmp_path):
+    """A commit record without ``sum_dl`` (written before records
+    carried it), and a compacted base whose meta lacks ``base_sum_dl``,
+    make the serve read the globals table instead; the rows served are
+    identical."""
+    import json
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    idx = str(tmp_path / "idx")
+    R.append_bm25_index(docs.filter(F.col("doc_id") % 3 == 0), idx)
+    R.compact_bm25_index(spark, idx)
+    R.append_bm25_index(docs.filter(F.col("doc_id") % 3 == 1), idx)
+    R.tombstone_bm25_index(docs.filter(F.col("doc_id") % 9 == 4), idx)
+    R.append_bm25_index(docs.filter(F.col("doc_id") % 3 == 2), idx)
+    want = _ranked(R.bm25_index_serve(spark, idx, mode="exact"))
+    meta_path = f"{idx}/_index_meta.json"
+    records = [f"{cdir}/_commit.json" for cdir in _commit_dirs(spark, idx)]
+    for path, key in [(meta_path, "base_sum_dl")] + [
+        (p, "sum_dl") for p in records
+    ]:
+        with open(path) as fh:
+            meta = json.load(fh)
+        del meta[key]
+        with open(path, "w") as fh:
+            json.dump(meta, fh)
+        assert _ranked(R.bm25_index_serve(spark, idx, mode="exact")) == want, path

@@ -189,23 +189,6 @@ def test_connected_components_idempotent_on_clique(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_pq_codes_sql_vs_arrow_agree(spark):
-    emb = _emb(spark)
-    """The interpreted-fold and numpy-matmul encoders must assign the
-    same codes on real (continuous) data — same argmin, same 1-based
-    ids, same first-min tie-break."""
-    cb = S.pq_codebook()
-    sql_codes = S.pq_codes(emb, "vec_id", "embedding", cb)
-    arrow_codes = S.pq_codes_arrow(emb, "vec_id", "embedding", cb)
-    assert sql_codes.columns == arrow_codes.columns
-    a = {r["vec_id"]: tuple(r)[1:] for r in sql_codes.collect()}
-    b = {r["vec_id"]: tuple(r)[1:] for r in arrow_codes.collect()}
-    assert a == b
-    # codes are 1-based into k=16
-    for codes in a.values():
-        assert all(1 <= c <= 16 for c in codes)
-
-
 def test_pq_adc_recall_vs_brute_force(spark):
     emb = _emb(spark)
     """PQ is approximate; with a TRAINED 8×16 codebook over 64 dims it
@@ -241,7 +224,7 @@ def test_semantic_dedup_recall_and_determinism(spark):
 
     emb = _emb(spark)
     cents = _ivf_static_centroids()
-    flagged = S.semantic_dedup(emb, cents, threshold=0.4, impl="sql")
+    flagged = S.semantic_dedup(emb, cents, threshold=0.4)
     dropped = {
         r["vec_id"] for r in flagged.filter("_dropped IS NOT NULL").collect()
     }
@@ -253,7 +236,7 @@ def test_semantic_dedup_recall_and_determinism(spark):
     assert len(dropped) / len(global_drops) >= 0.1
     again = {
         r["vec_id"]
-        for r in S.semantic_dedup(emb, cents, threshold=0.4, impl="sql")
+        for r in S.semantic_dedup(emb, cents, threshold=0.4)
         .filter("_dropped IS NOT NULL")
         .collect()
     }
